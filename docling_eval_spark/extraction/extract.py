@@ -21,10 +21,9 @@ subtrees feeding the layout/TEDS evaluators.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from .boilerplate import extract_main_text
 
@@ -45,36 +44,31 @@ def extract_schema(key_dtype: str = "bigint") -> str:
     return EXTRACT_SCHEMA.replace("doc_id bigint", f"doc_id {key_dtype}", 1)
 
 
-def _extract_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        out = {
-            "doc_id": pdf["doc_id"],
-            "url": pdf["url"],
-            "lang": pdf["lang"],
-            "text": pdf["text"],
-            "extracted_text": [],
-            "n_blocks": [],
-            "n_content": [],
-            "n_boiler": [],
-            "tables": [],
-            "spans": [],
-        }
-        for html in pdf["html"]:
-            # a null page (bad upstream row) degrades to empty extraction
-            # instead of TypeError-killing the executor task
-            raw = b"" if html is None else bytes(html)
-            r = extract_main_text(raw.decode("utf-8", errors="replace"))
-            out["extracted_text"].append(r["text"])
-            out["n_blocks"].append(r["n_blocks"])
-            out["n_content"].append(r["n_content"])
-            out["n_boiler"].append(r["n_boiler"])
-            out["tables"].append(r["tables"])
-            out["spans"].append(r["spans"])
-        yield pd.DataFrame(out)
+def extract_frame(pdf: pd.DataFrame, urls, htmls) -> pd.DataFrame:
+    """The per-batch extraction kernel: the (doc_id, lang, text) rows of
+    `pdf` with their urls and html strings -> extraction rows."""
+    rs = [extract_main_text(h) for h in htmls]
+    return pd.DataFrame({
+        "doc_id": pdf["doc_id"], "url": list(urls),
+        "lang": pdf["lang"], "text": pdf["text"],
+        "extracted_text": [r["text"] for r in rs],
+        **{k: [r[k] for r in rs]
+           for k in ("n_blocks", "n_content", "n_boiler", "tables", "spans")},
+    })
 
 
-def extract_pages(pages: DataFrame) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang[, doc_id]) -> extraction rows.
+def stored_html(pdf: pd.DataFrame):
+    """Urls and decoded html strings of a batch of stored pages. A null
+    page (bad upstream row) degrades to empty extraction instead of
+    TypeError-killing the executor task."""
+    return pdf["url"], (
+        (b"" if h is None else bytes(h)).decode("utf-8", errors="replace")
+        for h in pdf["html"])
+
+
+def page_input(pages: DataFrame) -> DataFrame:
+    """pages(url, warc_ts, html, text, lang[, doc_id]) -> the columns
+    extraction reads: (doc_id, url, lang, text, html).
 
     Fails fast at plan time when a required column is absent (a KeyError
     inside the executor UDF is much harder to diagnose); a missing doc_id
@@ -83,12 +77,16 @@ def extract_pages(pages: DataFrame) -> DataFrame:
     required = ["url", "lang", "text", "html"]
     missing = [c for c in required if c not in pages.columns]
     if missing:
-        raise ValueError(f"extract_pages: input is missing columns {missing}")
-    from pyspark.sql import functions as F
-
+        raise ValueError(f"pages input is missing columns {missing}")
     if "doc_id" not in pages.columns:
         pages = pages.withColumn("doc_id", F.lit(-1).cast("bigint"))
-    return pages.select("doc_id", *required).mapInPandas(
-        _extract_batches,
+    return pages.select("doc_id", *required)
+
+
+def extract_pages(pages: DataFrame) -> DataFrame:
+    """pages (see page_input) -> extraction rows."""
+    pages = page_input(pages)
+    return pages.mapInPandas(
+        lambda it: (extract_frame(p, *stored_html(p)) for p in it),
         schema=extract_schema(dict(pages.dtypes)["doc_id"]),
     )

@@ -20,24 +20,29 @@ string column either way.
 
 from __future__ import annotations
 
-import os
-
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# no output yet, or a directory with no data files (Spark ignores `_`/`.` names)
+_FRESH_CONDITIONS = {"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"}
+
 
 def committed_keys(spark: SparkSession, output_path: str, key: str = "url") -> DataFrame | None:
-    """Keys already present in the committed output, or None if fresh."""
+    """Keys already present in the committed output, or None if fresh.
+
+    Only an output path that is missing or holds no data files (empty, or
+    only `_temporary/` and `_SUCCESS` left by a killed first run) means
+    fresh. Spark decides both, so local paths and URIs (`file://`,
+    `hdfs://`, `s3a://`) behave alike. Any other error (a transient or
+    corrupt read) propagates: taken as fresh, it would make a resumed job
+    re-extract and re-append everything."""
     try:
-        if not any(
-            f.endswith(".parquet") for f in os.listdir(output_path)
-        ) and not any(
-            os.path.isdir(os.path.join(output_path, f)) for f in os.listdir(output_path)
-        ):
-            return None
         return spark.read.parquet(output_path).select(key)
-    except Exception:
-        return None
+    except AnalysisException as e:
+        if e.getCondition() in _FRESH_CONDITIONS:
+            return None
+        raise
 
 
 def resume_filter(inputs: DataFrame, spark: SparkSession, output_path: str,

@@ -4,17 +4,16 @@ against the reference text (SURVEY.md §7 minimum end-to-end slice).
 Stages (scan -> UDF -> column ops -> agg -> two sinks):
   1. pages (input_hint schema) — from the deterministic corpus generator
      or any parquet/Iceberg table with that schema.
-  2. size-balanced salted repartition (operators/skew.py).
-  3. extraction mapInPandas (extraction/extract.py) — GT text rides along,
-     so scoring never joins (the reference's co-located J1 pairing).
-  4. scoring:
-       - byte_identical: native column equality — the 100% gate is pure
-         JVM, no Python;
-       - the markdown metric suite (BLEU/F1/edit/METEOR/CER) as ONE
-         Arrow-batched pandas UDF with an identity fast path (identical
-         pair -> closed-form scores, no DP run) — on a corpus that's
-         mostly byte-identical the slow path touches only the tail.
-  5. rollups: DatasetStatistics per metric (operators/stats_rollup.py)
+  2. salted repartition: size-balanced over stored html blobs
+     (operators/skew.py), or over the light (doc_id, text, lang) rows when
+     html is synthesized.
+  3. ONE extract+score mapInPandas (_extract_and_score): extraction
+     (extraction/extract.py), then the markdown metric suite with an
+     identity fast path (identical pair -> closed-form scores, no DP run),
+     in the same Python worker. GT text rides along, so scoring never
+     joins (the reference's co-located J1 pairing). byte_identical is a
+     native column equality after it: the 100% gate is pure JVM.
+  4. rollups: DatasetStatistics per metric (operators/stats_rollup.py)
      + per-partition lineage rows (operators/lineage.py).
 
 Scoring parity: reference evaluators/markdown_text_evaluator.py:164-185
@@ -30,8 +29,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..corpus.generator import pages_from_documents
-from ..extraction.extract import extract_pages
-from ..functions.text_metrics import cer, score_text_pair
+from ..corpus.html_synth import synth_html, url_for
+from ..extraction.extract import extract_frame, extract_schema, page_input, stored_html
+from ..functions.text_metrics import cer, score_text_pair, word_tokenize
 from ..operators.skew import size_balanced_repartition
 
 SCORE_FIELDS = ["bleu", "f1_score", "precision", "recall", "edit_distance", "meteor", "char_accuracy"]
@@ -43,96 +43,85 @@ _IDENTITY_SCORES = {
 }
 
 
-def _score_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Passthrough scorer: appends metric columns to each extraction batch.
-
-    One UDF stage, no join — GT and prediction are columns of the same row
-    (the reference's co-located J1 pairing), so scoring never shuffles.
-    """
-    for pdf in it:
-        rows = []
-        from ..functions.text_metrics import word_tokenize
-
-        for pred, true in zip(pdf["extracted_text"], pdf["text"]):
-            n_tok = len(word_tokenize(true)) if pred == true else 0
-            # fast path only for non-degenerate identical pairs: with < 4
-            # tokens the slow path's unsmoothed BLEU (and empty-token F1)
-            # return 0.0, so shortcutting to 1.0 would make rollups differ
-            # between identical and near-identical degenerate docs
-            if pred == true and n_tok >= 4:
-                m = dict(_IDENTITY_SCORES)
-                # METEOR of identical token streams is 1 - gamma*(1/m)^beta,
-                # not exactly 1 (same tokenizer as the slow path)
-                m["meteor"] = 1.0 - 0.5 * (1.0 / n_tok) ** 3
-            else:
-                m = score_text_pair(pred, true)
-                m["char_accuracy"] = 1.0 - min(1.0, cer(pred, true))
-            rows.append([m[f] for f in SCORE_FIELDS])
-        out = pdf.copy()
-        for i, f in enumerate(SCORE_FIELDS):
-            out[f] = [r[i] for r in rows]
-        yield out
+def score_frame(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Passthrough scorer: `pdf` (extraction rows) with the metric columns
+    appended. GT and prediction are columns of the same row (the
+    reference's co-located J1 pairing), so scoring never joins."""
+    rows = []
+    for pred, true in zip(pdf["extracted_text"], pdf["text"]):
+        n_tok = len(word_tokenize(true)) if pred == true else 0
+        # fast path only for non-degenerate identical pairs: with < 4
+        # tokens the slow path's unsmoothed BLEU (and empty-token F1)
+        # return 0.0, so shortcutting to 1.0 would make rollups differ
+        # between identical and near-identical degenerate docs
+        if pred == true and n_tok >= 4:
+            m = dict(_IDENTITY_SCORES)
+            # METEOR of identical token streams is 1 - gamma*(1/m)^beta,
+            # not exactly 1 (same tokenizer as the slow path)
+            m["meteor"] = 1.0 - 0.5 * (1.0 / n_tok) ** 3
+        else:
+            m = score_text_pair(pred, true)
+            m["char_accuracy"] = 1.0 - min(1.0, cer(pred, true))
+        rows.append([m[f] for f in SCORE_FIELDS])
+    out = pdf.copy()
+    for i, f in enumerate(SCORE_FIELDS):
+        out[f] = [r[i] for r in rows]
+    return out
 
 
 def score_extractions(extracted: DataFrame, full_metrics: bool = True) -> DataFrame:
-    """Per-doc scored rows: byte_identical natively (JVM) + metric suite
-    appended by a passthrough mapInPandas (no join, no UDF recompute)."""
+    """Extraction rows -> per-doc scored rows (byte_identical + the metric
+    suite). Unextracted pages go through extract_and_score instead."""
     if full_metrics:
-        from ..extraction.extract import extract_schema
-
         base = extract_schema(dict(extracted.dtypes)["doc_id"])
         extracted = extracted.mapInPandas(
-            _score_batches, schema=f"{base}, {_SCORE_SCHEMA}"
+            lambda it: map(score_frame, it), schema=f"{base}, {_SCORE_SCHEMA}"
         )
-    return extracted.withColumn(
-        "byte_identical", F.col("extracted_text") == F.col("text")
-    )
+    # the 100% gate is a native column equality: pure JVM, no Python
+    return extracted.withColumn("byte_identical", F.col("extracted_text") == F.col("text"))
+
+
+def _extract_and_score(rows: DataFrame, html_source,
+                       full_metrics: bool) -> DataFrame:
+    """The one extract+score operator, shared by stored and synthetic pages.
+
+    `html_source(batch)` returns the batch's urls and html strings; the
+    batch is extracted and, with `full_metrics`, scored in the same Python
+    worker. Fusing matters twice at scale: (1) each chained mapInPandas is
+    its own Python worker per task and re-crosses the Arrow boundary with
+    the whole extraction output (spans, tables) on every hop; fused, a task
+    owns exactly one worker; (2) html never returns to the JVM, so the only
+    Arrow traffic back is the extraction and metric columns.
+    """
+    schema = extract_schema(dict(rows.dtypes)["doc_id"])
+    if full_metrics:
+        schema += f", {_SCORE_SCHEMA}"
+
+    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out = extract_frame(pdf, *html_source(pdf))
+            yield score_frame(out) if full_metrics else out
+
+    return rows.mapInPandas(run, schema=schema).withColumn(
+        "byte_identical", F.col("extracted_text") == F.col("text"))
 
 
 def extract_and_score(pages: DataFrame, n_partitions: int = 32,
                       full_metrics: bool = True) -> DataFrame:
-    balanced = size_balanced_repartition(pages, n_partitions)
-    return score_extractions(extract_pages(balanced), full_metrics=full_metrics)
+    """Stored pages (see page_input) -> size-balanced repartition -> the
+    extract+score operator over the stored html column."""
+    balanced = size_balanced_repartition(page_input(pages), n_partitions)
+    return _extract_and_score(balanced, stored_html, full_metrics)
 
 
-def _fused_batches(full_metrics: bool):
-    """One Python operator for synth -> extract -> score.
-
-    Fusing matters twice at scale: (1) each chained mapInPandas is its own
-    Python worker per task — three chained operators triple the Python
-    process count and re-cross the Arrow boundary with MB-scale html on
-    every hop; fused, a task owns exactly one worker and html never leaves
-    Python; (2) the html column is dropped before rows return to the JVM,
-    so the only Arrow traffic is light metric/text columns.
-    """
-    from ..corpus.html_synth import synth_html, url_for
-    from ..extraction.boilerplate import extract_main_text
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                "doc_id": pdf["doc_id"],
-                "url": [url_for(int(i)) for i in pdf["doc_id"]],
-                "lang": pdf["lang"],
-                "text": pdf["text"],
-                "extracted_text": [], "n_blocks": [], "n_content": [],
-                "n_boiler": [], "tables": [], "spans": [],
-            }
-            for i, t, l in zip(pdf["doc_id"], pdf["text"], pdf["lang"]):
-                html = synth_html(int(i), t, l).decode("utf-8")
-                r = extract_main_text(html)
-                out["extracted_text"].append(r["text"])
-                out["n_blocks"].append(r["n_blocks"])
-                out["n_content"].append(r["n_content"])
-                out["n_boiler"].append(r["n_boiler"])
-                out["tables"].append(r["tables"])
-                out["spans"].append(r["spans"])
-            pdf_out = pd.DataFrame(out)
-            if full_metrics:
-                pdf_out = next(_score_batches(iter([pdf_out])))
-            yield pdf_out
-
-    return gen
+def _synth_source(pdf: pd.DataFrame):
+    """Urls and html strings synthesized from light (doc_id, text, lang)
+    rows, one page at a time, so a batch's html never exists at once."""
+    ids = [int(i) for i in pdf["doc_id"]]
+    return [url_for(i) for i in ids], (
+        synth_html(i, t, l).decode("utf-8")
+        for i, t, l in zip(ids, pdf["text"], pdf["lang"])
+    )
 
 
 def flagship(spark: SparkSession, sf_dir: str, n_partitions: int = 32,
@@ -140,25 +129,18 @@ def flagship(spark: SparkSession, sf_dir: str, n_partitions: int = 32,
              exclude: DataFrame | None = None) -> DataFrame:
     """documents parquet -> pages -> extract -> score. The entry() query.
 
-    Shuffle placement: the salted repartition runs on the LIGHTWEIGHT
-    pre-synthesis rows (doc_id, text, lang), not on materialized html
-    blobs; synthesis, extraction, and scoring then run as ONE fused
-    mapInPandas stage (see _fused_batches). On a real source table (blobs
-    already materialized) use extract_and_score(), whose size-balanced
-    salt is the blob-side equivalent. `replicate` deterministically
-    amplifies the corpus (distinct doc_ids per replica) for scaling
-    benchmarks.
+    The same extract+score operator as extract_and_score, fed by html
+    synthesized inside the worker instead of a stored html column. The
+    salted repartition therefore runs on the LIGHTWEIGHT pre-synthesis
+    rows (doc_id, text, lang), not on html blobs; on a real source table
+    (blobs already materialized) extract_and_score's size-balanced salt
+    is the blob-side equivalent. `replicate` deterministically amplifies
+    the corpus (distinct doc_ids per replica) for scaling benchmarks.
     """
-    from ..extraction.extract import EXTRACT_SCHEMA
-
     docs = pages_from_documents(spark, sf_dir, n_partitions=n_partitions,
                                 replicate=replicate, pages_stage=False,
                                 exclude=exclude)
-    schema = EXTRACT_SCHEMA + (f", {_SCORE_SCHEMA}" if full_metrics else "")
-    fused = docs.mapInPandas(_fused_batches(full_metrics), schema=schema)
-    return fused.withColumn(
-        "byte_identical", F.col("extracted_text") == F.col("text")
-    )
+    return _extract_and_score(docs, _synth_source, full_metrics)
 
 
 def flagship_rollup(scored: DataFrame) -> DataFrame:

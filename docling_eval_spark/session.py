@@ -2,7 +2,7 @@
 
 Design notes (100 TB scale):
   - Arrow batches must stay small: `html` blobs are MBs, so
-    `maxRecordsPerBatch` is tuned down (64) to keep a batch well under
+    `maxRecordsPerBatch` is tuned down (256) to keep a batch well under
     executor memory even for heavy-tailed pages.
   - AQE on: runtime coalescing + skew-join splitting are free wins.
   - shuffle.partitions sized for local[32] tests; a real cluster job

@@ -115,12 +115,15 @@ def cdx_fetch_manifest(captures: DataFrame,
                .agg(F.max_by(row, "capture_ts").alias("_r"))
                .select("url", *[F.col(f"_r.{c}") for c in cols[1:]]))
     if dedup_digest:
+        # a NULL digest says nothing about the payload: those captures
+        # skip the dedup instead of collapsing into one group
         row = F.struct(*[F.col(c) for c in cols if c != "digest"])
-        sel = (sel.groupBy("digest")
+        sel = (sel.where(F.col("digest").isNotNull()).groupBy("digest")
                .agg(F.min_by(row, F.struct("capture_ts", "url"))
                     .alias("_r"))
                .select(*[F.col(f"_r.{c}") for c in cols if c != "digest"],
-                       "digest"))
+                       "digest")
+               .unionByName(sel.where(F.col("digest").isNull()).select(*cols)))
     return (sel.select(*cols)
             .repartition(F.col("warc_filename"))
             .sortWithinPartitions("warc_filename", "offset"))

@@ -77,6 +77,28 @@ class TestCdx:
                 r["length"], r["digest"]) == (
             "https://example.org/b", "w1.warc.gz", 400, 120, "sha1:BBB")
 
+    def test_manifest_keeps_every_digestless_capture(self, spark):
+        from docling_eval_spark.sources.cdx import (
+            cdx_fetch_manifest, parse_cdxj)
+
+        def cap(path, offset, **kw):
+            return _line(f"org,example)/{path}", "20240101000000",
+                         url=f"https://example.org/{path}", mime="text/html",
+                         status="200", length="10", offset=str(offset),
+                         filename="w1.warc.gz", **kw)
+
+        lines = [cap("x", 0), cap("y", 100),
+                 cap("s1", 200, digest="sha1:SAME"),
+                 cap("s2", 300, digest="sha1:SAME")]
+        man = cdx_fetch_manifest(parse_cdxj(
+            spark.createDataFrame([(l,) for l in lines], ["line"]))).collect()
+        # no digest says nothing about the payload: both urls survive,
+        # while the shared non-null digest still collapses to one capture
+        assert sorted((r["url"], r["digest"]) for r in man) == [
+            ("https://example.org/s1", "sha1:SAME"),
+            ("https://example.org/x", None),
+            ("https://example.org/y", None)]
+
     def test_manifest_orders_ranges_within_archive(self, spark):
         from docling_eval_spark.sources.cdx import (
             cdx_fetch_manifest, parse_cdxj)

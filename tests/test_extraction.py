@@ -271,13 +271,16 @@ class TestReviewRegressions:
         import pytest
         from docling_eval_spark.corpus.generator import pages_from_documents
         from docling_eval_spark.extraction.extract import extract_pages
+        from docling_eval_spark.plans.pipeline import extract_and_score
 
         pages = pages_from_documents(spark, sf_dir).limit(5)
-        with pytest.raises(ValueError, match="missing columns"):
-            extract_pages(pages.drop("html"))
-        # doc_id optional: synthesized as -1
-        out = extract_pages(pages.drop("doc_id")).select("doc_id").collect()
-        assert all(r["doc_id"] == -1 for r in out)
+        for extract in (extract_pages,
+                        lambda p: extract_and_score(p, n_partitions=2)):
+            with pytest.raises(ValueError, match="missing columns"):
+                extract(pages.drop("html"))
+            # doc_id optional: synthesized as -1
+            out = extract(pages.drop("doc_id")).select("doc_id").collect()
+            assert len(out) == 5 and all(r["doc_id"] == -1 for r in out)
 
     def test_token_count_blank_is_zero(self, spark):
         from pyspark.sql import functions as F

@@ -67,6 +67,29 @@ class TestFlagship:
         assert scored.where(F.size("spans") > 3).count() == 500
 
 
+class TestSingleOperator:
+    """Stored and synthetic pages share one extract+score operator."""
+
+    @staticmethod
+    def _map_in_pandas_count(df):
+        # the physical plan before execution; once run, adaptive execution
+        # prints the final and the initial plan, each node twice
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.count("MapInPandas")
+
+    def test_stored_pages_match_flagship(self, spark, sf_dir, scored, tmp_path):
+        path = str(tmp_path / "pages")
+        pages_from_documents(spark, sf_dir).write.parquet(path)
+        stored = extract_and_score(spark.read.parquet(path), n_partitions=8)
+        assert self._map_in_pandas_count(stored) == 1
+        # a plan equal to the cached fixture's would read the cache instead
+        assert self._map_in_pandas_count(flagship(spark, sf_dir, n_partitions=4)) == 1
+        assert stored.columns == scored.columns
+        got = stored.orderBy("doc_id").collect()
+        want = scored.orderBy("doc_id").collect()
+        assert len(got) == 500 and got == want
+
+
 class TestStatsRollup:
     def test_stats_agg_matches_numpy(self, spark, scored):
         import numpy as np

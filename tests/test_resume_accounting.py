@@ -57,3 +57,35 @@ def test_resume_count_does_not_rescan_committed_output(spark, tmp_path):
     assert n2 == 5  # 40..44 only; 30..39 already committed
     files_after_run2 = set(glob.glob(os.path.join(out, "*.parquet")))
     assert files_after_run1 < files_after_run2
+
+
+def test_unreadable_output_is_not_a_fresh_run(spark, tmp_path):
+    """Only a missing output or one without data files means fresh: a read
+    error on the committed output must surface, not re-process every row."""
+    import pytest
+
+    from docling_eval_spark.operators.resume import resume_filter
+
+    inputs = _inputs(spark, 0, 10)
+    assert resume_filter(inputs, spark, str(tmp_path / "none")) is inputs
+    (tmp_path / "empty").mkdir()
+    assert resume_filter(inputs, spark, str(tmp_path / "empty")) is inputs
+    # a first run killed before commit leaves only _temporary/ and _SUCCESS
+    killed = tmp_path / "killed"
+    _inputs(spark, 0, 5).write.parquet(str(killed / "_temporary" / "0"))
+    (killed / "_SUCCESS").touch()
+    assert resume_filter(inputs, spark, str(killed)) is inputs
+    out = tmp_path / "out"
+    out.mkdir()
+    (out / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)footer"):
+        resume_filter(inputs, spark, str(out))
+
+
+def test_resume_on_uri_output_filters_committed_keys(spark, tmp_path):
+    from docling_eval_spark.operators.resume import resume_filter
+
+    out = tmp_path / "out"
+    _inputs(spark, 0, 6).write.parquet(str(out))
+    todo = resume_filter(_inputs(spark, 0, 10), spark, out.as_uri())
+    assert sorted(r.url for r in todo.collect()) == ["u6", "u7", "u8", "u9"]

@@ -3,7 +3,7 @@
 Round 4 observed the flagship job's 8->32 scaling efficiency sliding to
 75% of the measured multiprocessing ceiling. The ceiling kernel
 (tools/bench_scaling.py _CEILING_CHILD) runs synth+extract ONLY, while
-the fused Spark stage also runs the full metric suite (_score_batches:
+the fused Spark stage also runs the full metric suite (score_frame:
 BLEU, METEOR with from-scratch stemming, token PRF, edit distance) —
 so the comparison is job-vs-a-LIGHTER-kernel. This tool answers two
 questions in one run, no Spark involved:
