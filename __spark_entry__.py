@@ -832,42 +832,6 @@ def _q_cvat_document_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id", "item_idx")
 
 
-def _q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer-Wilkerson-Aiken 2003,
-    round 3): k-gram polynomial rolling hash + rightmost-window-minimum
-    selection, vectorized numpy per Arrow batch; the oracle re-derives
-    every selected (pos, fp) with DuckDB list arithmetic — any hash,
-    tie-break, or dedup divergence flips the row set."""
-    from docling_eval_spark.operators.text_analysis import winnow_fingerprints
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text").where(F.col("doc_id") < 300)
-        .repartition(16, F.xxhash64("doc_id", F.lit(0x717)))
-    )
-    return winnow_fingerprints(docs).orderBy("doc_id", "pos")
-
-
-def _q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard near-dup (round 3): lossless inverted-index
-    self-join, no LSH approximation. Fixture: every doc < 150 gains a
-    'MUT '-prefixed twin (doc_id + 10000) — one extra leading token adds
-    exactly one 3-gram, so J(orig, twin) = g/(g+1) with g the doc's
-    distinct gram count; the oracle recomputes every pair from the same
-    derivation."""
-    from docling_eval_spark.operators.dedup import ngram_jaccard_pairs
-
-    base = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text").where(F.col("doc_id") < 150)
-    )
-    mut = base.select(
-        (F.col("doc_id") + 10000).alias("doc_id"),
-        F.concat(F.lit("MUT "), F.col("text")).alias("text"))
-    return ngram_jaccard_pairs(base.unionByName(mut), threshold=0.5) \
-        .orderBy("a", "b")
-
-
 def _q_pixparse_page_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """pixparse-style OCR GT builder (reference pixparse_builder.py
     :60-114): zipped text/bbox/score lists per page -> segmented-page
@@ -1355,26 +1319,6 @@ def _q_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("a", "b")
 
 
-def _q_simhash_exact_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash + 4x16-bit Hamming-block candidates -> exact-equality verify.
-    Equal texts share all blocks, so exact dups are ALWAYS candidates; the
-    equality verify makes the output the exact-duplicate pair set."""
-    from docling_eval_spark.operators.dedup import simhash64, simhash_candidates, with_near_dups
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    corpus = with_near_dups(docs)
-    cands = simhash_candidates(simhash64(corpus), max_hamming=3)
-    texts = corpus.select(F.col("doc_id"), F.md5(F.encode("text", "utf-8")).alias("h"))
-    ta = texts.select(F.col("doc_id").alias("a"), F.col("h").alias("ha_txt"))
-    tb = texts.select(F.col("doc_id").alias("b"), F.col("h").alias("hb_txt"))
-    return (
-        cands.join(ta, "a").join(tb, "b")
-        .where(F.col("ha_txt") == F.col("hb_txt"))
-        .select("a", "b", "hamming")
-        .orderBy("a", "b")
-    )
-
-
 def _q_near_dedup_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full scale-safe dedup pipeline: exact pre-pass (collapses identical
     texts — the degenerate-LSH-bucket families), capped minhash LSH + exact
@@ -1407,14 +1351,6 @@ def _q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
                               max_bucket_size=100_000).orderBy("a", "b")
 
 
-def _q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Function-word language-ID heuristic (training-data text analysis)."""
-    from docling_eval_spark.operators.text_analysis import with_lang_id
-
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    return with_lang_id(df).select("doc_id", "lang_pred")
-
-
 def _q_lang_id_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """From-scratch hashed-char-n-gram language classifier over a
     23-language synthetic fixture: each doc gets a deterministic page
@@ -1442,19 +1378,6 @@ def _q_lang_id_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (with_lang_id_classifier(pages)
             .select("doc_id", F.col("langid_lang").alias("lang_pred"))
             .orderBy("doc_id"))
-
-
-def _q_fingerprint_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling-hash-style document fingerprint: collision accounting.
-    The oracle counts distinct (head64, tail64, len) triples of normalized
-    text — exactly the fingerprint's preimage."""
-    from docling_eval_spark.operators.text_analysis import with_fingerprint
-
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    return with_fingerprint(df).agg(
-        F.count("*").alias("n_docs"),
-        F.countDistinct("fingerprint").alias("n_unique_fp"),
-    )
 
 
 def _payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3143,8 +3066,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "png_decode_features": _q_png_decode_features,
         "textract_spans": _q_textract_spans,
         "otsl_table_grid": _q_otsl_table_grid,
-        "winnow_fingerprints": _q_winnow_fingerprints,
-        "ngram_jaccard_pairs": _q_ngram_jaccard_pairs,
         "webtext_repetition": _q_webtext_repetition,
         "pii_redaction": _q_pii_redaction,
         "webtext_domain_rollup": _q_webtext_domain_rollup,
@@ -3189,9 +3110,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_exact": _q_dedup_exact,
         "minhash_near_dup": _q_minhash_near_dup,
         "near_dedup_kept": _q_near_dedup_kept,
-        "simhash_exact_dup": _q_simhash_exact_dup,
-        "lang_id": _q_lang_id,
-        "fingerprint_summary": _q_fingerprint_summary,
         "multimodal_meta": _q_multimodal_meta,
         "token_counts": _q_token_counts,
         "quality_scores": _q_quality_scores,
@@ -3482,49 +3400,6 @@ def oracle_sql() -> dict[str, str]:
             "cast(column_header AS boolean) AS column_header, "
             "cast(row_header AS boolean) AS row_header "
             "FROM rows ORDER BY doc_id, item_idx"
-        ),
-        "ngram_jaccard_pairs": (
-            "WITH base AS (SELECT doc_id, text FROM documents "
-            "WHERE doc_id < 150), "
-            "alldocs AS (SELECT doc_id, text FROM base "
-            "UNION ALL SELECT doc_id + 10000, 'MUT ' || text FROM base), "
-            "t AS (SELECT doc_id, "
-            "CASE WHEN len(string_split_regex(trim(text), '\\s+')) < 3 "
-            "THEN [text] ELSE list_distinct(list_transform("
-            "range(0, len(string_split_regex(trim(text), '\\s+')) - 2), "
-            "i -> array_to_string(string_split_regex(trim(text), '\\s+')"
-            "[cast(i+1 AS int):cast(i+3 AS int)], ' '))) END AS grams "
-            "FROM alldocs), "
-            "g AS (SELECT doc_id, unnest(grams) AS g FROM t), "
-            "sizes AS (SELECT doc_id, count(*) AS n FROM g GROUP BY doc_id),"
-            " shared AS (SELECT x.doc_id AS a, y.doc_id AS b, "
-            "count(*) AS s FROM g x JOIN g y ON x.g = y.g "
-            "AND x.doc_id < y.doc_id GROUP BY 1, 2) "
-            "SELECT a, b, round(s * 1.0 / (sa.n + sb.n - s), 6) AS jaccard "
-            "FROM shared JOIN sizes sa ON sa.doc_id = a "
-            "JOIN sizes sb ON sb.doc_id = b "
-            "WHERE s * 1.0 / (sa.n + sb.n - s) >= 0.5 ORDER BY a, b"
-        ),
-        "winnow_fingerprints": (
-            "WITH d AS (SELECT doc_id, text FROM documents "
-            "WHERE doc_id < 300 AND strlen(text) >= 8), "
-            "h AS (SELECT doc_id, list_transform(range(0, strlen(text) - 4),"
-            " i -> (ascii(substr(text, cast(i+1 AS int), 1)) * 923521 "
-            "+ ascii(substr(text, cast(i+2 AS int), 1)) * 29791 "
-            "+ ascii(substr(text, cast(i+3 AS int), 1)) * 961 "
-            "+ ascii(substr(text, cast(i+4 AS int), 1)) * 31 "
-            "+ ascii(substr(text, cast(i+5 AS int), 1))) % 1048576) AS hs "
-            "FROM d), "
-            "sel AS (SELECT doc_id, list_transform(range(0, len(hs) - 3), "
-            "s -> struct_pack(pos := list_max(list_transform(range(0, 4), "
-            "j -> CASE WHEN hs[cast(s+j+1 AS int)] = "
-            "list_min(hs[cast(s+1 AS int):cast(s+4 AS int)]) THEN s+j "
-            "ELSE -1 END)), fp := "
-            "list_min(hs[cast(s+1 AS int):cast(s+4 AS int)]))) AS picks "
-            "FROM h) "
-            "SELECT DISTINCT doc_id, cast(p.pos AS int) AS pos, "
-            "cast(p.fp AS bigint) AS fp "
-            "FROM sel, unnest(picks) AS u(p) ORDER BY doc_id, pos"
         ),
         "webtext_line_dedup": (
             "WITH w AS (SELECT doc_id, "
@@ -4450,17 +4325,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT doc_id FROM reps "
             "WHERE doc_id NOT IN (SELECT doc_id FROM drops) ORDER BY doc_id"
         ),
-        "simhash_exact_dup": (
-            "WITH corpus AS ("
-            "  SELECT doc_id, text FROM documents"
-            "  UNION ALL SELECT doc_id + 1000000000, text || ' xdup' "
-            "    FROM documents WHERE doc_id % 3 = 0"
-            "  UNION ALL SELECT doc_id + 2000000000, text "
-            "    FROM documents WHERE doc_id % 7 = 0) "
-            "SELECT a.doc_id AS a, b.doc_id AS b, 0 AS hamming "
-            "FROM corpus a, corpus b "
-            "WHERE a.doc_id < b.doc_id AND a.text = b.text ORDER BY a, b"
-        ),
         "embedding_near_dup": (
             "WITH corpus AS ("
             "  SELECT vec_id, embedding FROM embeddings"
@@ -4471,31 +4335,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM corpus a, corpus b WHERE a.vec_id < b.vec_id "
             "AND round(list_cosine_similarity(a.embedding, b.embedding), 4) >= 0.9999 "
             "ORDER BY a, b"
-        ),
-        "lang_id": (
-            "WITH h AS (SELECT doc_id, "
-            "len(list_filter(string_split_regex(lower(text), '\\s+'), "
-            "  w -> w IN ('the','and','of','to','is'))) AS h_en, "
-            "len(list_filter(string_split_regex(lower(text), '\\s+'), "
-            "  w -> w IN ('der','die','das','und','nicht'))) AS h_de, "
-            "len(list_filter(string_split_regex(lower(text), '\\s+'), "
-            "  w -> w IN ('le','la','les','et','est'))) AS h_fr, "
-            "len(list_filter(string_split_regex(lower(text), '\\s+'), "
-            "  w -> w IN ('el','la','los','y','es'))) AS h_es "
-            "FROM documents) "
-            "SELECT doc_id, CASE "
-            "WHEN greatest(h_en, h_de, h_fr, h_es) = 0 THEN 'und' "
-            "WHEN h_fr = greatest(h_en, h_de, h_fr, h_es) THEN 'fr' "
-            "WHEN h_es = greatest(h_en, h_de, h_fr, h_es) THEN 'es' "
-            "WHEN h_en = greatest(h_en, h_de, h_fr, h_es) THEN 'en' "
-            "ELSE 'de' END AS lang_pred FROM h"
-        ),
-        "fingerprint_summary": (
-            "WITH n AS (SELECT lower(regexp_replace(text, '\\s+', ' ', 'g')) "
-            "AS t FROM documents) "
-            "SELECT count(*) AS n_docs, (SELECT count(*) FROM ("
-            "SELECT DISTINCT substr(t, 1, 64), substr(reverse(t), 1, 64), "
-            "length(t) FROM n)) AS n_unique_fp FROM n"
         ),
         "multimodal_meta": (
             "SELECT lang, count(*) AS n_docs, "

@@ -6,11 +6,13 @@ All scale paths avoid the O(n^2) trap:
                  (candidate pairs only; a 10^12-doc corpus never compares
                  all pairs). Signatures are computed with numpy inside one
                  Arrow batch UDF; banding/bucketing/joins are native.
-  - simhash:    64-bit weighted-token hash, Hamming-ball candidates via
-                 4x16-bit block keys (Charikar 2002 / Manku et al. 2007).
   - n-gram Jaccard: exact verify step on LSH candidates (array_intersect /
                  array_union on token shingle arrays — JVM-side).
   - embedding cosine near-dup: see similarity.brute_force_topk / lsh_topk.
+
+MinHash LSH is the one text near-duplicate detector: near_dedup,
+near_dedup_against and the streaming ingest
+(streaming.ingest.start_dedup_ingest) all go through it.
 """
 
 from __future__ import annotations
@@ -109,13 +111,13 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", key: str = "doc_id
     return df.select(key, text_col).mapInPandas(gen, schema=f"{key} bigint, sig array<bigint>")
 
 
-def banded_signatures(sigs: DataFrame, key_cols: list[str],
+def banded_signatures(sigs: DataFrame, key: str,
                       bands: int = 32, rows_per_band: int = 4) -> DataFrame:
-    """(key_cols..., band, bucket) — ONE definition of the LSH band keys,
-    shared by the batch self-join and the streaming stateful operator so
-    the two pipelines can never desynchronize their bucket assignment."""
+    """(key, band, bucket) — ONE definition of the LSH band keys, shared
+    by the batch self-join and the batch-vs-history probe so the two can
+    never desynchronize their bucket assignment."""
     return sigs.select(
-        *key_cols,
+        key,
         F.posexplode(
             F.array(*[
                 F.xxhash64(F.lit(i), F.slice("sig", i * rows_per_band + 1,
@@ -172,7 +174,7 @@ def minhash_lsh_candidates(sigs: DataFrame, key: str = "doc_id",
     signature UDF runs once (minhash_dedup_pairs does).
     """
     banded = _drop_hot_buckets(
-        banded_signatures(sigs, [key], bands, rows_per_band), max_bucket_size)
+        banded_signatures(sigs, key, bands, rows_per_band), max_bucket_size)
     l = banded.alias("l")
     r = banded.alias("r")
     return (
@@ -225,63 +227,6 @@ def ngram_jaccard_verify(df: DataFrame, candidates: DataFrame,
     return joined.where(F.col("jaccard") >= threshold)
 
 
-def _distinct_grams(df: DataFrame, text_col: str, key: str,
-                    shingle_n: int):
-    """(key, grams array) with the shared tokenizer/shingler semantics
-    (trim + \\s+ split; short docs fall back to the whole text)."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    grams = F.when(
-        F.size(toks) < shingle_n, F.array(F.col(text_col))
-    ).otherwise(F.transform(
-        F.sequence(F.lit(0), F.size(toks) - shingle_n),
-        lambda i: F.array_join(F.slice(toks, i + 1, shingle_n), " ")))
-    return df.select(F.col(key), F.array_distinct(grams).alias("grams"))
-
-
-def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
-                        key: str = "doc_id", shingle_n: int = 3,
-                        threshold: float = 0.5,
-                        max_doc_freq: int | None = None) -> DataFrame:
-    """EXACT n-gram Jaccard near-dup over the corpus: all pairs (a < b)
-    with J(grams_a, grams_b) >= threshold.
-
-    The inverted-index self-join (the prefix-filtering family of exact
-    set-similarity joins): docs sharing >= 1 shingle are candidates —
-    LOSSLESS for threshold > 0 since J > 0 implies a shared shingle —
-    shared counts come from one groupBy over gram-matched pairs, and
-    |union| = |A| + |B| - shared from per-doc gram counts. No all-pairs
-    cross product anywhere; shuffle volume is the posting-list join.
-
-    Scale knob: ultra-common shingles make hot join keys whose posting
-    lists square. `max_doc_freq` drops shingles appearing in more than
-    that many docs (standard df-prefilter) — this CAN miss pairs whose
-    every shared shingle is common, so it is off by default and the
-    drop is a visible semantic choice, mirroring the LSH hot-bucket
-    guard."""
-    sh = _distinct_grams(df, text_col, key, shingle_n)
-    sizes = sh.select(F.col(key), F.size("grams").alias("n"))
-    posts = sh.select(F.col(key), F.explode("grams").alias("g"))
-    if max_doc_freq is not None:
-        hot = (posts.groupBy("g").agg(F.count("*").alias("df"))
-               .where(F.col("df") > max_doc_freq).select("g"))
-        posts = posts.join(F.broadcast(hot), on="g", how="left_anti")
-    x, y = posts.alias("x"), posts.alias("y")
-    shared = (
-        x.join(y, (F.col("x.g") == F.col("y.g"))
-               & (F.col(f"x.{key}") < F.col(f"y.{key}")))
-        .groupBy(F.col(f"x.{key}").alias("a"), F.col(f"y.{key}").alias("b"))
-        .agg(F.count("*").alias("s"))
-    )
-    sa = sizes.select(F.col(key).alias("a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col(key).alias("b"), F.col("n").alias("nb"))
-    jac = F.col("s") / (F.col("na") + F.col("nb") - F.col("s"))
-    return (
-        shared.join(sa, on="a").join(sb, on="b")
-        .where(jac >= threshold)
-        .select("a", "b", F.round(jac, 6).alias("jaccard"))
-    )
-
-
 def minhash_dedup_pairs(df: DataFrame, text_col: str = "text", key: str = "doc_id",
                         threshold: float = 0.8,
                         max_bucket_size: int | None = None,
@@ -322,63 +267,6 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text", key: str = "doc_i
     if max_bucket_size is not None:
         sigs.unpersist()
     return out
-
-
-# -- simhash ------------------------------------------------------------------
-
-
-def simhash64(df: DataFrame, text_col: str = "text", key: str = "doc_id") -> DataFrame:
-    """64-bit SimHash over whitespace tokens (Charikar 2002), numpy-batched."""
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bit_idx = np.arange(64, dtype=np.uint64)
-        for pdf in it:
-            out = []
-            for text in pdf[text_col]:
-                toks = text.split()
-                if not toks:
-                    out.append(0)
-                    continue
-                hs = np.array(
-                    [int.from_bytes(hashlib.blake2b(t.encode(), digest_size=8).digest(), "big")
-                     for t in toks], dtype=np.uint64)
-                bits = ((hs[:, None] >> bit_idx[None, :]) & 1).astype(np.int64)
-                v = (2 * bits - 1).sum(axis=0)
-                sh = int(((v > 0).astype(np.uint64) << bit_idx).sum())
-                out.append(sh - (1 << 64) if sh >= (1 << 63) else sh)  # to signed
-            yield pd.DataFrame({key: pdf[key], "simhash": out})
-
-    return df.select(key, text_col).mapInPandas(gen, schema=f"{key} bigint, simhash bigint")
-
-
-def simhash_candidates(hashes: DataFrame, key: str = "doc_id",
-                       max_hamming: int = 3,
-                       max_bucket_size: int | None = None) -> DataFrame:
-    """Hamming-ball candidates via 4x16-bit block keys (Manku et al. 2007):
-    any pair within Hamming distance 3 shares at least one of 4 blocks.
-    `max_bucket_size` applies the same degenerate-bucket guard as the
-    minhash path (see _drop_hot_buckets) on (block_idx, block_val)."""
-    blocks = hashes.select(
-        key, "simhash",
-        F.posexplode(F.array(*[
-            F.shiftright(F.col("simhash"), i * 16).bitwiseAND(F.lit(0xFFFF))
-            for i in range(4)
-        ])).alias("block_idx", "block_val"),
-    )
-    blocks = _drop_hot_buckets(blocks, max_bucket_size,
-                               ("block_idx", "block_val"))
-    l = blocks.alias("l")
-    r = blocks.alias("r")
-    pairs = (
-        l.join(r, on=["block_idx", "block_val"])
-        .where(F.col(f"l.{key}") < F.col(f"r.{key}"))
-        .select(F.col(f"l.{key}").alias("a"), F.col(f"r.{key}").alias("b"),
-                F.col("l.simhash").alias("ha"), F.col("r.simhash").alias("hb"))
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    return pairs.select("a", "b", hamming.alias("hamming")) \
-        .where(F.col("hamming") <= max_hamming)
 
 
 def near_dedup(df: DataFrame, text_col: str = "text", key: str = "doc_id",
@@ -629,7 +517,9 @@ def near_dedup_against(df: DataFrame, history: DataFrame,
     exact stage's hash projection and (b) the Jaccard verify, which
     materializes grams solely for candidate-pair members (semi-join
     first — see ngram_jaccard_verify). start_dedup_ingest maintains
-    this table incrementally (signatures_path). Output is
+    this table incrementally (signatures_path). Store rows whose key
+    belongs to the batch are ignored, so a store that already holds a
+    replayed batch's own signatures changes nothing. Output is
     row-identical either way (pinned by pytest).
 
     Stage boundaries use localCheckpoint, not persist: each later
@@ -643,12 +533,19 @@ def near_dedup_against(df: DataFrame, history: DataFrame,
     reps = dedup_against(df, history, text_col=text_col, key=key)
     reps = reps.localCheckpoint()
     bsig = minhash_signatures(reps, text_col, key)
-    hsig = (history_sigs.select(key, "sig") if history_sigs is not None
-            else minhash_signatures(history, text_col, key))
+    if history_sigs is not None:
+        # a batch replayed after its signatures were stored but before
+        # its output was appended finds itself in the store; probing
+        # those rows would verify every survivor at Jaccard 1.0 against
+        # itself, so the batch's own keys are cut from the store first
+        hsig = history_sigs.select(key, "sig") \
+            .join(reps.select(key), key, "left_anti")
+    else:
+        hsig = minhash_signatures(history, text_col, key)
     bb = _drop_hot_buckets(
-        banded_signatures(bsig, [key]), max_bucket_size)
+        banded_signatures(bsig, key), max_bucket_size)
     hb = _drop_hot_buckets(
-        banded_signatures(hsig, [key]), max_bucket_size)
+        banded_signatures(hsig, key), max_bucket_size)
     cand = (
         bb.alias("l").join(hb.alias("r"), on=["band", "bucket"])
         .select(F.col(f"l.{key}").alias("a"),

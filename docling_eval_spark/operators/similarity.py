@@ -13,7 +13,7 @@
 
 Scale note: brute_force_topk is a broadcast-nested-loop by construction —
 correct ONLY when the query side is small (it is: similarity search, not
-all-pairs). All-pairs near-dup goes through dedup.minhash/simhash instead.
+all-pairs). All-pairs near-dup goes through dedup's MinHash LSH instead.
 """
 
 from __future__ import annotations

@@ -31,11 +31,20 @@ operator exists because the north-rule corpus arrives as WARC.
 from __future__ import annotations
 
 import gzip
+import string
 from datetime import datetime, timezone
+from urllib.parse import quote
 
 from pyspark.sql import DataFrame
 
 _CRLF2 = b"\r\n\r\n"
+
+
+def _target_uri(url: str) -> bytes:
+    """WARC-Target-URI field bytes: non-ASCII characters (and any
+    whitespace, which would break the header line) percent-encoded as
+    UTF-8, ASCII punctuation and existing escapes kept as they are."""
+    return quote(url, safe=string.punctuation).encode("ascii")
 
 
 def _parse_headers(block: bytes) -> dict[str, str]:
@@ -135,7 +144,7 @@ def build_warc(records: list[tuple[str, datetime, bytes]],
                 + _CRLF2 + body)
         hdr = (b"WARC/1.0\r\n"
                b"WARC-Type: response\r\n"
-               b"WARC-Target-URI: " + url.encode("latin-1") + b"\r\n"
+               b"WARC-Target-URI: " + _target_uri(url) + b"\r\n"
                b"WARC-Date: "
                + ts.strftime("%Y-%m-%dT%H:%M:%SZ").encode() + b"\r\n"
                b"Content-Type: application/http; msgtype=response\r\n"
@@ -193,7 +202,7 @@ def build_wet(records: list[tuple[str, datetime, bytes]],
     for url, ts, body in records:
         hdr = (b"WARC/1.0\r\n"
                b"WARC-Type: conversion\r\n"
-               b"WARC-Target-URI: " + url.encode("latin-1") + b"\r\n"
+               b"WARC-Target-URI: " + _target_uri(url) + b"\r\n"
                b"WARC-Date: "
                + ts.strftime("%Y-%m-%dT%H:%M:%SZ").encode() + b"\r\n"
                b"Content-Type: text/plain\r\n"

@@ -95,10 +95,9 @@ def start_dedup_ingest(spark: SparkSession, input_path: str,
 
     With `near=True` the batch additionally minhash-probes the
     committed corpus and drops near-duplicate recrawls at >= threshold
-    (near_dedup_against). Idempotency holds for the exact stage
-    (replayed rows hash-match their committed copies); replayed NEAR
-    batches also drop against their committed selves because a
-    document is a 1.0-Jaccard near-dup of itself.
+    (near_dedup_against). A replay of a batch whose output was already
+    appended drops every row in the exact stage (each hash-matches its
+    committed copy), so nothing is appended twice.
 
     `signatures_path` (near mode) is the steady-state scale switch: a
     parquet (key, sig) table of the committed corpus's minhash
@@ -108,10 +107,13 @@ def start_dedup_ingest(spark: SparkSession, input_path: str,
     full history text (an O(history) Python GEMM per trigger at a
     10^12-doc corpus without it). Output is row-identical with or
     without the store (near_dedup_against pins this). Write order is
-    signatures BEFORE output: a crash between the two makes the replay
-    re-append the same signature rows (duplicate (key, sig) rows are
-    benign — the LSH probe just sees duplicate candidates, collapsed
-    by its distinct), while the reverse order would leave committed
+    signatures BEFORE output. After a crash between the two writes the
+    store holds the batch's signatures but the output does not hold
+    its rows. The replay ignores store rows keyed by the batch itself
+    (near_dedup_against), so it commits exactly the rows the first
+    attempt would have, and re-appends the same signature rows
+    (duplicate (key, sig) rows are benign — the LSH probe collapses
+    them with its distinct). The reverse order would leave committed
     documents invisible to the signature probe — silent false keeps.
 
     With `bloom=True` the exact stage runs through bloom_dedup_against:

@@ -163,3 +163,60 @@ def test_near_dedup_against_precomputed_signatures(spark):
         r.doc_id for r in near_dedup_against(
             batch, history, history_sigs=dup_store).collect())
     assert with_dups == base
+
+
+def test_near_dedup_against_replayed_batch_keeps_its_rows(spark):
+    """A batch replayed after a crash between the signature-store append
+    and the output append finds its own signatures in the store while
+    history lacks its rows. It must keep exactly the rows of a
+    store-free run: neither drop survivors against their own stored
+    copies nor let stored survivors change the within-batch pass (the
+    chain 10 ~ 11 ~ 12 keeps only 10 either way)."""
+    from docling_eval_spark.operators.dedup import (
+        minhash_signatures, near_dedup_against)
+
+    words = [f"w{i}" for i in range(36)]
+    history = spark.createDataFrame(
+        [(100, "the quick brown fox jumps over the lazy dog end"),
+         (101, "another committed page with its own unique words inside")],
+        ["doc_id", "text"])
+    batch = spark.createDataFrame(
+        [(1, "completely different words here about other topics now"),
+         (2, "unrelated short"),
+         (10, " ".join(words[0:30])),   # J(10, 11) = J(11, 12) = 25/31
+         (11, " ".join(words[3:33])),
+         (12, " ".join(words[6:36]))],  # J(10, 12) = 22/34: not a dup
+        ["doc_id", "text"])
+    kept = near_dedup_against(batch, history)
+    base = sorted(r.doc_id for r in kept.collect())
+    assert base == [1, 2, 10]
+    store = minhash_signatures(history, "text", "doc_id").unionByName(
+        minhash_signatures(kept, "text", "doc_id"))
+    replay = sorted(r.doc_id for r in near_dedup_against(
+        batch, history, history_sigs=store).collect())
+    assert replay == base
+
+
+def test_banded_signatures_keys_on_named_column(spark):
+    """One (key, band, bucket) row per band, keyed by whatever column the
+    signatures carry: identical texts land in the same bucket of every
+    band, an unrelated text in none of them."""
+    from docling_eval_spark.operators.dedup import (
+        banded_signatures, minhash_signatures)
+
+    text = "the quick brown fox jumps over the lazy dog end"
+    df = spark.createDataFrame(
+        [(7, text), (8, text),
+         (9, "completely different words here about other topics now")],
+        ["page_id", "text"])
+    banded = banded_signatures(minhash_signatures(df, "text", "page_id"),
+                               "page_id", bands=16, rows_per_band=8)
+    assert banded.columns == ["page_id", "band", "bucket"]
+    rows = banded.collect()
+    buckets = {k: [r.bucket for r in sorted(rows, key=lambda r: r.band)
+                   if r.page_id == k] for k in (7, 8, 9)}
+    assert sorted({r.band for r in rows}) == list(range(16))
+    assert all(len(b) == 16 for b in buckets.values())
+    assert buckets[7] == buckets[8]
+    assert not set(zip(range(16), buckets[7])) & \
+        set(zip(range(16), buckets[9]))

@@ -32,6 +32,7 @@ def test_hot_bucket_cap_bounds_candidates(spark):
     """With the cap, candidate volume stays bounded even though 2000
     identical docs share every band bucket (uncapped: ~2e6 pairs/band)."""
     from docling_eval_spark.operators.dedup import (
+        banded_signatures,
         hot_buckets,
         minhash_lsh_candidates,
         minhash_signatures,
@@ -46,29 +47,11 @@ def test_hot_bucket_cap_bounds_candidates(spark):
         # share no buckets, so nothing survives
         assert n_capped == 0
         # drop accounting is visible: 32 bands x 1 hot family bucket
-        banded_hot = hot_buckets(
-            __import__("docling_eval_spark.operators.dedup",
-                       fromlist=["banded_signatures"])
-            .banded_signatures(sigs, ["doc_id"]), 100)
-        hot = banded_hot.collect()
+        hot = hot_buckets(banded_signatures(sigs, "doc_id"), 100).collect()
         assert len(hot) == 32
         assert all(r["n"] == 2000 for r in hot)
     finally:
         sigs.unpersist()
-
-
-def test_simhash_hot_bucket_cap(spark):
-    from docling_eval_spark.operators.dedup import simhash64, simhash_candidates
-
-    corpus = _family_corpus(spark, n_family=500, n_distinct=20)
-    hashes = simhash64(corpus).persist()
-    try:
-        assert simhash_candidates(hashes, max_bucket_size=50).count() == 0
-        # uncapped on the small family still works (sanity, not scale)
-        assert simhash_candidates(
-            hashes.where(F.col("doc_id") < 10)).count() == 45
-    finally:
-        hashes.unpersist()
 
 
 def test_near_dedup_collapses_identical_family(spark):
@@ -100,31 +83,3 @@ def test_near_dedup_drops_near_copies(spark):
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     kept = sorted(r["doc_id"] for r in near_dedup(df).select("doc_id").collect())
     assert kept == [1, 4]
-
-
-class TestNgramJaccardPairs:
-    def test_exact_pairs_and_df_prefilter(self, spark):
-        from docling_eval_spark.operators.dedup import ngram_jaccard_pairs
-
-        rows = [
-            (1, "alpha beta gamma delta epsilon"),
-            (2, "alpha beta gamma delta zeta"),     # J = 2/4 with doc 1
-            (3, "totally different words entirely here"),
-            (4, "alpha beta gamma delta epsilon"),  # exact dup of 1
-        ]
-        df = spark.createDataFrame(rows, "doc_id bigint, text string")
-        got = {(r["a"], r["b"]): r["jaccard"]
-               for r in ngram_jaccard_pairs(df, threshold=0.5).collect()}
-        assert got[(1, 4)] == 1.0
-        assert got[(1, 2)] == 0.5 and got[(2, 4)] == 0.5
-        assert not any(3 in p for p in got)
-        # threshold drops the 0.5 pairs
-        high = {(r["a"], r["b"]) for r in
-                ngram_jaccard_pairs(df, threshold=0.9).collect()}
-        assert high == {(1, 4)}
-        # df-prefilter: dropping grams present in >2 docs removes every
-        # shared gram of the trio (all appear in docs 1, 2 and 4) — the
-        # documented recall trade, not silent truncation
-        pruned = ngram_jaccard_pairs(df, threshold=0.5,
-                                     max_doc_freq=2).collect()
-        assert pruned == []

@@ -33,59 +33,3 @@ class TestComputeStats:
         vals = [1.0, 5.0, 10.0]
         s = compute_stats(vals, max_value_is_one=False)
         assert s["bins"][-1] == 10.0
-
-
-class TestWinnowing:
-    def test_shared_substring_guarantee(self, spark):
-        """The paper's theorem: documents sharing a substring of length
-        >= w + k - 1 share at least one fingerprint; disjoint texts
-        share none."""
-        from docling_eval_spark.operators.text_analysis import (
-            winnow_fingerprints,
-        )
-
-        shared = "a very distinctive shared passage"
-        rows = [(1, "prefix one " + shared + " tail alpha"),
-                (2, "other start " + shared + " different end"),
-                (3, "zzz qqq completely unrelated text body here")]
-        df = spark.createDataFrame(rows, "doc_id bigint, text string")
-        fp = winnow_fingerprints(df).collect()
-        by_doc = {}
-        for r in fp:
-            by_doc.setdefault(r["doc_id"], set()).add(r["fp"])
-        assert by_doc[1] & by_doc[2]  # shared passage -> shared prints
-        assert not (by_doc[1] & by_doc[3] and by_doc[2] & by_doc[3])
-
-    def test_matches_reference_algorithm(self, spark):
-        from docling_eval_spark.operators.text_analysis import (
-            winnow_fingerprints,
-        )
-
-        def ref(s, k=5, w=4, base=31, mod=1 << 20):
-            m = len(s) - k + 1
-            hs = [sum(ord(s[i + j]) * pow(base, k - 1 - j, mod)
-                      for j in range(k)) % mod for i in range(m)]
-            out = {}
-            for st in range(m - w + 1):
-                win = hs[st:st + w]
-                mn = min(win)
-                out[max(j for j in range(w) if win[j] == mn) + st] = mn
-            return sorted(out.items())
-
-        text = "the quick brown fox jumps over the quick brown dog"
-        df = spark.createDataFrame([(9, text)], "doc_id bigint, text string")
-        got = [(r["pos"], r["fp"]) for r in
-               winnow_fingerprints(df).orderBy("pos").collect()]
-        assert got == ref(text)
-
-    def test_short_and_unicode_text(self, spark):
-        from docling_eval_spark.operators.text_analysis import (
-            winnow_fingerprints,
-        )
-
-        rows = [(1, "short"), (2, None), (3, "中文字符也参与哈希计算的文本")]
-        df = spark.createDataFrame(rows, "doc_id bigint, text string")
-        out = winnow_fingerprints(df).collect()
-        docs = {r["doc_id"] for r in out}
-        assert 1 not in docs and 2 not in docs  # below k+w-1 / null
-        assert 3 in docs  # code points, not bytes

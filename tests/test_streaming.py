@@ -56,50 +56,6 @@ class TestStreamingIngest:
         assert all(r["total_bytes"] > 0 for r in rolled)
 
 
-class TestStatefulDedup:
-    """applyInPandasWithState near-dup detection: duplicates landing in
-    DIFFERENT micro-batches must still pair up (state persistence)."""
-
-    def test_cross_batch_pairs(self, spark, sf_dir, tmp_path):
-        from pyspark.sql import functions as F
-
-        from docling_eval_spark.streaming.stateful_dedup import (
-            streaming_near_dup_pairs,
-        )
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
-            .select("doc_id", "text").where(F.col("doc_id") < 40)
-        # batch 1: originals; batch 2: exact copies with shifted ids
-        landing = str(tmp_path / "in")
-        docs.coalesce(1).write.mode("append").parquet(landing)
-
-        stream = (
-            spark.readStream.schema("doc_id bigint, text string")
-            .option("maxFilesPerTrigger", 1).parquet(landing)
-        )
-        pairs = streaming_near_dup_pairs(stream, threshold=0.99)
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        q = (pairs.writeStream.format("parquet")
-             .option("path", out).option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(180)
-
-        docs.withColumn("doc_id", F.col("doc_id") + 1_000_000) \
-            .coalesce(1).write.mode("append").parquet(landing)
-        q = (pairs.writeStream.format("parquet")
-             .option("path", out).option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(180)
-
-        got = (spark.read.parquet(out)
-               .dropDuplicates(["a", "b"])
-               .where(F.col("b") - F.col("a") == 1_000_000))
-        found = {r["a"] for r in got.collect()}
-        assert found == set(range(40)), sorted(found)[:10]
-        assert all(r["est_jaccard"] == 1.0 for r in got.collect())
-
-
 class TestStreamingDedupIngest:
     def test_micro_batches_dedup_against_committed(self, spark, tmp_path):
         from docling_eval_spark.streaming.ingest import start_dedup_ingest
@@ -301,3 +257,39 @@ class TestStreamingNearDedupIngest:
         assert {r.doc_id for r in store} == committed
         assert len(store) == len(committed)  # exactly one row per doc
         assert all(len(r.sig) == 128 for r in store)
+
+    def test_near_mode_replay_after_signature_append_commits_batch(
+            self, spark, tmp_path):
+        """The crash between the two writes: the store already holds the
+        batch survivors' signatures, the output holds none of its rows
+        and the checkpoint has not committed the batch. The replay must
+        commit exactly the rows a store-free run commits."""
+        import datetime
+
+        from docling_eval_spark.operators.dedup import minhash_signatures
+        from docling_eval_spark.streaming.ingest import start_dedup_ingest
+
+        landing = str(tmp_path / "landing")
+        out = str(tmp_path / "out")
+        sigs = str(tmp_path / "sigs")
+        cols = ["url", "warc_ts", "html", "text", "lang", "doc_id"]
+        base = "the quick brown fox jumps over the lazy dog end"
+        other = "another page with its own completely separate words inside"
+        rows = [(1, base), (2, other), (3, base + " xdup")]  # 3 ~ 1
+        spark.createDataFrame(
+            [(f"https://x/{d}", datetime.datetime(2026, 1, 2), t.encode(),
+              t, "en", d) for d, t in rows], cols) \
+            .coalesce(1).write.mode("append").parquet(landing)
+
+        # what the crashed attempt left behind: survivors 1 and 2 signed
+        minhash_signatures(
+            spark.createDataFrame(rows[:2], ["doc_id", "text"]),
+            "text", "doc_id").write.parquet(sigs)
+        q = start_dedup_ingest(spark, landing, out, str(tmp_path / "ckpt"),
+                               near=True, signatures_path=sigs)
+        q.awaitTermination(180)
+        assert {r.doc_id for r in spark.read.parquet(out).collect()} == \
+            {1, 2}
+        # the replay re-appends the same signatures: duplicates, no new keys
+        assert {r.doc_id for r in spark.read.parquet(sigs).collect()} == \
+            {1, 2}

@@ -28,6 +28,49 @@ class TestParseWarc:
                 assert r["mime"] == "text/html"
                 assert r["body"] == body
 
+    def test_non_latin1_urls_roundtrip(self):
+        # a URL outside latin-1 is percent-encoded per record instead of
+        # failing the whole archive build
+        from urllib.parse import unquote
+
+        from docling_eval_spark.sources.warc import (
+            build_warc, build_wet, parse_warc)
+
+        recs = [("https://例え.jp/ü", _dt(60), b"<html>one</html>"),
+                ("https://a.example/2", _dt(120), b"<html>two</html>")]
+        for build in (build_warc, build_wet):
+            got, bad = parse_warc(build(recs))
+            assert bad == 0 and len(got) == 2
+            assert got[0]["url"] == "https://%E4%BE%8B%E3%81%88.jp/%C3%BC"
+            assert [unquote(r["url"]) for r in got] == [u for u, _, _ in recs]
+            assert [r["body"] for r in got] == [b for _, _, b in recs]
+
+    def test_ascii_url_punctuation_and_escapes_unchanged(self):
+        # reserved characters and existing %-escapes pass through as
+        # they are: no double encoding of an already-encoded URL
+        from docling_eval_spark.sources.warc import (
+            build_warc, build_wet, parse_warc)
+
+        url = "https://a.example/p%20q;v=1/(x)?a=1&b=[2]+c~d!*'@:$,#frag"
+        for build in (build_warc, build_wet):
+            got, bad = parse_warc(build([(url, _dt(60), b"<p>x</p>")]))
+            assert bad == 0 and [r["url"] for r in got] == [url]
+
+    def test_line_break_in_url_cannot_split_the_header(self):
+        # a CR/LF inside a URL is escaped, so it can neither end the
+        # WARC-Target-URI line nor inject a header of its own
+        from docling_eval_spark.sources.warc import (
+            build_warc, build_wet, parse_warc)
+
+        url = "https://a.example/x\r\nWARC-Type: bogus"
+        for build, rec_type in ((build_warc, "response"),
+                                (build_wet, "conversion")):
+            got, bad = parse_warc(build([(url, _dt(60), b"<p>x</p>")]))
+            assert bad == 0 and len(got) == 1
+            assert got[0]["rec_type"] == rec_type
+            assert got[0]["url"] == \
+                "https://a.example/x%0D%0AWARC-Type:%20bogus"
+
     def test_gzip_members_are_individually_compressed(self):
         # the .warc.gz contract: one gzip member per record (seekable
         # archives); the blob must decompress as a multi-member stream

@@ -36,7 +36,7 @@ QUERIES = [
     "hash_sample_docs", "stratified_sample_langs", "ngram_decontaminate",
     "url_filter_pages", "pack_sequences_docs", "token_budget_select",
     "epoch_shuffle_pos", "duplicate_spans", "dedup_components",
-    "dedup_against_history", "winnow_fingerprints",
+    "dedup_against_history",
     "bpe_token_counts", "pack_bpe_sequences",
 ]
 
