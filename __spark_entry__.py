@@ -4100,8 +4100,9 @@ def oracle_sql() -> dict[str, str]:
             "SELECT doc_id, len(kept) AS n_kept_lines, "
             "len(kept) >= 1 AND NOT contains(lower(page), 'lorem ipsum') "
             "AND NOT contains(page, '{') AND NOT list_has_any("
-            "string_split_regex(trim(lower(page)), '\\s+'), "
-            "['zzzbad', 'qqqbad']) AS keep "
+            "list_transform(string_split_regex(trim(lower(page)), '\\s+'), "
+            "w -> regexp_replace(w, '^[\\p{P}\\p{S}]+|[\\p{P}\\p{S}]+$', "
+            "'', 'g')), ['zzzbad', 'qqqbad']) AS keep "
             "FROM k ORDER BY doc_id"
         ),
         "png_decode_features": (

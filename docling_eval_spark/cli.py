@@ -58,7 +58,6 @@ def cmd_create_eval(args) -> None:
     if args.resume:
         pages = resume_filter(pages, spark, args.output, key="url")
     scored = extract_and_score(pages, n_partitions=args.partitions)
-    scored = scored.drop("spans", "tables")
     if args.lineage:
         # lineage must account for exactly THIS run's rows: persist the
         # scored frame so the write and the lineage rollup share one

@@ -26,7 +26,7 @@ byte-identical extraction gate (BASELINE.json north_rule).
 
 from __future__ import annotations
 
-from .html_tokenizer import Block
+from .html_tokenizer import Block, parse_blocks
 
 MAX_LINK_DENSITY = 1.0 / 3.0
 PREV_LINK_DENSITY_GATE = 0.555556
@@ -74,51 +74,43 @@ def classify_blocks(blocks: list[Block]) -> list[bool]:
                     break
 
     # map back onto the full block list (tables -> False for main text)
-    out: list[bool] = []
-    ti = 0
-    for b in blocks:
-        if b.kind == "text":
-            out.append(bool(labels[ti]))
-            ti += 1
-        else:
-            out.append(False)
-    return out
+    text_labels = iter(labels)
+    return [b.kind == "text" and bool(next(text_labels)) for b in blocks]
 
 
-def extract_main_text(html: str) -> dict:
-    """html string -> {text, n_blocks, n_content, n_boiler, tables, spans}.
+def _main_text(blocks: list[Block], labels: list[bool]) -> dict:
+    content = [b.text for b, keep in zip(blocks, labels) if keep]
+    n_text = sum(1 for b in blocks if b.kind == "text")
+    return {"text": "\n\n".join(content), "n_blocks": len(blocks),
+            "n_content": len(content), "n_boiler": n_text - len(content)}
+
+
+def main_text(html: str) -> dict:
+    """html string -> {text, n_blocks, n_content, n_boiler}, no per-block
+    provenance: the kernel of the extract+score stage.
 
     Main text = content blocks joined with "\\n\\n" (the block separator
     contract shared with the corpus generator — lossless for texts whose
     paragraphs were split on the same separator).
-
-    spans: per-block rows (block_idx, tag, is_content, n_chars, words,
-    link_density) — the layout/provenance stream consumed by downstream
-    evaluators (the rebuild analog of the reference's span rows).
     """
-    from .html_tokenizer import parse_blocks
+    blocks = parse_blocks(html)
+    return _main_text(blocks, classify_blocks(blocks))
 
+
+def extract_main_text(html: str) -> dict:
+    """main_text's fields plus per-block provenance: tables (captured
+    <table> subtrees, for TEDS) and spans, per-block rows (block_idx, tag,
+    is_content, kind, n_chars, words, link_density) — the rebuild analog
+    of the reference's span rows.
+    """
     blocks = parse_blocks(html)
     labels = classify_blocks(blocks)
-    content_texts = [b.text for b, keep in zip(blocks, labels) if keep and b.kind == "text"]
-    tables = [b.table_html for b in blocks if b.kind == "table"]
-    spans = [
-        {
-            "block_idx": i,
-            "tag": b.tag,
-            "is_content": bool(keep),
-            "kind": b.kind,
-            "n_chars": b.n_chars,
-            "words": b.words,
-            "link_density": b.link_density,
-        }
-        for i, (b, keep) in enumerate(zip(blocks, labels))
-    ]
     return {
-        "text": "\n\n".join(content_texts),
-        "n_blocks": len(blocks),
-        "n_content": sum(1 for keep, b in zip(labels, blocks) if keep and b.kind == "text"),
-        "n_boiler": sum(1 for keep, b in zip(labels, blocks) if not keep and b.kind == "text"),
-        "tables": tables,
-        "spans": spans,
+        **_main_text(blocks, labels),
+        "tables": [b.table_html for b in blocks if b.kind == "table"],
+        "spans": [
+            dict(block_idx=i, tag=b.tag, is_content=keep, kind=b.kind,
+                 n_chars=b.n_chars, words=b.words, link_density=b.link_density)
+            for i, (b, keep) in enumerate(zip(blocks, labels))
+        ],
     }

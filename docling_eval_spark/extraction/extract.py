@@ -1,4 +1,4 @@
-"""The extraction hot path: pages -> extracted text + span rows + tables.
+"""The extraction hot path: pages -> extracted text (+ per-block provenance).
 
 Rebuild of the reference's create-eval stage
 (docling_eval/prediction_providers/base_prediction_provider.py:308-417 —
@@ -14,9 +14,11 @@ mapInPandas stage:
   - Skew: callers salt-repartition first (operators/skew.py) because
     giant pages cluster by crawl host (north rule).
 
-Output schema keeps the oracle `text` column alongside `extracted_text`
-so scoring is a column-local comparison, plus the span rows and table
-subtrees feeding the layout/TEDS evaluators.
+Rows keep the oracle `text` column alongside `extracted_text` so scoring
+is a column-local comparison. extract_frame (EXTRACT_SCHEMA) is the kernel
+of the extract+score stage and builds no provenance; extract_pages adds
+PROVENANCE_SCHEMA — the span rows and table subtrees that the TEDS path
+(plans/table_eval.py), visualize_sample and streaming ingest read.
 """
 
 from __future__ import annotations
@@ -25,14 +27,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .boilerplate import extract_main_text
+from .boilerplate import extract_main_text, main_text
 
 EXTRACT_SCHEMA = (
     "doc_id bigint, url string, lang string, text string, "
-    "extracted_text string, n_blocks int, n_content int, n_boiler int, "
-    "tables array<string>, "
-    "spans array<struct<block_idx:int, tag:string, is_content:boolean, "
-    "kind:string, n_chars:int, words:int, link_density:double>>"
+    "extracted_text string, n_blocks int, n_content int, n_boiler int"
+)
+PROVENANCE_SCHEMA = (
+    "tables array<string>, spans array<struct<block_idx:int, tag:string, "
+    "is_content:boolean, kind:string, n_chars:int, words:int, link_density:double>>"
 )
 
 
@@ -44,17 +47,21 @@ def extract_schema(key_dtype: str = "bigint") -> str:
     return EXTRACT_SCHEMA.replace("doc_id bigint", f"doc_id {key_dtype}", 1)
 
 
-def extract_frame(pdf: pd.DataFrame, urls, htmls) -> pd.DataFrame:
-    """The per-batch extraction kernel: the (doc_id, lang, text) rows of
-    `pdf` with their urls and html strings -> extraction rows."""
-    rs = [extract_main_text(h) for h in htmls]
+def _frame(pdf: pd.DataFrame, urls, htmls, kernel, provenance=()) -> pd.DataFrame:
+    rs = [kernel(h) for h in htmls]
     return pd.DataFrame({
         "doc_id": pdf["doc_id"], "url": list(urls),
         "lang": pdf["lang"], "text": pdf["text"],
         "extracted_text": [r["text"] for r in rs],
         **{k: [r[k] for r in rs]
-           for k in ("n_blocks", "n_content", "n_boiler", "tables", "spans")},
+           for k in ("n_blocks", "n_content", "n_boiler", *provenance)},
     })
+
+
+def extract_frame(pdf: pd.DataFrame, urls, htmls) -> pd.DataFrame:
+    """The per-batch kernel of the extract+score stage: the (doc_id, lang,
+    text) rows of `pdf` with their urls and html strings -> EXTRACT_SCHEMA."""
+    return _frame(pdf, urls, htmls, main_text)
 
 
 def stored_html(pdf: pd.DataFrame):
@@ -84,9 +91,11 @@ def page_input(pages: DataFrame) -> DataFrame:
 
 
 def extract_pages(pages: DataFrame) -> DataFrame:
-    """pages (see page_input) -> extraction rows."""
+    """pages (see page_input) -> extraction rows with provenance
+    (EXTRACT_SCHEMA + PROVENANCE_SCHEMA)."""
     pages = page_input(pages)
     return pages.mapInPandas(
-        lambda it: (extract_frame(p, *stored_html(p)) for p in it),
-        schema=extract_schema(dict(pages.dtypes)["doc_id"]),
+        lambda it: (_frame(p, *stored_html(p), extract_main_text, ("tables", "spans"))
+                    for p in it),
+        schema=f"{extract_schema(dict(pages.dtypes)['doc_id'])}, {PROVENANCE_SCHEMA}",
     )

@@ -69,13 +69,15 @@ def _parse_attrs(s: str) -> list[tuple[str, str | None]]:
 
 def tokenize(html: str, sink) -> None:
     """Drive `sink` (handle_starttag/handle_endtag/handle_startendtag/
-    handle_data) over `html`."""
+    handle_data) over `html`. A tag's attribute list is parsed only when
+    `sink.wants_attrs(tag)` says the sink reads it; otherwise it is []."""
     pos = 0
     n = len(html)
     match = _TOKEN.match
     data = sink.handle_data
     start = sink.handle_starttag
     endt = sink.handle_endtag
+    wants = sink.wants_attrs
     while pos < n:
         m = match(html, pos)
         if m is None:  # pragma: no cover - scanner is total
@@ -101,7 +103,7 @@ def tokenize(html: str, sink) -> None:
                 len(attrs_s) == 1 or attrs_s[-2] in " \t\n\r\"'")
             if selfclose:
                 attrs_s = attrs_s[:-1]
-            attrs = _parse_attrs(attrs_s) if attrs_s else []
+            attrs = _parse_attrs(attrs_s) if attrs_s and wants(tag) else []
             if selfclose:
                 sink.handle_startendtag(tag, attrs)
             else:

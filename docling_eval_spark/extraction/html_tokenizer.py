@@ -61,17 +61,15 @@ class Block:
     kind: str = "text"
     table_html: str = ""
 
-    @property
-    def n_chars(self) -> int:
-        return len(self.text)
+    # shallow features, computed once: the classifier re-reads neighbours
+    n_chars: int = field(init=False)
+    words: int = field(init=False)
+    link_density: float = field(init=False)
 
-    @property
-    def words(self) -> int:
-        return len(self.text.split())
-
-    @property
-    def link_density(self) -> float:
-        return self.anchor_chars / self.n_chars if self.n_chars else 0.0
+    def __post_init__(self) -> None:
+        self.n_chars = len(self.text)
+        self.words = len(self.text.split())
+        self.link_density = self.anchor_chars / self.n_chars if self.n_chars else 0.0
 
 
 class _BlockParser(HTMLParser):
@@ -209,6 +207,10 @@ class _BlockParser(HTMLParser):
         self._parts.append(data)
         if self._anchor_depth > 0:
             self._anchor_chars += len(data)
+
+    def wants_attrs(self, tag) -> bool:
+        """Attributes are read only inside a captured <table> subtree."""
+        return not self._skip_depth and (self._table_depth > 0 or tag == "table")
 
     def _emit_table_tag(self, tag, attrs):
         if attrs:

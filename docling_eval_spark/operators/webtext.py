@@ -619,6 +619,8 @@ def full_repetition_stats(df: DataFrame, key: str = "doc_id",
 
 
 C4_TERMINAL_RE = '[.!?"]$'
+# badword token: leading/trailing punctuation and symbols (Unicode P/S) cut
+C4_TOKEN_EDGE_RE = r"^[\p{P}\p{S}]+|[\p{P}\p{S}]+$"
 
 
 def c4_page_filter(df: DataFrame, text_col: str = "text", sep: str = "\n",
@@ -632,10 +634,11 @@ def c4_page_filter(df: DataFrame, text_col: str = "text", sep: str = "\n",
     least `min_words_per_line` words, and does not contain the word
     "javascript". page keep: at least `min_kept_lines` surviving lines,
     no "lorem ipsum", and no curly brace — and, with `badwords`, no
-    whitespace token on the caller's blocklist (C4's published "List
-    of Dirty, Naughty, Obscene or Otherwise Bad Words" gate; the list
-    itself is the caller's to supply — it ships as an in-plan array
-    literal probed with one arrays_overlap, scan speed, no shuffle).
+    token (C4_TOKEN_EDGE_RE) on the caller's blocklist (C4's published
+    "List of Dirty, Naughty, Obscene or Otherwise Bad Words" gate; the
+    list itself is the caller's to supply — it ships as an in-plan array
+    literal probed with one arrays_overlap, scan speed, no shuffle;
+    multi-word phrases never match a single token).
 
     Adds n_lines, n_kept_lines, keep, and text_clean (surviving lines
     re-joined). Pure higher-order functions over a once-projected line
@@ -661,7 +664,8 @@ def c4_page_filter(df: DataFrame, text_col: str = "text", sep: str = "\n",
             & ~F.col(text_col).contains("{")
             & (F.lit(True) if not badwords else
                ~F.arrays_overlap(
-                   _words(F.lower(F.col(text_col))),
+                   F.transform(_words(F.lower(F.col(text_col))),
+                               lambda w: F.regexp_replace(w, C4_TOKEN_EDGE_RE, "")),
                    F.lit([w.lower() for w in badwords]))))
         .withColumn("text_clean", F.concat_ws(sep, F.col("_kept")))
         .drop("_ls", "_kept")
@@ -1678,11 +1682,12 @@ def stupid_backoff_logprob(df: DataFrame, key: str = "doc_id",
     Returns (key, n_pairs, sb_nll)."""
 
     def _split(frame: DataFrame, k: str):
-        ws = frame.select(k, _words(F.col(text_col)).alias("_ws")) \
-            .where(F.size("_ws") >= 2)
-        hs = ws.select(k, F.expr(
-            "transform(_ws, w -> xxhash64(w))").alias("_hs"))
-        prs = hs.select(
+        # unigrams (and N) count every token of every non-empty document,
+        # as in Brants; only bigram extraction needs two tokens
+        hs = frame.select(k, F.transform(
+            _words(F.col(text_col)), lambda w: F.xxhash64(w)).alias("_hs")) \
+            .where(F.size("_hs") >= 1)
+        prs = hs.where(F.size("_hs") >= 2).select(
             k,
             F.explode(F.arrays_zip(
                 F.slice("_hs", 1, F.size("_hs") - 1).alias("ph"),

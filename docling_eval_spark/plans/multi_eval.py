@@ -159,8 +159,7 @@ def multi_evaluate(spark: SparkSession, root_dir: str,
             pred_dir = os.path.join(root_dir, bench, exp, "predictions")
             if not dataset_exists(pred_dir):
                 scored = extract_and_score(
-                    spark.read.parquet(gt_dir), n_partitions=partitions
-                ).drop("spans", "tables")
+                    spark.read.parquet(gt_dir), n_partitions=partitions)
                 scored.write.mode("overwrite").parquet(pred_dir)
                 stats["preds_built"] += 1
             for modality in modalities:

@@ -10,9 +10,11 @@ Stages (scan -> UDF -> column ops -> agg -> two sinks):
   3. ONE extract+score mapInPandas (_extract_and_score): extraction
      (extraction/extract.py), then the markdown metric suite with an
      identity fast path (identical pair -> closed-form scores, no DP run),
-     in the same Python worker. GT text rides along, so scoring never
-     joins (the reference's co-located J1 pairing). byte_identical is a
-     native column equality after it: the 100% gate is pure JVM.
+     in the same Python worker. It returns only the scored row; per-block
+     spans and tables are extract_pages' (TEDS, visualize), never built
+     here. GT text rides along, so scoring never joins (the reference's
+     co-located J1 pairing). byte_identical is a native column equality
+     after it: the 100% gate is pure JVM.
   4. rollups: DatasetStatistics per metric (operators/stats_rollup.py)
      + per-partition lineage rows (operators/lineage.py).
 
@@ -27,6 +29,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..corpus.generator import pages_from_documents
 from ..corpus.html_synth import synth_html, url_for
@@ -63,20 +66,17 @@ def score_frame(pdf: pd.DataFrame) -> pd.DataFrame:
             m = score_text_pair(pred, true)
             m["char_accuracy"] = 1.0 - min(1.0, cer(pred, true))
         rows.append([m[f] for f in SCORE_FIELDS])
-    out = pdf.copy()
-    for i, f in enumerate(SCORE_FIELDS):
-        out[f] = [r[i] for r in rows]
-    return out
+    return pdf.assign(**{f: [r[i] for r in rows] for i, f in enumerate(SCORE_FIELDS)})
 
 
 def score_extractions(extracted: DataFrame, full_metrics: bool = True) -> DataFrame:
-    """Extraction rows -> per-doc scored rows (byte_identical + the metric
-    suite). Unextracted pages go through extract_and_score instead."""
+    """Extraction rows (e.g. extract_pages', provenance included) ->
+    per-doc scored rows (byte_identical + the metric suite). Unextracted
+    pages go through extract_and_score instead."""
     if full_metrics:
-        base = extract_schema(dict(extracted.dtypes)["doc_id"])
-        extracted = extracted.mapInPandas(
-            lambda it: map(score_frame, it), schema=f"{base}, {_SCORE_SCHEMA}"
-        )
+        schema = StructType(extracted.schema.fields
+                            + [StructField(f, DoubleType()) for f in SCORE_FIELDS])
+        extracted = extracted.mapInPandas(lambda it: map(score_frame, it), schema=schema)
     # the 100% gate is a native column equality: pure JVM, no Python
     return extracted.withColumn("byte_identical", F.col("extracted_text") == F.col("text"))
 
@@ -88,10 +88,10 @@ def _extract_and_score(rows: DataFrame, html_source,
     `html_source(batch)` returns the batch's urls and html strings; the
     batch is extracted and, with `full_metrics`, scored in the same Python
     worker. Fusing matters twice at scale: (1) each chained mapInPandas is
-    its own Python worker per task and re-crosses the Arrow boundary with
-    the whole extraction output (spans, tables) on every hop; fused, a task
-    owns exactly one worker; (2) html never returns to the JVM, so the only
-    Arrow traffic back is the extraction and metric columns.
+    its own Python worker per task and re-crosses the Arrow boundary on
+    every hop; fused, a task owns exactly one worker; (2) html never
+    returns to the JVM, so the only Arrow traffic back is the scored row,
+    never per-block spans or table html.
     """
     schema = extract_schema(dict(rows.dtypes)["doc_id"])
     if full_metrics:

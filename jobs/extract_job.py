@@ -8,12 +8,14 @@
 
 Pipeline (north rule): scan -> resume anti-join on committed urls ->
 size-balanced salted repartition -> fused extract+score mapInPandas ->
-append scored rows + per-partition lineage sidecar. Idempotent restart:
-a killed job re-submitted with --checkpoint-resume skips everything the
-committed output already contains. On an Iceberg deployment the
-parquet read/append below become `spark.table(...)` /
-`writeTo(...).append()` and the snapshot IS the checkpoint — the plan
-shape is identical (operators/resume.py docstring).
+append scored rows + per-partition lineage sidecar. The stage returns
+only the scored row; per-block provenance (spans, tables) is
+`extraction.extract.extract_pages`'. Idempotent restart: a killed job
+re-submitted with --checkpoint-resume skips everything the committed
+output already contains. On an Iceberg deployment the parquet
+read/append below become `spark.table(...)` / `writeTo(...).append()`
+and the snapshot IS the checkpoint — the plan shape is identical
+(operators/resume.py docstring).
 
 Synthetic mode (--synth-from DIR) generates the pages table from the
 documents parquet for hermetic runs/benchmarks.
@@ -67,13 +69,11 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> None:
             exclude = committed_keys(spark, args.output, key="doc_id")
         scored = flagship(spark, args.synth_from, n_partitions=n_parts,
                           exclude=exclude)
-        key = "doc_id"
     elif args.input:
         pages = spark.read.parquet(args.input)
         if args.checkpoint_resume:
             pages = resume_filter(pages, spark, args.output, key="url")
         scored = extract_and_score(pages, n_partitions=n_parts)
-        key = "url"
     elif args.input_warc:
         from pyspark.sql import functions as F
 
@@ -118,21 +118,20 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> None:
             F.lit("").alias("text"), F.lit("").alias("lang"))
         if args.checkpoint_resume:
             pages = resume_filter(pages, spark, args.output, key="url")
-        scored = extract_and_score(pages, n_partitions=n_parts)
         # a raw crawl has no ground-truth text: keep the extraction
-        # product, drop the GT-relative metric columns rather than
-        # reporting scores against an empty reference
-        keep = ["doc_id", "url", "lang", "extracted_text",
-                "n_blocks", "n_content", "n_boiler", "spans", "tables"]
-        scored = scored.select(*[c for c in keep if c in scored.columns]) \
-            .withColumn("byte_identical", F.lit(False))
-        key = "url"
+        # product and compute no GT-relative metric columns rather than
+        # scoring against an empty reference
+        scored = extract_and_score(pages, n_partitions=n_parts,
+                                   full_metrics=False)
+        scored = scored.select(
+            "doc_id", "url", "lang", "extracted_text",
+            "n_blocks", "n_content", "n_boiler",
+        ).withColumn("byte_identical", F.lit(False))
     else:
         ap.error("one of --input / --input-warc / --synth-from is required")
         return
 
-    out_cols = [c for c in scored.columns if c not in ("spans", "tables")]
-    scored = scored.select(*out_cols).persist()
+    scored = scored.persist()
     scored.write.mode("append").parquet(args.output)
     # lineage rows describe THIS run's task partitions, not the cumulative
     # table — the persist shares one computation between write and rollup

@@ -3,15 +3,22 @@ plus checkpoint/resume semantics. Uses the driver's sf0.001 documents table
 (TESTDATA.md) — text column is the oracle by construction."""
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from docling_eval_spark.corpus.generator import pages_from_documents
+from docling_eval_spark.extraction.extract import extract_pages
 from docling_eval_spark.operators.lineage import lineage_rows
 from docling_eval_spark.operators.resume import resume_filter, run_resumable
 from docling_eval_spark.operators.stats_rollup import histogram_df, stats_agg
-from docling_eval_spark.plans.pipeline import extract_and_score, flagship, flagship_rollup
+from docling_eval_spark.plans.pipeline import (
+    SCORE_FIELDS,
+    extract_and_score,
+    flagship,
+    flagship_rollup,
+)
 
 
 @pytest.fixture(scope="module")
@@ -59,12 +66,27 @@ class TestFlagship:
         assert r["n_byte_identical"] == 500
         assert r["mean_edit_distance"] == 0.0
 
-    def test_tables_extracted_for_table_pages(self, scored):
-        n_tab = scored.where(F.size("tables") > 0).count()
-        assert n_tab == scored.where(F.col("doc_id") % 5 == 0).count()
+    def test_scored_rows_carry_no_provenance(self, scored):
+        assert "spans" not in scored.columns
+        assert "tables" not in scored.columns
 
-    def test_spans_present(self, scored):
-        assert scored.where(F.size("spans") > 3).count() == 500
+
+class TestProvenance:
+    """Per-block spans and table subtrees come from extract_pages."""
+
+    @pytest.fixture(scope="class")
+    def extracted(self, spark, sf_dir):
+        df = extract_pages(pages_from_documents(spark, sf_dir, n_partitions=8))
+        df.cache().count()
+        yield df
+        df.unpersist()
+
+    def test_tables_extracted_for_table_pages(self, extracted):
+        n_tab = extracted.where(F.size("tables") > 0).count()
+        assert n_tab == extracted.where(F.col("doc_id") % 5 == 0).count()
+
+    def test_spans_present(self, extracted):
+        assert extracted.where(F.size("spans") > 3).count() == 500
 
 
 class TestSingleOperator:
@@ -77,10 +99,14 @@ class TestSingleOperator:
         plan = df._jdf.queryExecution().executedPlan().toString()
         return plan.count("MapInPandas")
 
-    def test_stored_pages_match_flagship(self, spark, sf_dir, scored, tmp_path):
-        path = str(tmp_path / "pages")
+    @pytest.fixture(scope="class")
+    def pages_path(self, spark, sf_dir, tmp_path_factory):
+        path = str(tmp_path_factory.mktemp("stored") / "pages")
         pages_from_documents(spark, sf_dir).write.parquet(path)
-        stored = extract_and_score(spark.read.parquet(path), n_partitions=8)
+        return path
+
+    def test_stored_pages_match_flagship(self, spark, sf_dir, scored, pages_path):
+        stored = extract_and_score(spark.read.parquet(pages_path), n_partitions=8)
         assert self._map_in_pandas_count(stored) == 1
         # a plan equal to the cached fixture's would read the cache instead
         assert self._map_in_pandas_count(flagship(spark, sf_dir, n_partitions=4)) == 1
@@ -88,6 +114,16 @@ class TestSingleOperator:
         got = stored.orderBy("doc_id").collect()
         want = scored.orderBy("doc_id").collect()
         assert len(got) == 500 and got == want
+
+    def test_operator_returns_only_the_scored_row(self, spark, pages_path):
+        stored = extract_and_score(spark.read.parquet(pages_path), n_partitions=4)
+        plan = stored._jdf.queryExecution().executedPlan().toString()
+        # "MapInPandas run(<input attrs>)#n, [<output attrs>], false"
+        (out,) = re.findall(r"MapInPandas .*?\)#\d+, \[(.*?)\]", plan)
+        assert [a.split("#")[0] for a in out.split(", ")] == [
+            "doc_id", "url", "lang", "text", "extracted_text",
+            "n_blocks", "n_content", "n_boiler", *SCORE_FIELDS]
+        assert "spans" not in stored.columns and "tables" not in stored.columns
 
 
 class TestStatsRollup:

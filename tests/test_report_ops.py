@@ -77,10 +77,14 @@ class TestReportOps:
 
 class TestVisualizeSink:
     def test_side_by_side_pages(self, spark, sf_dir, tmp_path):
-        from docling_eval_spark.plans.pipeline import flagship
+        from docling_eval_spark.corpus.generator import pages_from_documents
+        from docling_eval_spark.extraction.extract import extract_pages
+        from docling_eval_spark.plans.pipeline import score_extractions
         from docling_eval_spark.plans.visualize import visualize_sample
 
-        scored = flagship(spark, sf_dir, n_partitions=4, full_metrics=False)
+        # the span feature table needs extract_pages' provenance columns
+        scored = score_extractions(extract_pages(
+            pages_from_documents(spark, sf_dir, n_partitions=4)), full_metrics=False)
         paths = visualize_sample(scored, str(tmp_path / "viz"), n=3)
         assert len(paths) == 3
         body = open(paths[0]).read()

@@ -1022,23 +1022,52 @@ def test_stupid_backoff_published_formula(spark):
     assert nb == out
 
 
+def test_stupid_backoff_counts_one_token_documents(spark):
+    """Unigram counts and N come from every training token, including
+    a 1-token document's (Brants; the stupid_backoff_nll oracle); only
+    bigram extraction needs two tokens."""
+    import math
+
+    from docling_eval_spark.operators.webtext import stupid_backoff_logprob
+
+    train = spark.createDataFrame(
+        [(1, "a b a b c"), (2, "a b c"), (3, "c")], ["doc_id", "text"])
+    score = spark.createDataFrame(
+        [(10, "a b c"), (11, "a c"), (12, "c zzz")], ["doc_id", "text"])
+    out = {r["doc_id"]: (r["n_pairs"], r["sb_nll"]) for r in
+           stupid_backoff_logprob(score, train_df=train).collect()}
+    # unigrams a:3 b:3 c:3 (N=9); bigrams (a,b):3 (b,a):1 (b,c):2
+    assert out[10] == (2, round((-math.log(3 / 3) - math.log(2 / 3)) / 2, 6))
+    assert out[11] == (1, round(-math.log(0.4 * 3 / 9), 6))  # backoff, c(c)=3
+    assert out[12] == (1, round(-math.log(0.4 * 0.5 / 9), 6))  # OOV floor / N
+    # the 1-token document scores nothing, but its token still counts
+    self_nll = {r["doc_id"] for r in stupid_backoff_logprob(train).collect()}
+    assert self_nll == {1, 2}
+
+
 def test_c4_badwords_page_gate(spark):
     """C4 §2.2's badlist rule: a page containing any blocklisted
-    whitespace token drops, case-insensitively; the default (no list)
-    leaves behavior unchanged."""
+    token drops, case-insensitively and with the token's leading and
+    trailing punctuation stripped; the default (no list) leaves
+    behavior unchanged."""
     from docling_eval_spark.operators.webtext import c4_page_filter
 
     rows = [
         (1, "a clean line with enough words here today."),
         (2, "a line mentioning ZZZBAD among enough words here."),
         (3, "zzzbadish is a different token so this page keeps."),
+        (4, "a line that ends on the word zzzbad."),
+        (5, "zzzbad, followed by enough words here."),
+        (6, "quoted (ZZZBAD) or \"zzzbad\" in the middle here."),
+        (7, "zzz-bad and bad-zzzbadish and zzzbad's keep this page."),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     out = {r["doc_id"]: r["keep"] for r in c4_page_filter(
         df, min_words_per_line=1, min_kept_lines=1,
         badwords=["zzzbad"]).collect()}
-    assert out == {1: True, 2: False, 3: True}
+    assert out == {1: True, 2: False, 3: True, 4: False, 5: False,
+                   6: False, 7: True}
     # no list -> no gate
     base = {r["doc_id"]: r["keep"] for r in c4_page_filter(
         df, min_words_per_line=1, min_kept_lines=1).collect()}
-    assert base == {1: True, 2: True, 3: True}
+    assert base == dict.fromkeys(range(1, 8), True)

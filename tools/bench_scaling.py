@@ -77,7 +77,7 @@ sys.path.insert(0, "__REPO__")
 def work(args):
     seed, n, sf_dir = args
     from docling_eval_spark.corpus.html_synth import synth_html
-    from docling_eval_spark.extraction.boilerplate import extract_main_text
+    from docling_eval_spark.extraction.boilerplate import main_text
     import duckdb
     rows = duckdb.connect().execute(
         "SELECT doc_id, text, lang FROM read_parquet(?)",
@@ -85,7 +85,7 @@ def work(args):
     cnt = 0
     for r in range(n):
         for doc_id, text, lang in rows:
-            extract_main_text(synth_html(doc_id * n + r, text, lang).decode())
+            main_text(synth_html(doc_id * n + r, text, lang).decode())
             cnt += 1
     return cnt
 

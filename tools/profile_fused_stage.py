@@ -1,21 +1,17 @@
-"""Profile the fused synth->extract->score kernel (verdict-r4 item #6).
+"""Profile the fused synth->extract->score kernel, no Spark involved.
 
-Round 4 observed the flagship job's 8->32 scaling efficiency sliding to
-75% of the measured multiprocessing ceiling. The ceiling kernel
-(tools/bench_scaling.py _CEILING_CHILD) runs synth+extract ONLY, while
-the fused Spark stage also runs the full metric suite (score_frame:
-BLEU, METEOR with from-scratch stemming, token PRF, edit distance) —
-so the comparison is job-vs-a-LIGHTER-kernel. This tool answers two
-questions in one run, no Spark involved:
+Times the functions the flagship stage runs on each Arrow batch
+(plans/pipeline.py _extract_and_score: _synth_source, extract_frame,
+score_frame) and answers two questions:
 
   1. stage composition: per-doc wall time of synth / extract / score
      single-core — which stage owns the per-doc cost;
   2. scaling attribution: the multiprocessing ceiling at the given
-     levels for the LIGHT kernel (synth+extract, what bench_scaling
-     measures) vs the FULL kernel (synth+extract+score, what the job
-     actually runs). If the full kernel's own 8->32 mc efficiency
-     matches the job's, the gap is the kernel's memory profile on this
-     box, not Spark overhead.
+     levels for the LIGHT kernel (synth+extract, what
+     tools/bench_scaling.py measures) vs the FULL kernel
+     (synth+extract+score, what the job runs). If the full kernel's own
+     mc efficiency matches the job's, the gap is the kernel's memory
+     profile on the host, not Spark overhead.
 
 Usage: python tools/profile_fused_stage.py [--sf-dir ...] [--levels 8,32]
 """
@@ -33,33 +29,35 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def _rows(sf_dir: str):
+def _batch(sf_dir: str, reps: int):
+    """The documents table `reps` times, with distinct doc_ids per
+    replica (so each replica synthesizes distinct html)."""
     import duckdb
+    import pandas as pd
 
-    return duckdb.connect().execute(
+    docs = duckdb.connect().execute(
         "SELECT doc_id, text, lang FROM read_parquet(?) ORDER BY doc_id",
-        [sf_dir + "/documents.parquet"]).fetchall()
+        [sf_dir + "/documents.parquet"]).df()
+    return pd.concat([docs.assign(doc_id=docs["doc_id"] * reps + r)
+                      for r in range(reps)], ignore_index=True)
 
 
 def stage_times(sf_dir: str, reps: int = 2) -> dict:
-    from docling_eval_spark.corpus.html_synth import synth_html
-    from docling_eval_spark.extraction.boilerplate import extract_main_text
-    from docling_eval_spark.functions.text_metrics import score_text_pair
+    from docling_eval_spark.extraction.extract import extract_frame
+    from docling_eval_spark.plans.pipeline import _synth_source, score_frame
 
-    rows = _rows(sf_dir)
+    pdf = _batch(sf_dir, reps)
     t0 = time.perf_counter()
-    htmls = [synth_html(d, t, l).decode() for _ in range(reps)
-             for d, t, l in rows]
+    urls, htmls = _synth_source(pdf)
+    htmls = list(htmls)
     t_synth = time.perf_counter() - t0
     t0 = time.perf_counter()
-    extracted = [extract_main_text(h) for h in htmls]
+    extracted = extract_frame(pdf, urls, htmls)
     t_extract = time.perf_counter() - t0
-    texts = [t for _ in range(reps) for _, t, _ in rows]
     t0 = time.perf_counter()
-    for r, t in zip(extracted, texts):
-        score_text_pair(r["text"], t)
+    score_frame(extracted)
     t_score = time.perf_counter() - t0
-    n = len(htmls)
+    n = len(pdf)
     total = t_synth + t_extract + t_score
     return {
         "docs": n,
@@ -78,20 +76,14 @@ def stage_times(sf_dir: str, reps: int = 2) -> dict:
 
 def _work(args):
     seed, reps, sf_dir, with_score = args
-    from docling_eval_spark.corpus.html_synth import synth_html
-    from docling_eval_spark.extraction.boilerplate import extract_main_text
-    from docling_eval_spark.functions.text_metrics import score_text_pair
+    from docling_eval_spark.extraction.extract import extract_frame
+    from docling_eval_spark.plans.pipeline import _synth_source, score_frame
 
-    rows = _rows(sf_dir)
-    cnt = 0
-    for r in range(reps):
-        for doc_id, text, lang in rows:
-            res = extract_main_text(
-                synth_html(doc_id * reps + r, text, lang).decode())
-            if with_score:
-                score_text_pair(res["text"], text)
-            cnt += 1
-    return cnt
+    pdf = _batch(sf_dir, reps)
+    out = extract_frame(pdf, *_synth_source(pdf))
+    if with_score:
+        score_frame(out)
+    return len(out)
 
 
 def mc_ceiling(sf_dir: str, procs: int, reps: int, with_score: bool) -> float:
