@@ -1,7 +1,8 @@
 """Benchmark harness (driver contract).
 
 Runs the headline jobs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+on local[$SPARK_GRAFT_CPUS] (default: the usable cores) and prints ONE
+JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {...per-query sec...}, "sf": ..., "docs_per_sec": ...}
 
@@ -230,8 +231,10 @@ def _contended(c1: float, mc: float) -> bool:
 
 
 def main() -> None:
+    from docling_eval_spark.session import usable_cpus
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = usable_cpus()
 
     if len(sys.argv) > 2 and sys.argv[1] == "--group":
         _run_group(sys.argv[2], sf_dir, cpus)

@@ -15,4 +15,11 @@ Layout:
     streaming/   batch-incremental resume (anti-join checkpointing)
 """
 
+from . import zipstamp
+
 __version__ = "0.1.0"
+
+# Python workers import this package when they unpickle the first task's
+# function; from then on Spark's per-task importlib.invalidate_caches()
+# skips the zip archives that have not changed (see zipstamp).
+zipstamp.install()

@@ -17,8 +17,8 @@ mapInPandas stage:
 Rows keep the oracle `text` column alongside `extracted_text` so scoring
 is a column-local comparison. extract_frame (EXTRACT_SCHEMA) is the kernel
 of the extract+score stage and builds no provenance; extract_pages adds
-PROVENANCE_SCHEMA — the span rows and table subtrees that the TEDS path
-(plans/table_eval.py), visualize_sample and streaming ingest read.
+PROVENANCE_SCHEMA — the span rows and table subtrees that visualize_sample
+and streaming ingest read.
 """
 
 from __future__ import annotations

@@ -11,7 +11,7 @@ Stages (scan -> UDF -> column ops -> agg -> two sinks):
      (extraction/extract.py), then the markdown metric suite with an
      identity fast path (identical pair -> closed-form scores, no DP run),
      in the same Python worker. It returns only the scored row; per-block
-     spans and tables are extract_pages' (TEDS, visualize), never built
+     spans and tables are extract_pages' (visualize, streaming), never built
      here. GT text rides along, so scoring never joins (the reference's
      co-located J1 pairing). byte_identical is a native column equality
      after it: the 100% gate is pure JVM.

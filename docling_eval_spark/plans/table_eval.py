@@ -44,6 +44,8 @@ def perturb_table_html(html: str, mode: int) -> str:
 
 def _teds_batches(it: Iterator[pd.DataFrame], perturb: bool = False) -> Iterator[pd.DataFrame]:
     from ..corpus.html_synth import gt_table_html
+    from ..extraction.extract import stored_html
+    from ..extraction.html_tokenizer import parse_blocks
     from ..functions.teds import (
         html_table_to_grid_cells,
         is_complex_table,
@@ -53,9 +55,12 @@ def _teds_batches(it: Iterator[pd.DataFrame], perturb: bool = False) -> Iterator
 
     for pdf in it:
         rows = []
-        for doc_id, url, tables in zip(pdf["doc_id"], pdf["url"], pdf["tables"]):
+        for doc_id, url, html in zip(pdf["doc_id"], *stored_html(pdf)):
             gt = gt_table_html(int(doc_id))
-            pred = tables[0] if len(tables) else ""
+            # the page's first captured <table> subtree, as extraction
+            # reports it; no text classification or span rows are needed
+            pred = next((b.table_html for b in parse_blocks(html)
+                         if b.kind == "table"), "")
             if perturb:
                 pred = perturb_table_html(pred, int(doc_id) % 4)
             gt_cells = html_table_to_grid_cells(gt)
@@ -77,18 +82,21 @@ def _teds_batches(it: Iterator[pd.DataFrame], perturb: bool = False) -> Iterator
 
 def teds_scores(spark: SparkSession, sf_dir: str, n_partitions: int = 16,
                 perturb: bool = False) -> DataFrame:
-    """Extract table pages and TEDS-score them against regenerable GT.
+    """Synthesize the table pages, extract each page's first table and
+    TEDS-score it against regenerable GT, in one Python stage after the
+    synthesis.
     `perturb` applies the deterministic shape perturbations (mode =
     doc_id % 4) so the delta histogram has non-trivial bins."""
     from functools import partial
 
-    from ..corpus.generator import pages_from_documents
-    from ..extraction.extract import extract_pages
+    from ..corpus.generator import pages_from_documents, synth_pages
     from ..operators.skew import size_balanced_repartition
 
-    pages = pages_from_documents(spark, sf_dir).where(F.col("doc_id") % 5 == 0)
-    ext = extract_pages(size_balanced_repartition(pages, n_partitions))
-    return ext.select("doc_id", "url", "tables").mapInPandas(
+    # keep the table pages (doc_id % 5 == 0) before synthesizing any html
+    docs = pages_from_documents(spark, sf_dir, pages_stage=False)
+    pages = synth_pages(docs.where(F.col("doc_id") % 5 == 0))
+    pages = size_balanced_repartition(pages, n_partitions)
+    return pages.select("doc_id", "url", "html").mapInPandas(
         partial(_teds_batches, perturb=perturb), schema=TEDS_SCHEMA
     )
 

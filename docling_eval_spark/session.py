@@ -5,9 +5,9 @@ Design notes (100 TB scale):
     `maxRecordsPerBatch` is tuned down (256) to keep a batch well under
     executor memory even for heavy-tailed pages.
   - AQE on: runtime coalescing + skew-join splitting are free wins.
-  - shuffle.partitions sized for local[32] tests; a real cluster job
-    overrides via spark-submit conf (rule of thumb: 2-3x total cores,
-    or target 128-512 MB per shuffle partition).
+  - shuffle.partitions defaults to 32; a real cluster job overrides it
+    via spark-submit conf (rule of thumb: 2-3x total cores, or target
+    128-512 MB per shuffle partition).
 """
 
 from __future__ import annotations
@@ -33,6 +33,14 @@ DEFAULT_CONFS = {
 }
 
 
+def usable_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` if set, else the cores this process may run on.
+
+    Each local core gets its own Python worker, and each worker pays its
+    imports, so a default above the usable cores only adds workers."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "docling-eval-spark",
     master: str | None = None,
@@ -40,13 +48,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32) so the
-    bench harness can run the identical job at two parallelism levels to
-    evidence the N -> 4N scaling-efficiency rule.
+    master defaults to ``local[usable_cpus()]``, so the bench harness can
+    run the identical job at two parallelism levels (via
+    ``$SPARK_GRAFT_CPUS``) to evidence the N -> 4N scaling-efficiency rule.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{usable_cpus()}]"
     builder = SparkSession.builder.appName(app_name).master(master)
     confs = dict(DEFAULT_CONFS)
     if extra_confs:

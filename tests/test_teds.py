@@ -117,3 +117,20 @@ class TestGridCells:
         cells = html_table_to_grid_cells(html)
         assert is_complex_table(cells)
         assert teds_score(html, html) == pytest.approx(1.0)
+
+
+class TestTedsScoresPlan:
+    """teds_scores synthesizes html only for the table pages it keeps."""
+
+    def test_table_filter_runs_before_synthesis(self, spark, sf_dir):
+        from docling_eval_spark.plans.table_eval import teds_scores
+
+        # the physical plan before execution; children print below their
+        # parent, so the last MapInPandas is the first to run (synthesis)
+        plan = teds_scores(spark, sf_dir)._jdf.queryExecution() \
+            .executedPlan().toString().splitlines()
+        nodes = [line.lstrip(" +-:") for line in plan]
+        maps = [i for i, n in enumerate(nodes) if n.startswith("MapInPandas")]
+        (table_filter,) = [i for i, n in enumerate(nodes)
+                           if n.startswith("Filter") and "% 5) = 0" in n]
+        assert len(maps) == 2 and table_filter > maps[-1]
