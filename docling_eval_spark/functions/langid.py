@@ -12,12 +12,13 @@ No pretrained weights ship with the repo: the model trains
 DETERMINISTICALLY at first use on a seeded synthetic corpus drawn from
 per-language function-word lists (public linguistic facts — the ~25
 highest-frequency words of each language). Training is 800
-full-batch gradient steps over a [5.5k x 4096] matrix — ~15 s in
-numpy — and runs ONCE per driver process (cached); executors receive the final
-weight matrix (~400 KB) inside the UDF closure, never the training
-loop. Everything is seeded, so weights — and therefore predictions —
-are bit-reproducible across sessions, which is what lets the oracle
-gate assert exact per-row agreement.
+full-batch gradient steps over a [5.5k x 4096] matrix — ~55 s in
+numpy on a 4-core x86 machine — and runs ONCE per driver process
+(cached); executors receive the final weight matrix (~400 KB) inside
+the UDF closure, never the training loop. Everything is seeded, so
+weights — and therefore predictions — are bit-reproducible across
+sessions, which is what lets the oracle gate assert exact per-row
+agreement.
 
 Scale shape: scoring is one Arrow-batched stage (SCALAR_ITER pandas
 UDF), no shuffle, no per-row Python rows — the same cost profile as the
@@ -156,7 +157,7 @@ def train_langid(seed: int = 7, samples_per_lang: int = 240,
     """Deterministic softmax regression on the synthetic corpus.
 
     Returns (W [L, D] float32, b [L] float32). Full-batch gradient
-    descent — the dataset is ~2.8k x 4096, so there is nothing to
+    descent — the dataset is ~5.5k x 4096, so there is nothing to
     distribute; determinism (fixed seed, fixed iteration count, float32
     accumulation in a fixed order) is the property the oracle relies
     on.

@@ -18,7 +18,9 @@ The tree edit distance itself is the classic Zhang-Shasha algorithm
 (K. Zhang, D. Shasha, SIAM J. Comput. 1989) — exact, O(n^2 * min-depth
 factors); table trees are small (<= a few hundred nodes) so this is the
 per-document kernel inside an Arrow-batched grouped-map UDF, never a
-distributed operation (SURVEY.md §2.8 F1).
+distributed operation (SURVEY.md §2.8 F1). Its tables are plain Python
+lists, and the rename cost (a Levenshtein for td pairs) is computed once
+per node pair and reused across every keyroot pair whose forests hold it.
 
 Also provides:
   - parse_table_tree / html_table_to_grid_cells (reference
@@ -168,9 +170,9 @@ def _flatten_postorder(root: TableNode):
         return len(nodes) - 1
 
     walk(root)
-    n = len(nodes)
-    keyroots = [i for i in range(n) if not any(lmld[j] == lmld[i] for j in range(i + 1, n))]
-    return nodes, lmld, keyroots
+    # keyroots: the highest postorder index for each leftmost leaf
+    last = {l: i for i, l in enumerate(lmld)}
+    return nodes, lmld, sorted(last.values())
 
 
 def _rename_cost(a: TableNode, b: TableNode, structure_only: bool) -> float:
@@ -184,42 +186,67 @@ def _rename_cost(a: TableNode, b: TableNode, structure_only: bool) -> float:
 
 
 def tree_edit_distance(t1: TableNode, t2: TableNode, structure_only: bool = False) -> float:
-    """Exact Zhang-Shasha tree edit distance with the TEDS cost model."""
+    """Exact Zhang-Shasha tree edit distance with the TEDS cost model.
+
+    Tree and forest distances live in plain lists, and each node pair's
+    rename cost is computed once and reused by every keyroot pair whose
+    forests contain it. Each cell is min(delete, insert, rename-or-match)
+    taken in that order, as the classic recurrence writes it.
+    """
     n1, l1, k1 = _flatten_postorder(t1)
     n2, l2, k2 = _flatten_postorder(t2)
-    import numpy as np
-
-    td = np.zeros((len(n1), len(n2)))
+    w = len(n2)
+    td = [[0.0] * w for _ in n1]
+    rename: dict[int, float] = {}
+    # per keyroot j of t2, the columns of its forest: (y, node, the column
+    # left of the node's subtree, whether the node is on j's leftmost path)
+    cols = {j: [(yj - l2[j] + 1, yj, l2[yj] - l2[j], l2[yj] == l2[j])
+                for yj in range(l2[j], j + 1)] for j in k2}
 
     for i in k1:
+        li = l1[i]
         for j in k2:
             # forest distance for subtrees rooted at keyroots i, j
-            m, n = i - l1[i] + 2, j - l2[j] + 2
-            fd = np.zeros((m, n))
-            ioff, joff = l1[i] - 1, l2[j] - 1
-            for x in range(1, m):
-                fd[x][0] = fd[x - 1][0] + 1.0  # delete
-            for y in range(1, n):
-                fd[0][y] = fd[0][y - 1] + 1.0  # insert
-            for x in range(1, m):
-                for y in range(1, n):
-                    if l1[x + ioff] == l1[i] and l2[y + joff] == l2[j]:
-                        cost = _rename_cost(n1[x + ioff], n2[y + joff], structure_only)
-                        fd[x][y] = min(
-                            fd[x - 1][y] + 1.0,
-                            fd[x][y - 1] + 1.0,
-                            fd[x - 1][y - 1] + cost,
-                        )
-                        td[x + ioff][y + joff] = fd[x][y]
-                    else:
-                        p = l1[x + ioff] - 1 - ioff
-                        q = l2[y + joff] - 1 - joff
-                        fd[x][y] = min(
-                            fd[x - 1][y] + 1.0,
-                            fd[x][y - 1] + 1.0,
-                            fd[p][q] + td[x + ioff][y + joff],
-                        )
-    return float(td[len(n1) - 1][len(n2) - 1])
+            cj = cols[j]
+            fd = [[float(x)] + [0.0] * len(cj) for x in range(i - li + 2)]
+            fd[0] = [float(y) for y in range(len(cj) + 1)]
+            for x, xi in enumerate(range(li, i + 1), 1):
+                lx = l1[xi]
+                prev, cur, tdx = fd[x - 1], fd[x], td[xi]
+                # row the non-tree case reads: the forest left of x's subtree
+                fp = fd[lx - li]
+                left = cur[0]
+                if lx == li:  # x is on i's leftmost path
+                    for y, yj, q, on_path in cj:
+                        v = prev[y] + 1.0
+                        d = left + 1.0
+                        if d < v:
+                            v = d
+                        if on_path:
+                            key = xi * w + yj
+                            cost = rename.get(key)
+                            if cost is None:
+                                cost = rename[key] = _rename_cost(n1[xi], n2[yj], structure_only)
+                            d = prev[y - 1] + cost
+                            if d < v:
+                                v = d
+                            tdx[yj] = v
+                        else:
+                            d = fp[q] + tdx[yj]
+                            if d < v:
+                                v = d
+                        cur[y] = left = v
+                else:
+                    for y, yj, q, _ in cj:
+                        v = prev[y] + 1.0
+                        d = left + 1.0
+                        if d < v:
+                            v = d
+                        d = fp[q] + tdx[yj]
+                        if d < v:
+                            v = d
+                        cur[y] = left = v
+    return td[-1][-1]
 
 
 def teds_score(gt_html: str, pred_html: str, structure_only: bool = False) -> float:

@@ -56,9 +56,9 @@ def with_lang_id_classifier(df: DataFrame, text_col: str = "text",
     char-n-gram softmax classifier (functions/langid.py — the fastText
     model family CCNet §4.3 buckets Common Crawl with, 23 languages).
 
-    The model trains ONCE on the driver (deterministic, ~15 s,
-    seeded synthetic corpus, cached per process) and its ~400 KB weight matrix ships to
-    executors inside the UDF closure; scoring is one Arrow-batched
+    The model trains ONCE on the driver (deterministic, ~55 s on a
+    4-core x86 machine, seeded synthetic corpus, cached per process) and
+    its ~400 KB weight matrix ships to executors inside the UDF closure; scoring is one Arrow-batched
     SCALAR_ITER stage — a numpy GEMM per batch, no shuffle, no per-row
     Python rows. Adds {prefix}lang (ISO-639-1, 'und' for empty text)
     and {prefix}conf (softmax probability of the argmax)."""

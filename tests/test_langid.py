@@ -36,10 +36,12 @@ def test_short_text_and_confusable_pairs():
 
 
 def test_deterministic_weights():
-    from docling_eval_spark.functions.langid import train_langid
+    # a fresh training against the process-cached model, which an earlier
+    # test has usually trained already: two independent trainings, one paid
+    from docling_eval_spark.functions.langid import get_model, train_langid
 
     W1, b1 = train_langid()
-    W2, b2 = train_langid()
+    W2, b2 = get_model()
     assert np.array_equal(W1, W2) and np.array_equal(b1, b2)
 
 

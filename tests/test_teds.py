@@ -2,6 +2,8 @@
 reference test model (tests/test_table_evaluator.py:11-292 asserts
 TEDS == 1.0 on identity)."""
 
+import re
+
 import pytest
 
 from docling_eval_spark.functions.teds import (
@@ -77,6 +79,146 @@ class TestTEDS:
     def test_ted_known_distance(self):
         # identical trees -> 0
         assert tree_edit_distance(parse_table_tree(SIMPLE), parse_table_tree(SIMPLE)) == 0.0
+
+
+def _pinned_preds(doc_id: int) -> tuple[str, list[str]]:
+    """gt table for doc_id and seven predictions: perturb modes 0-3, one
+    cell-text edit, every cell's text rewritten on top of mode 3, and the
+    next table in the corpus."""
+    from docling_eval_spark.corpus.html_synth import gt_table_html
+    from docling_eval_spark.plans.table_eval import perturb_table_html
+
+    gt = gt_table_html(doc_id)
+    preds = [perturb_table_html(gt, mode) for mode in range(4)]
+    preds.append(re.sub(r"v(\d)(\d)", r"cell \1.\2", gt, count=1))
+    preds.append(re.sub(r"v(\d)(\d)", r"\2v\1", perturb_table_html(gt, 3)))
+    preds.append(gt_table_html(doc_id + 5))
+    return gt, preds
+
+
+# (teds_score, structure_only teds_score) per prediction, recorded once and
+# compared with ==: a kernel change that moves any float fails here
+_PINNED_TEDS = {
+    0: [
+        (1.0, 1.0),
+        (0.8, 0.8),
+        (0.8888888888888888, 0.8888888888888888),
+        (0.7272727272727273, 0.7272727272727273),
+        (0.90625, 1.0),
+        (0.4242424242424243, 0.7272727272727273),
+        (0.5, 0.5),
+    ],
+    5: [
+        (1.0, 1.0),
+        (0.8, 0.8),
+        (0.8888888888888888, 0.8888888888888888),
+        (0.7272727272727273, 0.7272727272727273),
+        (0.90625, 1.0),
+        (0.4242424242424243, 0.7272727272727273),
+        (0.31818181818181823, 0.31818181818181823),
+    ],
+    10: [
+        (1.0, 1.0),
+        (0.9166666666666666, 0.9166666666666666),
+        (0.9565217391304348, 0.9565217391304348),
+        (0.88, 0.88),
+        (0.9659090909090909, 1.0),
+        (0.42666666666666675, 0.88),
+        (0.5757575757575758, 0.5909090909090908),
+    ],
+    15: [
+        (1.0, 1.0),
+        (0.9047619047619048, 0.9047619047619048),
+        (0.95, 0.95),
+        (0.8636363636363636, 0.8636363636363636),
+        (0.9605263157894737, 1.0),
+        (0.43939393939393934, 0.8636363636363636),
+        (0.19298245614035092, 0.26315789473684215),
+    ],
+    20: [
+        (1.0, 1.0),
+        (0.7142857142857143, 0.7142857142857143),
+        (0.8333333333333334, 0.8333333333333334),
+        (0.625, 0.625),
+        (0.85, 1.0),
+        (0.375, 0.625),
+        (0.2857142857142857, 0.2857142857142857),
+    ],
+    25: [
+        (1.0, 1.0),
+        (0.875, 0.875),
+        (0.9333333333333333, 0.9333333333333333),
+        (0.8235294117647058, 0.8235294117647058),
+        (0.9464285714285714, 1.0),
+        (0.47058823529411764, 0.8235294117647058),
+        (0.43137254901960786, 0.5294117647058824),
+    ],
+    30: [
+        (1.0, 1.0),
+        (0.8947368421052632, 0.8947368421052632),
+        (0.9444444444444444, 0.9444444444444444),
+        (0.85, 0.85),
+        (0.9558823529411765, 1.0),
+        (0.41666666666666674, 0.85),
+        (0.6666666666666667, 0.6842105263157895),
+    ],
+    35: [
+        (1.0, 1.0),
+        (0.9047619047619048, 0.9047619047619048),
+        (0.95, 0.95),
+        (0.8636363636363636, 0.8636363636363636),
+        (0.9605263157894737, 1.0),
+        (0.40909090909090906, 0.8636363636363636),
+        (0.5789473684210527, 0.5789473684210527),
+    ],
+    40: [
+        (1.0, 1.0),
+        (0.8947368421052632, 0.8947368421052632),
+        (0.9444444444444444, 0.9444444444444444),
+        (0.85, 0.85),
+        (0.9558823529411765, 1.0),
+        (0.41666666666666674, 0.85),
+        (0.3137254901960784, 0.47058823529411764),
+    ],
+    45: [
+        (1.0, 1.0),
+        (0.8947368421052632, 0.8947368421052632),
+        (0.9444444444444444, 0.9444444444444444),
+        (0.85, 0.85),
+        (0.9558823529411765, 1.0),
+        (0.44999999999999996, 0.85),
+        (0.4285714285714286, 0.47619047619047616),
+    ],
+    50: [
+        (1.0, 1.0),
+        (0.9130434782608696, 0.9130434782608696),
+        (0.9545454545454546, 0.9545454545454546),
+        (0.875, 0.875),
+        (0.9642857142857143, 1.0),
+        (0.4305555555555556, 0.875),
+        (0.365079365079365, 0.4285714285714286),
+    ],
+    55: [
+        (1.0, 1.0),
+        (0.8666666666666667, 0.8666666666666667),
+        (0.9285714285714286, 0.9285714285714286),
+        (0.8125, 0.8125),
+        (0.9423076923076923, 1.0),
+        (0.4375, 0.8125),
+        (0.4871794871794872, 0.6153846153846154),
+    ],
+}
+
+
+class TestTedsPinned:
+    """The DP and cost cache must reproduce every float exactly."""
+
+    @pytest.mark.parametrize("doc_id", sorted(_PINNED_TEDS))
+    def test_scores_bit_for_bit(self, doc_id):
+        gt, preds = _pinned_preds(doc_id)
+        got = [(teds_score(gt, p), teds_score(gt, p, structure_only=True))
+               for p in preds]
+        assert got == _PINNED_TEDS[doc_id]
 
 
 class TestGridCells:

@@ -11,7 +11,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from docling_eval_spark.functions.text_metrics import (
-    _levenshtein_exact,
     bleu_score,
     cer,
     char_accuracy,
@@ -22,6 +21,24 @@ from docling_eval_spark.functions.text_metrics import (
     token_set_prf,
     word_tokenize,
 )
+
+
+def _levenshtein_exact(a, b) -> int:
+    """Plain scalar unit-cost DP: the oracle for the bit-parallel kernel."""
+    prev = list(range(len(b) + 1))
+    for i, ai in enumerate(a, 1):
+        cur = [i] + [0] * len(b)
+        for j, bj in enumerate(b, 1):
+            cur[j] = min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ai != bj))
+        prev = cur
+    return prev[-1]
+
+
+# lengths up to 200 so bit-vectors span one, two and four 64-bit words
+_chars = st.text(alphabet="abcdé€😀", max_size=200)
+_long_chars = st.text(alphabet="abcdé€😀", min_size=60, max_size=200)
+_tokens = st.lists(st.sampled_from(["the", "a", "cat", "sat", "mat", "ü"]),
+                   max_size=150)
 
 
 class TestLevenshtein:
@@ -37,6 +54,32 @@ class TestLevenshtein:
     @given(st.text(alphabet="abcd", max_size=12), st.text(alphabet="abcd", max_size=12))
     def test_matches_scalar_dp(self, a, b):
         assert levenshtein(a, b) == _levenshtein_exact(a, b)
+
+    @settings(max_examples=150, deadline=None)
+    @given(_long_chars, _long_chars)
+    def test_long_non_ascii_matches_scalar_dp(self, a, b):
+        assert levenshtein(a, b) == _levenshtein_exact(a, b)
+
+    @settings(max_examples=150, deadline=None)
+    @given(_tokens, _tokens)
+    def test_token_lists_match_scalar_dp(self, a, b):
+        assert levenshtein(a, b) == _levenshtein_exact(a, b)
+
+    @settings(max_examples=150, deadline=None)
+    @given(_chars, _chars, _chars, _chars, _chars)
+    def test_shared_prefix_suffix_match_scalar_dp(self, pre, x, y, suf, pad):
+        # shared prefix and suffix around differing middles, both orders
+        a, b = pre + pad + x + suf, pre + y + pad + suf
+        assert levenshtein(a, b) == _levenshtein_exact(a, b)
+        assert levenshtein(b, a) == _levenshtein_exact(a, b)
+
+    def test_multi_word_bitvectors(self):
+        rng = np.random.default_rng(7)
+        for n in (63, 64, 65, 127, 128, 129, 300):
+            a = "".join(rng.choice(list("abcd"), n))
+            b = "".join(rng.choice(list("abcd"), n + int(rng.integers(-20, 20))))
+            # both argument orders: the kernel swaps to the shorter side
+            assert levenshtein(a, b) == levenshtein(b, a) == _levenshtein_exact(a, b)
 
     def test_unicode(self):
         assert levenshtein("über", "uber") == 1
