@@ -213,7 +213,7 @@ def cmd_pack(args) -> None:
     (doc_id, shuffle_pos, n_tokens, tok_start, seq_first, seq_last)
     a data loader can range-scan per sequence id, plus a JSON summary.
     Both stages are the distributed prefix-sum plans — no global sort
-    anywhere (operators/webtext.py pack_sequences / epoch_shuffle)."""
+    anywhere (operators/slicing.py bucketed_running_total)."""
     from pyspark.sql import functions as F
 
     from .operators.webtext import epoch_shuffle, pack_sequences

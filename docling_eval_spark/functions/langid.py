@@ -182,7 +182,12 @@ def train_langid(seed: int = 7, samples_per_lang: int = 240,
         P /= P.sum(axis=1, keepdims=True)
         G = (P - Y) / n                       # [N, L]
         W -= lr * (G.T @ X)
-        b -= lr * G.sum(axis=0)
+        # the bias takes a unit step, not `lr`: its curvature is the
+        # softmax covariance itself (up to 0.5), while the weights see it
+        # scaled by the L1-normalized features' eigenvalues (largest
+        # ~3e-3). At `lr` the bias step oscillates, and an unstable step
+        # turns float rounding into a different model per BLAS kernel.
+        b -= G.sum(axis=0)
     return W, b
 
 

@@ -38,8 +38,9 @@ def size_balanced_repartition(df: DataFrame, n_partitions: int,
     """Spread rows so heavy blobs are salted across ALL partitions while
     light rows still pack densely.
 
-    Heavy rows get partition = hash(key, salt, monotonic row marker) —
-    effectively round-robin; light rows hash by url. Single shuffle.
+    Heavy rows hash their html content with the salt — distinct blobs
+    spread effectively round-robin; light rows hash by url. Single
+    shuffle.
     """
     weight = F.when(
         F.length(F.col(bytes_col)) > heavy_threshold,

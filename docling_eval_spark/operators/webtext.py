@@ -29,8 +29,8 @@ over it (CCNet, Gopher/MassiveText, C4, RefinedWeb — all published):
 - benchmark n-gram decontamination (GPT-3 appendix C: broadcast the
   eval-set gram table, stream-probe the corpus),
 - URL blocklist + banned-word scoring (RefinedWeb section 3.1),
-- context-window sequence packing via a distributed prefix sum
-  (per-bucket windows + broadcast offsets — no global sort),
+- context-window sequence packing via the distributed prefix sum
+  (slicing.bucketed_running_total — no global sort),
 - exact duplicate-span measurement (Lee et al. 2022 suffix-array
   dedup re-expressed as an n-gram index + interval merge),
 - pre-hash NFC/whitespace canonicalization (one Arrow stage),
@@ -54,6 +54,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from docling_eval_spark.operators.caching import track_caches
+from docling_eval_spark.operators.slicing import (
+    bucketed_running_total, key_range_bucket, require_integral_key)
 from docling_eval_spark.operators.text_analysis import STOPWORDS
 
 # Packing stride for (doc, line-ordinal) -> single bigint. 2^20 lines
@@ -94,8 +97,7 @@ def with_word_lines(df: DataFrame, text_col: str = "text",
 
 
 def corpus_line_dedup(df: DataFrame, key: str = "doc_id",
-                      text_col: str = "text", sep: str = "\n",
-                      persist_intermediate: bool = True) -> DataFrame:
+                      text_col: str = "text", sep: str = "\n") -> DataFrame:
     """CCNet-style corpus-level duplicate-line removal.
 
     Reference pipeline analog: CCNet section 3.1 deduplicates Common
@@ -122,8 +124,8 @@ def corpus_line_dedup(df: DataFrame, key: str = "doc_id",
          non-blank split), not by re-aggregating the exploded frame.
 
     The int-only exploded frame has two consumers (winner aggregation
-    and winner join); with `persist_intermediate` (default) it is
-    persisted and count()-materialized in its own job first, so the
+    and winner join); it is persisted and count()-materialized in its
+    own job first, so the
     text-splitting subtree executes exactly once (a persist alone does
     not stop concurrent first computations racing — see
     operators/dedup.py). The per-doc keep_pos frame stays persisted in
@@ -142,13 +144,7 @@ def corpus_line_dedup(df: DataFrame, key: str = "doc_id",
     where text is the surviving lines re-joined with `sep` (empty
     string when every line of a document was seen earlier).
     """
-    key_dtype = dict(df.dtypes)[key]
-    if key_dtype not in ("tinyint", "smallint", "int", "bigint"):
-        raise TypeError(
-            f"corpus_line_dedup requires an integral key column; "
-            f"got {key!r} of type {key_dtype} (a non-numeric key casts "
-            f"to null in the first-occurrence packing and would empty "
-            f"every document)")
+    require_integral_key(df, key, "corpus_line_dedup")
     lines = F.split(F.col(text_col), sep)
     ex = (
         df.select(key, F.posexplode(lines).alias("pos", "line"))
@@ -159,9 +155,8 @@ def corpus_line_dedup(df: DataFrame, key: str = "doc_id",
             F.xxhash64("line").alias("line_key"),
         )
     )
-    if persist_intermediate:
-        ex = ex.persist()
-        ex.count()
+    ex = ex.persist()
+    ex.count()
     winners = ex.groupBy("line_key").agg(F.min("packed").alias("win"))
     kept_pos = (
         ex.join(winners, "line_key")
@@ -172,10 +167,9 @@ def corpus_line_dedup(df: DataFrame, key: str = "doc_id",
             F.array_sort(F.collect_list("pos")).alias("_keep_pos"),
         )
     )
-    if persist_intermediate:
-        kept_pos = kept_pos.persist()
-        kept_pos.count()  # materialize before releasing the line cache
-        ex.unpersist()
+    kept_pos = kept_pos.persist()
+    kept_pos.count()  # materialize before releasing the line cache
+    ex.unpersist()
     src = df.withColumn("_ls", lines)
     arr = F.col("_ls")
     text = F.when(F.col("_keep_pos").isNull(), F.lit("")).otherwise(
@@ -191,10 +185,7 @@ def corpus_line_dedup(df: DataFrame, key: str = "doc_id",
             text.alias("text"),
         )
     )
-    if persist_intermediate:
-        from .caching import track_caches
-        out = track_caches(out, kept_pos)
-    return out
+    return track_caches(out, kept_pos)
 
 
 def with_gopher_quality(df: DataFrame, text_col: str = "text",
@@ -420,8 +411,8 @@ GOPHER_REPETITION_THRESHOLDS = {
 def full_repetition_stats(df: DataFrame, key: str = "doc_id",
                           text_col: str = "text", line_sep: str = "\n",
                           para_sep: str = "\n\n",
-                          thresholds: dict[str, float] | None = None,
-                          persist_intermediate: bool = True) -> DataFrame:
+                          thresholds: dict[str, float] | None = None
+                          ) -> DataFrame:
     """The COMPLETE Gopher repetition rule set (Rae et al. 2021, A1.1,
     all 13 published thresholds): duplicate line/paragraph fractions
     (row and character), top-{2,3,4}-gram character fractions, and
@@ -432,8 +423,8 @@ def full_repetition_stats(df: DataFrame, key: str = "doc_id",
     Plan shape — built for ONE corpus scan, not thirteen:
       * the text splits once into (words, lines, paragraphs); lines
         derive from the paragraphs columnar, so the base projection is
-        a single pass (persisted + count()-materialized by default —
-        three downstream subtrees consume it);
+        a single pass (persisted + count()-materialized — three
+        downstream subtrees consume it);
       * lines and paragraphs explode in ONE generator (tagged structs)
         and pivot back per document — one shuffle keyed (doc, tag,
         unit);
@@ -458,11 +449,9 @@ def full_repetition_stats(df: DataFrame, key: str = "doc_id",
         "word_chars",
         F.aggregate(F.transform(F.col("_ww"), F.length), F.lit(0),
                     lambda acc, x: acc + x))
-    if persist_intermediate:
-        split = split.persist()
+    split = split.persist()
     _split_cache = split       # the persisted frame: later rebinds derive
-    if persist_intermediate:
-        split.count()
+    split.count()
     base = split.select(key, "word_chars")
 
     # -- line/paragraph duplicate fractions: one explode, one pivot.
@@ -535,18 +524,16 @@ def full_repetition_stats(df: DataFrame, key: str = "doc_id",
     occ = (split.select(key, F.explode(gram_arr).alias("g"))
            .select(key, F.col("g.n").alias("n"),
                    F.posexplode("g.gs").alias("i", "gh")))
-    if persist_intermediate:
-        occ = occ.persist()
-        occ.count()
+    occ = occ.persist()
+    occ.count()
     counts = occ.groupBy(key, "n", "gh").agg(
         F.count_if(F.lit(True)).alias("cnt"),
         F.min("i").alias("min_i"))
-    if persist_intermediate:
-        counts = counts.persist()
-        counts.count()
-        # occ stays cached: the duplicate-coverage branch below is its
-        # second consumer — releasing it here would re-run the whole
-        # 9-size gram explode for that branch
+    counts = counts.persist()
+    counts.count()
+    # occ stays cached: the duplicate-coverage branch below is its
+    # second consumer — releasing it here would re-run the whole
+    # 9-size gram explode for that branch
 
     top = (counts.where(F.col("n") <= 4)
            .groupBy(key, "n")
@@ -578,13 +565,12 @@ def full_repetition_stats(df: DataFrame, key: str = "doc_id",
         .groupBy(key, "n").agg(F.sum("wl").alias("cov")))
     cpvt = cov_chars.groupBy(key).pivot("n", [5, 6, 7, 8, 9, 10]) \
         .agg(F.first("cov"))
-    if persist_intermediate:
-        # materialize the coverage pivot (per-doc, <= 7 narrow columns)
-        # so the gram-occurrence cache can be released here — cpvt was
-        # occ's last consumer
-        cpvt = cpvt.persist()
-        cpvt.count()
-        occ.unpersist()
+    # materialize the coverage pivot (per-doc, <= 7 narrow columns) so
+    # the gram-occurrence cache can be released here — cpvt was occ's
+    # last consumer
+    cpvt = cpvt.persist()
+    cpvt.count()
+    occ.unpersist()
 
     out = (base.join(upvt, key, "left")
            .join(tpvt, key, "left")
@@ -609,13 +595,10 @@ def full_repetition_stats(df: DataFrame, key: str = "doc_id",
         bad = F.coalesce(F.col(col), F.lit(0.0)) > thr
         cond = bad if cond is None else (cond | bad)
     out = out.withColumn("gopher_repetition_pass", ~cond)
-    if persist_intermediate:
-        # split (word/line/para arrays), counts (gram counts) and cpvt
-        # still feed the returned plan: callers release them with
-        # operators.caching.release_caches once the result is consumed
-        from .caching import track_caches
-        out = track_caches(out, _split_cache, counts, cpvt)
-    return out
+    # split (word/line/para arrays), counts (gram counts) and cpvt still
+    # feed the returned plan: callers release them with
+    # operators.caching.release_caches once the result is consumed
+    return track_caches(out, _split_cache, counts, cpvt)
 
 
 C4_TERMINAL_RE = '[.!?"]$'
@@ -1100,17 +1083,11 @@ def pack_sequences(df: DataFrame, ctx_len: int = 2048,
     standard GPT-style pretraining batcher (documents are split at
     window boundaries, nothing is padded away).
 
-    The global running token total is the crux at scale: the textbook
-    `sum() OVER (ORDER BY key)` window is a single-reducer sort of the
-    whole corpus. Instead this runs the classic distributed prefix
-    sum: (1) one cheap agg finds the key range; (2) keys are
-    hash-free range-bucketed by arithmetic on the numeric key (no
-    sampling — deterministic); (3) per-bucket token totals (a few
-    hundred rows) come to the driver, exclusive offsets go back as a
-    broadcast join; (4) a window PARTITIONED BY bucket computes the
-    local cumsum, so every window fits one task and no global sort
-    ever happens. Requires a numeric key (web pipelines use the
-    crawl-assigned page id); byte-identical to the global window.
+    The global running token total is slicing.bucketed_running_total
+    over `n_buckets` arithmetic key ranges (range_slice's bucketing), so
+    no global sort ever happens. Requires an integral key (web pipelines
+    use the crawl-assigned page id); byte-identical to the global
+    `sum() OVER (ORDER BY key)` window.
 
     Returns (key, n_tokens, tok_start, seq_first, seq_last, n_seqs)
     where seq_* are the first/last ctx windows the document lands in.
@@ -1119,46 +1096,27 @@ def pack_sequences(df: DataFrame, ctx_len: int = 2048,
     pack on a precomputed per-document token count instead (e.g.
     with_bpe_token_counts' n_bpe_tokens — real tokenizer tokens).
     """
+    require_integral_key(df, key, "pack_sequences")
     if token_col is not None:
-        toks = df.select(
-            key, F.col(token_col).cast("long").alias("n_tokens"))
+        n_tokens = F.col(token_col).cast("long")
     else:
-        toks = df.select(
-            key, F.size(_words(F.col(text_col))).cast("long").alias("n_tokens"))
-    # Three downstream jobs (range probe, bucket partials, final join)
+        n_tokens = F.size(_words(F.col(text_col))).cast("long")
+    # Three downstream jobs (range probe, bucket totals, final join)
     # consume this frame; materialize the cache in its own job first so
     # the text split runs once, not once per consumer.
-    toks = toks.persist()
-    _tok_cache = toks          # the persisted frame: later rebinds derive
+    toks = df.select(key, n_tokens.alias("n_tokens")).persist()
     toks.count()
-    lo, hi = toks.agg(F.min(key), F.max(key)).first()
-    if lo is None:
+    bucket = key_range_bucket(toks, key, n_buckets)
+    if bucket is None:
         toks.unpersist()    # empty input: nothing to share
         return toks.select(
             key, "n_tokens",
-            F.lit(0).cast("long").alias("tok_start"),
-            F.lit(0).cast("long").alias("seq_first"),
-            F.lit(0).cast("long").alias("seq_last"),
-            F.lit(0).cast("long").alias("n_seqs"))
-    width = max(1, (int(hi) - int(lo)) // n_buckets + 1)
-    bucket = ((F.col(key) - F.lit(int(lo))) / F.lit(width)).cast("long")
-    toks = toks.withColumn("_b", bucket)
-    per_bucket = sorted(
-        toks.groupBy("_b").agg(F.sum("n_tokens").alias("t")).collect())
-    offset, offsets = 0, []
-    for b, t in per_bucket:
-        offsets.append((b, offset))
-        offset += int(t)
-    spark = df.sparkSession
-    off_df = spark.createDataFrame(offsets, ["_b", "_off"])
-
-    from pyspark.sql import Window
-    w = Window.partitionBy("_b").orderBy(key) \
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    local = toks.join(F.broadcast(off_df), "_b")
-    cum = (F.col("_off") + F.sum("n_tokens").over(w)).cast("long")
+            *[F.lit(0).cast("long").alias(c)
+              for c in ("tok_start", "seq_first", "seq_last", "n_seqs")])
+    cum = F.col("_cum")
     out = (
-        local
+        bucketed_running_total(toks.withColumn("_b", bucket), [key],
+                               F.col("n_tokens"))
         .withColumn("tok_start", cum - F.col("n_tokens"))
         .withColumn("seq_first", F.floor(F.col("tok_start") / ctx_len))
         .withColumn(
@@ -1172,11 +1130,10 @@ def pack_sequences(df: DataFrame, ctx_len: int = 2048,
                    F.col("seq_last") - F.col("seq_first") + 1)
             .otherwise(F.lit(0)))
     )
-    from .caching import track_caches
     return track_caches(
         out.select(key, "n_tokens", "tok_start",
                    "seq_first", "seq_last", "n_seqs"),
-        _tok_cache)
+        toks)
 
 
 def select_token_budget(df: DataFrame, budget: int,
@@ -1192,44 +1149,35 @@ def select_token_budget(df: DataFrame, budget: int,
 
     A document is kept iff the running total BEFORE it is under the
     budget (so the boundary document that crosses the line is kept and
-    the budget is met, never undershot). The running total over a
-    global ordering is the pack_sequences scale problem again, solved
-    the same way: deterministic arithmetic range buckets over the
-    score domain (min/max probe, no sampling), per-bucket token sums
-    to the driver, exclusive offsets broadcast back, per-bucket window
-    for the local cumsum. Ties on the score break by ascending key, so
-    the order is total and oracle-reproducible.
+    the budget is met, never undershot). Ties on the score break by
+    ascending key, so the order is total and oracle-reproducible. The
+    running total is slicing.bucketed_running_total over `n_buckets`
+    arithmetic ranges of the score domain (min/max probe, no
+    sampling); buckets that start past the budget drop before the
+    window sorts.
 
     Skew guard: quality scores CLUSTER (integer rule counts, capped
     fractions), so a plain score-range bucket can swallow most of the
     corpus and its window degenerates into a near-global single-task
     sort. Any bucket whose row count exceeds `max_partition_rows` is
-    refined — exactly, preserving the (score desc, key asc) order —
-    by splitting it into finer partitions that are still INTERVALS of
-    the global order:
+    refined into finer partitions that are still INTERVALS of the
+    global order. The partition key is the struct (score bucket, s, k)
+    whose ascending order is (score desc, key asc):
 
-      * tie groups (one exact score value) split by arithmetic KEY
-        range — within equal scores the order is by key, so key-range
-        cells are intervals;
-      * distinct scores inside a hot bucket split by a finer score
-        grid (width / n_buckets) — score-range cells are always
-        intervals.
+      * few distinct scores (tie mode): s = -score and k = the
+        arithmetic KEY range — within equal scores the order is by key;
+      * many distinct scores (fine mode): s = the index on a finer
+        score grid (width / n_buckets), k = 0;
+      * cold buckets: s = 0, k = 0 (one partition per bucket).
 
-    The driver orders all partitions globally (score-range index, then
-    exact score desc, then key-range index), computes exclusive token
-    offsets, and broadcasts them back; the result is byte-identical to
-    the single-window plan for ANY cap. One refinement level bounds a
-    tie-heavy partition by ~corpus/n_buckets^2 rows and a pure tie
-    group by ~ties/n_buckets; the offsets table stays driver-small
-    (<= n_buckets + hot_buckets * (distinct_scores_in_hot limited to
-    n_buckets grid cells + n_buckets key cells)).
+    The result is byte-identical to the single-window plan for ANY
+    cap. One refinement level bounds a tie-heavy partition by
+    ~corpus/n_buckets^2 rows and a pure tie group by ~ties/n_buckets.
 
     Returns the kept rows plus (n_tokens, tok_before) where
     tok_before is the running total of all higher-scored documents."""
     toks = df.withColumn(
-        "n_tokens", F.size(_words(F.col(text_col))).cast("long"))
-    toks = toks.persist()
-    _tok_cache = toks          # the persisted frame: later rebinds derive
+        "n_tokens", F.size(_words(F.col(text_col))).cast("long")).persist()
     toks.count()
     lo, hi, klo, khi = toks.agg(
         F.min(score_col), F.max(score_col), F.min(key), F.max(key)).first()
@@ -1238,93 +1186,47 @@ def select_token_budget(df: DataFrame, budget: int,
         return toks.withColumn("tok_before", F.lit(0).cast("long"))
     span = float(hi) - float(lo)
     width = span / n_buckets if span > 0 else 1.0
-    # bucket 0 = best scores; monotone DESCENDING in the score
-    bucket = F.least(
-        F.floor((F.lit(float(hi)) - F.col(score_col)) / F.lit(width)),
-        F.lit(n_buckets - 1)).cast("int")
-    toks = toks.withColumn("_b", bucket)
-    per_bucket = toks.groupBy("_b").agg(
+
+    def grid(cell: float, n_cells: int) -> Column:
+        # cell 0 = best scores; monotone DESCENDING in the score
+        return F.least(
+            F.floor((F.lit(float(hi)) - F.col(score_col)) / F.lit(cell)),
+            F.lit(n_cells - 1))
+
+    toks_b = toks.withColumn("_b", grid(width, n_buckets).cast("int"))
+    per_bucket = toks_b.groupBy("_b").agg(
         F.count_if(F.lit(True)).alias("n"),
         F.sum("n_tokens").alias("t"),
         F.approx_count_distinct(score_col).alias("ds")).collect()
-    hot = ({} if max_partition_rows is None else
-           {int(r["_b"]): r for r in per_bucket
-            if int(r["n"]) > max_partition_rows})
-
-    if hot and dict(df.dtypes)[key] not in (
-            "tinyint", "smallint", "int", "bigint"):
-        raise TypeError(
-            f"select_token_budget tie-group refinement needs an integral "
-            f"key column for key-range splitting; got {key!r} of type "
-            f"{dict(df.dtypes)[key]}")
-    fine_w = width / n_buckets
-    kspan = (int(khi) - int(klo)) if hot else 0
-    kwidth = max(1, kspan // n_buckets + 1)
+    hot = [] if max_partition_rows is None else [
+        r for r in per_bucket if r["n"] > max_partition_rows]
+    # no hot bucket: the probe's token sums are the offsets' totals
+    totals = None if hot else [(r["_b"], r["t"]) for r in per_bucket]
     if hot:
-        # refine mode per hot bucket: few distinct scores => tie mode
-        # (exact score x key range); many => finer score grid
-        modes = [(b, "tie" if int(r["ds"]) <= n_buckets else "fine")
-                 for b, r in hot.items()]
-        mode_df = df.sparkSession.createDataFrame(modes, ["_b", "_mode"])
-        toks = toks.join(F.broadcast(mode_df), "_b", "left")
-        fine = F.least(
-            F.floor((F.lit(float(hi)) - F.col(score_col)) / F.lit(fine_w)),
-            F.lit(n_buckets * n_buckets - 1)).cast("long")
-        kb = ((F.col(key) - F.lit(int(klo))) / F.lit(kwidth)).cast("long")
-        toks = toks.withColumn(
-            "_p",
-            F.when(F.col("_mode") == "tie",
-                   F.concat_ws(":", F.lit("t"), F.col("_b"),
-                               F.col(score_col).cast("double").cast("string"),
-                               kb))
-            .when(F.col("_mode") == "fine",
-                  F.concat_ws(":", F.lit("f"), fine))
-            .otherwise(F.concat_ws(":", F.lit("c"), F.col("_b"))))
-        parts = toks.groupBy("_p").agg(
-            F.min("_b").alias("b"),
-            F.max(F.col(score_col).cast("double")).alias("s"),
-            F.min(F.when(F.col("_mode") == "tie", kb)).alias("kb"),
-            F.sum("n_tokens").alias("t")).collect()
-        # global partition order: score bucket asc; inside a bucket the
-        # cold singleton stands alone, tie cells order by (score desc,
-        # key-range asc), fine cells by max-score desc (cells have
-        # disjoint score ranges, so max-score order == grid order)
-        ordered = sorted(
-            parts, key=lambda r: (int(r["b"]), -float(r["s"]),
-                                  int(r["kb"] or 0)))
-        offset, offsets = 0, []
-        for r in ordered:
-            offsets.append((r["_p"], offset))
-            offset += int(r["t"])
-        off_df = df.sparkSession.createDataFrame(offsets, ["_p", "_off"])
-        drop_cols = ["_b", "_mode", "_p", "_off"]
-    else:
-        per_bucket = sorted((int(r["_b"]), int(r["t"])) for r in per_bucket)
-        offset, offsets = 0, []
-        for b, t in per_bucket:
-            offsets.append((b, offset))
-            offset += int(t)
-        off_df = df.sparkSession.createDataFrame(offsets, ["_b", "_off"])
-        toks = toks.withColumn("_p", F.col("_b"))
-        off_df = off_df.withColumnRenamed("_b", "_p")
-        drop_cols = ["_b", "_p", "_off"]
-
-    from pyspark.sql import Window
-    w = Window.partitionBy("_p").orderBy(
-        F.col(score_col).desc(), F.col(key).asc()) \
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cum = (F.col("_off") + F.sum("n_tokens").over(w)).cast("long")
-    from .caching import track_caches
+        require_integral_key(
+            df, key, "select_token_budget tie-group refinement")
+        tie = F.col("_b").isin([r["_b"] for r in hot if r["ds"] <= n_buckets])
+        fine = F.col("_b").isin([r["_b"] for r in hot if r["ds"] > n_buckets])
+        kb = key_range_bucket(toks, key, n_buckets, bounds=(klo, khi))
+        toks_b = toks_b.withColumn("_b", F.struct(
+            F.col("_b"),
+            F.when(tie, -F.col(score_col).cast("double"))
+            .when(fine, grid(width / n_buckets, n_buckets * n_buckets)
+                  .cast("double"))
+            .otherwise(F.lit(0.0)).alias("s"),
+            F.when(tie, kb).otherwise(F.lit(0).cast("long")).alias("k")))
+    cum = bucketed_running_total(
+        toks_b, [F.col(score_col).desc(), F.col(key).asc()],
+        F.col("n_tokens"), keep=lambda before, after: before < budget,
+        totals=totals)
     return track_caches(
-        toks.join(F.broadcast(off_df), "_p")
-        .withColumn("tok_before", cum - F.col("n_tokens"))
+        cum.withColumn("tok_before", F.col("_cum") - F.col("n_tokens"))
         .where(F.col("tok_before") < F.lit(int(budget)))
-        .drop(*drop_cols),
-        _tok_cache)
+        .drop("_cum"),
+        toks)
 
 
 def epoch_shuffle(df: DataFrame, key: str = "doc_id", seed: int = 0,
-                  n_buckets: int | None = None,
                   prefix_len: int = 4) -> DataFrame:
     """Deterministic global training order: every row gets a dense
     0-based `shuffle_pos` equal to its rank under md5(key:seed) — the
@@ -1332,51 +1234,25 @@ def epoch_shuffle(df: DataFrame, key: str = "doc_id", seed: int = 0,
     across engines, partitionings, and restarts (change `seed` per
     epoch).
 
-    A global rank is the same scale trap as pack_sequences' running
-    sum: `row_number() OVER (ORDER BY hash)` is a single-reducer
-    global sort. Here the distributed prefix sum runs on the HASH
-    domain instead of a numeric key: the first `prefix_len` hex chars
-    of the digest give 16^prefix_len arithmetic range buckets that are
-    monotone in the full hash string, per-bucket counts come to the
-    driver (only NON-EMPTY buckets exist in that aggregate, so the
-    driver table stays small at any prefix length), exclusive offsets
-    go back as a broadcast join, and a per-bucket row_number completes
-    the rank. Ties on the digest (2^-128) break by key, so the order
-    is total and byte-identical to the oracle's single global window —
-    at ANY prefix length (the choice changes only the partition
-    boundaries, never the order).
+    The rank is slicing.bucketed_running_total on the HASH domain: the
+    first `prefix_len` hex chars of the digest give 16^prefix_len
+    buckets that are monotone in the full hash string. Ties on the
+    digest (2^-128) break by key, so the order is total and
+    byte-identical to the oracle's single global window at ANY prefix
+    length (the choice changes only the partition boundaries, never
+    the order).
 
-    Each bucket's rank is one window partition (one task sorts the
-    whole bucket), so prefix_len sets the scale ceiling: the default
-    4 (65,536 buckets) keeps per-task input ~15M rows at 10^12 docs;
-    5 hex chars (1M buckets) covers anything beyond. `n_buckets`
-    optionally coarsens the 16^prefix_len cells (still monotone)."""
-    cells = 16 ** prefix_len
+    Each bucket is one window partition, so prefix_len sets the scale
+    ceiling: the default 4 (65,536 buckets) keeps per-task input ~15M
+    rows at 10^12 docs; 5 hex chars (1M buckets) covers anything
+    beyond. Only non-empty buckets reach the driver."""
     h = F.md5(F.concat(F.col(key).cast("string"), F.lit(f":{seed}")))
     keyed = df.withColumn("_h", h).withColumn(
         "_b", F.conv(F.substring("_h", 1, prefix_len), 16, 10).cast("long"))
-    if n_buckets is not None and n_buckets != cells:
-        # coarser grouping of the 16^prefix_len hex-prefix cells
-        # (still monotone in the digest)
-        keyed = keyed.withColumn(
-            "_b", (F.col("_b") / F.lit(cells / n_buckets)).cast("long"))
-    per_bucket = sorted(
-        keyed.groupBy("_b").agg(F.count_if(F.lit(True)).alias("n"))
-        .collect())
-    offset, offsets = 0, []
-    for b, n in per_bucket:
-        offsets.append((b, offset))
-        offset += int(n)
-    off_df = df.sparkSession.createDataFrame(offsets, ["_b", "_off"])
-
-    from pyspark.sql import Window
-    w = Window.partitionBy("_b").orderBy("_h", key)
     return (
-        keyed.join(F.broadcast(off_df), "_b")
-        .withColumn(
-            "shuffle_pos",
-            (F.col("_off") + F.row_number().over(w) - 1).cast("long"))
-        .drop("_h", "_b", "_off")
+        bucketed_running_total(keyed, ["_h", key])
+        .withColumn("shuffle_pos", F.col("_cum") - 1)
+        .drop("_h", "_cum")
     )
 
 
@@ -1746,8 +1622,6 @@ def perplexity_buckets(df: DataFrame, score_col: str = "unigram_nll",
     byte-identical to the oracle's single global window.
 
     Returns the input plus (ppl_rank, ppl_bucket)."""
-    from .caching import track_caches
-
     k = len(labels)
     # select_token_budget walks DESCENDING scores; negate so the walk
     # is ascending-perplexity (head first); ties break by key in both
@@ -1790,8 +1664,6 @@ def perplexity_buckets_by_lang(df: DataFrame, lang_col: str = "lang",
     skewed distributed prefix sum. Returns the union of the
     per-language frames (one row per input row, plus ppl_rank /
     ppl_bucket computed within the row's language)."""
-    from .caching import track_caches
-
     langs = sorted((r[0] for r in df.select(lang_col).distinct().collect()),
                    key=lambda v: (v is None, str(v)))
     out = None

@@ -1,5 +1,6 @@
-"""range_slice: byte-identical to the global row_number window, with no
-single-partition exchange in the physical plan."""
+"""The bucketed prefix sum: range_slice is byte-identical to the global
+row_number window, and no operator built on the prefix sum has a
+single-partition exchange in its physical plan."""
 
 import pytest
 from pyspark.sql import Window
@@ -27,26 +28,56 @@ def test_matches_global_window(spark, start, end):
     assert got == want
 
 
-def test_no_single_partition_window(spark):
+def _prefix_sum_case(spark, name):
+    """(operator output, expected row count) over a 500-row frame."""
     from docling_eval_spark.operators.slicing import range_slice
+    from docling_eval_spark.operators.webtext import (
+        epoch_shuffle, pack_sequences, select_token_budget)
 
     df = spark.range(500).select(F.col("id").alias("doc_id"),
-                                 (F.col("id") % 7).alias("val"))
-    out = range_slice(df, 100, 120, n_buckets=16)
-    assert len(out.collect()) == 20
+                                 F.lit("a b c").alias("text"))
+    # even ids tie on three scores, odd ids spread 250 distinct scores
+    # over one narrow band: with a small cap both refinements run
+    scored = df.withColumn("score", F.when(
+        F.col("doc_id") % 2 == 0, (F.col("doc_id") % 3).cast("double"))
+        .otherwise(10 + F.col("doc_id") / 1000))
+    if name == "range_slice":
+        return range_slice(df, 100, 120, n_buckets=16), 20
+    if name == "pack_sequences":
+        return pack_sequences(df, ctx_len=8, n_buckets=16), 500
+    if name == "epoch_shuffle":
+        return epoch_shuffle(df, prefix_len=1), 500
+    cap = 20 if name == "select_token_budget_hot" else None
+    return select_token_budget(scored, budget=1 << 40, score_col="score",
+                               n_buckets=4, max_partition_rows=cap), 500
+
+
+@pytest.mark.parametrize("name", [
+    "range_slice", "pack_sequences", "epoch_shuffle",
+    "select_token_budget_cold", "select_token_budget_hot"])
+def test_no_single_partition_window(spark, name):
+    from docling_eval_spark.operators.caching import release_caches
+
+    out, n_rows = _prefix_sum_case(spark, name)
+    assert len(out.collect()) == n_rows
     # executedPlan is only final after the SAME DataFrame executed
     plan = out._jdf.queryExecution().executedPlan().toString()
+    release_caches(out)
     assert "SinglePartition" not in plan
-    # the oracle-shaped plan DOES funnel the corpus globally — either a
-    # single-partition window exchange, or (when `end` is small enough
-    # for LimitPushDownThroughWindow) a global top-`end` — prove the
-    # probe distinguishes the shapes
+    assert "TakeOrderedAndProject" not in plan
+
+
+def test_plan_probe_detects_global_window(spark):
+    """The oracle-shaped plan DOES funnel the corpus globally — either a
+    single-partition window exchange, or (when `end` is small enough
+    for LimitPushDownThroughWindow) a global top-`end` — so the probe
+    above distinguishes the shapes."""
+    df = spark.range(500).select(F.col("id").alias("doc_id"))
     bad = _global_slice(df, 100, 120)
     bad.collect()
     bad_plan = bad._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" in bad_plan or \
         "TakeOrderedAndProject" in bad_plan
-    assert "TakeOrderedAndProject" not in plan
 
 
 def test_only_overlapping_buckets_join(spark):
@@ -68,3 +99,16 @@ def test_string_key_rejected(spark):
     df = spark.createDataFrame([("a",)], ["doc_id"])
     with pytest.raises(TypeError, match="integral key"):
         range_slice(df, 0, 1)
+
+
+def test_pack_sequences_string_key_rejected(spark):
+    from docling_eval_spark.operators.webtext import pack_sequences
+
+    # numeric-looking strings order "1" < "10" < "100" < "11" under
+    # ORDER BY key; a numeric key-range bucketing would pack them in
+    # numeric order instead
+    df = spark.createDataFrame(
+        [(k, "w w") for k in ("1", "2", "9", "10", "11", "100")],
+        ["doc_id", "text"])
+    with pytest.raises(TypeError, match="integral key"):
+        pack_sequences(df, ctx_len=4)

@@ -55,8 +55,9 @@ def main():
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from docling_eval_spark.session import usable_cpus
 
-    spark = (SparkSession.builder.master("local[8]")
+    spark = (SparkSession.builder.master(f"local[{usable_cpus()}]")
              .appName("oracle-check")
              .config("spark.sql.shuffle.partitions", "16")
              .config("spark.sql.execution.arrow.pyspark.enabled", "true")
