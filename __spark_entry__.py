@@ -174,8 +174,9 @@ def _q_layout_image_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_layout_corpus_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-level mAP as a distributed partial+final aggregate
-    (SURVEY.md §2.4 A5; reference layout_evaluator.py:246-266)."""
+    """Corpus-level mAP as a distributed partial aggregate + driver final
+    over <= C x T x n_bins bins (SURVEY.md §2.4 A5; reference
+    layout_evaluator.py:246-266)."""
     from docling_eval_spark.plans.layout_eval import corpus_map
 
     return corpus_map(spark, sf_dir, modes=(0, 1))

@@ -21,5 +21,7 @@ __version__ = "0.1.0"
 
 # Python workers import this package when they unpickle the first task's
 # function; from then on Spark's per-task importlib.invalidate_caches()
-# skips the zip archives that have not changed (see zipstamp).
+# skips the zip archives that have not changed and freezes the heap the
+# task starts with, so the worker's after-task gc.collect() walks only
+# that task's objects (see zipstamp).
 zipstamp.install()

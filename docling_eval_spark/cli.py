@@ -115,11 +115,10 @@ def cmd_score_files(args) -> None:
 
     from .plans.report import write_evaluation_json
     from .sources.prediction_files import score_prediction_files
+    from .sources.tables import read_documents
 
     spark = _spark(args.cpus)
-    gt = spark.read.parquet(
-        os.path.join(args.from_documents, "documents.parquet")
-    ).select("doc_id", "text")
+    gt = read_documents(spark, args.from_documents, ["doc_id", "text"])
     scored = score_prediction_files(spark, gt, args.pred_dir,
                                     extension=args.format)
     roll = scored.agg(

@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.skew import salted_repartition
+from ..sources.tables import read_documents
 from .html_synth import synth_html, url_for, warc_ts_for
 
 PAGES_SCHEMA = (
@@ -64,9 +66,7 @@ def pages_from_documents(spark: SparkSession, sf_dir: str,
     replica r gets doc_id' = doc_id * replicate + r (unique urls/html,
     same oracle text) — used by scaling benchmarks.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "lang"
-    )
+    docs = read_documents(spark, sf_dir, ["doc_id", "text", "lang"])
     if exclude is not None:
         if replicate > 1:
             # committed ids live in the POST-replication id space; an
@@ -81,9 +81,7 @@ def pages_from_documents(spark: SparkSession, sf_dir: str,
     # replicas inside each partition — amplification runs in parallel and
     # nothing heavy ever crosses an exchange.
     if n_partitions:
-        docs = docs.repartition(
-            n_partitions, F.xxhash64(F.col("doc_id"), F.lit(0x5EED))
-        )
+        docs = salted_repartition(docs, n_partitions, key="doc_id")
     if replicate > 1:
         docs = docs.select(
             "doc_id", "text", "lang",

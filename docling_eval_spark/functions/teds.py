@@ -249,13 +249,21 @@ def tree_edit_distance(t1: TableNode, t2: TableNode, structure_only: bool = Fals
     return td[-1][-1]
 
 
+def teds_tree(html: str) -> TableNode:
+    """The tree TEDS scores: `html` with formatting tags stripped, parsed.
+    Parse once when one table is scored more than once."""
+    return parse_table_tree(strip_formatting_tags(html))
+
+
 def teds_score(gt_html: str, pred_html: str, structure_only: bool = False) -> float:
     """TEDS in [0,1]; 1.0 = identical. Normalizes by descendant-element
     count max (excluding the <table> root), matching reference teds.py:76-84."""
-    gt_html = strip_formatting_tags(gt_html)
-    pred_html = strip_formatting_tags(pred_html)
-    t_gt = parse_table_tree(gt_html)
-    t_pred = parse_table_tree(pred_html)
+    return teds_of_trees(teds_tree(gt_html), teds_tree(pred_html), structure_only)
+
+
+def teds_of_trees(t_gt: TableNode, t_pred: TableNode,
+                  structure_only: bool = False) -> float:
+    """`teds_score` over trees from `teds_tree`."""
     n_desc = max(t_gt.size() - 1, t_pred.size() - 1)
     if n_desc == 0:
         return 1.0

@@ -528,7 +528,8 @@ def near_dedup_against(df: DataFrame, history: DataFrame,
     more), so without lineage truncation the composed plan grows
     multiplicatively and the driver OOMs planning the final anti-join
     — the same failure mode dup_components hit iteratively. The
-    checkpointed frames are one crawl batch, not the corpus.
+    checkpointed frames are one crawl batch, not the corpus; the first
+    is released once the second is materialized.
     """
     reps = dedup_against(df, history, text_col=text_col, key=key)
     reps = reps.localCheckpoint()
@@ -560,6 +561,7 @@ def near_dedup_against(df: DataFrame, history: DataFrame,
         .select(F.col("a").alias(key)).distinct()
     )
     survivors = reps.join(matched, key, "left_anti").localCheckpoint()
+    _release_checkpoint(reps)  # survivors is materialized from it
     pairs = minhash_dedup_pairs(survivors, text_col, key,
                                 threshold=threshold,
                                 max_bucket_size=max_bucket_size)
@@ -568,6 +570,15 @@ def near_dedup_against(df: DataFrame, history: DataFrame,
 
 
 # -- duplicate-cluster connected components -----------------------------------
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the RDD under a localCheckpoint'ed frame.
+
+    ``DataFrame.unpersist`` and ``spark.catalog.clearCache`` only reach
+    cached plans; a local checkpoint is a persisted RDD under the plan's
+    ``LogicalRDD`` leaf."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
 def dup_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
@@ -590,8 +601,10 @@ def dup_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     job, and the union+self-join structure doubles the tree per round
     until the driver OOMs planning it (hit in this repo's tests at a
     33-node path). A cluster deployment would swap in reliable
-    `checkpoint()` so labels survive executor loss. Convergence =
-    zero labels changed; `max_iter` is a backstop.
+    `checkpoint()` so labels survive executor loss. Each round's
+    checkpoint is released once the next round is materialized, so only
+    the returned frame's stays. Convergence = zero labels changed;
+    `max_iter` is a backstop.
 
     Input: pairs with columns (a, b). Returns (node, component) for
     every node appearing in any pair; callers re-attach singletons
@@ -639,6 +652,7 @@ def dup_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
             .localCheckpoint(eager=False)
         )
         cur_sum = new_labels.agg(F.sum("component")).first()[0]
+        _release_checkpoint(labels)  # superseded: new_labels is materialized
         labels = new_labels
         if cur_sum == prev_sum:
             break

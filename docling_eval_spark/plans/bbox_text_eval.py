@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_documents
+
 BBOX_TEXT_SCHEMA = (
     "doc_id bigint, mode int, n_matched int, n_orphan_gt int, "
     "n_orphan_pred int, mean_iou double, mean_f1 double, mean_edit double"
@@ -64,10 +66,6 @@ def _bbox_text_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 def bbox_text_scores(spark: SparkSession, sf_dir: str,
                      n_partitions: int = 16) -> DataFrame:
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
+    docs = read_documents(spark, sf_dir, ["doc_id"], n_partitions) \
         .where(F.col("doc_id") % 4 < 3)  # modes 0-2 have closed forms
-        .repartition(n_partitions, F.xxhash64("doc_id", F.lit(0x5EED)))
-    )
     return docs.mapInPandas(_bbox_text_batches, schema=BBOX_TEXT_SCHEMA)

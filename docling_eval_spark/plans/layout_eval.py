@@ -8,12 +8,13 @@ layout_evaluator.py):
   - area-mask precision/recall/F1 on a rasterized page (:690-779) — here
     500x500 so integer page coords rasterize exactly (closed-form oracles);
   - label-matched greedy weighted IoU at threshold 0.5 (:425-494);
-  - corpus-level mAP (:246-266) as a distributed partial+final aggregate
-    (operators/layout_agg.py) instead of a driver-side holistic metric.
+  - corpus-level mAP (:246-266) as a distributed partial aggregate + a
+    driver final over <= C x T x n_bins bins (operators/layout_agg.py)
+    instead of a driver-side holistic metric over every detection.
 
 All per-page work is fused into one mapInPandas stage (page data is tiny;
 the only shuffle in the corpus-mAP path is the bounded
-(label, thr_idx, score-bin) reduction).
+(label, thr_idx, score-bin) reduction, whose bins the driver collects).
 """
 
 from __future__ import annotations
@@ -25,6 +26,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.layout_agg import class_ap_rows, class_threshold_aps, map_row
+from ..sources.tables import read_documents
+
 IMAGE_METRICS_SCHEMA = (
     "doc_id bigint, n_boxes int, mode int, map double, map_50 double, "
     "map_75 double, mask_precision double, mask_recall double, "
@@ -35,14 +39,6 @@ PARTIALS_SCHEMA = (
     "doc_id bigint, kind string, label string, score double, "
     "tp array<boolean>, n_gt int"
 )
-
-
-def _docs(spark: SparkSession, sf_dir: str, n_partitions: int = 16) -> DataFrame:
-    return (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .repartition(n_partitions, F.xxhash64(F.col("doc_id"), F.lit(0x5EED)))
-    )
 
 
 def _image_metric_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -79,7 +75,7 @@ def per_image_metrics(spark: SparkSession, sf_dir: str,
     `modes` filters docs by perturbation mode BEFORE the UDF stage, so the
     predicate prunes work, not just rows.
     """
-    docs = _docs(spark, sf_dir, n_partitions)
+    docs = read_documents(spark, sf_dir, ["doc_id"], n_partitions)
     if modes is not None:
         docs = docs.where((F.col("doc_id") % 4).isin(list(modes)))
     return docs.mapInPandas(_image_metric_batches, schema=IMAGE_METRICS_SCHEMA)
@@ -110,67 +106,40 @@ def _partial_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             "doc_id", "kind", "label", "score", "tp", "n_gt"])
 
 
+def layout_partials(spark: SparkSession, sf_dir: str, n_partitions: int = 16,
+                    modes: tuple[int, ...] = (0, 1)) -> DataFrame:
+    """The per-doc COCO-matching stage over the docs whose perturbation
+    mode is in `modes`: detection and gt rows in one frame."""
+    docs = read_documents(spark, sf_dir, ["doc_id"], n_partitions).where(
+        (F.col("doc_id") % 4).isin(list(modes)))
+    return docs.mapInPandas(_partial_batches, schema=PARTIALS_SCHEMA)
+
+
+def _aps(spark: SparkSession, sf_dir: str, n_partitions: int,
+         modes: tuple[int, ...]) -> pd.DataFrame:
+    return class_threshold_aps(layout_partials(spark, sf_dir, n_partitions, modes))
+
+
 def corpus_class_ap(spark: SparkSession, sf_dir: str, n_partitions: int = 16,
                     modes: tuple[int, ...] = (0, 1)) -> DataFrame:
-    """Per-class corpus AP (the consolidator's class_<label> columns) —
-    the same single-pass persisted-partials PATTERN as corpus_map, with
-    the per-class final. Needing BOTH rollups? Use layout_rollups, which
-    computes them from ONE matching pass."""
-    return layout_rollups(spark, sf_dir, n_partitions, modes)["class_ap"]
+    """Per-class corpus AP (the consolidator's class_<label> columns)."""
+    return class_ap_rows(spark, _aps(spark, sf_dir, n_partitions, modes))
 
 
 def layout_rollups(spark: SparkSession, sf_dir: str, n_partitions: int = 16,
                    modes: tuple[int, ...] = (0, 1)) -> dict[str, DataFrame]:
     """{'map': (map, map_50, map_75) row, 'class_ap': per-class rows} —
-    BOTH finals derived from one persisted execution of the expensive
-    per-doc COCO-matching stage (the partials subtree runs once; both
-    tiny results are materialized before the cache is released)."""
-    from ..operators.layout_agg import corpus_ap_per_class, corpus_map_from_partials
-
-    docs = _docs(spark, sf_dir, n_partitions).where(
-        (F.col("doc_id") % 4).isin(list(modes)))
-    partials = docs.mapInPandas(_partial_batches, schema=PARTIALS_SCHEMA).persist()
-    partials.count()  # materialize once before the multi-consumer finals
-    dets = partials.where(F.col("kind") == "det").select("label", "score", "tp")
-    gts = partials.where(F.col("kind") == "gt").select("label", "n_gt")
-    out = {
-        "map": corpus_map_from_partials(dets, gts).persist(),
-        "class_ap": corpus_ap_per_class(dets, gts).persist(),
-    }
-    for df in out.values():
-        df.count()
-    partials.unpersist()
-    return out
+    both finals from one matching pass and one partial aggregate."""
+    aps = _aps(spark, sf_dir, n_partitions, modes)
+    return {"map": map_row(spark, aps), "class_ap": class_ap_rows(spark, aps)}
 
 
 def corpus_map(spark: SparkSession, sf_dir: str, n_partitions: int = 16,
-               modes: tuple[int, ...] = (0, 1),
-               materialize: bool = True) -> DataFrame:
+               modes: tuple[int, ...] = (0, 1)) -> DataFrame:
     """Corpus-level mAP over the docs whose perturbation mode is in `modes`
     (the default {identity, dropped-box} set has an exact SQL oracle:
-    precision is 1 everywhere, so AP = (floor(100*TP/GT)+1)/101)."""
-    from ..operators.layout_agg import corpus_map_from_partials
+    precision is 1 everywhere, so AP = (floor(100*TP/GT)+1)/101).
 
-    docs = _docs(spark, sf_dir, n_partitions).where(
-        (F.col("doc_id") % 4).isin(list(modes)))
-    partials = docs.mapInPandas(_partial_batches, schema=PARTIALS_SCHEMA)
-    if not materialize:
-        # fully lazy plan for inspection/composition — the partials
-        # subtree will execute once per consumer
-        dets = partials.where(F.col("kind") == "det").select("label", "score", "tp")
-        gts = partials.where(F.col("kind") == "gt").select("label", "n_gt")
-        return corpus_map_from_partials(dets, gts)
-    # The partials subtree is consumed twice (det rows and gt rows); without
-    # a persist the expensive mapInPandas matching stage executes twice.
-    # The rollup is materialized eagerly and the partials cache released;
-    # the RETURNED one-row-per-summary frame stays cached (caller-owned —
-    # its footprint is a handful of rows).
-    partials = partials.persist()
-    partials.count()  # own job first: downstream consumers of a merely
-    # persist-marked frame race to compute the matching stage concurrently
-    dets = partials.where(F.col("kind") == "det").select("label", "score", "tp")
-    gts = partials.where(F.col("kind") == "gt").select("label", "n_gt")
-    out = corpus_map_from_partials(dets, gts).persist()
-    out.count()
-    partials.unpersist()
-    return out
+    Eager: the matching stage and the partial aggregate run here; the
+    returned one-row frame is literals."""
+    return map_row(spark, _aps(spark, sf_dir, n_partitions, modes))

@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_documents
+
 OCR_SCHEMA = "doc_id bigint, mode int, cer double, char_accuracy double"
 
 
@@ -50,11 +52,7 @@ def _cer_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 def ocr_scores(spark: SparkSession, sf_dir: str,
                n_partitions: int = 16) -> DataFrame:
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .repartition(n_partitions, F.xxhash64(F.col("doc_id"), F.lit(0x5EED)))
-    )
+    docs = read_documents(spark, sf_dir, ["doc_id", "text"], n_partitions)
     return docs.mapInPandas(_cer_batches, schema=OCR_SCHEMA)
 
 
@@ -116,11 +114,7 @@ def segmented_docs(spark: SparkSession, sf_dir: str,
                    n_partitions: int = 16) -> DataFrame:
     """(doc_id, gt_pages, pred_pages) with the map<int, array<struct>>
     segmented-page model — built natively, zero Python on this path."""
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .repartition(n_partitions, F.xxhash64(F.col("doc_id"), F.lit(0x5EED)))
-    )
+    docs = read_documents(spark, sf_dir, ["doc_id", "text"], n_partitions)
     toks = F.filter(F.split(F.col("text"), r"\s+"), lambda x: x != F.lit(""))
     n_pages = F.ceil(F.size(toks) / F.lit(TOKENS_PER_PAGE)).cast("int")
     pages_map = F.when(n_pages == F.lit(0), F.map_from_entries(

@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_documents
+
 ARD_SCHEMA = "doc_id bigint, n_boxes int, mode int, ard_norm double, w_ard_norm double"
 
 
@@ -57,11 +59,7 @@ def _ard_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 def reading_order_scores(spark: SparkSession, sf_dir: str,
                          n_partitions: int = 16) -> DataFrame:
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id")
-        .repartition(n_partitions, F.xxhash64(F.col("doc_id"), F.lit(0x5EED)))
-    )
+    docs = read_documents(spark, sf_dir, ["doc_id"], n_partitions)
     return docs.mapInPandas(_ard_batches, schema=ARD_SCHEMA)
 
 

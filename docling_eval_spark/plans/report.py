@@ -25,6 +25,8 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_documents
+
 ACCEPTED_STATUSES = ("success", "partial_success")
 LANGS = ("de", "en", "es", "fr", "zh")
 
@@ -177,5 +179,4 @@ def write_evaluation_json(rollup_row: dict, path: str, benchmark: str,
 
 
 def docs_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "lang", "source")
+    return read_documents(spark, sf_dir, ["doc_id", "lang", "source"])

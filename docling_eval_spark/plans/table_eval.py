@@ -50,7 +50,8 @@ def _teds_batches(it: Iterator[pd.DataFrame], perturb: bool = False) -> Iterator
         html_table_to_grid_cells,
         is_complex_table,
         table_shape,
-        teds_score,
+        teds_of_trees,
+        teds_tree,
     )
 
     for pdf in it:
@@ -67,10 +68,11 @@ def _teds_batches(it: Iterator[pd.DataFrame], perturb: bool = False) -> Iterator
             pred_cells = html_table_to_grid_cells(pred)
             gnr, gnc = table_shape(gt_cells)
             pnr, pnc = table_shape(pred_cells)
+            t_gt, t_pred = teds_tree(gt), teds_tree(pred)
             rows.append((
                 int(doc_id), url,
-                teds_score(gt, pred),
-                teds_score(gt, pred, structure_only=True),
+                teds_of_trees(t_gt, t_pred),
+                teds_of_trees(t_gt, t_pred, structure_only=True),
                 is_complex_table(gt_cells),
                 gnr, gnc, pnr, pnc,
             ))

@@ -16,8 +16,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.skew import salted_repartition
+
 PAGES_SCHEMA_DDL = ("url string, warc_ts timestamp, html binary, "
                     "text string, lang string")
+DOCUMENTS_SCHEMA_DDL = ("doc_id bigint, text string, lang string, "
+                        "source string, n_chars bigint")
+
+
+def read_documents(spark: SparkSession, sf_dir: str, cols: list[str],
+                   n_partitions: int | None = None) -> DataFrame:
+    """`<sf_dir>/documents.parquet` under its declared schema, pruned to
+    `cols`. The declared schema spares Spark the footer read that infers
+    one. With `n_partitions`, the rows are spread by hash(doc_id, salt)
+    so the Python stage after the read is evenly loaded; these rows are
+    light, so this is the cheap place to shuffle."""
+    df = (spark.read.schema(DOCUMENTS_SCHEMA_DDL)
+          .parquet(f"{sf_dir}/documents.parquet").select(*cols))
+    return salted_repartition(df, n_partitions, key="doc_id") if n_partitions else df
 
 
 def read_pages_table(spark: SparkSession, path: str,

@@ -220,3 +220,35 @@ def test_banded_signatures_keys_on_named_column(spark):
     assert buckets[7] == buckets[8]
     assert not set(zip(range(16), buckets[7])) & \
         set(zip(range(16), buckets[9]))
+
+
+def _persistent_ids(spark) -> set[int]:
+    """Persistent RDDs left once every cached plan is released: the
+    local checkpoints that only their operator can unpersist."""
+    spark.catalog.clearCache()
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_dup_components_keeps_only_the_returned_checkpoint(spark):
+    from docling_eval_spark.operators.dedup import dup_components
+
+    before = _persistent_ids(spark)
+    # a 31-node path runs several rounds, each ending in a checkpoint
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(200, 230)], ["a", "b"])
+    out = dup_components(pairs)
+    assert {r.component for r in out.collect()} == {200}
+    assert len(_persistent_ids(spark) - before) <= 1
+
+
+def test_near_dedup_against_keeps_only_the_returned_checkpoint(spark):
+    from docling_eval_spark.operators.dedup import near_dedup_against
+
+    text = "the quick brown fox jumps over the lazy dog end"
+    history = spark.createDataFrame([(100, text)], ["doc_id", "text"])
+    batch = spark.createDataFrame(
+        [(1, text + " xdup"), (2, "unrelated short")], ["doc_id", "text"])
+    before = _persistent_ids(spark)
+    kept = near_dedup_against(batch, history)
+    assert [r.doc_id for r in kept.collect()] == [2]
+    assert len(_persistent_ids(spark) - before) <= 1

@@ -168,3 +168,33 @@ class TestBinnedAPEquivalence:
             "label": ["text"], "n_gt": [n_gt]}))
         got = corpus_map_from_partials(dets, gts).collect()[0]
         assert got["map"] == got["map_50"] == round(exact, 6)
+
+
+class TestOneAggregatePass:
+    """Corpus mAP is one matching stage, one partial aggregate and a
+    driver final: no persisted partials, no second Python stage."""
+
+    def test_corpus_map_runs_few_jobs(self, spark, sf_dir):
+        from docling_eval_spark.plans.layout_eval import corpus_map
+
+        sc = spark.sparkContext
+        group = "test-corpus-map-jobs"
+        sc.setJobGroup(group, group)
+        try:
+            m = corpus_map(spark, sf_dir, modes=(0, 1))
+            m.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+        # the returned row is literals, not a plan over the partials
+        assert "InPandas" not in m._jdf.queryExecution().executedPlan().toString()
+
+    def test_partials_feed_one_aggregate(self, spark, sf_dir):
+        from docling_eval_spark.operators.layout_agg import binned_pr_counts
+        from docling_eval_spark.plans.layout_eval import layout_partials
+
+        bins = binned_pr_counts(layout_partials(spark, sf_dir))
+        plan = bins._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInPandas") == 1
+        assert "FlatMapGroupsInPandas" not in plan
+        assert "InMemoryRelation" not in plan

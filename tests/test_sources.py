@@ -100,3 +100,21 @@ class TestPagesTable:
         # pruned scan must not carry html in its ReadSchema
         plan = back._jdf.queryExecution().executedPlan().toString()
         assert "html" not in plan
+
+
+class TestDocumentsTable:
+    def test_declared_schema_same_rows(self, spark, sf_dir):
+        from docling_eval_spark.sources.tables import read_documents
+
+        cols = ["doc_id", "text", "lang"]
+        got = read_documents(spark, sf_dir, cols)
+        inferred = spark.read.parquet(f"{sf_dir}/documents.parquet").select(*cols)
+        assert got.schema == inferred.schema
+        assert sorted(got.collect()) == sorted(inferred.collect())
+
+    def test_salted_spread(self, spark, sf_dir):
+        from docling_eval_spark.sources.tables import read_documents
+
+        docs = read_documents(spark, sf_dir, ["doc_id"], n_partitions=6)
+        assert docs.rdd.getNumPartitions() == 6
+        assert docs.count() == read_documents(spark, sf_dir, ["doc_id"]).count()

@@ -98,3 +98,46 @@ def test_python_task_does_not_reread_archives(spark):
         probe, "importers int, reads int").collect()
     assert row["importers"] > 0  # the worker imports pyspark from a zip
     assert row["reads"] == 0
+
+
+def _task_heaps(spark, n_tasks: int):
+    """(pid, start order, frozen, tracked) at the start of each of
+    `n_tasks` one-row tasks, read before the task's own work."""
+    def probe(it):
+        import gc
+        import os
+        import time
+
+        import docling_eval_spark  # noqa: F401
+        import pandas as pd
+
+        frozen, tracked = gc.get_freeze_count(), len(gc.get_objects())
+        for _ in it:
+            pass
+        yield pd.DataFrame({"pid": [os.getpid()], "t": [time.monotonic_ns()],
+                            "frozen": [frozen], "tracked": [tracked]})
+
+    return spark.range(n_tasks, numPartitions=n_tasks).mapInPandas(
+        probe, "pid long, t long, frozen long, tracked long"
+    ).toPandas().sort_values("t")
+
+
+def test_warm_task_starts_with_the_import_heap_frozen(spark):
+    heaps = _task_heaps(spark, 48)
+    # a worker's first task may predate the package import; later ones
+    # must find the import heap frozen, so the after-task collect is cheap
+    warm = heaps.groupby("pid").apply(lambda g: g.iloc[2:], include_groups=False)
+    assert len(warm) > 0
+    assert (warm["frozen"] > 0).all()
+    assert (warm["tracked"] < 5_000).all(), warm["tracked"].max()
+
+
+def test_frozen_heap_stops_growing_over_many_tasks(spark):
+    heaps = _task_heaps(spark, 480)
+    per_pid = heaps.groupby("pid")["frozen"].apply(list)
+    frozen = max(per_pid, key=len)
+    assert len(frozen) >= 50
+    # a per-task leak would keep raising the frozen count
+    late = frozen[len(frozen) // 2:]
+    assert late[0] > 0
+    assert max(late) - late[0] < 10, late

@@ -47,28 +47,29 @@ def _lazy_special(spark, sf_dir):
     """Eagerly-materializing operators (they persist + count internally)
     would show InMemoryTableScan under plain explain; build their LAZY
     plan trees via materialize=False so PLANS.md evidences the real
-    operator trees (scans, pushdown, joins, partial aggregates)."""
-    from pyspark.sql import functions as F
-
+    operator trees (scans, pushdown, joins, partial aggregates). Corpus
+    mAP finishes on the driver; its distributed part is the bins
+    aggregate."""
     from docling_eval_spark.operators.dedup import (
         minhash_dedup_pairs,
         near_dedup,
         with_near_dups,
     )
-    from docling_eval_spark.plans.layout_eval import corpus_map
+    from docling_eval_spark.operators.layout_agg import binned_pr_counts
+    from docling_eval_spark.operators.skew import salted_repartition
+    from docling_eval_spark.plans.layout_eval import layout_partials
+    from docling_eval_spark.sources.tables import read_documents
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
-        .select("doc_id", "text")
-    corpus = with_near_dups(docs).repartition(
-        8, F.xxhash64("doc_id", F.lit(0x5EED)))
+    docs = read_documents(spark, sf_dir, ["doc_id", "text"])
+    corpus = salted_repartition(with_near_dups(docs), 8, key="doc_id")
     return {
         "minhash_near_dup(lazy)": minhash_dedup_pairs(
             corpus, materialize=False),
         "near_dedup_kept(lazy)": near_dedup(
             corpus, max_bucket_size=1000, materialize=False)
         .select("doc_id"),
-        "layout_corpus_map(lazy)": corpus_map(
-            spark, sf_dir, materialize=False),
+        "layout_corpus_map(partial aggregate)": binned_pr_counts(
+            layout_partials(spark, sf_dir)),
     }
 
 CHECKS = {
