@@ -49,26 +49,24 @@ def cmd_create_gt(args) -> None:
 
 
 def cmd_create_eval(args) -> None:
-    from .operators.lineage import append_lineage
-    from .operators.resume import resume_filter
+    from .operators.lineage import append_partition_counts, partition_counter
+    from .operators.resume import CommittedOutput
     from .plans.pipeline import extract_and_score
 
     spark = _spark(args.cpus)
+    output = CommittedOutput(spark, args.output)
     pages = spark.read.parquet(args.input)
     if args.resume:
-        pages = resume_filter(pages, spark, args.output, key="url")
-    scored = extract_and_score(pages, n_partitions=args.partitions)
+        pages = output.skip_committed(pages, "url")
+    # one pass, as in jobs/extract_job.py: the stage counts the lineage
+    # rows, the write counts this run's rows
+    counts = partition_counter(spark) if args.lineage else None
+    output.append(extract_and_score(pages, n_partitions=args.partitions,
+                                    counts=counts))
     if args.lineage:
-        # lineage must account for exactly THIS run's rows: persist the
-        # scored frame so the write and the lineage rollup share one
-        # computation instead of re-reading the cumulative output
-        scored = scored.persist()
-    scored.write.mode("append").parquet(args.output)
-    if args.lineage:
-        append_lineage(scored, args.run_id or "cli", args.lineage)
-        scored.unpersist()
-    n = spark.read.parquet(args.output).count()
-    print(f"create-eval: {n} scored rows committed to {args.output}")
+        append_partition_counts(spark, counts.value, args.run_id or "cli",
+                                args.lineage)
+    print(f"create-eval: {output.total()} scored rows committed to {args.output}")
 
 
 from .plans.multi_eval import MODALITIES

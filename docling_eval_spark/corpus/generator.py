@@ -16,7 +16,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.skew import salted_repartition
@@ -55,7 +55,8 @@ def pages_from_documents(spark: SparkSession, sf_dir: str,
                          n_partitions: int | None = None,
                          replicate: int = 1,
                          pages_stage: bool = True,
-                         exclude: DataFrame | None = None) -> DataFrame:
+                         exclude: DataFrame | None = None,
+                         observe: Observation | None = None) -> DataFrame:
     """Deterministic pages table from the driver's documents parquet.
 
     Column pruning matters: only (doc_id, text, lang) are read from parquet
@@ -64,9 +65,12 @@ def pages_from_documents(spark: SparkSession, sf_dir: str,
     synth/extract stage is uniformly loaded without ever shuffling html
     blobs. `replicate` > 1 deterministically amplifies the corpus: each
     replica r gets doc_id' = doc_id * replicate + r (unique urls/html,
-    same oracle text) — used by scaling benchmarks.
+    same oracle text) — used by scaling benchmarks. `observe` counts the
+    documents read (metric `rows`), before `exclude` drops any.
     """
     docs = read_documents(spark, sf_dir, ["doc_id", "text", "lang"])
+    if observe is not None:
+        docs = docs.observe(observe, F.count(F.lit(1)).alias("rows"))
     if exclude is not None:
         if replicate > 1:
             # committed ids live in the POST-replication id space; an

@@ -528,8 +528,9 @@ def near_dedup_against(df: DataFrame, history: DataFrame,
     more), so without lineage truncation the composed plan grows
     multiplicatively and the driver OOMs planning the final anti-join
     — the same failure mode dup_components hit iteratively. The
-    checkpointed frames are one crawl batch, not the corpus; the first
-    is released once the second is materialized.
+    checkpointed frames are one crawl batch, not the corpus. Each is
+    released once the next is materialized, and the within-batch pairs
+    once the result is: only the returned frame's checkpoint remains.
     """
     reps = dedup_against(df, history, text_col=text_col, key=key)
     reps = reps.localCheckpoint()
@@ -561,18 +562,21 @@ def near_dedup_against(df: DataFrame, history: DataFrame,
         .select(F.col("a").alias(key)).distinct()
     )
     survivors = reps.join(matched, key, "left_anti").localCheckpoint()
-    _release_checkpoint(reps)  # survivors is materialized from it
+    release_checkpoint(reps)  # survivors is materialized from it
     pairs = minhash_dedup_pairs(survivors, text_col, key,
                                 threshold=threshold,
                                 max_bucket_size=max_bucket_size)
     drop = pairs.select(F.col("b").alias(key)).distinct()
-    return survivors.join(drop, key, "left_anti")
+    out = survivors.join(drop, key, "left_anti").localCheckpoint()
+    pairs.unpersist()
+    release_checkpoint(survivors)  # out is materialized from both
+    return out
 
 
 # -- duplicate-cluster connected components -----------------------------------
 
 
-def _release_checkpoint(df: DataFrame) -> None:
+def release_checkpoint(df: DataFrame) -> None:
     """Unpersist the RDD under a localCheckpoint'ed frame.
 
     ``DataFrame.unpersist`` and ``spark.catalog.clearCache`` only reach
@@ -652,7 +656,7 @@ def dup_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
             .localCheckpoint(eager=False)
         )
         cur_sum = new_labels.agg(F.sum("component")).first()[0]
-        _release_checkpoint(labels)  # superseded: new_labels is materialized
+        release_checkpoint(labels)  # superseded: new_labels is materialized
         labels = new_labels
         if cur_sum == prev_sum:
             break

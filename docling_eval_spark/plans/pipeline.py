@@ -16,7 +16,8 @@ Stages (scan -> UDF -> column ops -> agg -> two sinks):
      co-located J1 pairing). byte_identical is a native column equality
      after it: the 100% gate is pure JVM.
   4. rollups: DatasetStatistics per metric (operators/stats_rollup.py)
-     + per-partition lineage rows (operators/lineage.py).
+     + per-partition lineage rows (operators/lineage.py), which the
+     stage itself counts when given an accumulator.
 
 Scoring parity: reference evaluators/markdown_text_evaluator.py:164-185
 (per-doc metric dict), evaluators/stats.py:77-97 (dataset rollup).
@@ -27,7 +28,8 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import Accumulator, TaskContext
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -81,8 +83,8 @@ def score_extractions(extracted: DataFrame, full_metrics: bool = True) -> DataFr
     return extracted.withColumn("byte_identical", F.col("extracted_text") == F.col("text"))
 
 
-def _extract_and_score(rows: DataFrame, html_source,
-                       full_metrics: bool) -> DataFrame:
+def _extract_and_score(rows: DataFrame, html_source, full_metrics: bool,
+                       counts: Accumulator | None = None) -> DataFrame:
     """The one extract+score operator, shared by stored and synthetic pages.
 
     `html_source(batch)` returns the batch's urls and html strings; the
@@ -92,26 +94,44 @@ def _extract_and_score(rows: DataFrame, html_source,
     every hop; fused, a task owns exactly one worker; (2) html never
     returns to the JVM, so the only Arrow traffic back is the scored row,
     never per-block spans or table html.
+
+    With `counts` (operators/lineage.py `partition_counter`), each task
+    that runs to the end of its partition also adds
+    {partition_id: (n_rows, n_ok, n_reject)}, with ok and reject as the
+    byte_identical column below says (a null on either side is neither):
+    the lineage sidecar's rows, counted in the pass that writes the data.
     """
     schema = extract_schema(dict(rows.dtypes)["doc_id"])
     if full_metrics:
         schema += f", {_SCORE_SCHEMA}"
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        n_rows = n_ok = n_reject = 0
         for pdf in it:
             out = extract_frame(pdf, *html_source(pdf))
+            if counts is not None:
+                pred, true = out["extracted_text"], out["text"]
+                known = pred.notna() & true.notna()
+                same = known & (pred == true)
+                n_rows += len(out)
+                n_ok += int(same.sum())
+                n_reject += int((known & ~same).sum())
             yield score_frame(out) if full_metrics else out
+        if counts is not None:
+            counts.add({TaskContext.get().partitionId():
+                        (n_rows, n_ok, n_reject)})
 
     return rows.mapInPandas(run, schema=schema).withColumn(
         "byte_identical", F.col("extracted_text") == F.col("text"))
 
 
 def extract_and_score(pages: DataFrame, n_partitions: int = 32,
-                      full_metrics: bool = True) -> DataFrame:
+                      full_metrics: bool = True,
+                      counts: Accumulator | None = None) -> DataFrame:
     """Stored pages (see page_input) -> size-balanced repartition -> the
     extract+score operator over the stored html column."""
     balanced = size_balanced_repartition(page_input(pages), n_partitions)
-    return _extract_and_score(balanced, stored_html, full_metrics)
+    return _extract_and_score(balanced, stored_html, full_metrics, counts)
 
 
 def _synth_source(pdf: pd.DataFrame):
@@ -126,7 +146,9 @@ def _synth_source(pdf: pd.DataFrame):
 
 def flagship(spark: SparkSession, sf_dir: str, n_partitions: int = 32,
              full_metrics: bool = True, replicate: int = 1,
-             exclude: DataFrame | None = None) -> DataFrame:
+             exclude: DataFrame | None = None,
+             counts: Accumulator | None = None,
+             observe: Observation | None = None) -> DataFrame:
     """documents parquet -> pages -> extract -> score. The entry() query.
 
     The same extract+score operator as extract_and_score, fed by html
@@ -136,11 +158,13 @@ def flagship(spark: SparkSession, sf_dir: str, n_partitions: int = 32,
     (blobs already materialized) extract_and_score's size-balanced salt
     is the blob-side equivalent. `replicate` deterministically amplifies
     the corpus (distinct doc_ids per replica) for scaling benchmarks.
+    `exclude` and `observe` are pages_from_documents', `counts` the
+    extract+score operator's.
     """
     docs = pages_from_documents(spark, sf_dir, n_partitions=n_partitions,
                                 replicate=replicate, pages_stage=False,
-                                exclude=exclude)
-    return _extract_and_score(docs, _synth_source, full_metrics)
+                                exclude=exclude, observe=observe)
+    return _extract_and_score(docs, _synth_source, full_metrics, counts)
 
 
 def flagship_rollup(scored: DataFrame) -> DataFrame:

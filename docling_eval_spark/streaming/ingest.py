@@ -126,7 +126,7 @@ def start_dedup_ingest(spark: SparkSession, input_path: str,
 
     from ..operators.dedup import (
         bloom_dedup_against, dedup_against, minhash_signatures,
-        near_dedup_against)
+        near_dedup_against, release_checkpoint)
 
     def _apply(batch_df: DataFrame, _batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -150,10 +150,8 @@ def start_dedup_ingest(spark: SparkSession, input_path: str,
             if signatures_path:
                 # maintain the store: survivors' signatures land BEFORE
                 # the output append (see docstring for the crash-order
-                # argument); kept is persisted so the dedup pipeline
-                # runs once across the two writes
-                kept = kept.persist()
-                kept.count()
+                # argument); kept is a local checkpoint, so the dedup
+                # pipeline runs once across the two writes
                 minhash_signatures(kept, text_col, key) \
                     .write.mode("append").parquet(signatures_path)
         elif bloom:
@@ -163,8 +161,8 @@ def start_dedup_ingest(spark: SparkSession, input_path: str,
             kept = dedup_against(batch_df, history, text_col=text_col,
                                  key=key)
         kept.write.mode("append").parquet(output_path)
-        if near and signatures_path:
-            kept.unpersist()
+        if near:
+            release_checkpoint(kept)
 
     writer = (
         stream_pages(spark, input_path)

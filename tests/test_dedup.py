@@ -252,3 +252,24 @@ def test_near_dedup_against_keeps_only_the_returned_checkpoint(spark):
     kept = near_dedup_against(batch, history)
     assert [r.doc_id for r in kept.collect()] == [2]
     assert len(_persistent_ids(spark) - before) <= 1
+
+
+def test_near_dedup_against_leaves_no_cached_plan(spark):
+    """Without any clearCache: the within-batch pairs frame is unpersisted
+    and the survivors' checkpoint released once the result exists."""
+    from docling_eval_spark.operators.dedup import near_dedup_against
+
+    text = "the quick brown fox jumps over the lazy dog end"
+    history = spark.createDataFrame([(100, text)], ["doc_id", "text"])
+    t_new = "completely different words here about other topics now"
+    batch = spark.createDataFrame(
+        [(1, text + " xdup"), (3, t_new), (5, t_new + " tail")],
+        ["doc_id", "text"])
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    kept = near_dedup_against(batch, history)
+    assert [r.doc_id for r in kept.collect()] == [3]
+    assert cache.isEmpty()
+    after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    assert len(after - before) <= 1
