@@ -44,13 +44,6 @@ def _synth_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         })
 
 
-def synth_pages(docs: DataFrame) -> DataFrame:
-    """Light (doc_id, text, lang) rows -> pages: html synthesized in one
-    mapInPandas. Filter the light rows first; no predicate passes through
-    this operator."""
-    return docs.mapInPandas(_synth_batches, schema=PAGES_SCHEMA)
-
-
 def pages_from_documents(spark: SparkSession, sf_dir: str,
                          n_partitions: int | None = None,
                          replicate: int = 1,
@@ -97,4 +90,4 @@ def pages_from_documents(spark: SparkSession, sf_dir: str,
     if not pages_stage:
         # light rows for callers that fuse synthesis into their own stage
         return docs
-    return synth_pages(docs)
+    return docs.mapInPandas(_synth_batches, schema=PAGES_SCHEMA)

@@ -40,6 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import literal_frame
+
 N_THRESHOLDS = 10  # IoU .5:.05:.95 (functions/layout_metrics.IOU_THRESHOLDS)
 
 
@@ -125,12 +127,11 @@ def class_ap_rows(spark: SparkSession, aps: pd.DataFrame) -> DataFrame:
     """Literal per-class rows (label, ap, ap_50) — the reference
     consolidator's `class_<label>` columns (consolidator.py:214-217 from
     layout_evaluator's evaluations_per_class)."""
-    rows = [F.struct(F.lit(label).alias("label"), _rounded(_mean(g["ap"]), "ap"),
-                     _rounded(_mean(g.loc[g["thr_idx"] == 0, "ap"]), "ap_50"))
+    rows = [(label, _mean(g["ap"]), _mean(g.loc[g["thr_idx"] == 0, "ap"]))
             for label, g in aps.groupby("label")]
-    arr = F.array(*rows) if rows else F.array().cast(
-        "array<struct<label:string,ap:double,ap_50:double>>")
-    return spark.range(1).select(F.inline(arr))
+    return literal_frame(spark, rows, "label string, ap double, ap_50 double") \
+        .select("label", F.round("ap", 6).alias("ap"),
+                F.round("ap_50", 6).alias("ap_50"))
 
 
 def corpus_map_from_partials(detections: DataFrame, gt_counts: DataFrame,

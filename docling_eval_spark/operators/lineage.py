@@ -29,6 +29,8 @@ from pyspark import Accumulator, AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import literal_frame
+
 
 def lineage_rows(scored: DataFrame, run_id: str,
                  ok_col: str = "byte_identical") -> DataFrame:
@@ -78,14 +80,10 @@ def append_partition_counts(spark: SparkSession, counts: dict, run_id: str,
     Returns the rows appended. Partitions with no rows are skipped, as
     `lineage_rows`' groupBy skips them; a run with none appends
     nothing."""
-    rows = [F.struct(F.lit(p).alias("partition_id"),
-                     *(F.lit(v).cast("long").alias(name) for v, name in
-                       zip(c, ("n_rows", "n_ok", "n_reject"))))
-            for p, c in sorted(counts.items()) if c[0]]
+    rows = [(p, *c) for p, c in sorted(counts.items()) if c[0]]
     if rows:
-        # literal rows, all in the JVM: createDataFrame from a list would
-        # run a Python task per slice just to re-pickle them
-        (spark.range(1).select(F.inline(F.array(*rows)))
+        (literal_frame(spark, rows, "partition_id int, n_rows bigint, "
+                                    "n_ok bigint, n_reject bigint")
          .select(F.lit(run_id).alias("run_id"), "*")
          .write.mode("append").parquet(sidecar_path))
     return len(rows)

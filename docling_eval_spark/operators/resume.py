@@ -27,12 +27,27 @@ committed rows on every increment.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-# no output yet, or a directory with no data files (Spark ignores `_`/`.` names)
-_FRESH_CONDITIONS = {"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"}
+
+def _has_data_files(spark: SparkSession, output_path: str) -> bool:
+    """Whether `output_path` holds a file Spark would read (not under a
+    `_`/`.` name such as `_SUCCESS` or `_temporary/`, though `_k=v` is a
+    partition), listed through the path's own Hadoop FileSystem so URIs
+    work, up to the first one found."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(output_path)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    todo = [path] if fs.exists(path) else []
+    while todo:
+        for status in fs.listStatus(todo.pop()):  # a file lists itself
+            name = status.getPath().getName()
+            if name[0] == "." or (name[0] == "_" and "=" not in name):
+                continue
+            if status.isFile():
+                return True
+            todo.append(status.getPath())
+    return False
 
 
 def _read_committed(spark: SparkSession, output_path: str) -> DataFrame | None:
@@ -40,16 +55,12 @@ def _read_committed(spark: SparkSession, output_path: str) -> DataFrame | None:
 
     Only an output path that is missing or holds no data files (empty, or
     only `_temporary/` and `_SUCCESS` left by a killed first run) means
-    fresh. Spark decides both, so local paths and URIs (`file://`,
-    `hdfs://`, `s3a://`) behave alike. Any other error (a transient or
-    corrupt read) propagates: taken as fresh, it would make a resumed job
-    re-extract and re-append everything."""
-    try:
-        return spark.read.parquet(output_path)
-    except AnalysisException as e:
-        if e.getCondition() in _FRESH_CONDITIONS:
-            return None
-        raise
+    fresh, as a listing finds: once an Observation has run, Spark logs a
+    failed read as an ERROR stack. An error of the listing, or of the read
+    of data files (transient or corrupt), propagates: taken as fresh, it
+    would make a resumed job re-extract and re-append everything."""
+    return spark.read.parquet(output_path) \
+        if _has_data_files(spark, output_path) else None
 
 
 def resume_filter(inputs: DataFrame, spark: SparkSession, output_path: str,

@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import literal_frame
+
 _INTEGRAL = ("tinyint", "smallint", "int", "bigint")
 
 
@@ -79,7 +81,7 @@ def bucketed_running_total(
         offset += int(t)
     schema = T.StructType([df.schema["_b"],
                            T.StructField("_off", T.LongType())])
-    off_df = df.sparkSession.createDataFrame(offsets, schema)
+    off_df = literal_frame(df.sparkSession, offsets, schema)
     win = Window.partitionBy("_b").orderBy(*order) \
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return (

@@ -74,7 +74,9 @@ def with_lang_id_classifier(df: DataFrame, text_col: str = "text",
         return pd.DataFrame({"lang": langs,
                              "conf": conf.astype("float64")})
 
-    scored = df.withColumn("_lid", _score(F.col(text_col)))
+    # nondeterministic, so it runs once per row: a filter on its output
+    # would be pushed below it with a copy of the UDF (two ArrowEvalPython)
+    scored = df.withColumn("_lid", _score.asNondeterministic()(F.col(text_col)))
     return (scored
             .withColumn(f"{out_prefix}lang", F.col("_lid.lang"))
             .withColumn(f"{out_prefix}conf", F.col("_lid.conf"))

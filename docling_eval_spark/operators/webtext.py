@@ -53,11 +53,13 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from docling_eval_spark.operators.caching import track_caches
 from docling_eval_spark.operators.slicing import (
     bucketed_running_total, key_range_bucket, require_integral_key)
 from docling_eval_spark.operators.text_analysis import STOPWORDS
+from docling_eval_spark.session import literal_frame
 
 # Packing stride for (doc, line-ordinal) -> single bigint. 2^20 lines
 # per document is far above any real page; keeps min() a plain bigint
@@ -788,7 +790,8 @@ def stratified_hash_sample(df: DataFrame, rates: dict[str, float],
         # 'g' sorts above every hex digest, keeping everything.
         thr_hex = "g" if rate >= 1.0 else format(int(rate * 16 ** 8), "08x")
         rows.append((stratum, thr_hex))
-    thr = spark.createDataFrame(rows, [strata_col, "_thr"])
+    thr = literal_frame(spark, rows, T.StructType(
+        [df.schema[strata_col], T.StructField("_thr", T.StringType())]))
     h = F.substring(
         F.md5(F.concat(F.col(key).cast("string"), F.lit(":" + salt))), 1, 8)
     return (
@@ -1053,8 +1056,6 @@ def with_bpe_token_counts(df: DataFrame,
     cache exploits web text's heavy token repetition so the Python
     kernel runs per DISTINCT pre-token, not per occurrence."""
     import pandas as pd
-
-    from pyspark.sql import types as T
 
     from ..functions.bpe import bpe_token_count
 

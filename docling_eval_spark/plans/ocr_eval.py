@@ -15,6 +15,7 @@ CER denominator is the TRUE text length (jiwer semantics).
 
 from __future__ import annotations
 
+import re
 from typing import Iterator
 
 import pandas as pd
@@ -59,86 +60,62 @@ def ocr_scores(spark: SparkSession, sf_dir: str,
 # -- page-granular OCR (reference ocr_evaluator.py:150-162) -------------------
 #
 # The reference's OCR data model is Dict[int, SegmentedPage] iterated at
-# line (cell) granularity. Here that is a real Spark column:
-#     map<int, array<struct<cell_id:int, text:string>>>
-# built entirely with native higher-order functions (split / transform /
-# slice / map_from_entries) — no Python rows. Page i = the i-th 25-token
-# window of the document text (multi-page by construction even for short
-# docs); cells = 8-token line chunks within the page; the prediction is a
-# per-page deterministic degradation (mode = (doc_id + page_no) % 3:
-# identity / drop first char of first line / append 'X' to last line), so
-# the per-page CER has an exact closed form: 0 or 1/len(page_text).
+# line (cell) granularity; `segmented_docs` exposes it as the column
+# map<int, array<struct<cell_id:int, text:string>>>. Pages are 25-token
+# windows (multi-page by construction even for short docs), degraded per
+# page, so the per-page CER is exactly 0 or 1/len(page_text).
+# `segment_pages` is the one copy of that rule.
 
 PAGE_OCR_SCHEMA = "doc_id bigint, page_no int, mode int, cer double, char_accuracy double"
+_PAGES = "map<int,array<struct<cell_id:int,text:string>>>"
 
 TOKENS_PER_PAGE = 25
+# Java's \s, ASCII whitespace only: NBSP and U+2003 stay inside a token
+_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
-def _lines_expr(page_toks):
-    """array<struct<cell_id:int, text:string>>: 8-token line cells of one
-    page. Reconstruction contract: joining cell texts with a single space
-    yields ' '.join(page tokens) exactly."""
-    chunks = (
-        F.when(F.size(page_toks) == F.lit(0),
-               F.array().cast("array<string>"))
-        .otherwise(F.transform(
-            F.sequence(F.lit(0), ((F.size(page_toks) - F.lit(1)) / F.lit(8)).cast("int")),
-            lambda j: F.array_join(F.slice(page_toks, j * F.lit(8) + F.lit(1), 8), " "),
-        ))
-    )
-    return F.transform(
-        chunks,
-        lambda c, i: F.struct(i.cast("int").alias("cell_id"), c.alias("text")),
-    )
+def segment_pages(doc_id: int, text: str | None):
+    """Yield (page_no, mode, gt_cells, pred_cells) for each page of one
+    document, page_no from 1. Cells are single-space joins of 8 tokens,
+    so joining a page's cells with one space gives its text. mode =
+    (doc_id + page_no) % 3, signed as the JVM takes it: mode 1 drops the
+    first char of the FIRST cell, mode 2 appends 'X' to the LAST cell.
+    A null or empty text has no pages."""
+    toks = [t for t in _WS.split(text) if t] if text else []
+    for page_no, k in enumerate(range(0, len(toks), TOKENS_PER_PAGE), 1):
+        page = toks[k:k + TOKENS_PER_PAGE]
+        gt = [" ".join(page[j:j + 8]) for j in range(0, len(page), 8)]
+        n = doc_id + page_no
+        mode = n % 3 if n >= 0 else -(-n % 3)
+        pred = list(gt)
+        if mode == 1:
+            pred[0] = pred[0][1:]
+        elif mode == 2:
+            pred[-1] += "X"
+        yield page_no, mode, gt, pred
 
 
-def _degrade_cells(cells, mode):
-    """Per-page line-granular degradation: mode 1 drops the first char of
-    the FIRST line, mode 2 appends 'X' to the LAST line — one edit per
-    page, at a line boundary, so the pairing stays line-aligned."""
-    n = F.size(cells)
-    return F.transform(
-        cells,
-        lambda c, i: F.struct(
-            c["cell_id"].alias("cell_id"),
-            F.when((mode == F.lit(1)) & (i == F.lit(0)),
-                   c["text"].substr(F.lit(2), F.length(c["text"])))
-            .when((mode == F.lit(2)) & (i == n - F.lit(1)),
-                  F.concat(c["text"], F.lit("X")))
-            .otherwise(c["text"]).alias("text"),
-        ),
-    )
+def _segment_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    for pdf in it:
+        gt, pred = [], []
+        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+            # a null text has null maps, as the native split gave it
+            g, p = (None, None) if text is None else ({}, {})
+            for page_no, _, gt_cells, pred_cells in segment_pages(int(doc_id), text):
+                g[page_no] = list(enumerate(gt_cells))  # (cell_id, text)
+                p[page_no] = list(enumerate(pred_cells))
+            gt.append(g)
+            pred.append(p)
+        yield pdf[["doc_id"]].assign(gt_pages=gt, pred_pages=pred)
 
 
 def segmented_docs(spark: SparkSession, sf_dir: str,
                    n_partitions: int = 16) -> DataFrame:
     """(doc_id, gt_pages, pred_pages) with the map<int, array<struct>>
-    segmented-page model — built natively, zero Python on this path."""
+    segmented-page model, built by `segment_pages` in one Python stage."""
     docs = read_documents(spark, sf_dir, ["doc_id", "text"], n_partitions)
-    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda x: x != F.lit(""))
-    n_pages = F.ceil(F.size(toks) / F.lit(TOKENS_PER_PAGE)).cast("int")
-    pages_map = F.when(n_pages == F.lit(0), F.map_from_entries(
-        F.array().cast("array<struct<page_no:int,cells:array<struct<cell_id:int,text:string>>>>"))
-    ).otherwise(F.map_from_entries(F.transform(
-        F.sequence(F.lit(1), n_pages),
-        lambda i: F.struct(
-            i.cast("int").alias("page_no"),
-            _lines_expr(F.slice(toks, (i - F.lit(1)) * F.lit(TOKENS_PER_PAGE) + F.lit(1),
-                                TOKENS_PER_PAGE)).alias("cells"),
-        ),
-    )))
-    gt = docs.select("doc_id", pages_map.alias("gt_pages"))
-    return gt.select(
-        "doc_id", "gt_pages",
-        F.map_from_entries(F.transform(
-            F.map_entries("gt_pages"),
-            lambda e: F.struct(
-                e["key"].alias("page_no"),
-                _degrade_cells(
-                    e["value"], (F.col("doc_id") + e["key"]) % 3).alias("cells"),
-            ),
-        )).alias("pred_pages"),
-    )
+    return docs.mapInPandas(_segment_batches, schema=(
+        f"doc_id bigint, gt_pages {_PAGES}, pred_pages {_PAGES}"))
 
 
 def _page_cer_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -146,43 +123,31 @@ def _page_cer_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
     for pdf in it:
         rows = []
-        for doc_id, page_no, mode, gt, pred in zip(
-                pdf["doc_id"], pdf["page_no"], pdf["mode"],
-                pdf["gt_text"], pdf["pred_text"]):
-            if gt and pred:
-                # equality fast path: identical page text needs no DP
-                c = 0.0 if pred == gt else cer(pred, gt)
-                acc = 1.0 - min(1.0, c)
-            else:
-                # reference ocr_evaluator.py:109-113: missing text on
-                # either side = max error / zero accuracy
-                c, acc = 1.0, 0.0
-            rows.append((int(doc_id), int(page_no), int(mode), c, acc))
+        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+            d = int(doc_id)
+            for page_no, mode, gt_cells, pred_cells in segment_pages(d, text):
+                gt, pred = " ".join(gt_cells), " ".join(pred_cells)
+                if gt and pred:
+                    # equality fast path: identical page text needs no DP
+                    c = 0.0 if pred == gt else cer(pred, gt)
+                    acc = 1.0 - min(1.0, c)
+                else:
+                    # reference ocr_evaluator.py:109-113: missing text on
+                    # either side = max error / zero accuracy
+                    c, acc = 1.0, 0.0
+                rows.append((d, page_no, mode, c, acc))
         yield pd.DataFrame(rows, columns=[
             "doc_id", "page_no", "mode", "cer", "char_accuracy"])
 
 
 def page_ocr_scores(spark: SparkSession, sf_dir: str,
                     n_partitions: int = 16) -> DataFrame:
-    """Per-page CER over line-granular segmented pages: GT and prediction
-    pairs are CO-LOCATED columns of one row (no join); the map explodes
-    to (doc_id, page_no) rows; only the Levenshtein kernel runs in
-    Python (Arrow-batched)."""
-    seg = segmented_docs(spark, sf_dir, n_partitions)
-    pages = (
-        seg.select("doc_id", "pred_pages",
-                   F.explode("gt_pages").alias("page_no", "gt_cells"))
-        .select(
-            "doc_id", "page_no",
-            F.array_join(F.transform("gt_cells", lambda c: c["text"]), " ")
-            .alias("gt_text"),
-            F.array_join(
-                F.transform(F.element_at("pred_pages", F.col("page_no")),
-                            lambda c: c["text"]), " ").alias("pred_text"),
-            ((F.col("doc_id") + F.col("page_no")) % 3).cast("int").alias("mode"),
-        )
-    )
-    return pages.mapInPandas(_page_cer_batches, schema=PAGE_OCR_SCHEMA)
+    """Per-page CER over line-granular segmented pages: each document is
+    tokenized once, and its pages are segmented, degraded and scored in
+    the same Python stage (Arrow-batched), one row per (doc_id, page_no).
+    GT and prediction are built side by side, so nothing joins."""
+    docs = read_documents(spark, sf_dir, ["doc_id", "text"], n_partitions)
+    return docs.mapInPandas(_page_cer_batches, schema=PAGE_OCR_SCHEMA)
 
 
 def ocr_rollup(scores: DataFrame) -> DataFrame:

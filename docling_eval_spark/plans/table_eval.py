@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import literal_frame
+
 TEDS_SCHEMA = (
     "doc_id bigint, url string, teds double, teds_struct double, "
     "is_complex boolean, gt_nrows int, gt_ncols int, pred_nrows int, pred_ncols int"
@@ -42,9 +44,11 @@ def perturb_table_html(html: str, mode: int) -> str:
     return out  # missing-table predictions pass through unperturbed
 
 
-def _teds_batches(it: Iterator[pd.DataFrame], perturb: bool = False) -> Iterator[pd.DataFrame]:
+def _teds_batches(it: Iterator[pd.DataFrame], html_source,
+                  perturb: bool = False) -> Iterator[pd.DataFrame]:
+    """`html_source(batch)` returns the batch's urls and html strings, as
+    for plans/pipeline.py `_extract_and_score`."""
     from ..corpus.html_synth import gt_table_html
-    from ..extraction.extract import stored_html
     from ..extraction.html_tokenizer import parse_blocks
     from ..functions.teds import (
         html_table_to_grid_cells,
@@ -56,7 +60,7 @@ def _teds_batches(it: Iterator[pd.DataFrame], perturb: bool = False) -> Iterator
 
     for pdf in it:
         rows = []
-        for doc_id, url, html in zip(pdf["doc_id"], *stored_html(pdf)):
+        for doc_id, url, html in zip(pdf["doc_id"], *html_source(pdf)):
             gt = gt_table_html(int(doc_id))
             # the page's first captured <table> subtree, as extraction
             # reports it; no text classification or span rows are needed
@@ -84,23 +88,24 @@ def _teds_batches(it: Iterator[pd.DataFrame], perturb: bool = False) -> Iterator
 
 def teds_scores(spark: SparkSession, sf_dir: str, n_partitions: int = 16,
                 perturb: bool = False) -> DataFrame:
-    """Synthesize the table pages, extract each page's first table and
-    TEDS-score it against regenerable GT, in one Python stage after the
-    synthesis.
+    """Keep the table pages (doc_id % 5 == 0) of the light (doc_id, text,
+    lang) rows and spread them by salted doc_id; then one Python stage
+    synthesizes each page's html, extracts its first table and TEDS-scores
+    it against regenerable GT, so no html crosses a shuffle or Arrow.
     `perturb` applies the deterministic shape perturbations (mode =
     doc_id % 4) so the delta histogram has non-trivial bins."""
     from functools import partial
 
-    from ..corpus.generator import pages_from_documents, synth_pages
-    from ..operators.skew import size_balanced_repartition
+    from ..operators.skew import salted_repartition
+    from ..sources.tables import read_documents
+    from .pipeline import _synth_source
 
-    # keep the table pages (doc_id % 5 == 0) before synthesizing any html
-    docs = pages_from_documents(spark, sf_dir, pages_stage=False)
-    pages = synth_pages(docs.where(F.col("doc_id") % 5 == 0))
-    pages = size_balanced_repartition(pages, n_partitions)
-    return pages.select("doc_id", "url", "html").mapInPandas(
-        partial(_teds_batches, perturb=perturb), schema=TEDS_SCHEMA
-    )
+    docs = read_documents(spark, sf_dir, ["doc_id", "text", "lang"])
+    tables = salted_repartition(docs.where(F.col("doc_id") % 5 == 0),
+                                n_partitions, key="doc_id")
+    return tables.mapInPandas(
+        partial(_teds_batches, html_source=_synth_source, perturb=perturb),
+        schema=TEDS_SCHEMA)
 
 
 def teds_rollup(scores: DataFrame) -> DataFrame:
@@ -161,6 +166,6 @@ def delta_histogram(scores: DataFrame) -> DataFrame:
         out.append((delta, nr, nc,
                     round(nr / tot, 6) if tot else 0.0,
                     round(nc / tot, 6) if tot else 0.0))
-    return spark.createDataFrame(
-        out, "delta int, n_rows bigint, n_cols bigint, "
-             "frac_rows double, frac_cols double").orderBy("delta")
+    return literal_frame(
+        spark, out, "delta int, n_rows bigint, n_cols bigint, "
+                    "frac_rows double, frac_cols double").orderBy("delta")

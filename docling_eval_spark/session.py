@@ -12,9 +12,12 @@ Design notes (100 TB scale):
 
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType
 
 DEFAULT_CONFS = {
     "spark.sql.adaptive.enabled": "true",
@@ -61,3 +64,21 @@ def get_spark(
     for k, v in confs.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def literal_frame(spark: SparkSession, rows: list[tuple],
+                  schema: str | StructType) -> DataFrame:
+    """Small driver-side `rows` (JSON-able values, in `schema` order) as a
+    frame planned wholly in the JVM: one JSON string literal that
+    `from_json` parses, inlined over one range row. `createDataFrame(list)`
+    would re-pickle the rows in a Python task per default-parallelism
+    slice; one `lit` per value would cost a Py4J round trip each."""
+    schema = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+
+    def obj(v, t):  # a struct is a JSON object
+        return ({f.name: obj(x, f.dataType) for f, x in zip(t.fields, v)}
+                if isinstance(t, StructType) and v is not None else v)
+
+    data = F.lit(json.dumps([obj(r, schema) for r in rows]))
+    return spark.range(1).select(F.inline(
+        F.from_json(data, ArrayType(schema), {"mode": "FAILFAST"})))

@@ -178,3 +178,27 @@ def test_observation_on_a_subtree_consumed_twice_counts_once(spark):
     d = spark.range(100).observe(obs, F.count(F.lit(1)).alias("rows"))
     assert d.union(d).count() == 200
     assert obs.get == {"rows": 100}
+
+
+def test_fresh_output_is_found_without_a_read(spark, tmp_path, monkeypatch):
+    """A missing, an empty and a killed first run's output are fresh with
+    no parquet read: once an Observation has run in the session, a read
+    that fails is logged as an ERROR stack by Spark's listener bus."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from docling_eval_spark.operators.resume import CommittedOutput
+
+    (tmp_path / "empty").mkdir()
+    killed = tmp_path / "killed"
+    spark.range(5).write.parquet(str(killed / "_temporary" / "0"))
+    (killed / "_SUCCESS").touch()
+    reads, parquet = [], DataFrameReader.parquet
+    monkeypatch.setattr(DataFrameReader, "parquet", lambda self, *paths:
+                        reads.append(paths) or parquet(self, *paths))
+    for out in (tmp_path / "none", tmp_path / "empty", killed):
+        for path in (str(out), out.as_uri()):
+            assert CommittedOutput(spark, path).keys("id") is None, path
+    assert reads == []
+    spark.range(3).write.parquet(str(tmp_path / "done" / "_k=1"))
+    assert CommittedOutput(spark, str(tmp_path / "done")).keys("id").count() == 3
+    assert len(reads) == 1

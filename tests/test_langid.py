@@ -69,6 +69,28 @@ def test_spark_operator_stage(spark):
     assert out[99].langid_lang == "und" and out[99].langid_conf == 0.0
 
 
+def test_language_gate_scores_each_row_once(spark, monkeypatch):
+    """A filter on the gate's output must not copy the UDF into a pushed
+    filter: one ArrowEvalPython in the executed plan, not two."""
+    import numpy as np
+
+    from docling_eval_spark.functions import langid
+    from docling_eval_spark.operators.text_analysis import (
+        with_lang_id_classifier)
+
+    # a tiny model, so nothing trains: every non-empty text is English
+    W = np.zeros((len(langid.LANGS), langid.N_BUCKETS), np.float32)
+    W[langid.LANGS.index("en")] = 1.0
+    monkeypatch.setattr(langid, "get_model",
+                        lambda: (W, np.zeros(len(langid.LANGS), np.float32)))
+    df = spark.createDataFrame([(1, "the cat"), (2, ""), (3, "der hund")],
+                               "doc_id long, text string")
+    kept = with_lang_id_classifier(df).where("langid_lang = 'en'")
+    plan = kept._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert sorted(r.doc_id for r in kept.collect()) == [1, 3]
+
+
 def test_curate_cli_lang_keep(spark, tmp_path):
     from docling_eval_spark.cli import main as cli_main
     from docling_eval_spark.functions.langid import synth_page

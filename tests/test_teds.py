@@ -268,11 +268,11 @@ class TestTedsScoresPlan:
         from docling_eval_spark.plans.table_eval import teds_scores
 
         # the physical plan before execution; children print below their
-        # parent, so the last MapInPandas is the first to run (synthesis)
+        # parent: one MapInPandas synthesizes and scores, after the filter
         plan = teds_scores(spark, sf_dir)._jdf.queryExecution() \
             .executedPlan().toString().splitlines()
         nodes = [line.lstrip(" +-:") for line in plan]
         maps = [i for i, n in enumerate(nodes) if n.startswith("MapInPandas")]
         (table_filter,) = [i for i, n in enumerate(nodes)
                            if n.startswith("Filter") and "% 5) = 0" in n]
-        assert len(maps) == 2 and table_filter > maps[-1]
+        assert len(maps) == 1 and table_filter > maps[0]
