@@ -515,19 +515,8 @@ def _q_textract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     responses = docs.mapInPandas(
         synth, schema="doc_id bigint, response_json string, "
                       "pw double, ph double")
-    items = parse_responses(responses, provider="textract",
-                            page_w_col="pw", page_h_col="ph")
-    return items.select(
-        "doc_id", "item_idx", "kind", "page_no", "label", "text",
-        F.round("l", 6).alias("l"), F.round("t", 6).alias("t"),
-        F.round("r", 6).alias("r"), F.round("b", 6).alias("b"),
-        "row_idx", "col_idx", "column_header", "row_header",
-    ).orderBy("doc_id", "item_idx")
-
-
-_CLOUD_ITEM_COLS = ["doc_id", "item_idx", "kind", "page_no", "label", "text",
-                    "l", "t", "r", "b", "row_idx", "col_idx",
-                    "column_header", "row_header"]
+    return _cloud_items_projection(parse_responses(
+        responses, provider="textract", page_w_col="pw", page_h_col="ph"))
 
 
 def _cloud_items_projection(items: DataFrame) -> DataFrame:
@@ -2225,189 +2214,6 @@ def _q_range_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
-# ---------------------------------------------------------------------------
-# queries — relational core over TPC-H-ish tables (scan/filter/join/agg/window)
-# ---------------------------------------------------------------------------
-
-def _q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 shape: scan+filter+groupBy agg (pushdown + partial agg)."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("2024-09-01").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 4).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias("sum_disc_price"),
-            F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
-            F.count("*").alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-def _q_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: 3-way join (broadcast small side) + top-k."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust.where(F.col("c_mktsegment") == "BUILDING")),
-              orders.o_custkey == F.col("c_custkey"))
-        .groupBy("o_orderkey")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias("revenue"))
-        .orderBy(F.desc("revenue"), "o_orderkey")
-        .limit(10)
-    )
-
-
-def _q_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: star join over broadcast dims."""
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("r_name")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias("revenue"))
-        .orderBy("r_name")
-    )
-
-
-def _q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 shape: correlated subquery (min supplycost per part) —
-    Catalyst decorrelates it into an aggregate + self-join."""
-    # (no partsupp table in the driver schema; lineitem is the fact side)
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    min_price = (
-        li.groupBy("l_partkey")
-        .agg(F.min("l_extendedprice").alias("min_price"))
-    )
-    return (
-        li.join(min_price, "l_partkey")
-        .where(F.col("l_extendedprice") == F.col("min_price"))
-        .join(F.broadcast(part.where(F.col("p_size") <= 10)),
-              F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy("p_partkey", "p_brand")
-        .agg(F.round(F.min("min_price"), 4).alias("min_price"),
-             F.min("l_suppkey").alias("best_suppkey"))
-        .orderBy("p_partkey")
-    )
-
-
-def _q_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: correlated EXISTS semi-join — orders with a
-    lineitem shipped > 60 days after the order date, per priority."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_shipdate")
-    return (
-        orders.join(
-            li,
-            (orders.o_orderkey == li.l_orderkey)
-            & (li.l_shipdate > F.date_add(orders.o_orderdate, 60)),
-            "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
-
-
-def _q_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape: LEFT OUTER join + two-level aggregation (customers
-    by order count, including zero-order customers)."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    per_cust = (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_outer")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count("*").alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
-    )
-
-
-def _q_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape: aggregate subquery membership (orders whose total
-    quantity exceeds a threshold)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("total_qty"))
-        .where(F.col("total_qty") > 150)
-    )
-    return (
-        orders.join(big, orders.o_orderkey == big.l_orderkey)
-        .select("o_orderkey", F.round("total_qty", 4).alias("total_qty"),
-                F.round("o_totalprice", 4).alias("o_totalprice"))
-        .orderBy(F.desc("total_qty"), "o_orderkey")
-        .limit(20)
-    )
-
-
-def _q_events_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-stream rollup: per-day per-type counts + sums (A9 analog)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (
-        ev.groupBy(F.to_date("ts").alias("day"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
-        .orderBy("day", "event_type")
-    )
-
-
-def _q_event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time sessionization via native session_window (30-min gap):
-    per-user session count + event count. The streaming-capable operator
-    run in batch; the oracle is the classic gaps-and-islands SQL."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    sess = (
-        ev.groupBy("user_id", F.session_window("ts", "30 minutes"))
-        .agg(F.count("*").alias("n"))
-    )
-    return (
-        sess.groupBy("user_id")
-        .agg(F.count("*").alias("n_sessions"), F.sum("n").alias("n_events"))
-        .orderBy("user_id")
-    )
-
-
-def _q_event_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON column functions (F20-family): extract props.k, roll up."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (
-        ev.withColumn("k", F.get_json_object("props", "$.k").cast("long"))
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n"), F.sum("k").alias("sum_k"),
-             F.round(F.avg("k"), 6).alias("avg_k"))
-        .orderBy("event_type")
-    )
-
-
-def _q_top_parts_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window/top-k (W-ops, O1): rank parts by retailprice within brand."""
-    from pyspark.sql import Window
-
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    w = Window.partitionBy("p_brand").orderBy(F.desc("p_retailprice"), F.asc("p_partkey"))
-    return (
-        part.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 3)
-        .select("p_brand", "rk", "p_partkey", F.round("p_retailprice", 4).alias("price"))
-        .orderBy("p_brand", "rk")
-    )
-
-
 def _q_cumulative_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W3 cumulative histogram: running cumsum of bin counts."""
     from pyspark.sql import Window
@@ -2953,48 +2759,26 @@ def _q_webtext_latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Query registry, ordered for driver coverage.
 
-    ROTATION POLICY (round-4 verdict #2: staleness-vs-change ordering):
-    the driver hashes the FIRST 50 entries of this dict each round, so
-    ordering is coverage policy. Sort priority: (1) entries whose
-    IMPLEMENTATION changed since their last driver row — a stale row
-    under changed code is the worst coverage state, so changed-code
-    outranks never-stale; (2) entries with no driver row ever (new this
-    round); (3) entries whose last driver row is the OLDEST
-    CORRECTNESS_r{N}.json; (4) the rest, least-recently-verified first.
+    ROTATION POLICY: the external correctness gate hashes the FIRST 50
+    entries of this dict each round, so ordering is coverage policy. Sort
+    priority: (1) entries whose IMPLEMENTATION changed since their last
+    gate row (CORRECTNESS_r{N}.json) — a stale row under changed code is
+    the worst coverage state, so changed-code outranks never-stale; (2)
+    entries with no gate row ever; (3) entries whose last gate row is
+    the OLDEST; (4) the rest, least-recently-verified first.
 
-    Round-5 instance: 15 changed-in-r5 entries lead (robots regex +
-    fixture, embedding-LSH cap default + cache contract, repetition
-    persist restructure, packing/budget cache tracking, near-dedup
-    signature store, distributed bloom build, prefix-sum range slice,
-    hashed unigram join, frame container sniff, vectorized JPEG
-    decode), then the 11 round-5 additions (lang_id_classifier,
-    video_container_counts, perplexity_by_lang,
-    audio_decode_features, robots_txt_verdicts, cdx_fetch_manifest,
-    cdx_ranged_fetch, temperature_mix_sample, wet_roundtrip,
-    stupid_backoff_nll, semdedup_keep, c4_badwords_filter), then the
-    6 remaining r02-era rows
-    (rejection_summary, timings_rollup/stats/histogram,
-    consolidation_pivot, kv_graph_labels — range_slice moved into
-    group 1 by its rewrite), then the 4 r3-row entries whose code
-    changed in round 4 (epoch_shuffle_pos, gopher_quality,
-    webtext_latest_snapshot, c4_line_filter), then 13 r3-era fills
-    ending at events_daily in slot 50 (extract_block_counts,
-    extract_identity_rate, extract_text_md5, google_docai_spans,
-    gopher_line_flags, hash_sample_docs, large_orders, late_orders,
-    min_cost_supplier and ngram_decontaminate slide just past the
-    window to slots 51-60).
-    After this window lands, no entry's latest driver row predates its
-    last code change and no row is older than r3 — the round-4 verdict
-    #2 "Done" condition. All 50 verified locally through
-    tools/check_oracle.py this round before shipping.
+    Current order: the three entries whose code changed lead
+    (textract_spans now calls the shared cloud-items projection;
+    minhash_near_dup and near_dedup_kept run minhash_dedup_pairs and
+    near_dedup, whose lazy-plan branch is gone), then the round-5 order
+    unchanged.
     """
     return {
-        # --- slots 1-15: implementation changed in round 5 since
-        # their last driver row (robots regex + fixture, LSH cap
-        # default + cache contract, repetition persist restructure,
-        # packing/budget cache tracking, signature-store param,
-        # distributed bloom build, prefix-sum range slice, hashed
-        # unigram join, container sniff, vectorized JPEG decode) ---
+        # --- implementation changed since their last gate row ---
+        "textract_spans": _q_textract_spans,
+        "minhash_near_dup": _q_minhash_near_dup,
+        "near_dedup_kept": _q_near_dedup_kept,
+        # --- changed in round 5 ---
         "robots_meta_flags": _q_robots_flags,
         "embedding_near_dup": _q_embedding_near_dup,
         "embedding_dup_components": _q_embedding_dup_components,
@@ -3038,7 +2822,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- window fill: last driver row is CORRECTNESS_r03.json ---
         "azure_docai_spans": _q_azure_docai_spans,
         "cumulative_histogram": _q_cumulative_histogram,
-        "customer_order_distribution": _q_customer_order_distribution,
         "cvat_document_items": _q_cvat_document_items,
         "dedup_against_history": _q_dedup_against_history,
         "dedup_components": _q_dedup_components,
@@ -3046,26 +2829,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "duplicate_spans": _q_duplicate_spans,
         "embedding_ivf_topk": _q_embedding_ivf_topk,
         "embedding_topk": _q_embedding_topk,
-        "event_json_props": _q_event_json_props,
-        "event_sessions": _q_event_sessions,
-        "events_daily": _q_events_daily,
         "extract_block_counts": _q_extract_block_counts,
         "extract_identity_rate": _q_extract_identity_rate,
         "extract_text_md5": _q_extract_text_md5,
         "google_docai_spans": _q_google_docai_spans,
         "gopher_line_flags": _q_gopher_line_flags,
         "hash_sample_docs": _q_hash_sample_docs,
-        "large_orders": _q_large_orders,
-        "late_orders": _q_late_orders,
-        "min_cost_supplier": _q_min_cost_supplier,
         "ngram_decontaminate": _q_ngram_decontaminate,
         # --- past the window: r3-verified, unchanged since ---
-        "pricing_summary": _q_pricing_summary,
-        "top_orders": _q_top_orders,
-        "region_revenue": _q_region_revenue,
-        "top_parts_per_brand": _q_top_parts_per_brand,
         "png_decode_features": _q_png_decode_features,
-        "textract_spans": _q_textract_spans,
         "otsl_table_grid": _q_otsl_table_grid,
         "webtext_repetition": _q_webtext_repetition,
         "pii_redaction": _q_pii_redaction,
@@ -3109,8 +2881,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_len_histogram": _q_doc_len_histogram,
         "lang_distribution": _q_lang_distribution,
         "dedup_exact": _q_dedup_exact,
-        "minhash_near_dup": _q_minhash_near_dup,
-        "near_dedup_kept": _q_near_dedup_kept,
         "multimodal_meta": _q_multimodal_meta,
         "token_counts": _q_token_counts,
         "quality_scores": _q_quality_scores,
@@ -4559,88 +4329,6 @@ def oracle_sql() -> dict[str, str]:
         "range_slice": (
             "SELECT doc_id, lang FROM documents ORDER BY doc_id "
             "LIMIT 20 OFFSET 100"
-        ),
-        "pricing_summary": (
-            "SELECT l_returnflag, l_linestatus, "
-            "round(sum(l_quantity), 4) AS sum_qty, "
-            "round(sum(l_extendedprice), 4) AS sum_base_price, "
-            "round(sum(l_extendedprice * (1 - l_discount)), 4) AS sum_disc_price, "
-            "round(avg(l_quantity), 6) AS avg_qty, "
-            "count(*) AS count_order "
-            "FROM lineitem WHERE l_shipdate <= TIMESTAMP '2024-09-01' "
-            "GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus"
-        ),
-        "top_orders": (
-            "SELECT o_orderkey, round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue "
-            "FROM lineitem JOIN orders ON l_orderkey = o_orderkey "
-            "JOIN customer ON o_custkey = c_custkey "
-            "WHERE c_mktsegment = 'BUILDING' "
-            "GROUP BY o_orderkey ORDER BY revenue DESC, o_orderkey LIMIT 10"
-        ),
-        "region_revenue": (
-            "SELECT r_name, round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue "
-            "FROM lineitem JOIN orders ON l_orderkey = o_orderkey "
-            "JOIN customer ON o_custkey = c_custkey "
-            "JOIN nation ON c_nationkey = n_nationkey "
-            "JOIN region ON n_regionkey = r_regionkey "
-            "GROUP BY r_name ORDER BY r_name"
-        ),
-        "min_cost_supplier": (
-            "SELECT p_partkey, p_brand, round(min(l_extendedprice), 4) AS min_price, "
-            "min(l_suppkey) AS best_suppkey "
-            "FROM lineitem l JOIN part ON l_partkey = p_partkey "
-            "WHERE p_size <= 10 AND l_extendedprice = ("
-            "  SELECT min(l2.l_extendedprice) FROM lineitem l2 "
-            "  WHERE l2.l_partkey = l.l_partkey) "
-            "GROUP BY p_partkey, p_brand ORDER BY p_partkey"
-        ),
-        "late_orders": (
-            "SELECT o_orderpriority, count(*) AS order_count FROM orders "
-            "WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey "
-            "AND l_shipdate > o_orderdate + INTERVAL 60 DAY) "
-            "GROUP BY o_orderpriority ORDER BY o_orderpriority"
-        ),
-        "customer_order_distribution": (
-            "SELECT c_count, count(*) AS custdist FROM ("
-            "  SELECT c_custkey, count(o_orderkey) AS c_count "
-            "  FROM customer LEFT OUTER JOIN orders ON c_custkey = o_custkey "
-            "  GROUP BY c_custkey) "
-            "GROUP BY c_count ORDER BY custdist DESC, c_count DESC"
-        ),
-        "large_orders": (
-            "SELECT o_orderkey, round(total_qty, 4) AS total_qty, "
-            "round(o_totalprice, 4) AS o_totalprice "
-            "FROM orders JOIN (SELECT l_orderkey, sum(l_quantity) AS total_qty "
-            "FROM lineitem GROUP BY l_orderkey HAVING sum(l_quantity) > 150) "
-            "ON o_orderkey = l_orderkey "
-            "ORDER BY total_qty DESC, o_orderkey LIMIT 20"
-        ),
-        "events_daily": (
-            "SELECT cast(ts AS date) AS day, event_type, count(*) AS n, "
-            "round(sum(value), 4) AS sum_value FROM events "
-            "GROUP BY 1, 2 ORDER BY 1, 2"
-        ),
-        "event_sessions": (
-            "WITH g AS (SELECT user_id, ts, CASE WHEN ts - lag(ts) OVER "
-            "(PARTITION BY user_id ORDER BY ts) >= INTERVAL 30 MINUTE "
-            "OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL "
-            "THEN 1 ELSE 0 END AS new_s FROM events), "
-            "s AS (SELECT user_id, sum(new_s) OVER (PARTITION BY user_id "
-            "ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid FROM g) "
-            "SELECT user_id, cast(count(DISTINCT sid) AS bigint) AS n_sessions, "
-            "count(*) AS n_events FROM s GROUP BY user_id ORDER BY user_id"
-        ),
-        "event_json_props": (
-            "SELECT event_type, count(*) AS n, "
-            "cast(sum(cast(props->>'k' AS bigint)) AS bigint) AS sum_k, "
-            "round(avg(cast(props->>'k' AS bigint)), 6) AS avg_k "
-            "FROM events GROUP BY event_type ORDER BY event_type"
-        ),
-        "top_parts_per_brand": (
-            "SELECT p_brand, rk, p_partkey, round(p_retailprice, 4) AS price FROM ("
-            "  SELECT p_brand, p_partkey, p_retailprice, "
-            "  row_number() OVER (PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey) AS rk"
-            "  FROM part) WHERE rk <= 3 ORDER BY p_brand, rk"
         ),
         "cumulative_histogram": (
             "WITH h AS (SELECT least(cast(floor(n_chars / 600.0 * 20) AS int), 19) AS bucket, "

@@ -42,8 +42,8 @@ GROUPS: dict[str, list[str]] = {
         "minhash_near_dup", "near_dedup_kept", "dedup_exact", "token_counts",
     ],
     "sql": [
-        "pricing_summary", "region_revenue", "doc_len_histogram",
-        "top_parts_per_brand", "embedding_topk",
+        "doc_stats", "doc_len_histogram", "cumulative_histogram",
+        "range_slice", "embedding_topk",
     ],
     "webtext": [
         "webtext_line_dedup", "gopher_quality", "webtext_repetition",

@@ -229,25 +229,20 @@ def ngram_jaccard_verify(df: DataFrame, candidates: DataFrame,
 
 def minhash_dedup_pairs(df: DataFrame, text_col: str = "text", key: str = "doc_id",
                         threshold: float = 0.8,
-                        max_bucket_size: int | None = None,
-                        materialize: bool = True) -> DataFrame:
+                        max_bucket_size: int | None = None) -> DataFrame:
     """Full near-dup pipeline: minhash -> LSH candidates -> exact verify.
 
     The candidate-pair set is persisted while the verify stage consumes
     it three times (member semi-join + both sides of the gram join);
     without the cache each consumer would recompute the whole
-    signature+banding subtree. With materialize=True (default) the
-    verify result is computed eagerly — it is only (a, b, jaccard) id
-    pairs, tiny relative to the corpus — all intermediate caches are
-    released before return, and the RETURNED frame stays persisted:
-    the caller owns it and should `.unpersist()` when done with it.
-    materialize=False returns the fully lazy plan (nothing cached, each
-    downstream consumer recomputes) — for plan inspection/composition."""
+    signature+banding subtree. The verify result is computed eagerly —
+    it is only (a, b, jaccard) id pairs, tiny relative to the corpus —
+    all intermediate caches are released before return, and the
+    RETURNED frame stays persisted: the caller owns it and should
+    `.unpersist()` when done with it. The lazy plan is the composition
+    of minhash_signatures, minhash_lsh_candidates and
+    ngram_jaccard_verify."""
     sigs = minhash_signatures(df, text_col, key)
-    if not materialize:
-        return ngram_jaccard_verify(
-            df, minhash_lsh_candidates(sigs, key, max_bucket_size=max_bucket_size),
-            text_col, key, threshold=threshold)
     if max_bucket_size is not None:
         # the bucket-size guard consumes the banded subtree twice; cache
         # signatures so the expensive UDF stage runs once
@@ -271,8 +266,7 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text", key: str = "doc_i
 
 def near_dedup(df: DataFrame, text_col: str = "text", key: str = "doc_id",
                threshold: float = 0.8,
-               max_bucket_size: int | None = 1000,
-               materialize: bool = True) -> DataFrame:
+               max_bucket_size: int | None = 1000) -> DataFrame:
     """Scale-safe end-to-end near-dedup: returns the KEPT corpus rows.
 
     1. exact-dedup pre-pass — identical texts collapse to their min-key
@@ -288,24 +282,16 @@ def near_dedup(df: DataFrame, text_col: str = "text", key: str = "doc_id",
        smallest key — deterministic and expressible in ANSI SQL, which
        is what makes the whole pipeline oracle-checkable.
 
-    Cache discipline (materialize=True, default): `reps` (the exact-dedup
-    output) is consumed by the signature stage, by all three verify-stage
-    readers, and by the final anti-join — six corpus-scan + shuffle
-    recomputes without a persist (measured 8x slower). It is persisted
+    Cache discipline: `reps` (the exact-dedup output) is consumed by the
+    signature stage, by all three verify-stage readers, and by the final
+    anti-join — six corpus-scan + shuffle recomputes without a persist
+    (measured 8x slower). It is persisted
     for the pipeline's duration (the distributed-cluster equivalent is
     writing reps to a table); every INTERMEDIATE cache (reps, signatures,
     candidates, pairs) is released before return. The RETURNED kept-
     corpus frame stays persisted and is caller-owned — `.unpersist()` it
-    (or let the session end) after writing it out. materialize=False
-    returns the fully lazy plan with nothing cached.
+    (or let the session end) after writing it out.
     """
-    if not materialize:
-        reps = exact_dedup(df, text_col, key)
-        pairs = minhash_dedup_pairs(reps, text_col, key, threshold=threshold,
-                                    max_bucket_size=max_bucket_size,
-                                    materialize=False)
-        drop = pairs.select(F.col("b").alias(key)).distinct()
-        return reps.join(drop, on=key, how="left_anti")
     reps = exact_dedup(df, text_col, key).persist()
     pairs = minhash_dedup_pairs(reps, text_col, key, threshold=threshold,
                                 max_bucket_size=max_bucket_size)

@@ -50,7 +50,7 @@ def _has_data_files(spark: SparkSession, output_path: str) -> bool:
     return False
 
 
-def _read_committed(spark: SparkSession, output_path: str) -> DataFrame | None:
+def read_committed(spark: SparkSession, output_path: str) -> DataFrame | None:
     """The committed output, or None if fresh.
 
     Only an output path that is missing or holds no data files (empty, or
@@ -66,7 +66,7 @@ def _read_committed(spark: SparkSession, output_path: str) -> DataFrame | None:
 def resume_filter(inputs: DataFrame, spark: SparkSession, output_path: str,
                   key: str = "url") -> DataFrame:
     """Drop input rows whose key is already committed (idempotent restart)."""
-    done = _read_committed(spark, output_path)
+    done = read_committed(spark, output_path)
     if done is None:
         return inputs
     return inputs.join(done.select(key), on=key, how="left_anti")
@@ -101,7 +101,7 @@ class CommittedOutput:
     def __init__(self, spark: SparkSession, path: str,
                  ok_col: str | None = None):
         self.path = path
-        self._table = _read_committed(spark, path)
+        self._table = read_committed(spark, path)
         self._metrics = [F.count(F.lit(1)).alias("rows")]
         if ok_col is not None:
             self._metrics.append(F.count_if(F.col(ok_col)).alias("ok"))

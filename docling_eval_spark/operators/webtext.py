@@ -387,18 +387,6 @@ def assign_split(df: DataFrame, key: str = "doc_id",
     return df.withColumn(out_col, expr)
 
 
-def _ngrams_expr(words, n: int):
-    """Word n-grams as a space-joined string array column (empty when
-    the document has fewer than n words)."""
-    if n == 1:
-        return words
-    return F.transform(
-        F.slice(words, 1, F.greatest(F.size(words) - (n - 1), F.lit(0))),
-        lambda w, i: F.concat_ws(" ", F.array(
-            *([w] + [F.element_at(words, i + k + 1) for k in range(1, n)]))),
-    )
-
-
 GOPHER_REPETITION_THRESHOLDS = {
     "dup_line_frac": 0.30, "dup_para_frac": 0.30,
     "dup_line_char_frac": 0.20, "dup_para_char_frac": 0.20,

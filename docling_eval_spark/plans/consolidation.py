@@ -28,6 +28,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import literal_frame
+
 EVAL_ROW_SCHEMA = (
     "benchmark string, provider string, experiment string, modality string, "
     "metric string, value double, std double"
@@ -74,7 +76,7 @@ def load_evaluation_dir(spark: SparkSession, root: str,
             rows.append((doc.get("benchmark", "unknown"), provider,
                          experiment, doc.get("modality", "unknown"),
                          metric, value, stds.get(metric)))
-    return spark.createDataFrame(rows, EVAL_ROW_SCHEMA)
+    return literal_frame(spark, rows, EVAL_ROW_SCHEMA)
 
 
 def consolidation_matrices(eval_rows: DataFrame) -> dict[str, "object"]:

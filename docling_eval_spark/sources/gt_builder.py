@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import literal_frame
+
 # annotation element labels -> document-model labels
 # (dpbench_builder.py:174-276 branch-by-branch)
 LABEL_MAP = {
@@ -144,7 +146,7 @@ def read_reference_json(spark: SparkSession, path: str,
     with open(path) as f:
         gt = json.load(f)
     rows = [(name, json.dumps(gt[name])) for name in sorted(gt)]
-    return spark.createDataFrame(rows, "doc_id string, anno string") \
+    return literal_frame(spark, rows, "doc_id string, anno string") \
         .repartition(n_partitions, "doc_id")
 
 

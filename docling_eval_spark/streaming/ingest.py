@@ -28,6 +28,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators.resume import read_committed
+from ..session import literal_frame
+
 PAGES_DDL = ("url string, warc_ts timestamp, html binary, text string, "
              "lang string, doc_id bigint")
 
@@ -122,8 +125,6 @@ def start_dedup_ingest(spark: SparkSession, input_path: str,
     hash column every trigger — the right mode once the output passes
     ~10^9 documents (output-invariant; see operators/dedup.py).
     """
-    from pyspark.errors import AnalysisException
-
     from ..operators.dedup import (
         bloom_dedup_against, dedup_against, minhash_signatures,
         near_dedup_against, release_checkpoint)
@@ -131,16 +132,14 @@ def start_dedup_ingest(spark: SparkSession, input_path: str,
     def _apply(batch_df: DataFrame, _batch_id: int) -> None:
         sess = batch_df.sparkSession
         cols = [key, text_col] if near else [text_col]
-        try:
-            history = sess.read.parquet(output_path).select(*cols)
-        except AnalysisException:  # first batch: no output yet
-            history = batch_df.select(*cols).limit(0)
+        history = read_committed(sess, output_path)
+        history = (batch_df.limit(0) if history is None  # first batch
+                   else history).select(*cols)
         if near:
             hist_sigs = None
             if signatures_path:
-                try:
-                    hist_sigs = sess.read.parquet(signatures_path)
-                except AnalysisException:  # first batch: no store yet
+                hist_sigs = read_committed(sess, signatures_path)
+                if hist_sigs is None:  # first batch: no store yet
                     hist_sigs = minhash_signatures(
                         batch_df.limit(0), text_col, key)
             kept = near_dedup_against(batch_df, history,
@@ -197,8 +196,6 @@ def start_curation_ingest(spark: SparkSession, input_path: str,
     drop-accounting row per micro-batch (batch_id, n_input, n_quality,
     n_committed); replays skip their already-committed stats row by
     batch_id, keeping the sidecar idempotent too."""
-    from pyspark.errors import AnalysisException
-
     from ..operators.dedup import dedup_against
     from ..operators.webtext import (
         c4_page_filter, redact_pii, with_gopher_quality)
@@ -219,10 +216,9 @@ def start_curation_ingest(spark: SparkSession, input_path: str,
         redacted = redact_pii(cleaned, text_col=text_col,
                               out_col=text_col).select(*cols).persist()
         n_quality = redacted.count()
-        try:
-            history = sess.read.parquet(output_path).select(text_col)
-        except AnalysisException:   # first batch: no output yet
-            history = redacted.select(text_col).limit(0)
+        history = read_committed(sess, output_path)
+        history = (redacted.limit(0) if history is None  # first batch
+                   else history).select(text_col)
         kept = dedup_against(redacted, history, text_col=text_col,
                              key=key).persist()
         n_committed = kept.count()  # materialize before the append
@@ -234,14 +230,12 @@ def start_curation_ingest(spark: SparkSession, input_path: str,
         # everything against its own committed copies and record
         # n_committed=0 for the batch.
         if stats_path:
-            try:
-                seen = sess.read.parquet(stats_path) \
-                    .where(F.col("batch_id") == batch_id).count()
-            except AnalysisException:
-                seen = 0
+            stats = read_committed(sess, stats_path)
+            seen = stats is not None and stats.where(
+                F.col("batch_id") == batch_id).count()
             if not seen:            # replayed batch: stats already there
-                sess.createDataFrame(
-                    [(int(batch_id), n_input, n_quality, n_committed)],
+                literal_frame(
+                    sess, [(int(batch_id), n_input, n_quality, n_committed)],
                     "batch_id long, n_input long, n_quality long, "
                     "n_committed long").write.mode("append") \
                     .parquet(stats_path)

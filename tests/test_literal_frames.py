@@ -34,10 +34,15 @@ def test_literal_frame_rejects_a_value_of_the_wrong_type(spark):
         literal_frame(spark, [("not a number",)], "k int").collect()
 
 
-def test_operator_frames_have_no_python_rdd(spark):
+def test_operator_frames_have_no_python_rdd(spark, tmp_path):
+    import json
+    import math
+
     from docling_eval_spark.operators.slicing import range_slice
     from docling_eval_spark.operators.webtext import stratified_hash_sample
+    from docling_eval_spark.plans.consolidation import load_evaluation_dir
     from docling_eval_spark.plans.table_eval import delta_histogram
+    from docling_eval_spark.sources.gt_builder import read_reference_json
 
     docs = spark.range(0, 200).select(
         F.col("id").alias("doc_id"),
@@ -58,3 +63,25 @@ def test_operator_frames_have_no_python_rdd(spark):
     _assert_jvm_only(hist)
     by = {r.delta: r for r in hist.collect()}
     assert by[-1].n_rows == 2 and by[0].n_rows == 2 and by[0].frac_cols == 1.0
+
+    gt = {"b.pdf": {"elements": [{"category": "Table", "page": 1}]},
+          "a.pdf": {"elements": []}}
+    (tmp_path / "reference.json").write_text(json.dumps(gt))
+    ref = read_reference_json(spark, str(tmp_path / "reference.json"))
+    _assert_jvm_only(ref)
+    assert sorted(tuple(r) for r in ref.collect()) == [
+        (k, json.dumps(gt[k])) for k in sorted(gt)]
+
+    # NaN and inf values, and a metric without a std (null), round-trip
+    (tmp_path / "evals" / "exp").mkdir(parents=True)
+    (tmp_path / "evals" / "exp" / "evaluation_dp_layout.json").write_text(
+        json.dumps({"benchmark": "dp", "modality": "layout", "evaluation": {
+            "map": float("inf"), "map_std": float("nan"), "iou": 0.5,
+            "n": 3, "ok": True, "name": "x"}}))
+    evals = load_evaluation_dir(spark, str(tmp_path / "evals"))
+    _assert_jvm_only(evals)
+    got = {r.metric: r for r in evals.collect()}
+    assert set(got) == {"iou", "map", "n"}
+    assert (got["iou"].value, got["iou"].std) == (0.5, None)
+    assert got["map"].value == math.inf and math.isnan(got["map"].std)
+    assert tuple(got["n"])[:5] == ("dp", "spark", "exp", "layout", "n")

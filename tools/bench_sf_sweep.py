@@ -64,12 +64,6 @@ def _amplify(factor: int) -> None:
              .drop("_r"))
     amp_e.repartition(32).write.mode("overwrite") \
         .parquet(f"{AMP}/embeddings.parquet")
-    # the remaining tables are read by some query preambles; symlink
-    for t in ["region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events"]:
-        dst = f"{AMP}/{t}.parquet"
-        if not os.path.exists(dst):
-            os.symlink(f"{SRC}/{t}.parquet", dst)
     spark.stop()
 
 

@@ -12,8 +12,7 @@ import sys
 
 sys.path.insert(0, ".")
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
+TABLES = ["documents", "embeddings"]
 
 
 def norm_val(v):

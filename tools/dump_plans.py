@@ -16,9 +16,7 @@ from contextlib import redirect_stdout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HEADLINE = [
-    "pricing_summary", "top_orders", "region_revenue",
-    "top_parts_per_brand", "event_sessions", "doc_stats",
-    "extract_identity_rate", "ocr_page_cer", "gt_builder_spans",
+    "doc_stats", "extract_identity_rate", "ocr_page_cer", "gt_builder_spans",
     "multi_prov_guard", "doclaynet_v2_kv",
     "duplicate_spans", "ngram_decontaminate", "pack_sequences_docs",
     "stratified_sample_langs", "url_filter_pages", "epoch_shuffle_pos",
@@ -45,14 +43,19 @@ HEADLINE = [
 
 def _lazy_special(spark, sf_dir):
     """Eagerly-materializing operators (they persist + count internally)
-    would show InMemoryTableScan under plain explain; build their LAZY
-    plan trees via materialize=False so PLANS.md evidences the real
-    operator trees (scans, pushdown, joins, partial aggregates). Corpus
-    mAP finishes on the driver; its distributed part is the bins
-    aggregate."""
+    would show InMemoryTableScan under plain explain; compose their LAZY
+    plan trees from the public steps (exact_dedup -> minhash_signatures
+    -> minhash_lsh_candidates -> ngram_jaccard_verify -> left-anti) so
+    PLANS.md evidences the real operator trees (scans, pushdown, joins,
+    partial aggregates). Corpus mAP finishes on the driver; its
+    distributed part is the bins aggregate."""
+    from pyspark.sql import functions as F
+
     from docling_eval_spark.operators.dedup import (
-        minhash_dedup_pairs,
-        near_dedup,
+        exact_dedup,
+        minhash_lsh_candidates,
+        minhash_signatures,
+        ngram_jaccard_verify,
         with_near_dups,
     )
     from docling_eval_spark.operators.layout_agg import binned_pr_counts
@@ -62,22 +65,29 @@ def _lazy_special(spark, sf_dir):
 
     docs = read_documents(spark, sf_dir, ["doc_id", "text"])
     corpus = salted_repartition(with_near_dups(docs), 8, key="doc_id")
+
+    def pairs(df, max_bucket_size):
+        cands = minhash_lsh_candidates(minhash_signatures(df),
+                                       max_bucket_size=max_bucket_size)
+        return ngram_jaccard_verify(df, cands, threshold=0.8)
+
+    reps = exact_dedup(corpus)
+    drop = pairs(reps, 1000).select(F.col("b").alias("doc_id")).distinct()
     return {
-        "minhash_near_dup(lazy)": minhash_dedup_pairs(
-            corpus, materialize=False),
-        "near_dedup_kept(lazy)": near_dedup(
-            corpus, max_bucket_size=1000, materialize=False)
+        "minhash_near_dup(lazy)": pairs(corpus, None),
+        "near_dedup_kept(lazy)": reps.join(drop, on="doc_id", how="left_anti")
         .select("doc_id"),
         "layout_corpus_map(partial aggregate)": binned_pr_counts(
             layout_partials(spark, sf_dir)),
     }
 
 CHECKS = {
-    "pricing_summary": ["PushedFilters: [IsNotNull(l_shipdate)",
-                        "partial_"],
-    "top_orders": ["BroadcastHashJoin", "EqualTo(c_mktsegment,BUILDING)"],
-    "region_revenue": ["BroadcastHashJoin"],
-    "doc_stats": ["ReadSchema: struct<n_chars:bigint>"],
+    "doc_stats": ["ReadSchema: struct<n_chars:bigint>", "partial_"],
+    "gt_builder_spans": ["PushedFilters: [IsNotNull(doc_id), "
+                         "LessThan(doc_id,200)]", "BroadcastHashJoin"],
+    "stratified_sample_langs": ["PushedFilters: [IsNotNull(lang)]",
+                                "BroadcastHashJoin", "partial_"],
+    "layout_corpus_map(partial aggregate)": ["partial_"],
 }
 
 
