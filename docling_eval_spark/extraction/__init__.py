@@ -1,9 +1,10 @@
 """From-scratch HTML main-content extraction.
 
-Pipeline: raw html bytes -> token stream -> DOM block list (html_tokenizer)
--> text/link-density boilerplate classification (boilerplate) -> main text +
-span rows + table subtrees (extract), exposed as an Arrow-batched
-mapInPandas stage.
+Pipeline: html string -> one regex scan folded into block tuples
+(html_tokenizer) -> text/link-density boilerplate classification over
+those tuples (boilerplate) -> main text, plus span rows and table
+subtrees where provenance is asked for (extract), exposed as an
+Arrow-batched mapInPandas stage.
 
 This is the rebuild of the reference's prediction-provider extension point
 (docling_eval/prediction_providers/base_prediction_provider.py:110-126) —

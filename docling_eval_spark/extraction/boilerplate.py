@@ -26,61 +26,67 @@ byte-identical extraction gate (BASELINE.json north_rule).
 
 from __future__ import annotations
 
-from .html_tokenizer import Block, parse_blocks
+from .html_tokenizer import HEADING_TAGS, block_tuples
 
 MAX_LINK_DENSITY = 1.0 / 3.0
 PREV_LINK_DENSITY_GATE = 0.555556
 
 
-def classify_blocks(blocks: list[Block]) -> list[bool]:
-    """True = content, False = boilerplate. Table blocks are never main text."""
-    text_blocks = [b for b in blocks if b.kind == "text"]
-    n = len(text_blocks)
-    labels: list[bool | None] = [None] * n
+def classify_blocks(blocks) -> list[bool]:
+    """True = content, False = boilerplate, one label per block of
+    `block_tuples` (or `parse_blocks`). Table blocks are never main text.
 
-    # pass 1: hard rules (semantic ancestors, link density)
-    for i, b in enumerate(text_blocks):
-        if b.boiler_ancestor and not b.content_ancestor:
-            labels[i] = False
-        elif b.content_ancestor:
+    Word counts and link density are computed only for the text blocks
+    that rule 1 does not already label boilerplate.
+    """
+    labels = [False] * len(blocks)
+    text_pos = []  # positions of the text blocks, for the heading look-ahead
+    # pass 1: hard rules. Survivors are the blocks it does not kill:
+    # (position, text-block index, words, link_density)
+    surv = []
+    for i, b in enumerate(blocks):
+        if b[1] == "table":
+            continue
+        text_pos.append(i)
+        if b[3] and not b[4]:
+            continue
+        n = len(b[0])
+        ld = b[2] / n if n else 0.0
+        if b[4]:
             labels[i] = True
-        elif b.link_density > MAX_LINK_DENSITY:
-            labels[i] = False
+        elif ld > MAX_LINK_DENSITY:
+            continue
+        surv.append((i, len(text_pos) - 1, len(b[0].split()), ld))
 
     # pass 2: density rules over the undecided blocks. Neighbors are the
     # nearest blocks NOT hard-killed in pass 1 — nav/footer/link-list blocks
     # must not poison the density context of the article body (they are
     # structurally separate in the DOM; the flat neighbor rule of the WSDM'10
     # classifier assumes neighbors within the same content flow).
-    survivors = [i for i, lab in enumerate(labels) if lab is not False]
-    for si, i in enumerate(survivors):
-        if labels[i] is not None:
+    last = len(surv) - 1
+    for k, (i, _, words, _) in enumerate(surv):
+        if labels[i]:
             continue
-        b = text_blocks[i]
-        prev = text_blocks[survivors[si - 1]] if si > 0 else Block()
-        nxt = text_blocks[survivors[si + 1]] if si < len(survivors) - 1 else Block()
-        if prev.link_density <= PREV_LINK_DENSITY_GATE:
-            labels[i] = b.words > 16 or nxt.words > 15 or prev.words > 4
+        _, _, pw, pld = surv[k - 1] if k else (0, 0, 0, 0.0)
+        nw = surv[k + 1][2] if k < last else 0
+        if pld <= PREV_LINK_DENSITY_GATE:
+            labels[i] = words > 16 or nw > 15 or pw > 4
         else:
-            labels[i] = b.words > 40 or nxt.words > 17
+            labels[i] = words > 40 or nw > 17
 
-    # heading promotion pass
-    for i, b in enumerate(text_blocks):
-        if b.is_heading and not labels[i] and b.link_density <= MAX_LINK_DENSITY \
-                and not (b.boiler_ancestor and not b.content_ancestor):
-            for j in (i + 1, i + 2):
-                if j < n and labels[j]:
-                    labels[i] = True
-                    break
-
-    # map back onto the full block list (tables -> False for main text)
-    text_labels = iter(labels)
-    return [b.kind == "text" and bool(next(text_labels)) for b in blocks]
+    # heading promotion: only density-rule blocks can be headings labelled
+    # boilerplate with link density <= 1/3; the look-ahead reads the next
+    # two text blocks' labels as pass 2 left them
+    for i, t, _, _ in surv:
+        if not labels[i] and blocks[i][1] in HEADING_TAGS:
+            labels[i] = any(labels[text_pos[j]]
+                            for j in (t + 1, t + 2) if j < len(text_pos))
+    return labels
 
 
-def _main_text(blocks: list[Block], labels: list[bool]) -> dict:
-    content = [b.text for b, keep in zip(blocks, labels) if keep]
-    n_text = sum(1 for b in blocks if b.kind == "text")
+def _main_text(blocks: list[tuple], labels: list[bool]) -> dict:
+    content = [b[0] for b, keep in zip(blocks, labels) if keep]
+    n_text = len(blocks) - [b[1] for b in blocks].count("table")
     return {"text": "\n\n".join(content), "n_blocks": len(blocks),
             "n_content": len(content), "n_boiler": n_text - len(content)}
 
@@ -93,7 +99,7 @@ def main_text(html: str) -> dict:
     contract shared with the corpus generator — lossless for texts whose
     paragraphs were split on the same separator).
     """
-    blocks = parse_blocks(html)
+    blocks = block_tuples(html)
     return _main_text(blocks, classify_blocks(blocks))
 
 
@@ -103,14 +109,19 @@ def extract_main_text(html: str) -> dict:
     is_content, kind, n_chars, words, link_density) — the rebuild analog
     of the reference's span rows.
     """
-    blocks = parse_blocks(html)
+    blocks = block_tuples(html)
     labels = classify_blocks(blocks)
     return {
         **_main_text(blocks, labels),
-        "tables": [b.table_html for b in blocks if b.kind == "table"],
+        "tables": [b[0] for b in blocks if b[1] == "table"],
         "spans": [
-            dict(block_idx=i, tag=b.tag, is_content=keep, kind=b.kind,
-                 n_chars=b.n_chars, words=b.words, link_density=b.link_density)
-            for i, (b, keep) in enumerate(zip(blocks, labels))
+            {"block_idx": i, "tag": tag, "is_content": keep, "kind": "text",
+             "n_chars": len(text), "words": len(text.split()),
+             "link_density": anchor / len(text) if text else 0.0}
+            if tag != "table" else
+            {"block_idx": i, "tag": tag, "is_content": False, "kind": "table",
+             "n_chars": 0, "words": 0, "link_density": 0.0}
+            for i, ((text, tag, anchor, _, _), keep)
+            in enumerate(zip(blocks, labels))
         ],
     }

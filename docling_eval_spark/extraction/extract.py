@@ -8,9 +8,11 @@ mapInPandas stage:
   - GT and prediction stay co-located in the same row (the reference's
     implicit join J1, SURVEY.md §2.3) — no shuffle join anywhere.
   - No per-row Python: one Python invocation per Arrow batch; the
-    tokenizer/classifier are pure-python but operate on whole documents,
-    and batches are kept small (session.py maxRecordsPerBatch) because
-    `html` is MB-scale.
+    tokenizer/classifier are pure-python but operate on whole documents.
+    `html` is MB-scale, so the repo's session (session.py DEFAULT_CONFS)
+    caps Arrow batches small; jobs/extract_job.py does not build its
+    session through it yet, so the job runs at Spark's default
+    10,000-row batches.
   - Skew: callers salt-repartition first (operators/skew.py) because
     giant pages cluster by crawl host (north rule).
 

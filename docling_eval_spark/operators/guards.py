@@ -25,15 +25,3 @@ def drop_multi_provenance_docs(docs: DataFrame,
     ok = F.forall(
         F.col(items_col), lambda it: F.size(it["prov"]) == F.lit(1))
     return docs.where(ok)
-
-
-def multi_provenance_rejections(docs: DataFrame,
-                                items_col: str = "items") -> DataFrame:
-    """Companion accounting frame: (doc_id rows that WOULD be skipped,
-    max_prov) — the reference logs each skip (readingorder_evaluator.py
-    :179-183); at scale the log is a frame, not driver-side text."""
-    max_prov = F.array_max(
-        F.transform(F.col(items_col), lambda it: F.size(it["prov"])))
-    return docs.withColumn("max_prov", max_prov).where(
-        ~F.forall(F.col(items_col),
-                  lambda it: F.size(it["prov"]) == F.lit(1)))

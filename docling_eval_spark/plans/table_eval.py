@@ -49,7 +49,7 @@ def _teds_batches(it: Iterator[pd.DataFrame], html_source,
     """`html_source(batch)` returns the batch's urls and html strings, as
     for plans/pipeline.py `_extract_and_score`."""
     from ..corpus.html_synth import gt_table_html
-    from ..extraction.html_tokenizer import parse_blocks
+    from ..extraction.html_tokenizer import block_tuples
     from ..functions.teds import (
         html_table_to_grid_cells,
         is_complex_table,
@@ -64,8 +64,8 @@ def _teds_batches(it: Iterator[pd.DataFrame], html_source,
             gt = gt_table_html(int(doc_id))
             # the page's first captured <table> subtree, as extraction
             # reports it; no text classification or span rows are needed
-            pred = next((b.table_html for b in parse_blocks(html)
-                         if b.kind == "table"), "")
+            pred = next((t for t, tag, *_ in block_tuples(html)
+                         if tag == "table"), "")
             if perturb:
                 pred = perturb_table_html(pred, int(doc_id) % 4)
             gt_cells = html_table_to_grid_cells(gt)

@@ -59,11 +59,6 @@ ANNOTATION_SCHEMA = (
     "content:struct<text:string,html:string>>>>"
 )
 
-SPAN_SCHEMA_COLS = [
-    "doc_id", "elem_idx", "label", "l", "t", "r", "b", "text",
-    "charspan_end", "n_rows", "n_cols",
-]
-
 
 def _table_shape_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     from ..functions.teds import html_table_to_grid_cells, table_shape

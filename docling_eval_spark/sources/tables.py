@@ -18,8 +18,6 @@ from pyspark.sql import functions as F
 
 from ..operators.skew import salted_repartition
 
-PAGES_SCHEMA_DDL = ("url string, warc_ts timestamp, html binary, "
-                    "text string, lang string")
 DOCUMENTS_SCHEMA_DDL = ("doc_id bigint, text string, lang string, "
                         "source string, n_chars bigint")
 

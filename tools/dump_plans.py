@@ -48,7 +48,9 @@ def _lazy_special(spark, sf_dir):
     -> minhash_lsh_candidates -> ngram_jaccard_verify -> left-anti) so
     PLANS.md evidences the real operator trees (scans, pushdown, joins,
     partial aggregates). Corpus mAP finishes on the driver; its
-    distributed part is the bins aggregate."""
+    distributed part is the bins aggregate. near_dedup's `reps` are
+    explained apart from its pairs + left-anti step, or their subtree is
+    inlined at each consumer."""
     from pyspark.sql import functions as F
 
     from docling_eval_spark.operators.dedup import (
@@ -72,11 +74,14 @@ def _lazy_special(spark, sf_dir):
         return ngram_jaccard_verify(df, cands, threshold=0.8)
 
     reps = exact_dedup(corpus)
-    drop = pairs(reps, 1000).select(F.col("b").alias("doc_id")).distinct()
+    # an RDD leaf, so the optimizer cannot fold it away as empty
+    leaf = spark.createDataFrame(spark.sparkContext.emptyRDD(), reps.schema)
+    drop = pairs(leaf, 1000).select(F.col("b").alias("doc_id")).distinct()
     return {
         "minhash_near_dup(lazy)": pairs(corpus, None),
-        "near_dedup_kept(lazy)": reps.join(drop, on="doc_id", how="left_anti")
-        .select("doc_id"),
+        "near_dedup_kept(lazy): reps = exact_dedup": reps,
+        "near_dedup_kept(lazy): pairs + left-anti over reps (a leaf)":
+            leaf.join(drop, on="doc_id", how="left_anti").select("doc_id"),
         "layout_corpus_map(partial aggregate)": binned_pr_counts(
             layout_partials(spark, sf_dir)),
     }
