@@ -358,50 +358,13 @@ def _q_omnidoc_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("doc_id", "idx")
 
 
-def _q_ppm_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image decode path (F17): deterministic P6 payloads synthesized
-    AND decoded inside one Arrow stage with the from-scratch netpbm
-    parser (operators/multimodal.py decode_ppm); per-channel means of
-    the gradient/constant pixel pattern are closed-form."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id").where(F.col("doc_id") < 500)
-        .repartition(16, F.xxhash64("doc_id", F.lit(0x5EED)))
-    )
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from docling_eval_spark.operators.multimodal import decode_ppm, synth_ppm
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 16 + d % 16, 8 + d % 8
-                arr = decode_ppm(synth_ppm(d, w, h))
-                means = arr.astype("float64").mean(axis=(0, 1))
-                rows.append((d, arr.shape[1], arr.shape[0],
-                             round(float(means[0]), 6),
-                             round(float(means[1]), 6),
-                             round(float(means[2]), 6)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "mean_r", "mean_g", "mean_b"])
-
-    return docs.mapInPandas(
-        gen, schema="doc_id bigint, width int, height int, mean_r double, "
-                    "mean_g double, mean_b double").orderBy("doc_id")
-
-
 def _q_png_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL PNG decode path (F17, round 3): deterministic PNG payloads —
-    pixel twins of the PPM fixture, scanline filters cycling 0..4 —
-    synthesized AND decoded inside one Arrow stage with the from-scratch
-    zlib+spec codec (functions/png_codec.py). Same closed-form channel
-    means as the PPM oracle, so a decoder bug in ANY filter path flips
-    the hash."""
+    """REAL PNG decode path (F17): deterministic PNG payloads (synth_png:
+    R x-gradient, G/B doc-derived constants, scanline filters cycling
+    0..4) synthesized AND decoded inside one Arrow stage with the
+    from-scratch zlib+spec codec (functions/png_codec.py). The oracle
+    recomputes the closed-form channel means, so a decoder bug in ANY
+    filter path flips the hash."""
     from typing import Iterator
 
     import pandas as pd
@@ -1399,82 +1362,6 @@ def _q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_jpeg_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL JPEG decode path (F17, the last decode-tier gap): flat-block
-    fixtures with even level shifts round-trip the from-scratch T.81
-    baseline codec EXACTLY (only DC coefficients, Annex-K DC quantum 16
-    divides them — functions/jpeg_codec.py docstring), so the oracle
-    recomputes decoded dimensions and mean luma closed-form from the
-    block-value formula. Any Huffman/DCT/dequant bug flips the hash."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id").where(F.col("doc_id") < 500)
-        .repartition(16, F.xxhash64("doc_id", F.lit(0x1A6)))
-    )
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from docling_eval_spark.functions.jpeg_codec import (
-            decode_jpeg, synth_jpeg)
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 8 * (2 + d % 4), 8 * (1 + d % 3)
-                arr = decode_jpeg(synth_jpeg(d, w, h))
-                rows.append((d, arr.shape[1], arr.shape[0],
-                             round(float(arr.astype("float64").mean()), 6)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "mean_luma"])
-
-    return docs.mapInPandas(
-        gen, schema="doc_id bigint, width int, height int, "
-                    "mean_luma double").orderBy("doc_id")
-
-
-def _q_audio_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decode path (the WAV analog of jpeg_decode_features):
-    synth_wav emits a 16-bit PCM square wave whose features are
-    closed-form (|sample| == A everywhere so rms == peak == A exactly;
-    duration == n/rate — operators/multimodal.py synth_wav docstring),
-    so the oracle recomputes every column from the construction.
-    doc_id % 11 == 0 ships raw text bytes instead — the honest
-    undecodable class must yield all-null features, never synthesized
-    numbers. Any RIFF chunk-walk / dtype / channel-shape bug flips the
-    hash."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from docling_eval_spark.operators.multimodal import (
-        decode_audio_features)
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text").where(F.col("doc_id") < 500)
-        .repartition(16, F.xxhash64("doc_id", F.lit(0xA0D10)))
-    )
-
-    def mk(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from docling_eval_spark.operators.multimodal import synth_wav
-
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = int(doc_id)
-                payload = (str(text).encode("utf-8") if d % 11 == 0
-                           else synth_wav(d))
-                rows.append((d, payload))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    payloads = docs.mapInPandas(mk, schema="doc_id bigint, payload binary")
-    return decode_audio_features(payloads).orderBy("doc_id")
-
-
 _ROBOTS_TXT_STAR = (
     "# synthetic fixture\n"
     "User-agent: *\n"
@@ -1704,11 +1591,11 @@ def _q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_payload_mime_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decode-tier accounting over a MIXED payload corpus (doc_id%7==0
-    gets JPEG magic, %7==1 P6, the rest PNG): every real image mime
-    routes to a from-scratch builtin decoder (PPM/numpy, png_codec,
-    jpeg_codec), never silently to the generic fake."""
-    from docling_eval_spark.operators.multimodal import decode_tier_accounting
+    """Native mime sniff over a MIXED payload corpus (doc_id%7==0 gets
+    JPEG magic, %7==1 P6, the rest PNG): PNG and JPEG magic name their
+    mime, and the P6 class lands in the application/octet-stream
+    fallback."""
+    from docling_eval_spark.operators.multimodal import with_payload_metadata
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text")
@@ -1719,8 +1606,8 @@ def _q_payload_mime_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads = docs.select(
         "doc_id", F.concat(prefix, F.encode("text", "utf-8")).alias("payload"))
     return (
-        decode_tier_accounting(payloads)
-        .groupBy("mime", "decode_tier")
+        with_payload_metadata(payloads)
+        .groupBy(F.col("payload_meta.mime").alias("mime"))
         .agg(F.count("*").alias("n_payloads"))
         .orderBy("mime")
     )
@@ -2025,51 +1912,6 @@ def _q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5("html").alias("body_md5"),
             F.length("html").cast("bigint").alias("n_bytes"))
         .orderBy("doc_id")
-    )
-
-
-def _q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UDTF-shaped frame sampling fan-out: one row per sampled chunk; the
-    oracle recomputes the fan-out count from byte lengths."""
-    from docling_eval_spark.operators.multimodal import sample_frames
-
-    frames = sample_frames(_payloads(spark, sf_dir), chunk=1024, every_n=4)
-    return (
-        frames.groupBy("doc_id")
-        .agg(F.count("*").alias("n_frames"), F.sum("n_bytes").alias("sampled_bytes"))
-        .orderBy("doc_id")
-    )
-
-
-def _q_video_container_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Container-sniff honesty boundary: a mixed fixture (MP4-, MKV-,
-    WebM-shaped headers and raw bytes, keyed by doc_id % 4) must count
-    real video containers as a distinct undecodable class (one marker
-    row, zero synthesized frames) while raw payloads keep the stub
-    chunk fan-out; the oracle re-derives both from the construction."""
-    from docling_eval_spark.operators.multimodal import sample_frames
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
-        .select("doc_id", "text")
-    m = (F.col("doc_id") % 4).cast("int")
-    body = F.encode("text", "utf-8")
-    payload = (
-        F.when(m == 0, F.concat(
-            F.lit(b"\x00\x00\x00\x18ftypisom"), body))
-        .when(m == 1, F.concat(
-            F.lit(b"\x1aE\xdf\xa3"),
-            F.lit(b"\x42\x82\x88matroska"), body))
-        .when(m == 2, F.concat(
-            F.lit(b"\x1aE\xdf\xa3"), F.lit(b"\x42\x82\x84webm"), body))
-        .otherwise(F.concat(F.lit(b"RAWV"), body)))
-    fixture = docs.select("doc_id", payload.alias("payload"))
-    frames = sample_frames(fixture, chunk=1024, every_n=4)
-    return (
-        frames.groupBy(
-            F.coalesce("container_mime", F.lit("raw")).alias("container"))
-        .agg(F.countDistinct("doc_id").alias("n_docs"),
-             F.count_if(F.col("frame_idx") >= 0).alias("n_frames"))
-        .orderBy("container")
     )
 
 
@@ -2792,13 +2634,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "range_slice": _q_range_slice,
         "webtext_unigram_nll": _q_webtext_unigram_nll,
         "perplexity_buckets": _q_perplexity_buckets,
-        "multimodal_frames": _q_multimodal_frames,
-        "jpeg_decode_features": _q_jpeg_decode_features,
         # --- round-5 additions, never driver-verified ---
         "lang_id_classifier": _q_lang_id_classifier,
-        "video_container_counts": _q_video_container_counts,
         "perplexity_by_lang": _q_perplexity_by_lang,
-        "audio_decode_features": _q_audio_decode_features,
         "robots_txt_verdicts": _q_robots_txt_verdicts,
         "cdx_fetch_manifest": _q_cdx_fetch_manifest,
         "cdx_ranged_fetch": _q_cdx_ranged_fetch,
@@ -2864,7 +2702,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doctags_parse": _q_doctags_parse,
         "omnidoc_spans": _q_omnidoc_spans,
         "pixparse_page_cells": _q_pixparse_page_cells,
-        "ppm_decode_features": _q_ppm_decode_features,
         "docvqa_kv_cells": _q_docvqa_kv_cells,
         "docvqa_anls": _q_docvqa_anls,
         "doclaynet_layout_spans": _q_doclaynet_layout_spans,
@@ -3053,16 +2890,6 @@ def oracle_sql() -> dict[str, str]:
             "'&lt;omitted text for ' || cat || '&gt;')) AS int) "
             "AS charspan_end "
             "FROM c WHERE li != 11 ORDER BY doc_id, idx"
-        ),
-        "ppm_decode_features": (
-            "WITH d AS (SELECT doc_id, 16 + doc_id % 16 AS w, "
-            "8 + doc_id % 8 AS h FROM documents WHERE doc_id < 500) "
-            "SELECT doc_id, cast(w AS int) AS width, cast(h AS int) AS height, "
-            "round(list_sum(list_transform(range(0, w), "
-            "  x -> floor(255.0 * x / (w - 1)))) / w, 6) AS mean_r, "
-            "round(cast((doc_id + 85) % 256 AS double), 6) AS mean_g, "
-            "round(cast((doc_id + 170) % 256 AS double), 6) AS mean_b "
-            "FROM d ORDER BY doc_id"
         ),
         "textract_spans": (
             "WITH d AS (SELECT doc_id, cast(100 + doc_id % 7 AS double) AS w, "
@@ -3699,40 +3526,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM d JOIN layout l ON l.m = d.m "
             "ORDER BY doc_id, row, col"
         ),
-        "jpeg_decode_features": (
-            "WITH d AS (SELECT doc_id, 2 + doc_id % 4 AS wb, "
-            "1 + doc_id % 3 AS hb FROM documents WHERE doc_id < 500) "
-            "SELECT doc_id, cast(wb * 8 AS int) AS width, "
-            "cast(hb * 8 AS int) AS height, "
-            "round(list_sum(list_transform(range(0, wb * hb), i -> "
-            "128 + 2 * (((doc_id + 3 * (i % wb) + 7 * (i // wb)) % 49) "
-            "- 24))) / cast(wb * hb AS double), 6) AS mean_luma "
-            "FROM d ORDER BY doc_id"
-        ),
-        # synth_wav construction (operators/multimodal.py): square wave
-        # amp=1000+(d%7)*1000 over n=400+(d%5)*80 frames at 8 kHz mono,
-        # so rms == peak == amp exactly; d%11==0 ships non-RIFF bytes
-        # and must decode to all nulls.
-        "audio_decode_features": (
-            "WITH d AS (SELECT doc_id, doc_id % 11 = 0 AS und, "
-            "1000 + (doc_id % 7) * 1000 AS amp, "
-            "400 + (doc_id % 5) * 80 AS n "
-            "FROM documents WHERE doc_id < 500) "
-            "SELECT doc_id, "
-            "cast(CASE WHEN und THEN NULL ELSE 8000 END AS int) "
-            "AS sample_rate, "
-            "cast(CASE WHEN und THEN NULL ELSE 1 END AS int) "
-            "AS n_channels, "
-            "cast(CASE WHEN und THEN NULL ELSE n END AS bigint) "
-            "AS n_frames, "
-            "CASE WHEN und THEN NULL ELSE round(n / 8000.0, 6) END "
-            "AS duration_s, "
-            "CASE WHEN und THEN NULL ELSE "
-            "round(cast(amp AS double), 6) END AS rms, "
-            "cast(CASE WHEN und THEN NULL ELSE amp END AS int) "
-            "AS peak_abs "
-            "FROM d ORDER BY doc_id"
-        ),
         # robots fixture (see _q_robots_txt_verdicts): k = (doc_id//5)%3
         # selects the robots.txt shape (0 none / 1 star-group rules /
         # 2 exact ccbot Disallow-all), m = doc_id%5 the path; verdicts
@@ -4214,31 +4007,10 @@ def oracle_sql() -> dict[str, str]:
         ),
         "payload_mime_counts": (
             "WITH p AS (SELECT CASE WHEN doc_id % 7 = 0 THEN 'image/jpeg' "
-            "WHEN doc_id % 7 = 1 THEN 'image/x-portable-pixmap' "
+            "WHEN doc_id % 7 = 1 THEN 'application/octet-stream' "
             "ELSE 'image/png' END AS mime FROM documents) "
-            "SELECT mime, 'builtin' AS decode_tier, "
-            "count(*) AS n_payloads FROM p GROUP BY mime "
+            "SELECT mime, count(*) AS n_payloads FROM p GROUP BY mime "
             "ORDER BY mime"
-        ),
-        "video_container_counts": (
-            "WITH d AS (SELECT doc_id, cast(doc_id % 4 AS int) AS m, "
-            "strlen(text) + 4 AS len FROM documents) "
-            "SELECT ['video/mp4', 'video/x-matroska', 'video/webm', "
-            "'raw'][m + 1] AS container, "
-            "count(*) AS n_docs, "
-            "cast(sum(CASE WHEN m = 3 THEN "
-            "ceil(ceil(len / 1024.0) / 4.0) ELSE 0 END) AS bigint) "
-            "AS n_frames "
-            "FROM d GROUP BY m ORDER BY container"
-        ),
-        "multimodal_frames": (
-            "WITH p AS (SELECT doc_id, strlen(text) + 4 AS len, "
-            "cast(ceil((strlen(text) + 4) / 1024.0) AS int) AS nch "
-            "FROM documents) "
-            "SELECT doc_id, cast(ceil(nch / 4.0) AS bigint) AS n_frames, "
-            "cast(list_sum(list_transform(range(0, nch, 4), "
-            "  i -> least(1024, len - i * 1024))) AS bigint) AS sampled_bytes "
-            "FROM p ORDER BY doc_id"
         ),
         "quality_filter": (
             "WITH f AS (SELECT lang, "

@@ -62,8 +62,6 @@ GROUPS: dict[str, list[str]] = {
         "warc_roundtrip", "url_dedup_canonical", "bpe_token_counts",
         "classifier_quality_sample", "train_split_assign",
         "gopher_repetition_full",
-        # round-5: vectorized JPEG entropy decode (verdict #9 datapoint)
-        "jpeg_decode_features",
         # round-5 index-first / LM-scoring tier
         "cdx_ranged_fetch", "stupid_backoff_nll",
     ],

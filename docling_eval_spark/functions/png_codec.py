@@ -1,19 +1,18 @@
 """From-scratch PNG codec over the public W3C/RFC-2083 spec — no Pillow.
 
-Closes the F17 decode tier for PNG in this sandbox: the reference carries
-page/picture images as PIL objects inside dataset rows
-(docling_eval/datamodels/dataset_record.py:38-43, utils/utils.py:271-312);
-here decode is a pure-function primitive driven from Arrow batches over
-`binary` columns (operators/multimodal.decode_image_features).
+The reference carries page/picture images as PIL objects inside dataset
+rows (docling_eval/datamodels/dataset_record.py:38-43, utils/utils.py:
+271-312); here decode is a pure-function primitive over `binary` payloads
+(plans/visualize.py decodes page images with it).
 
 Supported: 8-bit depth, color types 0 (gray), 2 (RGB), 4 (gray+alpha),
 6 (RGBA); scanline filters 0-4 (None/Sub/Up/Average/Paeth); critical
 chunks with CRC verification; ancillary chunks skipped. Rejected with
-ValueError (callers fall through to Pillow or the deterministic fake):
-16-bit depth, palette (type 3), Adam7 interlace.
+ValueError: 16-bit depth, palette (type 3), Adam7 interlace, and image
+data that inflates to more or fewer bytes than IHDR declares.
 
 The encoder exists so tests and oracle-gated queries can synthesize
-deterministic PNGs exercising every filter path; JPEG stays Pillow-gated.
+deterministic PNGs exercising every filter path.
 """
 
 from __future__ import annotations
@@ -115,8 +114,17 @@ def decode_png(payload: bytes) -> np.ndarray:
             idat.append(data)
     if width is None or not idat:
         raise ValueError("missing IHDR/IDAT")
-    raw = zlib.decompress(b"".join(idat))
-    return _unfilter(raw, width, height, _CHANNELS[color_type])
+    ch = _CHANNELS[color_type]
+    expected = (width * ch + 1) * height
+    # inflate at most one byte past the declared size, so a small IDAT
+    # that expands far beyond its IHDR is refused without being held
+    inflater = zlib.decompressobj()
+    raw = inflater.decompress(b"".join(idat), expected + 1)
+    if len(raw) > expected or inflater.unconsumed_tail:
+        raise ValueError("decompressed size exceeds IHDR")
+    if not inflater.eof:
+        raise ValueError("truncated image data")
+    return _unfilter(raw, width, height, ch)
 
 
 def _filter_line(f: int, lanes: np.ndarray, prev: np.ndarray) -> np.ndarray:
@@ -180,10 +188,10 @@ def encode_png(arr: np.ndarray, filters: "list[int] | None" = None) -> bytes:
 
 
 def synth_png(doc_id: int, width: int, height: int) -> bytes:
-    """Deterministic PNG twin of multimodal.synth_ppm: identical pixel
-    pattern (R x-gradient, G/B doc-derived constants), scanline filters
-    cycling 0..4 so the decode exercises every unfilter path while the
-    decoded statistics keep the same closed form as the PPM oracle."""
+    """Deterministic RGB PNG with closed-form pixels: R is the x-gradient
+    floor(255x/(w-1)), G and B are the doc-derived constants
+    (doc_id+85)%256 and (doc_id+170)%256. Scanline filters cycle 0..4,
+    so decoding it exercises every unfilter path."""
     x = np.arange(width, dtype=np.int64)
     r = ((255 * x) // max(width - 1, 1)).astype(np.uint8)
     arr = np.empty((height, width, 3), dtype=np.uint8)

@@ -1,2 +1,2 @@
 """Spark-level operators: skew handling, stats rollup, lineage, resume,
-dedup, similarity search, text analysis, multimodal plumbing."""
+dedup, similarity search, text analysis, binary payload metadata."""

@@ -1,246 +1,36 @@
-"""Multimodal columns: opaque binary payloads + typed metadata + decode UDFs.
+"""Binary payload columns: opaque bytes + typed metadata.
 
 The reference carries page/picture images as PIL sequences inside dataset
 rows (docling_eval/datamodels/dataset_record.py:38-43, utils/utils.py:
-271-312 base64 encode/decode + crop). At 100 TB the Spark-native shape is:
-
-  - payload: `binary` column (image/audio/video bytes) — never parsed by
-    the JVM, pruned away unless a stage asks for it;
-  - metadata: a typed struct column (mime, n_bytes, sha) computed with
-    NATIVE expressions — scan-speed, codegen-friendly;
-  - decode / feature-extract / frame-sample: Arrow-batched `mapInPandas`
-    stages with explicit output schemas and SMALL record batches (session
-    caps maxRecordsPerBatch because payloads are MB-scale).
-
-Decode paths, honestly tiered:
-  - PPM (P6): REAL from-scratch decode (header parse + numpy pixel
-    array + nearest-neighbor resize) — fully exercised and oracle-gated
-    in this sandbox, no codec libs needed;
-  - PNG/JPEG: REAL from-scratch codecs (functions/png_codec.py,
-    functions/jpeg_codec.py); exotic JPEG profiles degrade to Pillow
-    when importable, else honest nulls;
-  - WAV (RIFF canonical PCM16): REAL from-scratch decode (struct chunk
-    walk + numpy samples) feeding duration/RMS/peak features;
-    compressed audio yields nulls — the honest undecodable class;
-  - MP4/MKV/WebM video: magic-byte container sniff marks real video as
-    a distinct undecodable class (no synthesized frames);
-  - anything else: a clearly-marked DETERMINISTIC FAKE (features derived
-    from payload bytes) so the Spark-side plumbing — schemas, batch
-    shapes, partitioning, UDTF-style row fan-out — stays testable.
+271-312 base64 encode/decode + crop) and branches PDF against image by
+mime. Here the payload is a `binary` column that the JVM never parses,
+and its metadata (mime, n_bytes, sha256) is a typed struct computed with
+native expressions only. PNG pixels decode with functions/png_codec.py.
 """
 
 from __future__ import annotations
 
-import hashlib
-import struct
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# magic-byte prefixes -> mime (native when/otherwise dispatch, SURVEY P8).
-# RIFF is a container prefix, not a format: _mime_expr sub-dispatches it
-# on the form-type field at bytes 9-12 (WAVE / AVI / WEBP).
+# magic-byte prefixes -> mime (native when/otherwise dispatch, SURVEY P8)
 _MAGIC = [
     (b"\x89PNG", "image/png"),
     (b"\xff\xd8\xff", "image/jpeg"),
-    (b"P6", "image/x-portable-pixmap"),
-    (b"\x1aE\xdf\xa3", "video/webm"),
-]
-
-# RIFF form type (bytes 9-12) -> mime
-_RIFF_FORMS = [
-    (b"WAVE", "audio/wav"),
-    (b"AVI ", "video/x-msvideo"),
-    (b"WEBP", "image/webp"),
 ]
 
 
-def _mime_expr(p):
-    """Native magic-byte mime dispatch shared by with_payload_metadata
-    and decode_tier_accounting: prefix table + RIFF form-type
-    sub-dispatch, all JVM when/otherwise — no Python stage."""
-    riff = F.lit("application/octet-stream")
-    for form, m in reversed(_RIFF_FORMS):
-        riff = F.when(
-            F.hex(F.substring(p, 9, 4)) == F.lit(form.hex().upper()),
-            F.lit(m)).otherwise(riff)
-    mime = F.when(
-        F.hex(F.substring(p, 1, 4)) == F.lit(b"RIFF".hex().upper()), riff
-    ).otherwise(F.lit("application/octet-stream"))
+def with_payload_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+    """Typed metadata struct from native expressions only (no Python):
+    the mime comes from the magic-byte table, anything unrecognised is
+    application/octet-stream."""
+    p = F.col(payload_col)
+    mime = F.lit("application/octet-stream")
     for prefix, m in reversed(_MAGIC):
         mime = F.when(
             F.hex(F.substring(p, 1, len(prefix)))
             == F.lit(prefix.hex().upper()),
             F.lit(m)).otherwise(mime)
-    return mime
-
-
-# -- real decode path: PPM (P6) ----------------------------------------------
-# The netpbm P6 format is fully decodable with numpy alone; PNG and
-# baseline JPEG have their own from-scratch codecs (functions/png_codec.py,
-# functions/jpeg_codec.py) — every image mime decodes REAL in this sandbox,
-# with PIL as the fallback tier for exotic profiles.
-
-
-def synth_ppm(doc_id: int, width: int, height: int) -> bytes:
-    """Deterministic P6 image: R is an x-gradient floor(255x/(w-1)),
-    G/B are doc-derived constants — chosen so every decoded statistic
-    has a closed form."""
-    x = np.arange(width, dtype=np.int64)
-    r = ((255 * x) // max(width - 1, 1)).astype(np.uint8)
-    arr = np.empty((height, width, 3), dtype=np.uint8)
-    arr[:, :, 0] = r[None, :]
-    arr[:, :, 1] = (doc_id + 85) % 256
-    arr[:, :, 2] = (doc_id + 170) % 256
-    return f"P6\n{width} {height}\n255\n".encode() + arr.tobytes()
-
-
-def decode_ppm(payload: bytes) -> "np.ndarray":
-    """From-scratch P6 parser (public netpbm spec): whitespace-separated
-    header tokens (comment lines skipped), maxval <= 255, then raw RGB
-    bytes -> (h, w, 3) uint8 array."""
-    if not payload.startswith(b"P6"):
-        raise ValueError("not a P6 ppm")
-    tokens: list[bytes] = []
-    i = 2
-    while len(tokens) < 3:
-        while i < len(payload) and payload[i:i + 1].isspace():
-            i += 1
-        if payload[i:i + 1] == b"#":  # comment to end of line
-            while i < len(payload) and payload[i:i + 1] != b"\n":
-                i += 1
-            continue
-        j = i
-        while j < len(payload) and not payload[j:j + 1].isspace():
-            j += 1
-        tokens.append(payload[i:j])
-        i = j
-    i += 1  # single whitespace after maxval
-    w, h, maxval = (int(t) for t in tokens)
-    if maxval > 255:
-        raise ValueError("16-bit ppm unsupported")
-    data = np.frombuffer(payload, dtype=np.uint8, count=w * h * 3, offset=i)
-    arr = data.reshape(h, w, 3)
-    if maxval < 255:
-        # netpbm semantics: sample/maxval IS the intensity — rescale to
-        # the 0..255 range (floor; maxval -> 255 exactly)
-        arr = (arr.astype(np.uint32) * 255 // maxval).astype(np.uint8)
-    return arr
-
-
-# -- real decode path: WAV (RIFF PCM) ----------------------------------------
-# The canonical WAVE container is fully decodable from the public RIFF
-# spec with struct+numpy alone — the audio analog of the PPM tier, so
-# audio payloads get REAL feature extraction, not the deterministic
-# fake. Compressed audio (MP3/AAC/FLAC) stays an honest undecodable
-# class, exactly like progressive JPEG in the image tier.
-
-
-def synth_wav(doc_id: int, n_samples: int | None = None,
-              rate: int = 8000) -> bytes:
-    """Deterministic 16-bit PCM mono square wave with CLOSED-FORM
-    features (the synth_ppm of the audio tier): |sample| == A
-    everywhere, so rms == peak == A exactly in float64; duration is
-    n/rate. A and the half-period derive from doc_id."""
-    amp = 1000 + (doc_id % 7) * 1000
-    half = (doc_id % 10) + 2
-    n = n_samples if n_samples is not None else 400 + (doc_id % 5) * 80
-    idx = np.arange(n)
-    samples = np.where((idx // half) % 2 == 0, amp, -amp).astype("<i2")
-    data = samples.tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
-    return (b"RIFF"
-            + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data))
-            + b"WAVE"
-            + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data)
-
-
-def decode_wav(payload: bytes) -> tuple[int, int, "np.ndarray"]:
-    """RIFF/WAVE bytes -> (sample_rate, n_channels, samples[int16,
-    frames x channels]). Canonical-PCM (format 1, 16-bit) only;
-    anything else raises, so compressed audio lands in the undecodable
-    accounting class rather than fake features. Chunk walk per the
-    RIFF spec: unknown chunks (LIST, fact, ...) are skipped by their
-    declared size, word-aligned."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    pos = 12
-    fmt = None
-    data = None
-    while pos + 8 <= len(payload):
-        cid = payload[pos:pos + 4]
-        size = struct.unpack("<I", payload[pos + 4:pos + 8])[0]
-        body = payload[pos + 8:pos + 8 + size]
-        if cid == b"fmt ":
-            fmt = struct.unpack("<HHIIHH", body[:16])
-        elif cid == b"data":
-            data = body
-        pos += 8 + size + (size & 1)        # chunks are word-aligned
-    if fmt is None or data is None:
-        raise ValueError("missing fmt/data chunk")
-    audio_format, n_channels, rate, _, _, bits = fmt
-    if audio_format != 1 or bits != 16:
-        raise ValueError(f"unsupported WAV: format={audio_format} "
-                         f"bits={bits} (canonical PCM16 only)")
-    samples = np.frombuffer(
-        data[:len(data) - len(data) % (2 * n_channels)], dtype="<i2")
-    return rate, n_channels, samples.reshape(-1, n_channels)
-
-
-AUDIO_FEATURES_SCHEMA = (
-    "doc_id bigint, sample_rate int, n_channels int, n_frames bigint, "
-    "duration_s double, rms double, peak_abs int"
-)
-
-
-def decode_audio_features(df: DataFrame, payload_col: str = "payload",
-                          key: str = "doc_id") -> DataFrame:
-    """Arrow-batched REAL audio decode: duration / RMS / peak from the
-    PCM samples (numpy over the whole batch row's sample array — the
-    audio analog of decode_image_features' luma features). Payloads
-    that are not canonical PCM16 WAVE yield null features — the honest
-    undecodable class, never synthesized numbers."""
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf[key], pdf[payload_col]):
-                b = bytes(payload)
-                try:
-                    rate, nch, s = decode_wav(b)
-                    x = s.astype(np.float64)
-                    rms = round(float(np.sqrt(np.mean(x * x))), 6) \
-                        if s.size else 0.0
-                    peak = int(np.max(np.abs(s))) if s.size else 0
-                    rows.append((int(doc_id), rate, nch, s.shape[0],
-                                 round(s.shape[0] / rate, 6), rms, peak))
-                except Exception:
-                    rows.append((int(doc_id), None, None, None,
-                                 None, None, None))
-            yield pd.DataFrame(rows, columns=[
-                key, "sample_rate", "n_channels", "n_frames",
-                "duration_s", "rms", "peak_abs"])
-
-    return df.select(key, payload_col).mapInPandas(
-        gen, schema=AUDIO_FEATURES_SCHEMA)
-
-
-def nearest_resize(arr: "np.ndarray", out_w: int, out_h: int) -> "np.ndarray":
-    """Nearest-neighbor resize via index arithmetic (the decode tier's
-    resize primitive — no interpolation libs)."""
-    h, w = arr.shape[:2]
-    ys = (np.arange(out_h) * h) // out_h
-    xs = (np.arange(out_w) * w) // out_w
-    return arr[ys[:, None], xs[None, :]]
-
-
-def with_payload_metadata(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Typed metadata struct from native expressions only (no Python)."""
-    p = F.col(payload_col)
-    mime = _mime_expr(p)
     return df.withColumn(
         "payload_meta",
         F.struct(
@@ -249,219 +39,3 @@ def with_payload_metadata(df: DataFrame, payload_col: str = "payload") -> DataFr
             F.sha2(p, 256).alias("sha256"),
         ),
     )
-
-
-def decode_tier_accounting(df: DataFrame,
-                           payload_col: str = "payload") -> DataFrame:
-    """Per-payload decode-tier classification, native expressions only:
-    (mime, decode_tier) where decode_tier names the decoder that WOULD
-    handle the payload —
-
-      'builtin'      PPM/PNG/JPEG/WAV: the from-scratch numpy /
-                     png_codec / jpeg_codec / decode_wav paths
-                     (baseline JPEG; progressive or subsampled
-                     profiles degrade at decode time to PIL when
-                     importable, else honest nulls; non-PCM16 WAV
-                     yields nulls the same way)
-      'fake'         everything else (deterministic fake decode)
-
-    The honesty layer the decode tier owes its accounting: payloads
-    that cannot really decode must never surface as generic binary
-    that 'decoded' — decode_image_features returns null features for a
-    JPEG no tier could handle."""
-    out = df.withColumn("mime", _mime_expr(F.col(payload_col)))
-    tier = (
-        F.when(F.col("mime").isin("image/x-portable-pixmap", "image/png",
-                                  "image/jpeg", "audio/wav"),
-               F.lit("builtin"))
-        .otherwise(F.lit("fake")))
-    return out.withColumn("decode_tier", tier)
-
-
-IMAGE_FEATURES_SCHEMA = (
-    "doc_id bigint, width int, height int, mean_luma double, "
-    "embedding array<float>"
-)
-
-
-def _luma_plane(arr: "np.ndarray") -> "np.ndarray":
-    """Pixel array -> int64 luma plane with PIL's exact integer ITU-R 601
-    arithmetic (ImagingConvert.c: L24(rgb) >> 16), so the same pixels
-    yield the same features whichever decode tier produced them. Gray
-    and gray+alpha planes pass through; RGBA alpha is ignored (PIL
-    RGBA->L parity)."""
-    if arr.ndim == 2 or arr.shape[2] <= 2:
-        plane = arr if arr.ndim == 2 else arr[:, :, 0]
-        return plane.astype(np.int64)
-    rgb = arr[:, :, :3].astype(np.int64)
-    return (rgb[:, :, 0] * 19595 + rgb[:, :, 1] * 38470
-            + rgb[:, :, 2] * 7471) >> 16
-
-
-def _luma_features(arr: "np.ndarray", dim: int) -> tuple[float, list]:
-    """(mean luma in 0..1, dim-wide per-column-mean feature vector)."""
-    col_means = _luma_plane(arr).mean(axis=0, dtype=np.float64)
-    luma = float(col_means.mean()) / 255.0
-    feat = nearest_resize(col_means[None, :], dim, 1)[0] / 255.0
-    return luma, feat.astype(np.float32).tolist()
-
-
-def _fake_decode(payload: bytes, dim: int) -> tuple[int, int, float, list]:
-    """DETERMINISTIC FAKE decode (no codec libs in this environment):
-    dimensions and features are a pure function of the payload bytes.
-    Replace with a real decoder (PIL/libvips/ffmpeg) on a real cluster."""
-    h = hashlib.sha256(payload).digest()
-    width = 64 + h[0] % 192
-    height = 64 + h[1] % 192
-    mean_luma = h[2] / 255.0
-    rng = np.frombuffer(h, dtype=np.uint8).astype(np.float32)
-    feat = np.resize(rng, dim) / 255.0
-    return width, height, mean_luma, feat.tolist()
-
-
-def decode_image_features(df: DataFrame, payload_col: str = "payload",
-                          key: str = "doc_id", dim: int = 16) -> DataFrame:
-    """Arrow-batched decode -> (dims, luma, feature embedding).
-
-    Pillow is used when importable; otherwise the deterministic fake.
-    """
-    try:  # pragma: no cover - environment-dependent
-        from PIL import Image  # noqa: F401
-        has_pil = True
-    except Exception:
-        has_pil = False
-
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf[key], pdf[payload_col]):
-                b = bytes(payload)
-                if b.startswith(b"P6"):
-                    # REAL decode path — no codec libs needed for P6.
-                    # Malformed payloads that merely share the magic
-                    # fall through to the fake, like the PIL branch.
-                    try:
-                        arr = decode_ppm(b)
-                        luma, feat = _luma_features(arr, dim)
-                        rows.append((int(doc_id), arr.shape[1],
-                                     arr.shape[0], luma, feat))
-                        continue
-                    except Exception:
-                        pass
-                if b.startswith(b"\x89PNG"):
-                    # REAL decode path #2: from-scratch zlib+spec PNG
-                    # (functions/png_codec.py); unsupported profiles
-                    # (16-bit, palette, Adam7) fall through to PIL/fake.
-                    try:
-                        from docling_eval_spark.functions.png_codec import (
-                            decode_png,
-                        )
-
-                        arr = decode_png(b)
-                        luma, feat = _luma_features(arr, dim)
-                        rows.append((int(doc_id), arr.shape[1],
-                                     arr.shape[0], luma, feat))
-                        continue
-                    except Exception:
-                        pass
-                if b.startswith(b"\xff\xd8\xff"):
-                    # REAL decode path #3: from-scratch baseline JPEG
-                    # (functions/jpeg_codec.py — T.81 sequential DCT,
-                    # grayscale + 4:4:4 color); progressive/subsampled
-                    # profiles fall through to PIL, then honest nulls.
-                    try:
-                        from docling_eval_spark.functions.jpeg_codec import (
-                            decode_jpeg,
-                        )
-
-                        arr = decode_jpeg(b)
-                        luma, feat = _luma_features(arr, dim)
-                        rows.append((int(doc_id), arr.shape[1],
-                                     arr.shape[0], luma, feat))
-                        continue
-                    except Exception:
-                        pass
-                if has_pil:
-                    try:
-                        img = Image.open(io.BytesIO(b)).convert("L")
-                        arr = np.asarray(img, dtype=np.uint8)
-                        luma, feat = _luma_features(arr, dim)
-                        rows.append((int(doc_id), img.size[0], img.size[1],
-                                     luma, feat))
-                        continue
-                    except Exception:
-                        pass
-                if b.startswith(b"\xff\xd8\xff"):
-                    # JPEG with no codec available: report honest nulls
-                    # (a distinct undecodable class — see
-                    # decode_tier_accounting), never fake features that
-                    # pretend the image decoded
-                    rows.append((int(doc_id), None, None, None, None))
-                    continue
-                w, h, luma, feat = _fake_decode(b, dim)
-                rows.append((int(doc_id), w, h, luma, feat))
-            yield pd.DataFrame(rows, columns=[
-                key, "width", "height", "mean_luma", "embedding"])
-
-    return df.select(key, payload_col).mapInPandas(
-        gen, schema=IMAGE_FEATURES_SCHEMA)
-
-
-FRAMES_SCHEMA = ("doc_id bigint, frame_idx int, frame binary, "
-                 "n_bytes int, container_mime string")
-
-
-def sniff_container(b: bytes) -> str | None:
-    """Magic-byte container detection for REAL video bytes.
-
-    ISO-BMFF/MP4 carries 'ftyp' at byte offset 4 (box-length prefix
-    first — a plain prefix table cannot express it); Matroska and WebM
-    share the EBML magic 1A 45 DF A3 and differ by the DocType string
-    in the EBML header (scanned in the first 64 bytes). Returns None
-    for anything that is not a recognized video container.
-    """
-    if len(b) >= 12 and b[4:8] == b"ftyp":
-        return "video/mp4"
-    if b[:4] == b"\x1aE\xdf\xa3":
-        return "video/webm" if b"webm" in b[:64] else "video/x-matroska"
-    return None
-
-
-def sample_frames(df: DataFrame, payload_col: str = "payload",
-                  key: str = "doc_id", chunk: int = 4096,
-                  every_n: int = 4) -> DataFrame:
-    """UDTF-shaped frame sampling: N output rows per input video payload.
-
-    Honesty boundary (explicit): payloads that sniff as a REAL video
-    container (MP4/Matroska/WebM — sniff_container) are NOT chunk-
-    sampled; decoding them needs a codec stack this sandbox does not
-    ship, so each emits ONE marker row (frame_idx=-1, null frame,
-    container_mime set) and downstream accounting counts them as a
-    distinct undecodable class instead of receiving synthesized
-    frames that look real. Everything else keeps the STUB extraction:
-    the payload is split into fixed-size chunks and every `every_n`-th
-    chunk is emitted as a 'frame' (container_mime null) — a
-    deterministic stand-in for keyframe decoding; the fan-out shape
-    (one input row -> many output rows through mapInPandas) is the
-    real contract.
-    """
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf[key], pdf[payload_col]):
-                b = bytes(payload)
-                container = sniff_container(b)
-                if container is not None:
-                    rows.append((int(doc_id), -1, None, 0, container))
-                    continue
-                n_chunks = max(1, (len(b) + chunk - 1) // chunk)
-                for idx in range(0, n_chunks, every_n):
-                    fr = b[idx * chunk:(idx + 1) * chunk]
-                    rows.append((int(doc_id), idx, fr, len(fr), None))
-            yield pd.DataFrame(
-                rows, columns=[key, "frame_idx", "frame", "n_bytes",
-                               "container_mime"])
-
-    return df.select(key, payload_col).mapInPandas(gen, schema=FRAMES_SCHEMA)

@@ -1,19 +1,13 @@
-"""Multimodal plumbing tests: binary payloads, typed metadata, decode
-tiers, UDTF-style frame fan-out. PPM/PNG/JPEG images and PCM16 WAV audio
-decode REAL through the from-scratch codecs; only unknown payloads ride
-the documented deterministic fake. These tests pin both the decode math
-and the Spark-side contract: schemas, determinism, fan-out row counts,
-and native metadata columns.
-"""
+"""Binary payload metadata tests: the native mime sniff, byte length and
+content hash, computed with no Python stage in the plan."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 
 def _payloads(spark, sf_dir):
-    # deterministic fake payloads: PNG magic + text bytes
+    # deterministic payloads: PNG magic + text bytes
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     return docs.withColumn(
         "payload",
@@ -34,286 +28,125 @@ class TestMultimodal:
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
-    def test_decode_features_deterministic(self, spark, sf_dir):
-        from docling_eval_spark.operators.multimodal import decode_image_features
-
-        feats1 = decode_image_features(_payloads(spark, sf_dir), dim=16)
-        r1 = {r["doc_id"]: r for r in feats1.collect()}
-        r2 = {r["doc_id"]: r for r in decode_image_features(
-            _payloads(spark, sf_dir), dim=16).collect()}
-        assert len(r1) == len(r2) > 0
-        some = next(iter(r1))
-        assert r1[some]["embedding"] == r2[some]["embedding"]
-        assert all(len(r["embedding"]) == 16 for r in r1.values())
-        assert all(64 <= r["width"] <= 256 for r in r1.values())
-
-    def test_decode_tier_accounting(self, spark):
-        """Every real image mime routes to a from-scratch builtin
-        decoder; only unknown payloads ride the deterministic fake."""
-        from docling_eval_spark.operators.multimodal import (
-            decode_tier_accounting)
-
-        rows = [
-            (1, b"\xff\xd8\xff" + b"jpegbody"),
-            (2, b"\x89PNG" + b"pngbody"),
-            (3, b"P6 1 1 255 x"),
-            (4, b"plain bytes"),
-        ]
-        df = spark.createDataFrame(rows, ["doc_id", "payload"])
-        out = {r.doc_id: (r.mime, r.decode_tier) for r in
-               decode_tier_accounting(df).collect()}
-        assert out[1] == ("image/jpeg", "builtin")  # jpeg_codec.py
-        assert out[2] == ("image/png", "builtin")
-        assert out[3] == ("image/x-portable-pixmap", "builtin")
-        assert out[4] == ("application/octet-stream", "fake")
-        # native expressions only
-        plan = decode_tier_accounting(df)._jdf.queryExecution() \
-            .executedPlan().toString()
+        # the mime table: PNG and JPEG magic, everything else octet-stream
+        mixed = spark.createDataFrame([
+            (1, bytearray(b"\xff\xd8\xff" + b"jpegbody")),
+            (2, bytearray(b"\x89PNG" + b"pngbody")),
+            (3, bytearray(b"P6 1 1 255 x")),
+            (4, bytearray(b"RIFF\x00\x00\x00\x00WAVEfmt ")),
+            (5, bytearray(b"plain bytes")),
+        ], "doc_id bigint, payload binary")
+        meta = with_payload_metadata(mixed)
+        out = {r.doc_id: r.mime for r in
+               meta.select("doc_id", "payload_meta.mime").collect()}
+        assert out == {1: "image/jpeg", 2: "image/png",
+                       3: "application/octet-stream",
+                       4: "application/octet-stream",
+                       5: "application/octet-stream"}
+        plan = meta._jdf.queryExecution().executedPlan().toString()
         assert "EvalPython" not in plan
 
-    def test_decode_features_jpeg_honest_nulls(self, spark):
-        """A JPEG no tier can decode (torn/progressive, no Pillow)
-        yields null features (honest failure), not a fake that
-        pretends the image decoded."""
-        from docling_eval_spark.operators.multimodal import (
-            decode_image_features)
+    def test_length_and_hash_match_python(self, spark):
+        import hashlib
 
-        rows = [(1, b"\xff\xd8\xff" + b"jpegbody"),
-                (2, b"not an image at all")]
-        df = spark.createDataFrame(rows, ["doc_id", "payload"])
-        out = {r.doc_id: r for r in decode_image_features(df).collect()}
-        assert out[1].width is None and out[1].mean_luma is None
-        assert out[1].embedding is None
-        assert out[2].width is not None  # generic binary keeps the fake
+        from docling_eval_spark.operators.multimodal import with_payload_metadata
 
-    def test_decode_features_real_jpeg_path(self, spark):
-        """A baseline JPEG decodes through the from-scratch codec: a
-        flat-block fixture yields its exact dimensions and mean luma."""
-        from docling_eval_spark.functions.jpeg_codec import synth_jpeg
-        from docling_eval_spark.operators.multimodal import (
-            decode_image_features)
+        payloads = [b"", b"\x89PNG\r\n", b"\xff\xd8\xff\xe0" * 50,
+                    bytes(range(256))]
+        df = spark.createDataFrame(
+            [(i, bytearray(p)) for i, p in enumerate(payloads)],
+            "doc_id bigint, payload binary")
+        out = {r.doc_id: r for r in with_payload_metadata(df)
+               .select("doc_id", "payload_meta.*").collect()}
+        for i, p in enumerate(payloads):
+            assert out[i].n_bytes == len(p)
+            assert out[i].sha256 == hashlib.sha256(p).hexdigest()
+        assert out[0].mime == "application/octet-stream"
 
-        rows = [(d, synth_jpeg(d, 32, 16)) for d in (1, 2)]
-        df = spark.createDataFrame(rows, ["doc_id", "payload"])
-        out = {r.doc_id: r for r in decode_image_features(df).collect()}
-        import numpy as np
-        for d in (1, 2):
-            by, bx = np.mgrid[0:2, 0:4]
-            vals = 128 + 2 * (((d + 3 * bx + 7 * by) % 49) - 24)
-            want = np.repeat(np.repeat(vals, 8, 0), 8, 1)
-            assert (out[d].width, out[d].height) == (32, 16)
-            expect_luma = float(want.mean(axis=0).mean()) / 255.0
-            assert out[d].mean_luma == pytest.approx(expect_luma, abs=1e-9)
+    def test_magic_must_lead_the_payload(self, spark):
+        """Only a full magic prefix at offset 0 names a mime: a shifted
+        or cut-short prefix is octet-stream."""
+        from docling_eval_spark.operators.multimodal import with_payload_metadata
 
-    def test_frame_fanout_counts(self, spark, sf_dir):
-        from docling_eval_spark.operators.multimodal import sample_frames
+        df = spark.createDataFrame([
+            (1, bytearray(b"x\x89PNG body")),
+            (2, bytearray(b"\x89PN")),
+            (3, bytearray(b"\xff\xd8")),
+            (4, bytearray(b"\x89PNG")),
+            (5, bytearray(b"\xff\xd8\xff")),
+        ], "doc_id bigint, payload binary")
+        out = {r.doc_id: r.mime for r in with_payload_metadata(df)
+               .select("doc_id", "payload_meta.mime").collect()}
+        assert out == {1: "application/octet-stream",
+                       2: "application/octet-stream",
+                       3: "application/octet-stream",
+                       4: "image/png", 5: "image/jpeg"}
 
-        pay = _payloads(spark, sf_dir).limit(20)
-        frames = sample_frames(pay, chunk=100, every_n=4)
-        got = frames.groupBy("doc_id").count().collect()
-        sizes = {r["doc_id"]: r["n"] for r in pay.select(
-            "doc_id", F.length("payload").alias("n")).collect()}
-        for row in got:
-            n_chunks = max(1, (sizes[row["doc_id"]] + 99) // 100)
-            expected = (n_chunks + 3) // 4
-            assert row["count"] == expected
+    def test_named_column_nulls_and_passthrough(self, spark):
+        """`payload_col` picks the column, the other columns and rows
+        pass through, and a null payload is octet-stream with null
+        length and hash."""
+        from docling_eval_spark.operators.multimodal import with_payload_metadata
 
-    def test_real_video_containers_marked_not_synthesized(self, spark):
-        """MP4/MKV/WebM bytes must become ONE undecodable marker row,
-        never fake frames; raw bytes keep the stub chunk fan-out."""
-        from docling_eval_spark.operators.multimodal import (
-            sample_frames, sniff_container)
-
-        assert sniff_container(b"\x00\x00\x00\x18ftypisomfiller") == "video/mp4"
-        assert sniff_container(
-            b"\x1aE\xdf\xa3\x42\x82\x88matroska...") == "video/x-matroska"
-        assert sniff_container(
-            b"\x1aE\xdf\xa3\x42\x82\x84webm....") == "video/webm"
-        assert sniff_container(b"RAWVxxxx") is None
-        assert sniff_container(b"\x89PNG....") is None
-        assert sniff_container(b"") is None
-
-        rows = [
-            (1, b"\x00\x00\x00\x18ftypisom" + b"x" * 5000),
-            (2, b"\x1aE\xdf\xa3\x42\x82\x84webm" + b"y" * 5000),
-            (3, b"z" * 2500),                     # raw: 3 chunks -> 1 frame
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, payload binary")
-        out = sample_frames(df, chunk=1024, every_n=4).collect()
-        by_doc = {}
-        for r in out:
-            by_doc.setdefault(r.doc_id, []).append(r)
-        assert [(r.frame_idx, r.frame, r.n_bytes, r.container_mime)
-                for r in by_doc[1]] == [(-1, None, 0, "video/mp4")]
-        assert [(r.frame_idx, r.container_mime)
-                for r in by_doc[2]] == [(-1, "video/webm")]
-        raws = by_doc[3]
-        assert all(r.container_mime is None and r.frame_idx >= 0
-                   for r in raws)
-        assert len(raws) == 1 and raws[0].n_bytes == 1024
+        df = spark.createDataFrame([
+            (1, "a", bytearray(b"\x89PNG1")),
+            (2, "b", None),
+        ], "doc_id bigint, tag string, blob binary")
+        meta = with_payload_metadata(df, payload_col="blob")
+        assert meta.columns == ["doc_id", "tag", "blob", "payload_meta"]
+        out = {r.doc_id: r for r in meta.select(
+            "doc_id", "tag", "payload_meta.*").collect()}
+        assert (out[1].tag, out[1].mime, out[1].n_bytes) == ("a", "image/png", 5)
+        assert (out[2].tag, out[2].mime, out[2].n_bytes, out[2].sha256) == (
+            "b", "application/octet-stream", None, None)
 
 
-class TestPpmDecode:
-    def test_roundtrip_and_header_comments(self):
-        import numpy as np
+def _documents(sf_dir):
+    import pandas as pd
 
-        from docling_eval_spark.operators.multimodal import decode_ppm, synth_ppm
-
-        arr = decode_ppm(synth_ppm(7, 20, 10))
-        assert arr.shape == (10, 20, 3)
-        assert arr[0, 0, 0] == 0 and arr[0, 19, 0] == 255  # x-gradient
-        assert int(arr[3, 5, 1]) == (7 + 85) % 256
-        # comment-tolerant header per the netpbm spec
-        body = np.full((2, 3, 3), 9, dtype=np.uint8).tobytes()
-        payload = b"P6\n# a comment\n3 2\n# more\n255\n" + body
-        arr2 = decode_ppm(payload)
-        assert arr2.shape == (2, 3, 3) and int(arr2.sum()) == 9 * 18
-
-    def test_nearest_resize(self):
-        import numpy as np
-
-        from docling_eval_spark.operators.multimodal import nearest_resize
-
-        arr = np.arange(16, dtype=np.uint8).reshape(4, 4)
-        out = nearest_resize(arr, 2, 2)
-        assert out.tolist() == [[0, 2], [8, 10]]
-
-    def test_decode_image_features_uses_real_ppm_path(self, spark):
-        from pyspark.sql import functions as F
-
-        from docling_eval_spark.operators.multimodal import (
-            decode_image_features,
-            synth_ppm,
-            with_payload_metadata,
-        )
-
-        rows = [(d, bytearray(synth_ppm(d, 16, 8))) for d in range(5)]
-        df = spark.createDataFrame(rows, "doc_id bigint, payload binary")
-        meta = with_payload_metadata(df).select("payload_meta.mime").collect()
-        assert {r["mime"] for r in meta} == {"image/x-portable-pixmap"}
-        feats = {r["doc_id"]: r for r in decode_image_features(df).collect()}
-        # real decode: dimensions come from the PPM header, luma from
-        # pixels via PIL's integer ITU-R 601 formula (L24 >> 16)
-        assert feats[0]["width"] == 16 and feats[0]["height"] == 8
-        exp_luma = sum(
-            (19595 * ((255 * x) // 15) + 38470 * 85 + 7471 * 170) >> 16
-            for x in range(16)
-        ) / 16 / 255.0
-        assert abs(feats[0]["mean_luma"] - exp_luma) < 1e-9
-        assert len(feats[0]["embedding"]) == 16
-
-    def test_maxval_rescaling_and_malformed_fallback(self, spark):
-        import numpy as np
-
-        from docling_eval_spark.operators.multimodal import (
-            decode_image_features,
-            decode_ppm,
-        )
-
-        # maxval=100: full-intensity sample 100 rescales to 255 (netpbm
-        # semantics: sample/maxval is the intensity)
-        body = np.full((1, 2, 3), 100, dtype=np.uint8).tobytes()
-        arr = decode_ppm(b"P6\n2 1\n100\n" + body)
-        assert int(arr.max()) == 255
-
-        # payloads that merely share the P6 magic fall back to the fake
-        rows = [(1, bytearray(b"P6 this is not an image at all"))]
-        df = spark.createDataFrame(rows, "doc_id bigint, payload binary")
-        out = decode_image_features(df).collect()
-        assert len(out) == 1 and out[0]["width"] >= 64  # fake-path dims
+    return pd.read_parquet(f"{sf_dir}/documents.parquet")
 
 
-class TestWavDecode:
-    def test_roundtrip_closed_form(self):
-        import numpy as np
+class TestMediaQueries:
+    """The registry's three media queries against the closed forms their
+    oracles state, computed here in Python over the same fixture."""
 
-        from docling_eval_spark.operators.multimodal import (
-            decode_wav, synth_wav)
+    def test_payload_mime_counts(self, spark, sf_dir):
+        import __spark_entry__ as entry
 
-        rate, nch, s = decode_wav(synth_wav(13))
-        amp, n = 1000 + (13 % 7) * 1000, 400 + (13 % 5) * 80
-        assert (rate, nch) == (8000, 1) and s.shape == (n, 1)
-        # square wave: |sample| == amp everywhere -> rms == peak == amp
-        assert int(np.max(np.abs(s))) == amp
-        assert float(np.sqrt(np.mean(s.astype(np.float64) ** 2))) == amp
-        # half-period sign structure from the construction
-        half = (13 % 10) + 2
-        assert int(s[0, 0]) == amp and int(s[half, 0]) == -amp
+        got = [tuple(r) for r in entry.queries()["payload_mime_counts"](
+            spark, sf_dir).collect()]
+        ids = _documents(sf_dir)["doc_id"]
+        mimes = ["image/jpeg" if d % 7 == 0 else
+                 "application/octet-stream" if d % 7 == 1 else "image/png"
+                 for d in ids]
+        want = sorted((m, mimes.count(m)) for m in set(mimes))
+        assert got == want
 
-    def test_chunk_walk_skips_unknown_and_word_aligns(self):
-        import struct
+    def test_multimodal_meta(self, spark, sf_dir):
+        import __spark_entry__ as entry
 
-        from docling_eval_spark.operators.multimodal import decode_wav
+        got = [r.asDict() for r in entry.queries()["multimodal_meta"](
+            spark, sf_dir).collect()]
+        docs = _documents(sf_dir)
+        want = []
+        for lang, g in sorted(docs.groupby("lang"), key=lambda kv: kv[0]):
+            want.append({
+                "lang": lang, "n_docs": len(g),
+                "total_bytes": sum(len(t.encode()) + 4 for t in g["text"]),
+                "n_unique": g["text"].nunique(), "mime": "image/png"})
+        assert got == want
 
-        fmt = struct.pack("<HHIIHH", 1, 2, 44100, 44100 * 4, 4, 16)
-        data = struct.pack("<4h", 10, -10, 20, -20)  # 2 frames stereo
-        # LIST (odd size -> pad byte) and fact chunks precede fmt/data
-        payload = (b"RIFF" + struct.pack("<I", 0) + b"WAVE"
-                   + b"LIST" + struct.pack("<I", 5) + b"INFOx" + b"\x00"
-                   + b"fact" + struct.pack("<I", 4) + struct.pack("<I", 2)
-                   + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                   + b"data" + struct.pack("<I", len(data)) + data)
-        rate, nch, s = decode_wav(payload)
-        assert (rate, nch) == (44100, 2)
-        assert s.tolist() == [[10, -10], [20, -20]]
+    def test_png_decode_features(self, spark, sf_dir):
+        import __spark_entry__ as entry
 
-    def test_non_canonical_formats_raise(self):
-        import struct
-
-        import pytest as _pytest
-
-        from docling_eval_spark.operators.multimodal import (
-            decode_wav, synth_wav)
-
-        with _pytest.raises(ValueError):
-            decode_wav(b"not riff at all")
-        # IEEE-float format (3) and 8-bit PCM must both refuse
-        for audio_format, bits in ((3, 32), (1, 8)):
-            fmt = struct.pack("<HHIIHH", audio_format, 1, 8000,
-                              8000, 1, bits)
-            payload = (b"RIFF" + struct.pack("<I", 0) + b"WAVE"
-                       + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                       + b"data" + struct.pack("<I", 2) + b"\x00\x01")
-            with _pytest.raises(ValueError):
-                decode_wav(payload)
-        # synth output is sniffed as audio/wav (RIFF form sub-dispatch)
-        assert synth_wav(1)[:4] == b"RIFF" and synth_wav(1)[8:12] == b"WAVE"
-
-    def test_decode_audio_features_mixed(self, spark):
-        from docling_eval_spark.operators.multimodal import (
-            decode_audio_features, synth_wav)
-
-        rows = [(d, bytearray(synth_wav(d))) for d in range(4)]
-        rows.append((99, bytearray(b"ID3\x03mp3-ish bytes")))
-        df = spark.createDataFrame(rows, "doc_id bigint, payload binary")
-        out = {r["doc_id"]: r for r in decode_audio_features(df).collect()}
-        for d in range(4):
-            amp, n = 1000 + (d % 7) * 1000, 400 + (d % 5) * 80
-            r = out[d]
-            assert r["sample_rate"] == 8000 and r["n_channels"] == 1
-            assert r["n_frames"] == n and r["peak_abs"] == amp
-            assert r["rms"] == float(amp)
-            assert r["duration_s"] == round(n / 8000, 6)
-        # compressed audio -> all-null features, never synthesized
-        r99 = out[99]
-        assert all(r99[c] is None for c in (
-            "sample_rate", "n_channels", "n_frames", "duration_s",
-            "rms", "peak_abs"))
-
-    def test_riff_form_subdispatch(self, spark):
-        from docling_eval_spark.operators.multimodal import (
-            decode_tier_accounting, synth_wav)
-
-        rows = [
-            (1, bytearray(synth_wav(1))),
-            (2, bytearray(b"RIFF\x00\x00\x00\x00AVI LIST")),
-            (3, bytearray(b"RIFF\x00\x00\x00\x00WEBPVP8 ")),
-            (4, bytearray(b"RIFF\x00\x00\x00\x00????body")),
-        ]
-        df = spark.createDataFrame(rows, "doc_id bigint, payload binary")
-        out = {r.doc_id: (r.mime, r.decode_tier) for r in
-               decode_tier_accounting(df).collect()}
-        assert out[1] == ("audio/wav", "builtin")
-        assert out[2] == ("video/x-msvideo", "fake")
-        assert out[3] == ("image/webp", "fake")
-        assert out[4] == ("application/octet-stream", "fake")
+        rows = entry.queries()["png_decode_features"](spark, sf_dir).collect()
+        ids = sorted(d for d in _documents(sf_dir)["doc_id"] if d < 500)
+        assert [r.doc_id for r in rows] == ids
+        for r in rows:
+            d = r.doc_id
+            w, h = 16 + d % 16, 8 + d % 8
+            assert (r.width, r.height) == (w, h)
+            assert r.mean_r == round(
+                sum((255 * x) // (w - 1) for x in range(w)) / w, 6)
+            assert (r.mean_g, r.mean_b) == ((d + 85) % 256, (d + 170) % 256)

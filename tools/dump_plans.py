@@ -24,12 +24,10 @@ HEADLINE = [
     # round 4
     "bpe_token_counts", "url_dedup_canonical", "classifier_quality_sample",
     "train_split_assign", "gopher_repetition_full", "warc_roundtrip",
-    "perplexity_buckets", "jpeg_decode_features",
+    "perplexity_buckets",
     # round 5: the de-globalized P1 slice (NO unpartitioned window / no
-    # SinglePartition exchange must appear), the classifier stage, and
-    # the container-sniff fan-out
-    "range_slice", "lang_id_classifier", "video_container_counts",
-    "audio_decode_features",
+    # SinglePartition exchange must appear) and the classifier stage
+    "range_slice", "lang_id_classifier",
     # index-first ingestion: the manifest must show scan-speed native
     # parse + partial-aggregable collapses (no window), and the robots
     # verdict a broadcast join with zero Python stages
