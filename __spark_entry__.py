@@ -22,6 +22,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from docling_eval_spark.session import row_stage
+
 SF0001 = "/root/testdata/sf0.001"
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
@@ -75,30 +77,21 @@ def _q_pdf_extract_text_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     reading-order recovery -> byte-identical text (extraction/pdf_spans.py).
     Blob synthesis is fused into the same Arrow stage as parsing so binary
     payloads never cross an exchange."""
-    from typing import Iterator
-
-    import pandas as pd
-
     from docling_eval_spark.extraction.pdf_spans import (
         build_pdf_blob,
         parse_pdf_blob,
         spans_to_text,
     )
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                blob = build_pdf_blob(int(doc_id), text)
-                rows.append((int(doc_id), spans_to_text(parse_pdf_blob(blob))))
-            yield pd.DataFrame(rows, columns=["doc_id", "extracted_text"])
+    def _pdf_roundtrip(doc_id, text):
+        yield doc_id, spans_to_text(parse_pdf_blob(build_pdf_blob(doc_id, text)))
 
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id", "text")
         .repartition(16, F.xxhash64("doc_id", F.lit(0x5EED)))
     )
-    out = docs.mapInPandas(gen, schema="doc_id bigint, extracted_text string")
+    out = row_stage(docs, _pdf_roundtrip, "doc_id bigint, extracted_text string")
     return out.select(
         "doc_id", F.md5(F.encode("extracted_text", "utf-8")).alias("text_md5"))
 
@@ -212,30 +205,20 @@ def _q_markdown_export_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Markdown export (F6): labeled spans of the layout corpus -> md5 of
     the deterministic markdown document; the oracle rebuilds the exact
     string in SQL."""
-    from typing import Iterator
-
-    import pandas as pd
-
     from docling_eval_spark.corpus.layout_synth import n_boxes
     from docling_eval_spark.functions.markdown_export import spans_to_markdown
     from docling_eval_spark.plans.bbox_text_eval import box_text
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                spans = [("title" if k == 0 else "text", box_text(d, k))
-                         for k in range(n_boxes(d))]
-                rows.append((d, spans_to_markdown(spans)))
-            yield pd.DataFrame(rows, columns=["doc_id", "markdown"])
+    def _markdown(d):
+        yield d, spans_to_markdown([("title" if k == 0 else "text", box_text(d, k))
+                                    for k in range(n_boxes(d))])
 
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id")
         .repartition(16, F.xxhash64("doc_id", F.lit(0x5EED)))
     )
-    out = docs.mapInPandas(gen, schema="doc_id bigint, markdown string")
+    out = row_stage(docs, _markdown, "doc_id bigint, markdown string")
     return out.select(
         "doc_id", F.md5(F.encode("markdown", "utf-8")).alias("md_md5"))
 
@@ -244,10 +227,6 @@ def _q_doctags_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Doctags round-trip (F19): serialize the layout corpus to the
     doctags token format, parse it back, emit one row per span; the oracle
     reconstructs every field from the closed-form layout geometry."""
-    from typing import Iterator
-
-    import pandas as pd
-
     from docling_eval_spark.corpus.layout_synth import gt_page
     from docling_eval_spark.functions.doctags import (
         DocTagSpan,
@@ -256,30 +235,24 @@ def _q_doctags_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from docling_eval_spark.plans.bbox_text_eval import box_text
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                boxes, labels = gt_page(d)
-                spans = [
-                    DocTagSpan(str(labels[k]), int(boxes[k][0]), int(boxes[k][1]),
-                               int(boxes[k][2]), int(boxes[k][3]), box_text(d, k))
-                    for k in range(len(boxes))
-                ]
-                for idx, sp in enumerate(parse_doctags(to_doctags(spans))):
-                    rows.append((d, idx, sp.label, sp.l, sp.t, sp.r, sp.b, sp.text))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "idx", "label", "l", "t", "r", "b", "text"])
+    def _doctags(d):
+        boxes, labels = gt_page(d)
+        spans = [
+            DocTagSpan(str(labels[k]), int(boxes[k][0]), int(boxes[k][1]),
+                       int(boxes[k][2]), int(boxes[k][3]), box_text(d, k))
+            for k in range(len(boxes))
+        ]
+        for idx, sp in enumerate(parse_doctags(to_doctags(spans))):
+            yield d, idx, sp.label, sp.l, sp.t, sp.r, sp.b, sp.text
 
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id")
         .repartition(16, F.xxhash64("doc_id", F.lit(0x5EED)))
     )
-    return docs.mapInPandas(
-        gen, schema="doc_id bigint, idx int, label string, l int, t int, "
-                    "r int, b int, text string"
+    return row_stage(
+        docs, _doctags, "doc_id bigint, idx int, label string, l int, t int, "
+                        "r int, b int, text string"
     ).orderBy("doc_id", "idx")
 
 
@@ -365,9 +338,7 @@ def _q_png_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from-scratch zlib+spec codec (functions/png_codec.py). The oracle
     recomputes the closed-form channel means, so a decoder bug in ANY
     filter path flips the hash."""
-    from typing import Iterator
-
-    import pandas as pd
+    from docling_eval_spark.functions.png_codec import decode_png, synth_png
 
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -375,26 +346,15 @@ def _q_png_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(16, F.xxhash64("doc_id", F.lit(0x5EED)))
     )
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from docling_eval_spark.functions.png_codec import decode_png, synth_png
+    def _png_means(d):
+        arr = decode_png(synth_png(d, 16 + d % 16, 8 + d % 8))
+        means = arr.astype("float64").mean(axis=(0, 1))
+        yield (d, arr.shape[1], arr.shape[0],
+               *(round(float(m), 6) for m in means[:3]))
 
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 16 + d % 16, 8 + d % 8
-                arr = decode_png(synth_png(d, w, h))
-                means = arr.astype("float64").mean(axis=(0, 1))
-                rows.append((d, arr.shape[1], arr.shape[0],
-                             round(float(means[0]), 6),
-                             round(float(means[1]), 6),
-                             round(float(means[2]), 6)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "mean_r", "mean_g", "mean_b"])
-
-    return docs.mapInPandas(
-        gen, schema="doc_id bigint, width int, height int, mean_r double, "
-                    "mean_g double, mean_b double").orderBy("doc_id")
+    return row_stage(
+        docs, _png_means, "doc_id bigint, width int, height int, mean_r double, "
+                          "mean_g double, mean_b double").orderBy("doc_id")
 
 
 def _q_textract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -407,9 +367,6 @@ def _q_textract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction bboxes keep every scaled coordinate exact; table bboxes
     stay raw-normalized like the reference."""
     import json as _json
-    from typing import Iterator
-
-    import pandas as pd
 
     from docling_eval_spark.sources.cloud_ocr import parse_responses
 
@@ -419,65 +376,59 @@ def _q_textract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(16, F.xxhash64("doc_id", F.lit(0xA15)))
     )
 
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                k = d % 3 + 1
-                blocks = [{"Id": "p", "BlockType": "PAGE", "Page": 1},
-                          {"Id": "ti", "BlockType": "LAYOUT_TITLE",
-                           "Text": f"Title {d}",
+    def _textract_response(d):
+        k = d % 3 + 1
+        blocks = [{"Id": "p", "BlockType": "PAGE", "Page": 1},
+                  {"Id": "ti", "BlockType": "LAYOUT_TITLE",
+                   "Text": f"Title {d}",
+                   "Geometry": {"BoundingBox": {
+                       "Left": 0.25, "Top": 0.125,
+                       "Width": 0.5, "Height": 0.25}}}]
+        for i in range(k):
+            blocks.append({"Id": f"tx{i}", "BlockType": "LAYOUT_TEXT",
+                           "Text": f"text {d} {i}",
                            "Geometry": {"BoundingBox": {
-                               "Left": 0.25, "Top": 0.125,
-                               "Width": 0.5, "Height": 0.25}}}]
-                for i in range(k):
-                    blocks.append({"Id": f"tx{i}", "BlockType": "LAYOUT_TEXT",
-                                   "Text": f"text {d} {i}",
-                                   "Geometry": {"BoundingBox": {
-                                       "Left": (1 + i) / 16, "Top": 0.25,
-                                       "Width": 1 / 16, "Height": 1 / 16}}})
-                for j in range(2):
-                    blocks.append({"Id": f"w{j}", "BlockType": "WORD",
-                                   "Page": 1, "Text": f"w{j} {d}",
-                                   "Geometry": {"BoundingBox": {
-                                       "Left": (8 + j) / 16, "Top": 0.5,
-                                       "Width": 1 / 16, "Height": 1 / 16}}})
-                if d % 2 == 0:
-                    cell_ids = [f"c{r}{c}" for r in range(2) for c in range(2)]
-                    blocks.append({"Id": "tb", "BlockType": "TABLE",
-                                   "Page": 1,
-                                   "Geometry": {"BoundingBox": {
-                                       "Left": 0.25, "Top": 0.5,
-                                       "Width": 0.5, "Height": 0.375}},
-                                   "Relationships": [
-                                       {"Type": "CHILD", "Ids": cell_ids}]})
-                    for r in range(2):
-                        for c in range(2):
-                            blocks.append({
-                                "Id": f"c{r}{c}", "BlockType": "CELL",
-                                "RowIndex": r + 1, "ColumnIndex": c + 1,
-                                "Geometry": {"BoundingBox": {
-                                    "Left": (c + 1) / 8, "Top": (r + 1) / 8,
-                                    "Width": 1 / 8, "Height": 1 / 8}},
-                                "Relationships": [{"Type": "CHILD",
-                                                   "Ids": [f"cw{r}{c}"]}]})
-                    for r in range(2):
-                        for c in range(2):
-                            blocks.append({
-                                "Id": f"cw{r}{c}", "BlockType": "WORD",
-                                "Page": 1, "Text": f"c {d} {r} {c}",
-                                "Geometry": {"BoundingBox": {
-                                    "Left": (c + 1) / 8, "Top": (r + 1) / 8,
-                                    "Width": 1 / 8, "Height": 1 / 8}}})
-                rows.append((d, _json.dumps({"Blocks": blocks}),
-                             float(100 + d % 7), float(200 + d % 5)))
-            yield pd.DataFrame(rows, columns=["doc_id", "response_json",
-                                              "pw", "ph"])
+                               "Left": (1 + i) / 16, "Top": 0.25,
+                               "Width": 1 / 16, "Height": 1 / 16}}})
+        for j in range(2):
+            blocks.append({"Id": f"w{j}", "BlockType": "WORD",
+                           "Page": 1, "Text": f"w{j} {d}",
+                           "Geometry": {"BoundingBox": {
+                               "Left": (8 + j) / 16, "Top": 0.5,
+                               "Width": 1 / 16, "Height": 1 / 16}}})
+        if d % 2 == 0:
+            cell_ids = [f"c{r}{c}" for r in range(2) for c in range(2)]
+            blocks.append({"Id": "tb", "BlockType": "TABLE",
+                           "Page": 1,
+                           "Geometry": {"BoundingBox": {
+                               "Left": 0.25, "Top": 0.5,
+                               "Width": 0.5, "Height": 0.375}},
+                           "Relationships": [
+                               {"Type": "CHILD", "Ids": cell_ids}]})
+            for r in range(2):
+                for c in range(2):
+                    blocks.append({
+                        "Id": f"c{r}{c}", "BlockType": "CELL",
+                        "RowIndex": r + 1, "ColumnIndex": c + 1,
+                        "Geometry": {"BoundingBox": {
+                            "Left": (c + 1) / 8, "Top": (r + 1) / 8,
+                            "Width": 1 / 8, "Height": 1 / 8}},
+                        "Relationships": [{"Type": "CHILD",
+                                           "Ids": [f"cw{r}{c}"]}]})
+            for r in range(2):
+                for c in range(2):
+                    blocks.append({
+                        "Id": f"cw{r}{c}", "BlockType": "WORD",
+                        "Page": 1, "Text": f"c {d} {r} {c}",
+                        "Geometry": {"BoundingBox": {
+                            "Left": (c + 1) / 8, "Top": (r + 1) / 8,
+                            "Width": 1 / 8, "Height": 1 / 8}}})
+        yield (d, _json.dumps({"Blocks": blocks}),
+               float(100 + d % 7), float(200 + d % 5))
 
-    responses = docs.mapInPandas(
-        synth, schema="doc_id bigint, response_json string, "
-                      "pw double, ph double")
+    responses = row_stage(docs, _textract_response,
+                          "doc_id bigint, response_json string, "
+                          "pw double, ph double")
     return _cloud_items_projection(parse_responses(
         responses, provider="textract", page_w_col="pw", page_h_col="ph"))
 
@@ -498,9 +449,6 @@ def _q_azure_docai_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the reference's whole dispatch table), figures. Key style
     alternates snake/camel per doc to pin the dual-spelling tolerance."""
     import json as _json
-    from typing import Iterator
-
-    import pandas as pd
 
     from docling_eval_spark.sources.cloud_ocr import parse_responses
 
@@ -513,49 +461,44 @@ def _q_azure_docai_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     roles = [None, "title", "sectionHeading", "pageHeader", "pageFooter",
              "pageNumber"]
 
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                camel = d % 2 == 1
-                pn = "pageNumber" if camel else "page_number"
-                br = "boundingRegions" if camel else "bounding_regions"
-                resp = {
-                    "pages": [{pn: 1, "width": 8.5, "height": 11.0,
-                               "words": [
-                                   {"content": f"w{j} {d}",
-                                    "polygon": [j + 1, 2, j + 3, 2,
-                                                j + 3, 4, j + 1, 4]}
-                                   for j in range(2)]}],
-                    "paragraphs": [{
-                        "content": f"para {d}",
-                        br: [{pn: 1, "polygon": [0, d % 5, 6, d % 5,
-                                                 6, d % 5 + 1, 0,
-                                                 d % 5 + 1]}],
-                        **({"role": roles[d % 6]} if roles[d % 6] else {}),
-                    }],
-                    "figures": [{br: [
-                        {pn: 1, "polygon": [1, 1, 3, 1, 3, 3, 1, 3]}]}],
-                }
-                if d % 2 == 0:
-                    resp["tables"] = [{
-                        "page_range": {"first_page_number": 1},
-                        "row_count": 2, "column_count": 2,
-                        br: [{"polygon": [0, 0, 4, 0, 4, 4, 0, 4]}],
-                        "cells": [
-                            {"row_index": r, "column_index": c,
-                             "content": f" c {d} {r} {c} ",
-                             br: [{"polygon": [2 * c, 2 * r, 2 * c + 2,
-                                               2 * r, 2 * c + 2, 2 * r + 2,
-                                               2 * c, 2 * r + 2]}]}
-                            for r in range(2) for c in range(2)],
-                    }]
-                rows.append((d, _json.dumps(resp)))
-            yield pd.DataFrame(rows, columns=["doc_id", "response_json"])
+    def _azure_response(d):
+        camel = d % 2 == 1
+        pn = "pageNumber" if camel else "page_number"
+        br = "boundingRegions" if camel else "bounding_regions"
+        resp = {
+            "pages": [{pn: 1, "width": 8.5, "height": 11.0,
+                       "words": [
+                           {"content": f"w{j} {d}",
+                            "polygon": [j + 1, 2, j + 3, 2,
+                                        j + 3, 4, j + 1, 4]}
+                           for j in range(2)]}],
+            "paragraphs": [{
+                "content": f"para {d}",
+                br: [{pn: 1, "polygon": [0, d % 5, 6, d % 5,
+                                         6, d % 5 + 1, 0,
+                                         d % 5 + 1]}],
+                **({"role": roles[d % 6]} if roles[d % 6] else {}),
+            }],
+            "figures": [{br: [
+                {pn: 1, "polygon": [1, 1, 3, 1, 3, 3, 1, 3]}]}],
+        }
+        if d % 2 == 0:
+            resp["tables"] = [{
+                "page_range": {"first_page_number": 1},
+                "row_count": 2, "column_count": 2,
+                br: [{"polygon": [0, 0, 4, 0, 4, 4, 0, 4]}],
+                "cells": [
+                    {"row_index": r, "column_index": c,
+                     "content": f" c {d} {r} {c} ",
+                     br: [{"polygon": [2 * c, 2 * r, 2 * c + 2,
+                                       2 * r, 2 * c + 2, 2 * r + 2,
+                                       2 * c, 2 * r + 2]}]}
+                    for r in range(2) for c in range(2)],
+            }]
+        yield d, _json.dumps(resp)
 
-    responses = docs.mapInPandas(
-        synth, schema="doc_id bigint, response_json string")
+    responses = row_stage(docs, _azure_response,
+                          "doc_id bigint, response_json string")
     return _cloud_items_projection(
         parse_responses(responses, provider="azure"))
 
@@ -567,9 +510,6 @@ def _q_google_docai_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits), paragraph spans, tables with header rows before body rows
     and max-cells num_cols."""
     import json as _json
-    from typing import Iterator
-
-    import pandas as pd
 
     from docling_eval_spark.sources.cloud_ocr import parse_responses
 
@@ -579,49 +519,44 @@ def _q_google_docai_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(16, F.xxhash64("doc_id", F.lit(0xA21)))
     )
 
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                text = f"head body tail {d}"
-                page = {
-                    "pageNumber": 1,
-                    "dimension": {"width": float(300 + d % 10),
-                                  "height": float(400 + d % 10)},
-                    "paragraphs": [{"layout": {
-                        "textAnchor": {"textSegments": [
-                            {"startIndex": "0",
-                             "endIndex": str(len(text))}]},
-                        "boundingPoly": {"vertices": [
-                            {"x": 1, "y": 2}, {"x": 9, "y": 2},
-                            {"x": 9, "y": 5}, {"x": 1, "y": 5}]}}}],
-                }
-                if d % 3 == 0:
-                    def cell(seg, ri, ci):
-                        return {"layout": {
-                            "textAnchor": {"textSegments": [seg]},
-                            "boundingPoly": {"vertices": [
-                                {"x": 5 * ci, "y": 10 + 10 * ri},
-                                {"x": 5 * ci + 5, "y": 10 + 10 * ri},
-                                {"x": 5 * ci + 5, "y": 20 + 10 * ri},
-                                {"x": 5 * ci, "y": 20 + 10 * ri}]}}}
+    def _google_response(d):
+        text = f"head body tail {d}"
+        page = {
+            "pageNumber": 1,
+            "dimension": {"width": float(300 + d % 10),
+                          "height": float(400 + d % 10)},
+            "paragraphs": [{"layout": {
+                "textAnchor": {"textSegments": [
+                    {"startIndex": "0",
+                     "endIndex": str(len(text))}]},
+                "boundingPoly": {"vertices": [
+                    {"x": 1, "y": 2}, {"x": 9, "y": 2},
+                    {"x": 9, "y": 5}, {"x": 1, "y": 5}]}}}],
+        }
+        if d % 3 == 0:
+            def cell(seg, ri, ci):
+                return {"layout": {
+                    "textAnchor": {"textSegments": [seg]},
+                    "boundingPoly": {"vertices": [
+                        {"x": 5 * ci, "y": 10 + 10 * ri},
+                        {"x": 5 * ci + 5, "y": 10 + 10 * ri},
+                        {"x": 5 * ci + 5, "y": 20 + 10 * ri},
+                        {"x": 5 * ci, "y": 20 + 10 * ri}]}}}
 
-                    page["tables"] = [{
-                        "layout": {"boundingPoly": {"vertices": [
-                            {"x": 0, "y": 10}, {"x": 20, "y": 10},
-                            {"x": 20, "y": 30}, {"x": 0, "y": 30}]}},
-                        "headerRows": [{"cells": [
-                            cell({"startIndex": 0, "endIndex": 4}, 0, 0),
-                            cell({"startIndex": 5, "endIndex": 9}, 0, 1)]}],
-                        "bodyRows": [{"cells": [
-                            cell({"startIndex": 10, "endIndex": 14}, 1, 0)]}],
-                    }]
-                rows.append((d, _json.dumps({"text": text, "pages": [page]})))
-            yield pd.DataFrame(rows, columns=["doc_id", "response_json"])
+            page["tables"] = [{
+                "layout": {"boundingPoly": {"vertices": [
+                    {"x": 0, "y": 10}, {"x": 20, "y": 10},
+                    {"x": 20, "y": 30}, {"x": 0, "y": 30}]}},
+                "headerRows": [{"cells": [
+                    cell({"startIndex": 0, "endIndex": 4}, 0, 0),
+                    cell({"startIndex": 5, "endIndex": 9}, 0, 1)]}],
+                "bodyRows": [{"cells": [
+                    cell({"startIndex": 10, "endIndex": 14}, 1, 0)]}],
+            }]
+        yield d, _json.dumps({"text": text, "pages": [page]})
 
-    responses = docs.mapInPandas(
-        synth, schema="doc_id bigint, response_json string")
+    responses = row_stage(docs, _google_response,
+                          "doc_id bigint, response_json string")
     return _cloud_items_projection(
         parse_responses(responses, provider="google"))
 
@@ -635,9 +570,11 @@ def _q_otsl_table_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     parser, AND cross-checked cell-for-cell against its HTML twin
     through the existing F2 grid machinery — html_match pins the two
     parsers to the same grid."""
-    from typing import Iterator
-
-    import pandas as pd
+    from docling_eval_spark.functions.otsl import grid_to_otsl, parse_otsl_cells
+    from docling_eval_spark.functions.teds import (
+        grid_cells_to_html,
+        html_table_to_grid_cells,
+    )
 
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -645,55 +582,37 @@ def _q_otsl_table_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(16, F.xxhash64("doc_id", F.lit(0x075)))
     )
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from docling_eval_spark.functions.otsl import (
-            grid_to_otsl,
-            parse_otsl_cells,
-        )
-        from docling_eval_spark.functions.teds import (
-            grid_cells_to_html,
-            html_table_to_grid_cells,
-        )
+    def fixture(d: int) -> list[dict]:
+        case = d % 3
 
-        def fixture(d: int) -> list[dict]:
-            case = d % 3
+        def cell(r, c, rs=1, cs=1, text=None):
+            return {"row": r, "col": c, "rowspan": rs, "colspan": cs,
+                    "text": f"t {d} {r} {c}" if text is None else text}
 
-            def cell(r, c, rs=1, cs=1, text=None):
-                return {"row": r, "col": c, "rowspan": rs, "colspan": cs,
-                        "text": f"t {d} {r} {c}" if text is None else text}
+        if case == 0:
+            spans = [cell(0, 0, 1, 2), cell(0, 2)]
+            rest = [(1, 0), (1, 1), (1, 2), (2, 0), (2, 1)]
+        elif case == 1:
+            spans = [cell(0, 0, 2, 1), cell(0, 1), cell(0, 2)]
+            rest = [(1, 1), (1, 2), (2, 0), (2, 1)]
+        else:
+            spans = [cell(0, 0, 2, 2), cell(0, 2)]
+            rest = [(1, 2), (2, 0), (2, 1)]
+        return (spans + [cell(r, c) for r, c in rest]
+                + [cell(2, 2, text="")])
 
-            if case == 0:
-                spans = [cell(0, 0, 1, 2), cell(0, 2)]
-                rest = [(1, 0), (1, 1), (1, 2), (2, 0), (2, 1)]
-            elif case == 1:
-                spans = [cell(0, 0, 2, 1), cell(0, 1), cell(0, 2)]
-                rest = [(1, 1), (1, 2), (2, 0), (2, 1)]
-            else:
-                spans = [cell(0, 0, 2, 2), cell(0, 2)]
-                rest = [(1, 2), (2, 0), (2, 1)]
-            return (spans + [cell(r, c) for r, c in rest]
-                    + [cell(2, 2, text="")])
+    def _otsl_cells(d):
+        grid = fixture(d)
+        cells, nr, nc = parse_otsl_cells(grid_to_otsl(grid, header_rows=1))
+        match = cells == html_table_to_grid_cells(grid_cells_to_html(grid))
+        for c in cells:
+            yield (d, c["row"], c["col"], c["rowspan"], c["colspan"],
+                   c["text"], match, nr, nc)
 
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                grid = fixture(d)
-                cells, nr, nc = parse_otsl_cells(
-                    grid_to_otsl(grid, header_rows=1))
-                twin = html_table_to_grid_cells(grid_cells_to_html(grid))
-                match = cells == twin
-                for c in cells:
-                    rows.append((d, c["row"], c["col"], c["rowspan"],
-                                 c["colspan"], c["text"], match, nr, nc))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "row", "col", "rowspan", "colspan", "text",
-                "html_match", "n_rows", "n_cols"])
-
-    return docs.mapInPandas(
-        gen, schema="doc_id bigint, row int, col int, rowspan int, "
-                    "colspan int, text string, html_match boolean, "
-                    "n_rows int, n_cols int"
+    return row_stage(
+        docs, _otsl_cells, "doc_id bigint, row int, col int, rowspan int, "
+                           "colspan int, text string, html_match boolean, "
+                           "n_rows int, n_cols int"
     ).orderBy("doc_id", "row", "col")
 
 
@@ -737,11 +656,7 @@ def _q_cvat_document_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     XML exercising merge + picture/list groups + to_caption/to_footnote
     + a leveled heading, round-trips it through to_cvat_xml ->
     parse_cvat_document inside the cvat_document_items Arrow stage."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from docling_eval_spark.sources.cvat import cvat_document_items
+    from docling_eval_spark.sources.cvat import cvat_document_items, to_cvat_xml
 
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -749,35 +664,28 @@ def _q_cvat_document_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(16, F.xxhash64("doc_id", F.lit(0xCAC)))
     )
 
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from docling_eval_spark.sources.cvat import to_cvat_xml
+    boxes = [(10, 10, 100, 20), (10, 30, 100, 40), (10, 50, 100, 60),
+             (10, 70, 100, 120), (10, 130, 100, 140),
+             (10, 150, 100, 160), (10, 170, 100, 180),
+             (10, 190, 100, 240), (10, 250, 100, 260),
+             (10, 270, 100, 280)]
+    labels = ["title", "text", "text", "picture", "caption",
+              "list_item", "list_item", "table", "footnote",
+              "section_header"]
 
-        boxes = [(10, 10, 100, 20), (10, 30, 100, 40), (10, 50, 100, 60),
-                 (10, 70, 100, 120), (10, 130, 100, 140),
-                 (10, 150, 100, 160), (10, 170, 100, 180),
-                 (10, 190, 100, 240), (10, 250, 100, 260),
-                 (10, 270, 100, 280)]
-        labels = ["title", "text", "text", "picture", "caption",
-                  "list_item", "list_item", "table", "footnote",
-                  "section_header"]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                xml = to_cvat_xml(
-                    boxes, labels, f"doc_{d}.png",
-                    reading_order=[0, 1, 3, 5, 7, 9],
-                    polylines=[("merge", [1, 2]), ("to_caption", [3, 4]),
-                               ("group", [5, 6]), ("to_footnote", [7, 8])],
-                    attributes={9: {"level": str(d % 3 + 1)}})
-                texts = [f"Title {d}", f"Body {d} a", f"Body {d} b", "",
-                         f"Cap {d}", f"L {d} 0", f"L {d} 1", f"Tab {d}",
-                         f"F {d}", f"H {d}"]
-                rows.append((d, xml, texts))
-            yield pd.DataFrame(rows, columns=["doc_id", "xml", "texts"])
+    def _cvat_fixture(d):
+        xml = to_cvat_xml(
+            boxes, labels, f"doc_{d}.png",
+            reading_order=[0, 1, 3, 5, 7, 9],
+            polylines=[("merge", [1, 2]), ("to_caption", [3, 4]),
+                       ("group", [5, 6]), ("to_footnote", [7, 8])],
+            attributes={9: {"level": str(d % 3 + 1)}})
+        yield d, xml, [f"Title {d}", f"Body {d} a", f"Body {d} b", "",
+                       f"Cap {d}", f"L {d} 0", f"L {d} 1", f"Tab {d}",
+                       f"F {d}", f"H {d}"]
 
-    fixture = docs.mapInPandas(
-        synth, schema="doc_id bigint, xml string, texts array<string>")
+    fixture = row_stage(docs, _cvat_fixture,
+                        "doc_id bigint, xml string, texts array<string>")
     items = cvat_document_items(fixture, texts_col="texts")
     return items.select(
         "doc_id", "item_idx", "boxid", "label", "kind", "text",
@@ -847,10 +755,7 @@ def _q_docvqa_anls(spark: SparkSession, sf_dir: str) -> DataFrame:
     one appended char (similarity 1 - 1/(L+1)) / empty (score 0). The
     real Levenshtein kernel runs in an Arrow batch; the oracle is the
     closed form."""
-    from typing import Iterator
-
-    import pandas as pd
-
+    from docling_eval_spark.functions.text_metrics import anls
     from docling_eval_spark.sources.gt_builder import docvqa_kv_cells
 
     cells = docvqa_kv_cells(_docvqa_fixture(spark, sf_dir))
@@ -872,20 +777,11 @@ def _q_docvqa_anls(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("")).alias("pred"),
     )
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from docling_eval_spark.functions.text_metrics import anls
+    def _anls(doc_id, qa_idx, answers, pred):
+        yield doc_id, qa_idx, round(anls(pred, [a for a in answers if a is not None]), 6)
 
-        for pdf in it:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "qa_idx": pdf["qa_idx"],
-                "anls": [round(anls(p, [a for a in answers if a is not None]), 6)
-                         for p, answers in zip(pdf["pred"], pdf["answers"])],
-            })
-
-    return preds.mapInPandas(
-        gen, schema="doc_id bigint, qa_idx int, anls double"
-    ).orderBy("doc_id", "qa_idx")
+    return row_stage(preds, _anls, "doc_id bigint, qa_idx int, anls double") \
+        .orderBy("doc_id", "qa_idx")
 
 
 def _q_doclaynet_layout_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -989,39 +885,29 @@ def _q_cvat_roundtrip_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     SHUFFLED and the reading_order polyline in true order; the reader
     must recover the true order via point-in-box resolution. Oracle =
     the closed-form layout geometry in reading order."""
-    from typing import Iterator
-
     import numpy as np
-    import pandas as pd
 
+    from docling_eval_spark.corpus.layout_synth import gt_page
     from docling_eval_spark.sources.cvat import cvat_annotation_spans, to_cvat_xml
 
-    def xmlgen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from docling_eval_spark.corpus.layout_synth import gt_page
-
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                boxes, labels = gt_page(d)
-                perm = np.random.RandomState(d).permutation(len(boxes))
-                # boxes listed shuffled; polyline visits true order:
-                # polyline position j must point at listed index of
-                # original box j -> inverse permutation
-                inv = np.empty(len(boxes), dtype=np.int64)
-                inv[perm] = np.arange(len(boxes))
-                xml_s = to_cvat_xml(
-                    boxes[perm], [str(x) for x in np.asarray(labels)[perm]],
-                    name=f"{d}.png", reading_order=[int(x) for x in inv])
-                rows.append((d, xml_s))
-            yield pd.DataFrame(rows, columns=["doc_id", "xml"])
+    def _cvat_xml(d):
+        boxes, labels = gt_page(d)
+        perm = np.random.RandomState(d).permutation(len(boxes))
+        # boxes listed shuffled; polyline visits true order: polyline
+        # position j must point at listed index of original box j ->
+        # inverse permutation
+        inv = np.empty(len(boxes), dtype=np.int64)
+        inv[perm] = np.arange(len(boxes))
+        yield d, to_cvat_xml(
+            boxes[perm], [str(x) for x in np.asarray(labels)[perm]],
+            name=f"{d}.png", reading_order=[int(x) for x in inv])
 
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id").where(F.col("doc_id") < 100)
         .repartition(16, F.xxhash64("doc_id", F.lit(0x5EED)))
     )
-    xmls = docs.mapInPandas(xmlgen, schema="doc_id bigint, xml string")
+    xmls = row_stage(docs, _cvat_xml, "doc_id bigint, xml string")
     # output carries the per-page `image` name (real exports are
     # multi-image); the fixture writes one page per doc, <doc_id>.png
     return cvat_annotation_spans(xmls).orderBy("doc_id", "idx")
@@ -1077,10 +963,9 @@ def _q_table_builder_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid-cell records. Gates: byte-exact parse round-trip of the
     canonical re-serialization (F3), full grid coverage, and TEDS < 1
     against a shape-perturbed copy."""
-    from typing import Iterator
-
-    import pandas as pd
-
+    from docling_eval_spark.corpus.html_synth import gt_table_html
+    from docling_eval_spark.functions.teds import teds_score
+    from docling_eval_spark.plans.table_eval import perturb_table_html
     from docling_eval_spark.sources.gt_builder import table_records
 
     docs = (
@@ -1089,38 +974,19 @@ def _q_table_builder_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(16, F.xxhash64("doc_id", F.lit(0x5EED)))
     )
 
-    def htmlgen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from docling_eval_spark.corpus.html_synth import gt_table_html
+    def _gt_table(d):
+        yield d, gt_table_html(d)
 
-        for pdf in it:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "table_html": [gt_table_html(int(d)) for d in pdf["doc_id"]],
-            })
+    def _perturbed_teds(doc_id, roundtrip_exact, grid_full, h):
+        yield (doc_id, roundtrip_exact, grid_full,
+               teds_score(h, perturb_table_html(h, 1)) < 1.0)
 
-    tbls = docs.mapInPandas(htmlgen, schema="doc_id bigint, table_html string")
-    recs = table_records(tbls)
-
-    def tedsgen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from docling_eval_spark.functions.teds import teds_score
-        from docling_eval_spark.plans.table_eval import perturb_table_html
-
-        for pdf in it:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "roundtrip_exact": pdf["roundtrip_exact"],
-                "grid_full": pdf["grid_full"],
-                "perturbed_teds_lt1": [
-                    teds_score(h, perturb_table_html(h, 1)) < 1.0
-                    for h in pdf["rebuilt_html"]
-                ],
-            })
-
-    return recs.select("doc_id", "roundtrip_exact", "grid_full",
-                       "rebuilt_html").mapInPandas(
-        tedsgen,
-        schema="doc_id bigint, roundtrip_exact boolean, grid_full boolean, "
-               "perturbed_teds_lt1 boolean",
+    recs = table_records(row_stage(docs, _gt_table,
+                                   "doc_id bigint, table_html string"))
+    return row_stage(
+        recs.select("doc_id", "roundtrip_exact", "grid_full", "rebuilt_html"),
+        _perturbed_teds, "doc_id bigint, roundtrip_exact boolean, "
+                         "grid_full boolean, perturbed_teds_lt1 boolean",
     ).orderBy("doc_id")
 
 
@@ -1468,12 +1334,11 @@ def _q_cdx_ranged_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranges — the fetched html must be byte-identical to the source
     text (md5-compared; bodies are doc_id-prefixed so payload digests
     are unique and the digest-dedup stage is provably a no-op here)."""
-    from typing import Iterator
-
-    import pandas as pd
+    from datetime import datetime, timezone
 
     from docling_eval_spark.sources.cdx import (
         cdx_fetch_manifest, fetch_manifest_records, index_warc_members)
+    from docling_eval_spark.sources.warc import build_warc
 
     docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
             .select("doc_id", "text").where(F.col("doc_id") < 300)
@@ -1482,25 +1347,15 @@ def _q_cdx_ranged_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sort_array(F.collect_list(F.struct("doc_id", "text")))
         .alias("_recs"))
 
-    def mk(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from datetime import datetime, timezone
+    ts = datetime(2024, 1, 1, tzinfo=timezone.utc)
 
-        from docling_eval_spark.sources.warc import build_warc
+    def _archive(a, recs):
+        yield f"w{a}.warc.gz", bytearray(build_warc([
+            (f"https://h{r['doc_id']}.example/p{r['doc_id']}", ts,
+             f"<d{r['doc_id']}>{r['text']}".encode("utf-8"))
+            for r in recs]))
 
-        ts = datetime(2024, 1, 1, tzinfo=timezone.utc)
-        for pdf in it:
-            rows = []
-            for a, recs in zip(pdf["_a"], pdf["_recs"]):
-                triples = [
-                    (f"https://h{r['doc_id']}.example/p{r['doc_id']}",
-                     ts,
-                     f"<d{r['doc_id']}>{r['text']}".encode("utf-8"))
-                    for r in recs]
-                rows.append((f"w{a}.warc.gz",
-                             bytearray(build_warc(triples))))
-            yield pd.DataFrame(rows, columns=["path", "content"])
-
-    archives = grouped.mapInPandas(mk, schema="path string, content binary")
+    archives = row_stage(grouped, _archive, "path string, content binary")
     idx = index_warc_members(archives)
     fetched = fetch_manifest_records(cdx_fetch_manifest(idx), archives)
     return (fetched.select(

@@ -512,7 +512,6 @@ def main(argv: list[str] | None = None) -> None:
     cu.add_argument("--decontam-n", type=int, default=13)
     cu.add_argument("--decontam-text-col", default="text")
     cu.add_argument("--summary", default=None)
-    cu.add_argument("--partitions", type=int, default=None)
     cu.set_defaults(fn=cmd_curate)
 
     pk = sub.add_parser("pack")

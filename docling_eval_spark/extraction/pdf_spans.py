@@ -34,11 +34,11 @@ Layout convention (what a justified 1-2 column page gives a parser):
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..session import row_stage
 
 LINE_H = 12
 COL_W = 400
@@ -128,14 +128,9 @@ EXTRACT_PDF_SCHEMA = "doc_id bigint, extracted_text string, n_spans int"
 
 def extract_pdf_pages(pdf_pages: DataFrame) -> DataFrame:
     """(doc_id, pdf binary) -> reading-ordered text, Arrow-batched."""
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["pdf"]):
-                spans = parse_pdf_blob(blob)
-                rows.append((int(doc_id), spans_to_text(spans), len(spans)))
-            yield pd.DataFrame(rows, columns=["doc_id", "extracted_text",
-                                              "n_spans"])
+    def _pdf_text(doc_id, blob):
+        spans = parse_pdf_blob(blob)
+        yield doc_id, spans_to_text(spans), len(spans)
 
-    return pdf_pages.select("doc_id", "pdf").mapInPandas(
-        gen, schema=EXTRACT_PDF_SCHEMA)
+    return row_stage(pdf_pages.select("doc_id", "pdf"), _pdf_text,
+                     EXTRACT_PDF_SCHEMA)

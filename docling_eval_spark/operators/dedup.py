@@ -8,7 +8,7 @@ All scale paths avoid the O(n^2) trap:
                  Arrow batch UDF; banding/bucketing/joins are native.
   - n-gram Jaccard: exact verify step on LSH candidates (array_intersect /
                  array_union on token shingle arrays — JVM-side).
-  - embedding cosine near-dup: see similarity.brute_force_topk / lsh_topk.
+  - embedding cosine near-dup: see similarity.brute_force_topk.
 
 MinHash LSH is the one text near-duplicate detector: near_dedup,
 near_dedup_against and the streaming ingest
@@ -462,11 +462,8 @@ def bloom_dedup_against(df: DataFrame, history: DataFrame,
                        F.xxhash64(F.col(text_col)).alias("_xh"))
         .mapInPandas(probe, schema="_t string, _xh bigint")
     )
-    hist_h = hist_cand.select(F.md5(F.col("_t")).alias("_h")).distinct()
-    new_h = df.withColumn("_h", F.md5(F.col(text_col)))
-    survivors = new_h.join(hist_h, "_h", "left_anti")
-    keep = survivors.groupBy("_h").agg(F.min(key).alias(key))
-    return survivors.join(keep, ["_h", key], "left_semi").drop("_h")
+    return dedup_against(df, hist_cand.select(F.col("_t").alias(text_col)),
+                         text_col, key)
 
 
 def near_dedup_against(df: DataFrame, history: DataFrame,

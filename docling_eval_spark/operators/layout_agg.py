@@ -99,11 +99,11 @@ def class_threshold_aps(partials: DataFrame, n_bins: int = 10001) -> pd.DataFram
     curves = dict(list(bins[~is_gt].astype(
         {"thr_idx": "int64", "bin": "int64", "n_tp": "int64", "n_det": "int64"}
     ).groupby(["label", "thr_idx"])))
-    rows = [(label, t, _ap_from_bins(curves[label, t], float(g))
-             if (label, t) in curves else 0.0)
-            for label, g in n_gt.items() if g > 0
-            for t in range(N_THRESHOLDS)]
-    return pd.DataFrame(rows, columns=["label", "thr_idx", "ap"])
+    aps = [(label, t, _ap_from_bins(curves[label, t], float(g))
+            if (label, t) in curves else 0.0)
+           for label, g in n_gt.items() if g > 0
+           for t in range(N_THRESHOLDS)]
+    return pd.DataFrame(aps, columns=["label", "thr_idx", "ap"])
 
 
 def _mean(s: pd.Series) -> float | None:

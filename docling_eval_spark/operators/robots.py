@@ -33,11 +33,10 @@ RFC 9309 semantics implemented:
 from __future__ import annotations
 
 import re
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import row_stage
 
 RULES_SCHEMA = (
     "domain string, rules array<struct<rx:string,plen:int,allow:boolean>>"
@@ -98,19 +97,14 @@ def compile_robots(robots: DataFrame, agent: str = "*",
     """(domain, robots_txt) -> (domain, rules) via one Arrow stage.
     Unparsable texts compile to an empty rule array (allow-all) — the
     RFC's failure posture, never a dropped domain."""
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for dom, txt in zip(pdf[domain_col], pdf[txt_col]):
-                try:
-                    rules = parse_robots_txt(str(txt), agent)
-                except Exception:
-                    rules = []
-                rows.append((dom, rules))
-            yield pd.DataFrame(rows, columns=["domain", "rules"])
+    def _compile(dom, txt):
+        try:
+            rules = parse_robots_txt(str(txt), agent)
+        except Exception:
+            rules = []
+        yield dom, rules
 
-    return robots.select(domain_col, txt_col).mapInPandas(
-        gen, schema=RULES_SCHEMA)
+    return row_stage(robots.select(domain_col, txt_col), _compile, RULES_SCHEMA)
 
 
 def with_robots_verdict(pages: DataFrame, rules: DataFrame,

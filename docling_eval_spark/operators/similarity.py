@@ -5,12 +5,6 @@
     (F.aggregate/F.zip_with — JVM-side, no Python), window top-k.
     The baseline and the verifier for the approximate paths.
 
-  lsh_topk: random-hyperplane LSH (Charikar SimHash for vectors):
-    queries and corpus are bucketed by a B-bit signature; only same-bucket
-    (or multi-probe neighbor-bucket) pairs are scored. At 10^12 vectors the
-    bucket join replaces the full cross product; recall tunes with
-    n_planes/n_tables.
-
 Scale note: brute_force_topk is a broadcast-nested-loop by construction —
 correct ONLY when the query side is small (it is: similarity search, not
 all-pairs). All-pairs near-dup goes through dedup's MinHash LSH instead.
@@ -122,32 +116,6 @@ def with_lsh_signature(df: DataFrame, vec_col: str,
             yield pdf
 
     return df.mapInPandas(gen, schema=schema)
-
-
-def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int = 3,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             dim: int | None = None, n_planes: int = 8, seed: int = 7) -> DataFrame:
-    """Approximate top-k: score only same-LSH-bucket pairs.
-
-    Recall < 1 by design; verify against brute_force_topk on samples.
-    """
-    if dim is None:
-        first = corpus.select(F.size(vec_col)).first()
-        dim = int(first[0])
-    planes = _random_planes(dim, n_planes, seed)
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       _as_double(F.col(vec_col)).alias("qv"))
-    q = with_lsh_signature(q, "qv", planes)
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      _as_double(F.col(vec_col)).alias("cv"))
-    c = with_lsh_signature(c, "cv", planes)
-    scored = (
-        c.join(F.broadcast(q), on="bucket")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id",
-                _cosine(F.col("qv"), F.col("cv")).alias("_c"))
-    )
-    return _topk_rounded(scored, k)
 
 
 def with_scaled_copies(corpus: DataFrame, id_col: str = "vec_id",
@@ -292,12 +260,11 @@ def _assign_buckets(df: DataFrame, centroids: "np.ndarray", id_col: str,
             Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
             sims = Vn @ cn.T                        # [B, k]
             order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
-            rows = {
+            yield pd.DataFrame({
                 id_col: np.repeat(pdf[id_col].to_numpy(), nprobe),
                 vec_col: [v for v in pdf[vec_col] for _ in range(nprobe)],
                 "bucket": order.reshape(-1),
-            }
-            yield pd.DataFrame(rows)
+            })
 
     return df.select(id_col, vec_col).mapInPandas(
         gen, schema=f"{id_col} bigint, {vec_col} array<double>, bucket int")

@@ -75,6 +75,13 @@ def _words(col: Column) -> Column:
     return F.split(F.trim(col), r"\s+")
 
 
+def _salted_md5(key: str, salt) -> Column:
+    """md5 hex of `<key>:<salt>`: the one per-key hash behind every
+    deterministic split, sample and shuffle here (an oracle recomputes
+    it in SQL)."""
+    return F.md5(F.concat(F.col(key).cast("string"), F.lit(f":{salt}")))
+
+
 def with_word_lines(df: DataFrame, text_col: str = "text",
                     words_per_line: int = 10,
                     out_col: str = "text_lines") -> DataFrame:
@@ -372,9 +379,8 @@ def assign_split(df: DataFrame, key: str = "doc_id",
     both draw from the same md5 uniform only when salts differ — use
     distinct salts for independent draws."""
     fracs = fracs or [("train", 0.98), ("val", 0.01), ("test", 0.01)]
-    u = (F.conv(F.substring(
-        F.md5(F.concat(F.col(key).cast("string"), F.lit(f":{salt}"))),
-        1, 8), 16, 10).cast("double")) / F.lit(2.0 ** 32)
+    u = (F.conv(F.substring(_salted_md5(key, salt), 1, 8), 16, 10)
+         .cast("double")) / F.lit(2.0 ** 32)
     expr = None
     acc = 0.0
     for name, frac in fracs[:-1]:
@@ -689,8 +695,7 @@ def hash_sample(df: DataFrame, key: str = "doc_id", rate: float = 0.1,
     if rate <= 0.0:
         return df.where(F.lit(False))
     thr = format(int(rate * 16 ** 8), "08x")
-    h = F.substring(
-        F.md5(F.concat(F.col(key).cast("string"), F.lit(":" + salt))), 1, 8)
+    h = F.substring(_salted_md5(key, salt), 1, 8)
     return df.where(h < F.lit(thr))
 
 
@@ -780,8 +785,7 @@ def stratified_hash_sample(df: DataFrame, rates: dict[str, float],
         rows.append((stratum, thr_hex))
     thr = literal_frame(spark, rows, T.StructType(
         [df.schema[strata_col], T.StructField("_thr", T.StringType())]))
-    h = F.substring(
-        F.md5(F.concat(F.col(key).cast("string"), F.lit(":" + salt))), 1, 8)
+    h = F.substring(_salted_md5(key, salt), 1, 8)
     return (
         df.join(F.broadcast(thr), strata_col)
         .where(h < F.col("_thr"))
@@ -1235,7 +1239,7 @@ def epoch_shuffle(df: DataFrame, key: str = "doc_id", seed: int = 0,
     ceiling: the default 4 (65,536 buckets) keeps per-task input ~15M
     rows at 10^12 docs; 5 hex chars (1M buckets) covers anything
     beyond. Only non-empty buckets reach the driver."""
-    h = F.md5(F.concat(F.col(key).cast("string"), F.lit(f":{seed}")))
+    h = _salted_md5(key, seed)
     keyed = df.withColumn("_h", h).withColumn(
         "_b", F.conv(F.substring("_h", 1, prefix_len), 16, 10).cast("long"))
     return (
@@ -1294,9 +1298,8 @@ def pareto_importance_sample(df: DataFrame, score_col: str = "clf_score",
 
     The keep decision compares ROUND-6 margins so the oracle's libm and
     the JVM's Math.pow can never disagree at the boundary."""
-    u = (F.conv(F.substring(
-        F.md5(F.concat(F.col(key).cast("string"), F.lit(f":{salt}"))),
-        1, 8), 16, 10).cast("double") + F.lit(1.0)) / F.lit(2.0 ** 32)
+    u = (F.conv(F.substring(_salted_md5(key, salt), 1, 8), 16, 10)
+         .cast("double") + F.lit(1.0)) / F.lit(2.0 ** 32)
     pareto = F.pow(u, F.lit(-1.0 / alpha)) - F.lit(1.0)
     margin = F.round(pareto - (F.lit(1.0) - F.col(score_col)), 6)
     return df.withColumn(out_col, margin > 0)

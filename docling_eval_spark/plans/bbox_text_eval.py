@@ -15,12 +15,13 @@ carry identical text; only the pairing itself can fail).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..corpus.layout_synth import gt_page, mode, pred_page
+from ..functions.layout_metrics import greedy_argmax_iou_match
+from ..functions.text_metrics import score_text_pair
+from ..session import row_stage
 from ..sources.tables import read_documents
 
 BBOX_TEXT_SCHEMA = (
@@ -33,39 +34,26 @@ def box_text(doc_id: int, rank: int) -> str:
     return f"block {doc_id % 97} {rank} content words"
 
 
-def _bbox_text_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..corpus.layout_synth import gt_page, mode, pred_page
-    from ..functions.layout_metrics import greedy_argmax_iou_match
-    from ..functions.text_metrics import score_text_pair
-
-    for pdf in it:
-        rows = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            gt_boxes, _ = gt_page(d)
-            pr_boxes, _, _ = pred_page(d)
-            matches, orphan_pred, orphan_gt = greedy_argmax_iou_match(
-                pivot_boxes=gt_boxes, other_boxes=pr_boxes)
-            f1s, edits, ious = [], [], []
-            for o, p, iou in matches:
-                s = score_text_pair(box_text(d, o), box_text(d, p))
-                f1s.append(s["f1_score"])
-                edits.append(s["edit_distance"])
-                ious.append(iou)
-            n = len(matches)
-            rows.append((
-                d, mode(d), n, len(orphan_gt), len(orphan_pred),
-                sum(ious) / n if n else 0.0,
-                sum(f1s) / n if n else 0.0,
-                sum(edits) / n if n else 0.0,
-            ))
-        yield pd.DataFrame(rows, columns=[
-            "doc_id", "mode", "n_matched", "n_orphan_gt", "n_orphan_pred",
-            "mean_iou", "mean_f1", "mean_edit"])
+def _bbox_text(d):
+    gt_boxes, _ = gt_page(d)
+    pr_boxes, _, _ = pred_page(d)
+    matches, orphan_pred, orphan_gt = greedy_argmax_iou_match(
+        pivot_boxes=gt_boxes, other_boxes=pr_boxes)
+    f1s, edits, ious = [], [], []
+    for o, p, iou in matches:
+        s = score_text_pair(box_text(d, o), box_text(d, p))
+        f1s.append(s["f1_score"])
+        edits.append(s["edit_distance"])
+        ious.append(iou)
+    n = len(matches)
+    yield (d, mode(d), n, len(orphan_gt), len(orphan_pred),
+           sum(ious) / n if n else 0.0,
+           sum(f1s) / n if n else 0.0,
+           sum(edits) / n if n else 0.0)
 
 
 def bbox_text_scores(spark: SparkSession, sf_dir: str,
                      n_partitions: int = 16) -> DataFrame:
     docs = read_documents(spark, sf_dir, ["doc_id"], n_partitions) \
         .where(F.col("doc_id") % 4 < 3)  # modes 0-2 have closed forms
-    return docs.mapInPandas(_bbox_text_batches, schema=BBOX_TEXT_SCHEMA)
+    return row_stage(docs, _bbox_text, BBOX_TEXT_SCHEMA)

@@ -19,14 +19,20 @@ the only shuffle in the corpus-mAP path is the bounded
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..corpus.layout_synth import MASK_SIZE, gt_page, mode, n_boxes, pred_page
+from ..functions.layout_metrics import (
+    greedy_label_matched_iou,
+    image_map,
+    mask_precision_recall_f1,
+    match_detections,
+)
 from ..operators.layout_agg import class_ap_rows, class_threshold_aps, map_row
+from ..session import row_stage
 from ..sources.tables import read_documents
 
 IMAGE_METRICS_SCHEMA = (
@@ -41,30 +47,16 @@ PARTIALS_SCHEMA = (
 )
 
 
-def _image_metric_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..corpus.layout_synth import MASK_SIZE, gt_page, mode, n_boxes, pred_page
-    from ..functions.layout_metrics import (
-        greedy_label_matched_iou,
-        image_map,
-        mask_precision_recall_f1,
-    )
-
-    for pdf in it:
-        rows = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            gt_boxes, gt_labels = gt_page(d)
-            pr_boxes, pr_labels, pr_scores = pred_page(d)
-            m = image_map(pr_boxes, pr_labels, pr_scores, gt_boxes, gt_labels)
-            mp, mr, mf1 = mask_precision_recall_f1(
-                gt_boxes, pr_boxes, mask_width=MASK_SIZE, mask_height=MASK_SIZE)
-            g = greedy_label_matched_iou(pr_boxes, pr_labels, gt_boxes,
-                                         gt_labels, iou_thresh=0.5)
-            rows.append((d, n_boxes(d), mode(d), m["map"], m["map_50"],
-                         m["map_75"], mp, mr, mf1, g["average_iou"]))
-        yield pd.DataFrame(rows, columns=[
-            "doc_id", "n_boxes", "mode", "map", "map_50", "map_75",
-            "mask_precision", "mask_recall", "mask_f1", "avg_iou_50"])
+def _image_metrics(d):
+    gt_boxes, gt_labels = gt_page(d)
+    pr_boxes, pr_labels, pr_scores = pred_page(d)
+    m = image_map(pr_boxes, pr_labels, pr_scores, gt_boxes, gt_labels)
+    mp, mr, mf1 = mask_precision_recall_f1(
+        gt_boxes, pr_boxes, mask_width=MASK_SIZE, mask_height=MASK_SIZE)
+    g = greedy_label_matched_iou(pr_boxes, pr_labels, gt_boxes, gt_labels,
+                                 iou_thresh=0.5)
+    yield (d, n_boxes(d), mode(d), m["map"], m["map_50"], m["map_75"],
+           mp, mr, mf1, g["average_iou"])
 
 
 def per_image_metrics(spark: SparkSession, sf_dir: str,
@@ -78,32 +70,21 @@ def per_image_metrics(spark: SparkSession, sf_dir: str,
     docs = read_documents(spark, sf_dir, ["doc_id"], n_partitions)
     if modes is not None:
         docs = docs.where((F.col("doc_id") % 4).isin(list(modes)))
-    return docs.mapInPandas(_image_metric_batches, schema=IMAGE_METRICS_SCHEMA)
+    return row_stage(docs, _image_metrics, IMAGE_METRICS_SCHEMA)
 
 
-def _partial_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..corpus.layout_synth import gt_page, pred_page
-    from ..functions.layout_metrics import match_detections
-
-    for pdf in it:
-        rows = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            gt_boxes, gt_labels = gt_page(d)
-            pr_boxes, pr_labels, pr_scores = pred_page(d)
-            for c in np.unique(gt_labels):
-                rows.append((d, "gt", str(c), None, None,
-                             int((gt_labels == c).sum())))
-            for c in np.unique(pr_labels):
-                pmask = pr_labels == c
-                gmask = gt_labels == c
-                tp = match_detections(pr_boxes[pmask], pr_scores[pmask],
-                                      gt_boxes[gmask])
-                for di in range(int(pmask.sum())):
-                    rows.append((d, "det", str(c), float(pr_scores[pmask][di]),
-                                 [bool(x) for x in tp[:, di]], None))
-        yield pd.DataFrame(rows, columns=[
-            "doc_id", "kind", "label", "score", "tp", "n_gt"])
+def _partials(d):
+    gt_boxes, gt_labels = gt_page(d)
+    pr_boxes, pr_labels, pr_scores = pred_page(d)
+    for c in np.unique(gt_labels):
+        yield d, "gt", str(c), None, None, int((gt_labels == c).sum())
+    for c in np.unique(pr_labels):
+        pmask = pr_labels == c
+        tp = match_detections(pr_boxes[pmask], pr_scores[pmask],
+                              gt_boxes[gt_labels == c])
+        for di in range(int(pmask.sum())):
+            yield (d, "det", str(c), float(pr_scores[pmask][di]),
+                   [bool(x) for x in tp[:, di]], None)
 
 
 def layout_partials(spark: SparkSession, sf_dir: str, n_partitions: int = 16,
@@ -112,7 +93,7 @@ def layout_partials(spark: SparkSession, sf_dir: str, n_partitions: int = 16,
     mode is in `modes`: detection and gt rows in one frame."""
     docs = read_documents(spark, sf_dir, ["doc_id"], n_partitions).where(
         (F.col("doc_id") % 4).isin(list(modes)))
-    return docs.mapInPandas(_partial_batches, schema=PARTIALS_SCHEMA)
+    return row_stage(docs, _partials, PARTIALS_SCHEMA)
 
 
 def _aps(spark: SparkSession, sf_dir: str, n_partitions: int,

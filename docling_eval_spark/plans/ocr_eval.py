@@ -16,12 +16,12 @@ CER denominator is the TRUE text length (jiwer semantics).
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text_metrics import cer
+from ..session import row_stage
 from ..sources.tables import read_documents
 
 OCR_SCHEMA = "doc_id bigint, mode int, cer double, char_accuracy double"
@@ -37,24 +37,16 @@ def degrade(text: str, mode: int) -> str:
     return text
 
 
-def _cer_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..functions.text_metrics import cer
-
-    for pdf in it:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            d = int(doc_id)
-            m = d % 3
-            pred = degrade(text, m)
-            c = cer(pred, text)
-            rows.append((d, m, c, 1.0 - min(1.0, c)))
-        yield pd.DataFrame(rows, columns=["doc_id", "mode", "cer", "char_accuracy"])
+def _cer(doc_id, text):
+    m = doc_id % 3
+    c = cer(degrade(text, m), text)
+    yield doc_id, m, c, 1.0 - min(1.0, c)
 
 
 def ocr_scores(spark: SparkSession, sf_dir: str,
                n_partitions: int = 16) -> DataFrame:
     docs = read_documents(spark, sf_dir, ["doc_id", "text"], n_partitions)
-    return docs.mapInPandas(_cer_batches, schema=OCR_SCHEMA)
+    return row_stage(docs, _cer, OCR_SCHEMA)
 
 
 # -- page-granular OCR (reference ocr_evaluator.py:150-162) -------------------
@@ -95,18 +87,13 @@ def segment_pages(doc_id: int, text: str | None):
         yield page_no, mode, gt, pred
 
 
-def _segment_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        gt, pred = [], []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            # a null text has null maps, as the native split gave it
-            g, p = (None, None) if text is None else ({}, {})
-            for page_no, _, gt_cells, pred_cells in segment_pages(int(doc_id), text):
-                g[page_no] = list(enumerate(gt_cells))  # (cell_id, text)
-                p[page_no] = list(enumerate(pred_cells))
-            gt.append(g)
-            pred.append(p)
-        yield pdf[["doc_id"]].assign(gt_pages=gt, pred_pages=pred)
+def _segments(doc_id, text):
+    # a null text has null maps, as the native split gave it
+    gt, pred = (None, None) if text is None else ({}, {})
+    for page_no, _, gt_cells, pred_cells in segment_pages(doc_id, text):
+        gt[page_no] = list(enumerate(gt_cells))  # (cell_id, text)
+        pred[page_no] = list(enumerate(pred_cells))
+    yield doc_id, gt, pred
 
 
 def segmented_docs(spark: SparkSession, sf_dir: str,
@@ -114,30 +101,22 @@ def segmented_docs(spark: SparkSession, sf_dir: str,
     """(doc_id, gt_pages, pred_pages) with the map<int, array<struct>>
     segmented-page model, built by `segment_pages` in one Python stage."""
     docs = read_documents(spark, sf_dir, ["doc_id", "text"], n_partitions)
-    return docs.mapInPandas(_segment_batches, schema=(
-        f"doc_id bigint, gt_pages {_PAGES}, pred_pages {_PAGES}"))
+    return row_stage(docs, _segments,
+                     f"doc_id bigint, gt_pages {_PAGES}, pred_pages {_PAGES}")
 
 
-def _page_cer_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..functions.text_metrics import cer
-
-    for pdf in it:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            d = int(doc_id)
-            for page_no, mode, gt_cells, pred_cells in segment_pages(d, text):
-                gt, pred = " ".join(gt_cells), " ".join(pred_cells)
-                if gt and pred:
-                    # equality fast path: identical page text needs no DP
-                    c = 0.0 if pred == gt else cer(pred, gt)
-                    acc = 1.0 - min(1.0, c)
-                else:
-                    # reference ocr_evaluator.py:109-113: missing text on
-                    # either side = max error / zero accuracy
-                    c, acc = 1.0, 0.0
-                rows.append((d, page_no, mode, c, acc))
-        yield pd.DataFrame(rows, columns=[
-            "doc_id", "page_no", "mode", "cer", "char_accuracy"])
+def _page_cer(doc_id, text):
+    for page_no, mode, gt_cells, pred_cells in segment_pages(doc_id, text):
+        gt, pred = " ".join(gt_cells), " ".join(pred_cells)
+        if gt and pred:
+            # equality fast path: identical page text needs no DP
+            c = 0.0 if pred == gt else cer(pred, gt)
+            acc = 1.0 - min(1.0, c)
+        else:
+            # reference ocr_evaluator.py:109-113: missing text on either
+            # side = max error / zero accuracy
+            c, acc = 1.0, 0.0
+        yield doc_id, page_no, mode, c, acc
 
 
 def page_ocr_scores(spark: SparkSession, sf_dir: str,
@@ -147,7 +126,7 @@ def page_ocr_scores(spark: SparkSession, sf_dir: str,
     the same Python stage (Arrow-batched), one row per (doc_id, page_no).
     GT and prediction are built side by side, so nothing joins."""
     docs = read_documents(spark, sf_dir, ["doc_id", "text"], n_partitions)
-    return docs.mapInPandas(_page_cer_batches, schema=PAGE_OCR_SCHEMA)
+    return row_stage(docs, _page_cer, PAGE_OCR_SCHEMA)
 
 
 def ocr_rollup(scores: DataFrame) -> DataFrame:

@@ -18,49 +18,37 @@ is a native aggregation.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..corpus.layout_synth import mode, n_boxes, pred_page
+from ..functions.reading_order import ard_norm, predict_reading_order
+from ..session import row_stage
 from ..sources.tables import read_documents
 
 ARD_SCHEMA = "doc_id bigint, n_boxes int, mode int, ard_norm double, w_ard_norm double"
 
 
-def _ard_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..corpus.layout_synth import mode, n_boxes, pred_page
-    from ..functions.reading_order import ard_norm, predict_reading_order
-
-    for pdf in it:
-        rows = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            boxes, _, _ = pred_page(d)
-            n = len(boxes)
-            # deterministic shuffle (reference :207) — the rule must recover
-            # reading order from geometry, not from input sequence
-            rng = np.random.RandomState(d % (2**31))
-            perm = rng.permutation(n)
-            shuffled = boxes[perm]
-            order = predict_reading_order(shuffled)
-            # item at shuffled position order[j] has predicted rank j;
-            # map back to original item ids, then to ranks per item
-            pred_rank = np.empty(n, dtype=np.int64)
-            pred_rank[perm[order]] = np.arange(n)
-            areas = (boxes[:, 2] - boxes[:, 0]) * (boxes[:, 3] - boxes[:, 1])
-            a, w = ard_norm(pred_rank, areas)
-            rows.append((d, n_boxes(d), mode(d), a, w))
-        yield pd.DataFrame(rows, columns=[
-            "doc_id", "n_boxes", "mode", "ard_norm", "w_ard_norm"])
+def _ard(d):
+    boxes, _, _ = pred_page(d)
+    n = len(boxes)
+    # deterministic shuffle (reference :207) — the rule must recover
+    # reading order from geometry, not from input sequence
+    perm = np.random.RandomState(d % (2**31)).permutation(n)
+    order = predict_reading_order(boxes[perm])
+    # item at shuffled position order[j] has predicted rank j; map back
+    # to original item ids, then to ranks per item
+    pred_rank = np.empty(n, dtype=np.int64)
+    pred_rank[perm[order]] = np.arange(n)
+    areas = (boxes[:, 2] - boxes[:, 0]) * (boxes[:, 3] - boxes[:, 1])
+    yield (d, n_boxes(d), mode(d), *ard_norm(pred_rank, areas))
 
 
 def reading_order_scores(spark: SparkSession, sf_dir: str,
                          n_partitions: int = 16) -> DataFrame:
     docs = read_documents(spark, sf_dir, ["doc_id"], n_partitions)
-    return docs.mapInPandas(_ard_batches, schema=ARD_SCHEMA)
+    return row_stage(docs, _ard, ARD_SCHEMA)
 
 
 def reading_order_rollup(scores: DataFrame) -> DataFrame:

@@ -13,13 +13,19 @@ same row (co-located J1 pairing — no join)."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import literal_frame
+from ..corpus.html_synth import gt_table_html, synth_html, url_for
+from ..extraction.html_tokenizer import block_tuples
+from ..functions.teds import (
+    html_table_to_grid_cells,
+    is_complex_table,
+    table_shape,
+    teds_of_trees,
+    teds_tree,
+)
+from ..session import literal_frame, row_stage
 
 TEDS_SCHEMA = (
     "doc_id bigint, url string, teds double, teds_struct double, "
@@ -44,48 +50,6 @@ def perturb_table_html(html: str, mode: int) -> str:
     return out  # missing-table predictions pass through unperturbed
 
 
-def _teds_batches(it: Iterator[pd.DataFrame], html_source,
-                  perturb: bool = False) -> Iterator[pd.DataFrame]:
-    """`html_source(batch)` returns the batch's urls and html strings, as
-    for plans/pipeline.py `_extract_and_score`."""
-    from ..corpus.html_synth import gt_table_html
-    from ..extraction.html_tokenizer import block_tuples
-    from ..functions.teds import (
-        html_table_to_grid_cells,
-        is_complex_table,
-        table_shape,
-        teds_of_trees,
-        teds_tree,
-    )
-
-    for pdf in it:
-        rows = []
-        for doc_id, url, html in zip(pdf["doc_id"], *html_source(pdf)):
-            gt = gt_table_html(int(doc_id))
-            # the page's first captured <table> subtree, as extraction
-            # reports it; no text classification or span rows are needed
-            pred = next((t for t, tag, *_ in block_tuples(html)
-                         if tag == "table"), "")
-            if perturb:
-                pred = perturb_table_html(pred, int(doc_id) % 4)
-            gt_cells = html_table_to_grid_cells(gt)
-            pred_cells = html_table_to_grid_cells(pred)
-            gnr, gnc = table_shape(gt_cells)
-            pnr, pnc = table_shape(pred_cells)
-            t_gt, t_pred = teds_tree(gt), teds_tree(pred)
-            rows.append((
-                int(doc_id), url,
-                teds_of_trees(t_gt, t_pred),
-                teds_of_trees(t_gt, t_pred, structure_only=True),
-                is_complex_table(gt_cells),
-                gnr, gnc, pnr, pnc,
-            ))
-        yield pd.DataFrame(rows, columns=[
-            "doc_id", "url", "teds", "teds_struct", "is_complex",
-            "gt_nrows", "gt_ncols", "pred_nrows", "pred_ncols",
-        ])
-
-
 def teds_scores(spark: SparkSession, sf_dir: str, n_partitions: int = 16,
                 perturb: bool = False) -> DataFrame:
     """Keep the table pages (doc_id % 5 == 0) of the light (doc_id, text,
@@ -94,18 +58,30 @@ def teds_scores(spark: SparkSession, sf_dir: str, n_partitions: int = 16,
     it against regenerable GT, so no html crosses a shuffle or Arrow.
     `perturb` applies the deterministic shape perturbations (mode =
     doc_id % 4) so the delta histogram has non-trivial bins."""
-    from functools import partial
-
     from ..operators.skew import salted_repartition
     from ..sources.tables import read_documents
-    from .pipeline import _synth_source
+
+    def _teds(doc_id, text, lang):
+        html = synth_html(doc_id, text, lang).decode("utf-8")
+        # the page's first captured <table> subtree, as extraction reports
+        # it; no text classification or span rows are needed
+        pred = next((t for t, tag, *_ in block_tuples(html) if tag == "table"), "")
+        if perturb:
+            pred = perturb_table_html(pred, doc_id % 4)
+        gt = gt_table_html(doc_id)
+        gt_cells = html_table_to_grid_cells(gt)
+        pred_cells = html_table_to_grid_cells(pred)
+        t_gt, t_pred = teds_tree(gt), teds_tree(pred)
+        yield (doc_id, url_for(doc_id),
+               teds_of_trees(t_gt, t_pred),
+               teds_of_trees(t_gt, t_pred, structure_only=True),
+               is_complex_table(gt_cells),
+               *table_shape(gt_cells), *table_shape(pred_cells))
 
     docs = read_documents(spark, sf_dir, ["doc_id", "text", "lang"])
     tables = salted_repartition(docs.where(F.col("doc_id") % 5 == 0),
                                 n_partitions, key="doc_id")
-    return tables.mapInPandas(
-        partial(_teds_batches, html_source=_synth_source, perturb=perturb),
-        schema=TEDS_SCHEMA)
+    return row_stage(tables, _teds, TEDS_SCHEMA)
 
 
 def teds_rollup(scores: DataFrame) -> DataFrame:

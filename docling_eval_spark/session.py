@@ -14,10 +14,12 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Callable, Iterable, Iterator
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StructType
+from pyspark.sql.types import ArrayType, IntegralType, StructType
 
 DEFAULT_CONFS = {
     "spark.sql.adaptive.enabled": "true",
@@ -82,3 +84,34 @@ def literal_frame(spark: SparkSession, rows: list[tuple],
     data = F.lit(json.dumps([obj(r, schema) for r in rows]))
     return spark.range(1).select(F.inline(
         F.from_json(data, ArrayType(schema), {"mode": "FAILFAST"})))
+
+
+def row_stage(df: DataFrame, rows_of: Callable[..., Iterable[tuple]],
+              schema: str) -> DataFrame:
+    """One Python stage that calls `rows_of(*values)` for each row of `df`,
+    the values in `df`'s column order, and keeps the zero or more tuples
+    it yields, in `schema` (a DDL string) order. A null input arrives as
+    None (a NaN double too: pandas cannot tell the two apart), except in
+    a timestamp column, where it is pandas' NaT. Output values take the shapes `createDataFrame` takes (a tuple or
+    dict for a struct, a dict for a map). The plan's `MapInPandas` node
+    carries `rows_of`'s name."""
+    names = StructType.fromDDL(schema).fieldNames()
+    integral = [isinstance(f.dataType, IntegralType) for f in df.schema]
+
+    def stage(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            cols = [_python_values(s, i) for (_, s), i in zip(pdf.items(), integral)]
+            yield pd.DataFrame([out for row in zip(*cols) for out in rows_of(*row)],
+                               columns=names)
+
+    stage.__name__ = rows_of.__name__
+    return df.mapInPandas(stage, schema)
+
+
+def _python_values(s: pd.Series, integral: bool):
+    """A batch column whose iteration yields Python values, None for null:
+    pandas holds a null number as NaN, and an integral column with a null
+    as float64. Any other column already iterates that way."""
+    if s.dtype.kind != "f" or not s.hasnans:
+        return s
+    return [None if v != v else int(v) if integral else v for v in s.tolist()]

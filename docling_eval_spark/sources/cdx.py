@@ -29,12 +29,11 @@ from __future__ import annotations
 
 import hashlib
 import zlib
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..session import row_stage
 
 # the JSON block's published fields (all strings in CDXJ)
 _BLOCK_SCHEMA = T.StructType([
@@ -46,9 +45,6 @@ _BLOCK_SCHEMA = T.StructType([
     T.StructField("offset", T.StringType()),
     T.StructField("filename", T.StringType()),
 ])
-
-CDX_COLUMNS = ("surt_key", "capture_ts", "url", "mime", "status",
-               "digest", "warc_filename", "offset", "length")
 
 
 def parse_cdxj(df: DataFrame, line_col: str = "line") -> DataFrame:
@@ -176,27 +172,21 @@ def index_warc_members(df: DataFrame, payload_col: str = "content",
     those with warc_records instead."""
     from .warc import parse_warc
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for path, payload in zip(pdf[path_col], pdf[payload_col]):
-                b = bytes(payload)
-                if b[:2] != b"\x1f\x8b":
-                    continue
-                for off, length, data in _iter_gzip_members(b):
-                    recs, _bad = parse_warc(data)
-                    for r in recs:
-                        if r["rec_type"] not in rec_types or not r["url"]:
-                            continue
-                        rows.append((
-                            _surt(r["url"]), r["warc_ts"], r["url"],
-                            r["mime"], r["http_status"],
-                            "sha1:" + hashlib.sha1(r["body"]).hexdigest(),
-                            path, off, length))
-            yield pd.DataFrame(rows, columns=list(CDX_COLUMNS))
+    def _index_members(path, payload):
+        b = bytes(payload)
+        if b[:2] != b"\x1f\x8b":
+            return
+        for off, length, data in _iter_gzip_members(b):
+            recs, _bad = parse_warc(data)
+            for r in recs:
+                if r["rec_type"] in rec_types and r["url"]:
+                    yield (_surt(r["url"]), r["warc_ts"], r["url"], r["mime"],
+                           r["http_status"],
+                           "sha1:" + hashlib.sha1(r["body"]).hexdigest(),
+                           path, off, length)
 
-    return df.select(path_col, payload_col).mapInPandas(
-        gen, schema=INDEX_SCHEMA)
+    return row_stage(df.select(path_col, payload_col), _index_members,
+                     INDEX_SCHEMA)
 
 
 FETCHED_SCHEMA = ("warc_filename string, url string, warc_ts timestamp, "
@@ -227,24 +217,16 @@ def fetch_manifest_records(manifest: DataFrame, archives: DataFrame,
                       F.col(payload_col).alias("_bytes"))
               .join(ranges, "warc_filename"))
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for fn, payload, rngs in zip(
-                    pdf["warc_filename"], pdf["_bytes"], pdf["_ranges"]):
-                b = bytes(payload)
-                for r in rngs:
-                    off, length = int(r["offset"]), int(r["length"])
-                    member = b[off:off + length]
-                    if member[:2] == b"\x1f\x8b":
-                        member = zlib.decompress(member, 31)
-                    recs, _bad = parse_warc(member)
-                    for rec in recs:
-                        rows.append((fn, rec["url"], rec["warc_ts"],
-                                     rec["http_status"], rec["mime"],
-                                     rec["body"]))
-            yield pd.DataFrame(rows, columns=[
-                "warc_filename", "url", "warc_ts", "http_status",
-                "mime", "html"])
+    def _fetch_ranges(fn, payload, rngs):
+        b = bytes(payload)
+        for r in rngs:
+            off, length = int(r["offset"]), int(r["length"])
+            member = b[off:off + length]
+            if member[:2] == b"\x1f\x8b":
+                member = zlib.decompress(member, 31)
+            recs, _bad = parse_warc(member)
+            for rec in recs:
+                yield (fn, rec["url"], rec["warc_ts"], rec["http_status"],
+                       rec["mime"], rec["body"])
 
-    return joined.mapInPandas(gen, schema=FETCHED_SCHEMA)
+    return row_stage(joined, _fetch_ranges, FETCHED_SCHEMA)

@@ -34,9 +34,10 @@ Faithful reference behaviors (kept deliberately, cited):
 from __future__ import annotations
 
 import json
-from typing import Iterator
 
 from pyspark.sql import DataFrame
+
+from ..session import row_stage
 
 CLOUD_OCR_ITEMS_SCHEMA = (
     "doc_id bigint, item_idx int, kind string, page_no int, label string, "
@@ -45,8 +46,6 @@ CLOUD_OCR_ITEMS_SCHEMA = (
     "column_header boolean, row_header boolean, num_rows int, num_cols int"
 )
 
-_COLS = [f.strip().split(" ")[0]
-         for f in CLOUD_OCR_ITEMS_SCHEMA.split(",")]
 
 # Textract LAYOUT_* block -> docling label (aws_prediction_provider.py
 # :270-299 add_* dispatch: title/heading/list/figure/header/footer keep
@@ -365,28 +364,20 @@ def parse_responses(df: DataFrame, provider: str | None = None,
     item rows. provider=None sniffs per row (mixed buckets). Textract
     needs page dims for its normalized-coordinate scaling (the reference
     takes them from GT page images, aws :205-210); default 612x792 US
-    Letter points when no columns are given."""
-    import pandas as pd
-
+    Letter points when no columns are given or a row's are null."""
     cols = [key, response_col]
     if page_w_col:
         cols += [page_w_col, page_h_col]
 
-    def gen(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            out = []
-            for _, rec in pdf.iterrows():
-                resp = json.loads(rec[response_col])
-                prov = provider or detect_provider(resp)
-                if prov is None:
-                    continue
-                if prov == "textract":
-                    w = float(rec[page_w_col]) if page_w_col else 612.0
-                    h = float(rec[page_h_col]) if page_h_col else 792.0
-                    items = parse_textract(resp, w, h)
-                else:
-                    items = _PARSERS[prov](resp)
-                out += [(int(rec[key]),) + item for item in items]
-            yield pd.DataFrame(out, columns=_COLS)
+    def _items(doc_id, response_json, w=None, h=None):
+        resp = json.loads(response_json)
+        prov = provider or detect_provider(resp)
+        if prov == "textract":
+            items = parse_textract(resp, 612.0 if w is None else float(w),
+                                   792.0 if h is None else float(h))
+        else:
+            items = _PARSERS[prov](resp) if prov else []
+        for item in items:
+            yield (int(doc_id), *item)
 
-    return df.select(*cols).mapInPandas(gen, schema=CLOUD_OCR_ITEMS_SCHEMA)
+    return row_stage(df.select(*cols), _items, CLOUD_OCR_ITEMS_SCHEMA)

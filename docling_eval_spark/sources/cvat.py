@@ -18,11 +18,11 @@ annotation metadata, so this stays embarrassingly parallel.
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from ..session import row_stage
 
 CVAT_SPAN_FIELDS = (
     "image string, idx int, label string, l double, t double, "
@@ -122,16 +122,11 @@ def parse_cvat_image(xml_s: str) -> list[dict]:
     return images[0][1] if images else []
 
 
-def _cvat_span_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        rows = []
-        for key_val, xml_s in zip(pdf["_key"], pdf["xml"]):
-            for name, boxes in parse_cvat_images(xml_s):
-                for idx, bx in enumerate(boxes):
-                    rows.append((key_val, name, idx, bx["label"],
-                                 bx["l"], bx["t"], bx["r"], bx["b"]))
-        yield pd.DataFrame(rows, columns=[
-            "_key", "image", "idx", "label", "l", "t", "r", "b"])
+def _cvat_spans(key_val, xml_s):
+    for name, boxes in parse_cvat_images(xml_s):
+        for idx, bx in enumerate(boxes):
+            yield (key_val, name, idx, bx["label"],
+                   bx["l"], bx["t"], bx["r"], bx["b"])
 
 
 def cvat_annotation_spans(df: DataFrame, xml_col: str = "xml",
@@ -142,11 +137,8 @@ def cvat_annotation_spans(df: DataFrame, xml_col: str = "xml",
     multi-image); the `image` column carries the per-page name. The key
     column keeps its input type (bigint doc ids or string task ids)."""
     ktype = dict(df.dtypes)[key]
-    return df.select(F.col(key).alias("_key"),
-                     F.col(xml_col).alias("xml")) \
-        .mapInPandas(_cvat_span_batches,
-                     schema=f"_key {ktype}, {CVAT_SPAN_FIELDS}") \
-        .withColumnRenamed("_key", key)
+    return row_stage(df.select(key, xml_col), _cvat_spans,
+                     f"{key} {ktype}, {CVAT_SPAN_FIELDS}")
 
 
 # -- Full document reconstruction ---------------------------------------------
@@ -374,27 +366,14 @@ def cvat_document_items(df: DataFrame, xml_col: str = "xml",
     """(key, xml[, texts]) -> reconstructed document items, one Arrow
     stage across the corpus."""
     ktype = dict(df.dtypes)[key]
-    cols = [F.col(key).alias("_key"), F.col(xml_col).alias("xml")]
-    cols.append(F.col(texts_col).alias("texts") if texts_col
-                else F.lit(None).cast("array<string>").alias("texts"))
+    texts = (F.col(texts_col) if texts_col
+             else F.lit(None).cast("array<string>"))
+    fields = StructType.fromDDL(CVAT_ITEM_FIELDS).fieldNames()
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for key_val, xml_s, texts in zip(pdf["_key"], pdf["xml"],
-                                             pdf["texts"]):
-                tl = list(texts) if texts is not None else None
-                for item in parse_cvat_document(xml_s, tl):
-                    rows.append((key_val,) + tuple(
-                        item[k] for k in (
-                            "item_idx", "boxid", "label", "kind", "text",
-                            "l", "t", "r", "b", "parent_idx", "n_provs",
-                            "merged_boxids", "level")))
-            yield pd.DataFrame(rows, columns=[
-                "_key", "item_idx", "boxid", "label", "kind", "text",
-                "l", "t", "r", "b", "parent_idx", "n_provs",
-                "merged_boxids", "level"])
+    def _cvat_items(key_val, xml_s, texts):
+        tl = list(texts) if texts is not None else None
+        for item in parse_cvat_document(xml_s, tl):
+            yield (key_val, *(item[k] for k in fields))
 
-    return df.select(*cols).mapInPandas(
-        gen, schema=f"_key {ktype}, {CVAT_ITEM_FIELDS}") \
-        .withColumnRenamed("_key", key)
+    return row_stage(df.select(key, xml_col, texts), _cvat_items,
+                     f"{key} {ktype}, {CVAT_ITEM_FIELDS}")

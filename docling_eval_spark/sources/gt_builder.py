@@ -26,13 +26,17 @@ stage — and only over the rows that actually carry a table.
 from __future__ import annotations
 
 import json
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import literal_frame
+from ..functions.teds import (
+    grid_cells_to_html,
+    html_table_to_grid_cells,
+    is_complex_table,
+    table_shape,
+)
+from ..session import literal_frame, row_stage
 
 # annotation element labels -> document-model labels
 # (dpbench_builder.py:174-276 branch-by-branch)
@@ -60,16 +64,8 @@ ANNOTATION_SCHEMA = (
 )
 
 
-def _table_shape_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..functions.teds import html_table_to_grid_cells, table_shape
-
-    for pdf in it:
-        rows = []
-        for doc_id, elem_idx, html in zip(pdf["doc_id"], pdf["elem_idx"],
-                                          pdf["html"]):
-            nr, nc = table_shape(html_table_to_grid_cells(html))
-            rows.append((doc_id, int(elem_idx), nr, nc))
-        yield pd.DataFrame(rows, columns=["doc_id", "elem_idx", "_tnr", "_tnc"])
+def _table_shape(key_val, elem_idx, html):
+    yield (key_val, elem_idx, *table_shape(html_table_to_grid_cells(html)))
 
 
 def dpbench_spans(anno_df: DataFrame, key: str = "doc_id",
@@ -109,10 +105,9 @@ def dpbench_spans(anno_df: DataFrame, key: str = "doc_id",
         F.col("e.content.html").alias("html"),
     )
     ktype = dict(anno_df.dtypes)[key]  # bigint doc ids or string filenames
-    shapes = base.where(F.col("_src") == "Table") \
-        .select(key, "elem_idx", "html") \
-        .mapInPandas(_table_shape_batches,
-                     schema=f"{key} {ktype}, elem_idx int, _tnr int, _tnc int")
+    shapes = row_stage(
+        base.where(F.col("_src") == "Table").select(key, "elem_idx", "html"),
+        _table_shape, f"{key} {ktype}, elem_idx int, _tnr int, _tnc int")
     out = base.join(shapes, on=[key, "elem_idx"], how="left")
     # Index tables: the reference's "ultra approximate" 2-column index
     # table (dpbench_builder.py:190-196): one row per raw-text line.
@@ -482,31 +477,16 @@ TABLE_RECORD_SCHEMA = (
 )
 
 
-def _table_record_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..functions.teds import (
-        grid_cells_to_html,
-        html_table_to_grid_cells,
-        is_complex_table,
-        table_shape,
-    )
-
-    for pdf in it:
-        rows = []
-        for doc_id, html in zip(pdf["doc_id"], pdf["table_html"]):
-            cells = html_table_to_grid_cells(html)
-            nr, nc = table_shape(cells)
-            rebuilt = grid_cells_to_html(cells)
-            roundtrip = html_table_to_grid_cells(rebuilt) == cells
-            covered = sum(c["rowspan"] * c["colspan"] for c in cells)
-            rows.append((
-                int(doc_id), nr, nc, is_complex_table(cells),
-                [(c["row"], c["col"], c["rowspan"], c["colspan"], c["text"])
-                 for c in cells],
-                rebuilt, roundtrip, covered == nr * nc,
-            ))
-        yield pd.DataFrame(rows, columns=[
-            "doc_id", "n_rows", "n_cols", "is_complex", "cells",
-            "rebuilt_html", "roundtrip_exact", "grid_full"])
+def _table_record(doc_id, html):
+    cells = html_table_to_grid_cells(html)
+    nr, nc = table_shape(cells)
+    rebuilt = grid_cells_to_html(cells)
+    covered = sum(c["rowspan"] * c["colspan"] for c in cells)
+    yield (doc_id, nr, nc, is_complex_table(cells),
+           [(c["row"], c["col"], c["rowspan"], c["colspan"], c["text"])
+            for c in cells],
+           rebuilt, html_table_to_grid_cells(rebuilt) == cells,
+           covered == nr * nc)
 
 
 def table_records(df: DataFrame, html_col: str = "table_html",
@@ -515,9 +495,8 @@ def table_records(df: DataFrame, html_col: str = "table_html",
     :157-252): table HTML -> span-aware grid-cell records with shape,
     complexity, the canonical re-serialization, and two self-gates
     (exact parse round-trip; full grid coverage)."""
-    return df.select(F.col(key).alias("doc_id"),
-                     F.col(html_col).alias("table_html")) \
-        .mapInPandas(_table_record_batches, schema=TABLE_RECORD_SCHEMA)
+    return row_stage(df.select(key, html_col), _table_record,
+                     TABLE_RECORD_SCHEMA)
 
 
 # -- DocLayNet v2 key-value graph builder -------------------------------------

@@ -14,12 +14,12 @@ small, shuffle-on-key at corpus scale.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.doctags import parse_doctags
+from ..functions.text_metrics import score_text_pair
+from ..session import row_stage
 from .binary_files import read_binary_files
 
 DOCTAGS_SPAN_SCHEMA = (
@@ -40,17 +40,9 @@ def read_prediction_files(spark: SparkSession, input_path: str,
     )
 
 
-def _doctags_span_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..functions.doctags import parse_doctags
-
-    for pdf in it:
-        rows = []
-        for doc_id, s in zip(pdf["doc_id"], pdf["pred_text"]):
-            for i, sp in enumerate(parse_doctags(s)):
-                rows.append((doc_id, i, sp.label, sp.l, sp.t, sp.r, sp.b,
-                             sp.text))
-        yield pd.DataFrame(rows, columns=[
-            "doc_id", "idx", "label", "l", "t", "r", "b", "text"])
+def _doctags_spans(doc_id, s):
+    for i, sp in enumerate(parse_doctags(s)):
+        yield doc_id, i, sp.label, sp.l, sp.t, sp.r, sp.b, sp.text
 
 
 def read_doctags_prediction_spans(spark: SparkSession,
@@ -60,7 +52,7 @@ def read_doctags_prediction_spans(spark: SparkSession,
     flat span rows instead of a driver-side document object. Parsing runs
     in one Arrow-batched stage over the distributed file read."""
     preds = read_prediction_files(spark, input_path, "dt")
-    return preds.mapInPandas(_doctags_span_batches, schema=DOCTAGS_SPAN_SCHEMA)
+    return row_stage(preds, _doctags_spans, DOCTAGS_SPAN_SCHEMA)
 
 
 def pair_with_gt(gt: DataFrame, preds: DataFrame, key: str = "doc_id",
@@ -78,23 +70,13 @@ SCORED_FILES_SCHEMA = (
 )
 
 
-def _score_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..functions.text_metrics import score_text_pair
-
-    for pdf in it:
-        rows = []
-        for doc_id, gt_text, pred_text in zip(
-                pdf["doc_id"], pdf["gt_text"], pdf["pred_text"]):
-            if pred_text is None:
-                rows.append((doc_id, False, 0.0, 0.0, 0.0, 0.0, 1.0, 0.0))
-                continue
-            m = score_text_pair(pred_text, gt_text)
-            rows.append((doc_id, True, m["bleu"], m["f1_score"],
-                         m["precision"], m["recall"], m["edit_distance"],
-                         m["meteor"]))
-        yield pd.DataFrame(rows, columns=[
-            "doc_id", "has_prediction", "bleu", "f1_score", "precision",
-            "recall", "edit_distance", "meteor"])
+def _file_scores(doc_id, gt_text, pred_text):
+    if pred_text is None:
+        yield doc_id, False, 0.0, 0.0, 0.0, 0.0, 1.0, 0.0
+        return
+    m = score_text_pair(pred_text, gt_text)
+    yield (doc_id, True, m["bleu"], m["f1_score"], m["precision"],
+           m["recall"], m["edit_distance"], m["meteor"])
 
 
 def score_prediction_files(spark: SparkSession, gt: DataFrame,
@@ -110,4 +92,4 @@ def score_prediction_files(spark: SparkSession, gt: DataFrame,
         gt.select(F.col(key).cast("string").alias("doc_id"),
                   F.col(text_col).alias("gt_text")),
         preds, key="doc_id", how="left")
-    return paired.mapInPandas(_score_batches, schema=SCORED_FILES_SCHEMA)
+    return row_stage(paired, _file_scores, SCORED_FILES_SCHEMA)

@@ -37,6 +37,8 @@ from urllib.parse import quote
 
 from pyspark.sql import DataFrame
 
+from ..session import row_stage
+
 _CRLF2 = b"\r\n\r\n"
 
 
@@ -168,25 +170,14 @@ def warc_records(df: DataFrame, payload_col: str = "content",
     exact bytes the extraction pipeline's html column expects.
     n_malformed is per-archive torn-record accounting (repeated on each
     row of its archive; aggregate with max per archive)."""
-    import pandas as pd
+    def _records(path, payload):
+        recs, bad = parse_warc(bytes(payload))
+        for r in recs:
+            if not responses_only or r["rec_type"] == "response":
+                yield (path, r["rec_type"], r["url"], r["warc_ts"],
+                       r["http_status"], r["mime"], r["body"], bad)
 
-    def gen(it):
-        for pdf in it:
-            rows = []
-            for path, payload in zip(pdf[path_col], pdf[payload_col]):
-                recs, bad = parse_warc(bytes(payload))
-                for r in recs:
-                    if responses_only and r["rec_type"] != "response":
-                        continue
-                    rows.append((path, r["rec_type"], r["url"],
-                                 r["warc_ts"], r["http_status"], r["mime"],
-                                 r["body"], bad))
-            yield pd.DataFrame(rows, columns=[
-                "archive", "rec_type", "url", "warc_ts", "http_status",
-                "mime", "html", "n_malformed"])
-
-    return df.select(path_col, payload_col).mapInPandas(
-        gen, schema=WARC_SCHEMA)
+    return row_stage(df.select(path_col, payload_col), _records, WARC_SCHEMA)
 
 
 def build_wet(records: list[tuple[str, datetime, bytes]],
@@ -224,9 +215,6 @@ def wet_export(df: DataFrame, docs_per_shard: int = 1000,
     from its collected record list — docs_per_shard bounds the rows a
     single build sees, the WET twin of warc_records' archive-per-row
     memory note."""
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql import functions as F
 
     n = df.count()
@@ -240,14 +228,9 @@ def wet_export(df: DataFrame, docs_per_shard: int = 1000,
         F.sort_array(F.collect_list(F.struct("_k", "_u", "_t", "_x")))
         .alias("_recs"))
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for s, recs in zip(pdf["_s"], pdf["_recs"]):
-                triples = [(r["_u"], r["_t"],
-                            str(r["_x"]).encode("utf-8")) for r in recs]
-                rows.append((f"{prefix}-{int(s):05d}.warc.wet.gz",
-                             bytearray(build_wet(triples))))
-            yield pd.DataFrame(rows, columns=["path", "content"])
+    def _shard(s, recs):
+        triples = [(r["_u"], r["_t"], str(r["_x"]).encode("utf-8"))
+                   for r in recs]
+        yield f"{prefix}-{s:05d}.warc.wet.gz", bytearray(build_wet(triples))
 
-    return grouped.mapInPandas(gen, schema="path string, content binary")
+    return row_stage(grouped, _shard, "path string, content binary")
