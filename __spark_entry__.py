@@ -2279,22 +2279,6 @@ def _q_dedup_against_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.md5("text").alias("text_md5")).orderBy("doc_id")
 
 
-def _q_bloom_dedup_against(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same contract as dedup_against_history, through the Bloom-
-    prefiltered path: the batch-side filter prunes the history scan
-    and the exact md5 stage keeps the output row-identical, so the
-    oracle is the plain anti-join closure."""
-    from docling_eval_spark.operators.dedup import bloom_dedup_against
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text")
-    history = docs.where(F.col("doc_id") % 2 == 0)
-    batch = docs.where(F.col("doc_id") % 2 == 1)
-    kept = bloom_dedup_against(batch, history)
-    return kept.select(
-        "doc_id", F.md5("text").alias("text_md5")).orderBy("doc_id")
-
-
 def _q_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lee et al. 2022 exact duplicate-span measurement at n=8 tokens:
     per-doc count of positions inside corpus-repeated 8-grams and the
@@ -2464,17 +2448,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     entries with no gate row ever; (3) entries whose last gate row is
     the OLDEST; (4) the rest, least-recently-verified first.
 
-    Current order: the three entries whose code changed lead
-    (textract_spans now calls the shared cloud-items projection;
-    minhash_near_dup and near_dedup_kept run minhash_dedup_pairs and
-    near_dedup, whose lazy-plan branch is gone), then the round-5 order
-    unchanged.
+    Current order: the four entries whose code changed lead (near_dedup
+    and near_dedup_against are now one pipeline that signs each row
+    once, dedup_against is the history anti-join followed by
+    exact_dedup's collapse, and minhash_dedup_pairs signs into a
+    checkpoint before the shared pair step), then textract_spans (the
+    shared cloud-items projection), then the round-5 order unchanged.
     """
     return {
         # --- implementation changed since their last gate row ---
-        "textract_spans": _q_textract_spans,
-        "minhash_near_dup": _q_minhash_near_dup,
         "near_dedup_kept": _q_near_dedup_kept,
+        "near_dedup_against_history": _q_near_dedup_against,
+        "dedup_against_history": _q_dedup_against_history,
+        "minhash_near_dup": _q_minhash_near_dup,
+        "textract_spans": _q_textract_spans,
         # --- changed in round 5 ---
         "robots_meta_flags": _q_robots_flags,
         "embedding_near_dup": _q_embedding_near_dup,
@@ -2484,8 +2471,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pack_bpe_sequences": _q_pack_bpe_sequences,
         "token_budget_select": _q_token_budget,
         "webtext_line_dedup": _q_webtext_line_dedup,
-        "near_dedup_against_history": _q_near_dedup_against,
-        "bloom_dedup_against_history": _q_bloom_dedup_against,
         "range_slice": _q_range_slice,
         "webtext_unigram_nll": _q_webtext_unigram_nll,
         "perplexity_buckets": _q_perplexity_buckets,
@@ -2516,7 +2501,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "azure_docai_spans": _q_azure_docai_spans,
         "cumulative_histogram": _q_cumulative_histogram,
         "cvat_document_items": _q_cvat_document_items,
-        "dedup_against_history": _q_dedup_against_history,
         "dedup_components": _q_dedup_components,
         "doclaynet_v2_kv": _q_doclaynet_v2_kv,
         "duplicate_spans": _q_duplicate_spans,
@@ -3143,17 +3127,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT min(doc_id) AS doc_id, _h AS text_md5 FROM s "
             "GROUP BY _h ORDER BY doc_id"
         ),
-        # the Bloom prefilter is output-invariant: identical oracle
-        "bloom_dedup_against_history": (
-            "WITH h AS (SELECT DISTINCT md5(text) AS _h FROM documents "
-            "WHERE doc_id % 2 = 0), "
-            "b AS (SELECT doc_id, md5(text) AS _h FROM documents "
-            "WHERE doc_id % 2 = 1), "
-            "s AS (SELECT doc_id, _h FROM b "
-            "WHERE _h NOT IN (SELECT _h FROM h)) "
-            "SELECT min(doc_id) AS doc_id, _h AS text_md5 FROM s "
-            "GROUP BY _h ORDER BY doc_id"
-        ),
         "duplicate_spans": (
             "WITH w AS (SELECT doc_id, "
             "string_split_regex(trim(text), '\\s+') AS ws FROM documents), "
@@ -3694,8 +3667,9 @@ def oracle_sql() -> dict[str, str]:
             "SELECT lang, count(*) AS n FROM documents GROUP BY lang ORDER BY lang"
         ),
         "dedup_exact": (
-            "SELECT count(*) AS n_docs, count(DISTINCT md5(text)) AS n_unique, "
-            "count(*) - count(DISTINCT md5(text)) AS n_dupes FROM documents"
+            "SELECT count(*) AS n_docs, "
+            "count(DISTINCT md5(text)) + count(*) - count(text) AS n_unique, "
+            "count(text) - count(DISTINCT md5(text)) AS n_dupes FROM documents"
         ),
         "minhash_near_dup": (
             "WITH corpus AS ("

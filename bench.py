@@ -101,8 +101,10 @@ def _timed(spark, fn, runs: int = 2) -> float:
     """Steady-state timing: best of `runs` (first run pays one-time
     codegen/broadcast/Python-worker costs that a long-lived cluster job
     amortizes away). clearCache() between runs releases caller-owned
-    persisted frames (near_dedup, corpus_map pairs) so each query is
-    measured cold-cache; bench owns no long-lived caches of its own."""
+    persisted frames (corpus_map pairs) so each query is measured
+    cold-cache; the dedup queries' local checkpoints are not caches and
+    stay until the group's process exits. bench owns no long-lived
+    caches of its own."""
     best = float("inf")
     for _ in range(runs):
         t0 = time.perf_counter()

@@ -1,49 +1,62 @@
 """Deduplication operators for training-data pipelines.
 
 All scale paths avoid the O(n^2) trap:
-  - exact:      one groupBy on a content hash (shuffle on 8-byte keys only).
+  - exact:      one groupBy on a content hash (hashes and keys only).
   - minhash LSH: shingles -> K minhashes -> B bands -> band-bucket self-join
                  (candidate pairs only; a 10^12-doc corpus never compares
-                 all pairs). Signatures are computed with numpy inside one
-                 Arrow batch UDF; banding/bucketing/joins are native.
+                 all pairs). Signatures are computed with numpy in one
+                 per-row Python stage; banding/bucketing/joins are native.
   - n-gram Jaccard: exact verify step on LSH candidates (array_intersect /
                  array_union on token shingle arrays — JVM-side).
   - embedding cosine near-dup: see similarity.brute_force_topk.
 
-MinHash LSH is the one text near-duplicate detector: near_dedup,
-near_dedup_against and the streaming ingest
-(streaming.ingest.start_dedup_ingest) all go through it.
+MinHash LSH is the one text near-duplicate detector, and
+near_dedup_pipeline is the one near-dedup pipeline: near_dedup runs it
+with no history, near_dedup_against with one, and the streaming ingest
+(streaming.ingest.start_dedup_ingest) also stores the signatures it
+computed. A row whose text is NULL passes through every stage: it is
+never collapsed, never signed and never a duplicate.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import row_stage
 
 # -- exact ------------------------------------------------------------------
 
 
 def exact_dedup_summary(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(n_docs, n_unique, n_dupes) by md5 content hash."""
-    h = F.md5(F.encode(F.col(text_col), "utf-8"))
+    """(n_docs, n_unique, n_dupes) by md5 content hash: the rows
+    exact_dedup keeps and drops, so each NULL text counts as unique."""
+    h = F.md5(F.col(text_col))
     return df.agg(
         F.count("*").alias("n_docs"),
-        F.countDistinct(h).alias("n_unique"),
-        (F.count("*") - F.countDistinct(h)).alias("n_dupes"),
+        (F.countDistinct(h) + F.count("*") - F.count(h)).alias("n_unique"),
+        (F.count(h) - F.countDistinct(h)).alias("n_dupes"),
     )
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", key: str = "doc_id") -> DataFrame:
-    """Keep the min-key representative per identical content (deterministic)."""
-    h = F.md5(F.encode(F.col(text_col), "utf-8")).alias("_h")
-    w = df.select("*", h)
-    keep = w.groupBy("_h").agg(F.min(key).alias(key)).select(key)
-    return df.join(keep, on=key, how="left_semi")
+    """Keep the min-key representative per identical content (deterministic).
+    A row whose text is NULL is always kept."""
+    return _keep_min_key(df.withColumn("_h", F.md5(F.col(text_col))), key)
+
+
+def _keep_min_key(hashed: DataFrame, key: str) -> DataFrame:
+    """The one collapse rule, over rows carrying their md5 text hash `_h`:
+    each hash keeps its min-key row. A NULL hash (a NULL text) groups
+    with its own key only, so its row is always kept. The groupBy moves
+    hashes and keys only. Returns the kept rows without `_h`."""
+    h = F.col("_h")
+    keep = (hashed.groupBy(h, F.when(h.isNull(), F.col(key)).alias("_n"))
+            .agg(F.min(key).alias(key)).select(key))
+    return hashed.join(keep, key, "left_semi").drop("_h")
 
 
 # -- shingles / minhash -------------------------------------------------------
@@ -95,20 +108,19 @@ def _shingle_hashes(text: str, n: int,
 
 def minhash_signatures(df: DataFrame, text_col: str = "text", key: str = "doc_id",
                        num_hashes: int = 128, shingle_n: int = 3) -> DataFrame:
-    """(key, sig: array<bigint>) — numpy-vectorized inside Arrow batches."""
+    """(key, sig: array<bigint>) for each row whose text is not NULL, in
+    one per-row Python stage (`MapInPandas _minhash`, numpy-vectorized
+    over a row's shingles). The key keeps its dtype: WARC corpora carry
+    md5-hex string ids."""
     a, b = _minhash_params(num_hashes)
 
-    def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            sigs = []
-            for text in pdf[text_col]:
-                sh = _shingle_hashes(text, shingle_n)  # [S]
-                # (a*x + b) mod p, min over shingles — vectorized [K,S]
-                vals = (a[:, None] * sh[None, :] + b[:, None]) % MERSENNE
-                sigs.append(vals.min(axis=1).tolist())
-            yield pd.DataFrame({key: pdf[key], "sig": sigs})
+    def _minhash(k, text):
+        sh = _shingle_hashes(text, shingle_n)  # [S]
+        # (a*x + b) mod p, min over shingles — vectorized [K,S]
+        yield k, ((a[:, None] * sh[None, :] + b[:, None]) % MERSENNE).min(axis=1).tolist()
 
-    return df.select(key, text_col).mapInPandas(gen, schema=f"{key} bigint, sig array<bigint>")
+    texts = df.select(key, text_col).where(F.col(text_col).isNotNull())
+    return row_stage(texts, _minhash, f"{key} {dict(df.dtypes)[key]}, sig array<bigint>")
 
 
 def banded_signatures(sigs: DataFrame, key: str,
@@ -170,8 +182,9 @@ def minhash_lsh_candidates(sigs: DataFrame, key: str = "doc_id",
 
     `max_bucket_size` enables the degenerate-bucket guard (see
     _drop_hot_buckets). With the guard on, the banded subtree is consumed
-    twice (size aggregate + anti-join) — persist `sigs` upstream so the
-    signature UDF runs once (minhash_dedup_pairs does).
+    twice (size aggregate + anti-join) — materialize `sigs` upstream so
+    the signature stage runs once (minhash_dedup_pairs and
+    near_dedup_pipeline do).
     """
     banded = _drop_hot_buckets(
         banded_signatures(sigs, key, bands, rows_per_band), max_bucket_size)
@@ -227,333 +240,189 @@ def ngram_jaccard_verify(df: DataFrame, candidates: DataFrame,
     return joined.where(F.col("jaccard") >= threshold)
 
 
+def _verified_pairs(df: DataFrame, sigs: DataFrame, text_col: str, key: str,
+                    threshold: float, max_bucket_size: int | None
+                    ) -> tuple[DataFrame, DataFrame]:
+    """The pair step: LSH candidates among the signed rows `sigs`, verified
+    by exact n-gram Jaccard over `df`'s texts. `sigs` must already be
+    materialized, so that every reader of the banded subtree reads the
+    stored signatures, not the signature stage. Returns (pairs, cands):
+    the lazy verified pairs and the candidates they read, a local
+    checkpoint because the verify reads them three times (recomputed per
+    reader, near_dedup at sf0.1 took 1.6x as long); free `cands` with
+    release_checkpoint once `pairs` is materialized."""
+    cands = minhash_lsh_candidates(
+        sigs, key, max_bucket_size=max_bucket_size).localCheckpoint()
+    return ngram_jaccard_verify(df, cands, text_col, key,
+                                threshold=threshold), cands
+
+
 def minhash_dedup_pairs(df: DataFrame, text_col: str = "text", key: str = "doc_id",
                         threshold: float = 0.8,
                         max_bucket_size: int | None = None) -> DataFrame:
-    """Full near-dup pipeline: minhash -> LSH candidates -> exact verify.
-
-    The candidate-pair set is persisted while the verify stage consumes
-    it three times (member semi-join + both sides of the gram join);
-    without the cache each consumer would recompute the whole
-    signature+banding subtree. The verify result is computed eagerly —
-    it is only (a, b, jaccard) id pairs, tiny relative to the corpus —
-    all intermediate caches are released before return, and the
-    RETURNED frame stays persisted: the caller owns it and should
-    `.unpersist()` when done with it. The lazy plan is the composition
-    of minhash_signatures, minhash_lsh_candidates and
-    ngram_jaccard_verify."""
-    sigs = minhash_signatures(df, text_col, key)
-    if max_bucket_size is not None:
-        # the bucket-size guard consumes the banded subtree twice; cache
-        # signatures so the expensive UDF stage runs once
-        sigs = sigs.persist()
-    cands = minhash_lsh_candidates(
-        sigs, key, max_bucket_size=max_bucket_size).persist()
-    # materialize the candidates in their OWN job first: the verify job
-    # has three consumers of this frame, and a persist alone does not
-    # stop them racing to compute the (expensive signature-UDF) subtree
-    # concurrently before the cache fills — measured 3x the signature
-    # stage on the first execution
-    cands.count()
-    out = ngram_jaccard_verify(df, cands, text_col, key,
-                               threshold=threshold).persist()
-    out.count()  # materialize before releasing the candidate cache
-    cands.unpersist()
-    if max_bucket_size is not None:
-        sigs.unpersist()
+    """Full near-dup pair pipeline: minhash -> LSH candidates -> exact
+    verify. `df` is signed once into a local checkpoint, then the pair
+    step of near_dedup_pipeline runs over it. Returns the verified
+    (a, b, jaccard) id pairs — tiny relative to the corpus — as a local
+    checkpoint, as near_dedup returns its rows; free it with
+    release_checkpoint. The lazy plan is the composition of
+    minhash_signatures, minhash_lsh_candidates and ngram_jaccard_verify."""
+    sigs = minhash_signatures(df, text_col, key).localCheckpoint()
+    pairs, cands = _verified_pairs(df, sigs, text_col, key, threshold,
+                                   max_bucket_size)
+    out = pairs.localCheckpoint()
+    release_checkpoint(cands)
+    release_checkpoint(sigs)
     return out
 
 
-def near_dedup(df: DataFrame, text_col: str = "text", key: str = "doc_id",
-               threshold: float = 0.8,
-               max_bucket_size: int | None = 1000) -> DataFrame:
-    """Scale-safe end-to-end near-dedup: returns the KEPT corpus rows.
-
-    1. exact-dedup pre-pass — identical texts collapse to their min-key
-       representative FIRST. This is the primary degenerate-bucket guard:
-       a 10M-doc family of byte-identical boilerplate (empty pages,
-       templated spam) otherwise lands every copy in the same LSH band
-       bucket and the candidate self-join goes quadratic on it.
-    2. minhash LSH + exact n-gram-Jaccard verify among the unique-text
-       representatives, with a per-bucket fan-out cap as the second line
-       of defense against NEAR-identical families (see _drop_hot_buckets).
-    3. greedy keep-min: every doc appearing as the larger key `b` of a
-       verified pair is dropped, so each near-dup chain keeps its
-       smallest key — deterministic and expressible in ANSI SQL, which
-       is what makes the whole pipeline oracle-checkable.
-
-    Cache discipline: `reps` (the exact-dedup output) is consumed by the
-    signature stage, by all three verify-stage readers, and by the final
-    anti-join — six corpus-scan + shuffle recomputes without a persist
-    (measured 8x slower). It is persisted
-    for the pipeline's duration (the distributed-cluster equivalent is
-    writing reps to a table); every INTERMEDIATE cache (reps, signatures,
-    candidates, pairs) is released before return. The RETURNED kept-
-    corpus frame stays persisted and is caller-owned — `.unpersist()` it
-    (or let the session end) after writing it out.
-    """
-    reps = exact_dedup(df, text_col, key).persist()
-    pairs = minhash_dedup_pairs(reps, text_col, key, threshold=threshold,
-                                max_bucket_size=max_bucket_size)
-    drop = pairs.select(F.col("b").alias(key)).distinct()
-    out = reps.join(drop, on=key, how="left_anti").persist()
-    out.count()  # materialize before releasing the upstream caches
-    pairs.unpersist()
-    reps.unpersist()
-    return out
-
-
-# -- incremental dedup against an existing corpus -----------------------------
+# -- the near-dedup pipeline --------------------------------------------------
 
 
 def dedup_against(df: DataFrame, history: DataFrame,
                   text_col: str = "text", key: str = "doc_id") -> DataFrame:
     """Incremental exact dedup: drop rows of a new batch whose text
     already exists in a previously-ingested corpus, then collapse
-    within-batch exact families to their min-key representative.
+    within-batch exact families by exact_dedup's rule.
 
     This is the steady-state shape of web ingestion — each new crawl
     dedups against everything already kept, not against itself alone.
-    Only 128-bit hashes move: the history side reduces to a distinct
-    hash column (a real deployment materializes that hash column once
-    at ingest and never rescans history text), the anti-join and the
-    min-key groupBy both shuffle hashes + keys only, and map-side
-    partial aggregation absorbs the duplicate mass. No text column
-    ever crosses an exchange.
+    The history side reduces to a distinct md5 hash column (a real
+    deployment materializes that hash column once at ingest and never
+    rescans history text); the anti-join and the min-key groupBy both
+    shuffle hashes and keys, and map-side partial aggregation absorbs
+    the duplicate mass.
     """
-    new_h = df.withColumn("_h", F.md5(F.col(text_col)))
-    hist_h = history.select(F.md5(F.col(text_col)).alias("_h")).distinct()
-    survivors = new_h.join(hist_h, "_h", "left_anti")
-    keep = survivors.groupBy("_h").agg(F.min(key).alias(key))
-    return survivors.join(keep, ["_h", key], "left_semi").drop("_h")
+    hist = history.select(F.md5(F.col(text_col)).alias("_h")).distinct()
+    fresh = df.withColumn("_h", F.md5(F.col(text_col))) \
+        .join(hist, "_h", "left_anti")
+    return _keep_min_key(fresh, key)
 
 
-def _bloom_build(hashes, n_bits: int, k: int):
-    """uint64-packed Bloom bitset over 64-bit hashes; the k index
-    functions re-mix the hash with splitmix64 round constants
-    (public), so no second hash pass over the data is needed."""
-    import numpy as np
-
-    bits = np.zeros((n_bits + 63) // 64, dtype=np.uint64)
-    _bloom_set(bits, hashes, n_bits, k)
-    return bits
-
-
-def _bloom_set(bits, hashes, n_bits: int, k: int) -> None:
-    """OR the k index bits of each hash into an existing bitset."""
-    import numpy as np
-
-    h = np.asarray(hashes, dtype=np.int64).view(np.uint64)
-    for i in range(k):
-        idx = _bloom_idx(h, i, n_bits)
-        np.bitwise_or.at(bits, idx >> 6,
-                         np.uint64(1) << (idx & np.uint64(63)))
-
-
-def _bloom_build_distributed(hashes_df: DataFrame, n_bits: int, k: int):
-    """Executor-side Bloom construction: each partition builds a LOCAL
-    bitset over its hashes and emits only the non-zero 64-bit words as
-    sparse (word_index, word) rows; a bit_or groupBy reduces partials
-    across partitions map-side, and the driver assembles the final
-    bitset from at most n_bits/64 rows — its memory bound is the
-    BITMAP size (what it must broadcast anyway), never the batch size.
-    The per-partition sparse emission keeps the shuffle bounded by
-    min(k * batch_rows, n_bits/64) words regardless of partitioning.
-
-    `hashes_df` must be a single bigint column named `_xh`.
-    """
-    import numpy as np
-    import pandas as pd
-
-    n_words = (n_bits + 63) // 64
-
-    def partials(it):
-        bits = np.zeros(n_words, dtype=np.uint64)
-        seen = False
-        for pdf in it:
-            if len(pdf):
-                seen = True
-                _bloom_set(bits, pdf["_xh"].to_numpy(), n_bits, k)
-        if seen:
-            nz = np.nonzero(bits)[0]
-            yield pd.DataFrame({"widx": nz.astype(np.int64),
-                                "wbits": bits[nz].view(np.int64)})
-
-    words = (hashes_df.mapInPandas(partials, schema="widx long, wbits long")
-             .groupBy("widx").agg(F.bit_or("wbits").alias("wbits"))
-             .collect())
-    bits = np.zeros(n_words, dtype=np.uint64)
-    if words:
-        idx = np.array([r["widx"] for r in words], dtype=np.int64)
-        val = np.array([r["wbits"] for r in words], dtype=np.int64)
-        bits[idx] = val.view(np.uint64)
-    return bits
-
-
-def _bloom_idx(h, i: int, n_bits: int):
-    import numpy as np
-
-    with np.errstate(over="ignore"):
-        x = h + np.uint64(i) * np.uint64(0x9E3779B97F4A7C15)
-        x ^= x >> np.uint64(33)
-        x *= np.uint64(0xFF51AFD7ED558CCD)
-        x ^= x >> np.uint64(33)
-    return x % np.uint64(n_bits)
-
-
-def _bloom_probe(bits, hashes, n_bits: int, k: int):
-    """Boolean membership mask (no false negatives, tunable FPs)."""
-    import numpy as np
-
-    h = np.asarray(hashes, dtype=np.int64).view(np.uint64)
-    mask = np.ones(len(h), dtype=bool)
-    for i in range(k):
-        idx = _bloom_idx(h, i, n_bits)
-        mask &= (bits[(idx >> 6).astype(np.int64)]
-                 >> (idx & np.uint64(63))) & np.uint64(1) != 0
-    return mask
-
-
-def bloom_dedup_against(df: DataFrame, history: DataFrame,
+def near_dedup_pipeline(df: DataFrame, history: DataFrame | None,
                         text_col: str = "text", key: str = "doc_id",
-                        n_bits: int | None = None, k: int = 4) -> DataFrame:
-    """dedup_against with a BATCH-SIDE Bloom prefilter on the history
-    scan — the memory/shuffle story at 10^12 committed documents.
+                        threshold: float = 0.8,
+                        max_bucket_size: int | None = None,
+                        history_sigs: DataFrame | None = None
+                        ) -> tuple[DataFrame, DataFrame]:
+    """Near-dedup of a new batch, alone (`history` None) or against an
+    existing corpus. Returns (kept, sigs): the kept batch rows, and the
+    (key, sig) signatures of every batch row the exact stage kept. Both
+    are local checkpoints; free them with release_checkpoint.
 
-    dedup_against distincts the FULL history hash column every batch:
-    at 10^12 keys that is a corpus-wide shuffle per micro-batch. The
-    batch is tiny by comparison, so invert the probe: build a Bloom
-    filter over the batch's xxhash64 text hashes (~12 bits/key → a
-    10^7-doc batch is a 15 MB broadcast), scan history keeping only
-    bloom-POSITIVE rows (one cheap long hash per row, executor-local,
-    no shuffle), and run the exact md5 anti-join on that sliver.
-    Bloom false positives only admit EXTRA history rows into the exact
-    join, and a Bloom filter has no false negatives, so the output is
-    ROW-IDENTICAL to dedup_against at any n_bits (the pytest pins
-    equality under an adversarially tiny filter); md5 — the expensive
-    hash — is computed only for bloom-positive candidates.
-
-    The filter is built EXECUTOR-SIDE (_bloom_build_distributed):
-    per-partition sparse bitmap partials bit_or-reduced, so the driver
-    only ever holds the final bitset it must broadcast — there is no
-    batch-size driver bound (the earlier design collected the batch's
-    distinct hashes). Sizing: n_bits defaults to ~12 bits per distinct
-    batch hash (FP ~0.3% at k=4), the distinct count taken
-    approximately (sizing only — equality holds at ANY n_bits)."""
-    import numpy as np
-
-    spark = df.sparkSession
-    if n_bits is None:
-        n = max(int(df.agg(F.approx_count_distinct(
-            F.xxhash64(F.col(text_col)))).first()[0]), 1)
-        n_bits = max(1024, 1 << int(np.ceil(np.log2(n * 12.0))))
-    bits = _bloom_build_distributed(
-        df.select(F.xxhash64(F.col(text_col)).alias("_xh")), n_bits, k)
-    bc = spark.sparkContext.broadcast(bits)
-
-    def probe(it):
-        for pdf in it:
-            mask = _bloom_probe(bc.value, pdf["_xh"].to_numpy(),
-                                n_bits, k)
-            yield pdf[mask]
-
-    hist_cand = (
-        history.select(F.col(text_col).alias("_t"),
-                       F.xxhash64(F.col(text_col)).alias("_xh"))
-        .mapInPandas(probe, schema="_t string, _xh bigint")
-    )
-    return dedup_against(df, hist_cand.select(F.col("_t").alias(text_col)),
-                         text_col, key)
-
-
-def near_dedup_against(df: DataFrame, history: DataFrame,
-                       text_col: str = "text", key: str = "doc_id",
-                       threshold: float = 0.8,
-                       max_bucket_size: int | None = None,
-                       history_sigs: DataFrame | None = None) -> DataFrame:
-    """Incremental NEAR-dedup of a new batch against an existing
-    corpus — the steady-state form of near_dedup, in three stages:
-
-      1. exact: drop batch rows whose text hash exists in history,
-         collapse within-batch exact families to min key
-         (dedup_against — hashes only cross the wire);
-      2. vs history: minhash signatures on BOTH sides, banded LSH
-         bucket join BETWEEN batch survivors and history (never a
-         history self-join — history is only probed), exact n-gram
-         Jaccard verify on candidates, drop batch docs matching any
-         history doc at >= threshold. History wins by construction:
-         the committed copy is kept, the recrawl drops;
-      3. within batch: the batch-only near_dedup pair pass
-         (keep-min greedy) over what remains.
+      1. exact: exact_dedup with no history, else dedup_against —
+         identical texts collapse to their min-key representative FIRST.
+         This is the primary degenerate-bucket guard: a 10M-doc family
+         of byte-identical boilerplate otherwise lands every copy in the
+         same LSH band bucket and the candidate self-join goes quadratic.
+      2. sign: each surviving row is signed once (minhash_signatures).
+         The history probe, the within-batch pass and the streaming
+         signature store all read these signatures.
+      3. vs history: banded LSH bucket join BETWEEN the batch and history
+         signatures (never a history self-join — history is only
+         probed), exact n-gram Jaccard verify on candidates, drop batch
+         docs matching any history doc at >= threshold. History wins by
+         construction: the committed copy is kept, the recrawl drops.
+      4. within batch: the pair step over what remains, with the
+         per-bucket fan-out cap counted over those rows only (the second
+         line of defense, against NEAR-identical families; see
+         _drop_hot_buckets); then greedy keep-min: every doc appearing as
+         the larger key `b` of a verified pair drops, so each near-dup
+         chain keeps its smallest key — deterministic and expressible in
+         ANSI SQL, which makes the pipeline oracle-checkable.
 
     Requires batch and history key spaces to be disjoint (true for
     crawl-assigned global ids; the verify join unions both sides).
 
-    `history_sigs` is the steady-state scale lever: a persisted
-    (key, sig) table produced by minhash_signatures WITH THE SAME
-    text/key semantics (the signature family is deterministic, so a
-    table written at ingest time probes identically forever). Without
-    it the operator re-runs the minhash Python stage over the FULL
-    history — one extra scan in batch form, but a per-trigger
-    O(history) GEMM when called from a streaming loop at a 10^12-doc
-    committed corpus. With it, history text is touched only by (a) the
-    exact stage's hash projection and (b) the Jaccard verify, which
-    materializes grams solely for candidate-pair members (semi-join
-    first — see ngram_jaccard_verify). start_dedup_ingest maintains
-    this table incrementally (signatures_path). Store rows whose key
-    belongs to the batch are ignored, so a store that already holds a
-    replayed batch's own signatures changes nothing. Output is
-    row-identical either way (pinned by pytest).
+    `history_sigs` is the steady-state scale lever: a (key, sig) table
+    produced by minhash_signatures WITH THE SAME text/key semantics (the
+    signature family is deterministic, so a table written at ingest time
+    probes identically forever). Without it the history is signed on
+    every call — a per-trigger O(history) stage when called from a
+    streaming loop at a 10^12-doc committed corpus. With it, history
+    text is touched only by the exact stage's hash projection and the
+    Jaccard verify, which materializes grams solely for candidate-pair
+    members. Store rows whose key belongs to the batch are ignored, so a
+    store that already holds a replayed batch's own signatures changes
+    nothing. Output is row-identical either way.
 
-    Stage boundaries use localCheckpoint, not persist: each later
-    stage embeds the earlier frame's LOGICAL subtree several times
-    (the verify joins it twice, the within-batch pair pass three
-    more), so without lineage truncation the composed plan grows
-    multiplicatively and the driver OOMs planning the final anti-join
-    — the same failure mode dup_components hit iteratively. The
-    checkpointed frames are one crawl batch, not the corpus. Each is
-    released once the next is materialized, and the within-batch pairs
-    once the result is: only the returned frame's checkpoint remains.
+    Stage boundaries use localCheckpoint, not persist: each later stage
+    embeds the earlier frame's LOGICAL subtree several times (the verify
+    joins it twice, the within-batch pass three more), so without
+    lineage truncation the composed plan grows multiplicatively and the
+    driver OOMs planning the final anti-join. The checkpointed frames
+    are one crawl batch, not the corpus. Each is released once the next
+    is materialized.
     """
-    reps = dedup_against(df, history, text_col=text_col, key=key)
-    reps = reps.localCheckpoint()
-    bsig = minhash_signatures(reps, text_col, key)
-    if history_sigs is not None:
+    reps = (exact_dedup(df, text_col, key) if history is None
+            else dedup_against(df, history, text_col, key)).localCheckpoint()
+    sigs = minhash_signatures(reps, text_col, key).localCheckpoint()
+    survivors, own = reps, sigs
+    if history is not None:
+        matched = _history_matches(reps, sigs, history, history_sigs,
+                                   text_col, key, threshold, max_bucket_size)
+        survivors = reps.join(matched, key, "left_anti").localCheckpoint()
+        release_checkpoint(reps)  # survivors is materialized from it
+        own = sigs.join(survivors.select(key), key, "left_semi")
+    pairs, cands = _verified_pairs(survivors, own, text_col, key, threshold,
+                                   max_bucket_size)
+    drop = pairs.select(F.col("b").alias(key)).distinct()
+    kept = survivors.join(drop, key, "left_anti").localCheckpoint()
+    release_checkpoint(cands)
+    release_checkpoint(survivors)  # kept is materialized from both
+    return kept, sigs
+
+
+def _history_matches(reps: DataFrame, sigs: DataFrame, history: DataFrame,
+                     history_sigs: DataFrame | None, text_col: str, key: str,
+                     threshold: float, max_bucket_size: int | None) -> DataFrame:
+    """(key) of the batch rows `reps`, signed as `sigs`, that are near
+    duplicates of a history text (stage 3 of near_dedup_pipeline)."""
+    if history_sigs is None:
+        hsig = minhash_signatures(history, text_col, key)
+    else:
         # a batch replayed after its signatures were stored but before
         # its output was appended finds itself in the store; probing
         # those rows would verify every survivor at Jaccard 1.0 against
         # itself, so the batch's own keys are cut from the store first
         hsig = history_sigs.select(key, "sig") \
             .join(reps.select(key), key, "left_anti")
-    else:
-        hsig = minhash_signatures(history, text_col, key)
-    bb = _drop_hot_buckets(
-        banded_signatures(bsig, key), max_bucket_size)
-    hb = _drop_hot_buckets(
-        banded_signatures(hsig, key), max_bucket_size)
+    bb = _drop_hot_buckets(banded_signatures(sigs, key), max_bucket_size)
+    hb = _drop_hot_buckets(banded_signatures(hsig, key), max_bucket_size)
     cand = (
         bb.alias("l").join(hb.alias("r"), on=["band", "bucket"])
-        .select(F.col(f"l.{key}").alias("a"),
-                F.col(f"r.{key}").alias("b"))
+        .select(F.col(f"l.{key}").alias("a"), F.col(f"r.{key}").alias("b"))
         .distinct()
     )
-    both = reps.select(key, text_col).unionByName(
-        history.select(key, text_col))
-    matched = (
-        ngram_jaccard_verify(both, cand, text_col, key,
-                             threshold=threshold)
-        .select(F.col("a").alias(key)).distinct()
-    )
-    survivors = reps.join(matched, key, "left_anti").localCheckpoint()
-    release_checkpoint(reps)  # survivors is materialized from it
-    pairs = minhash_dedup_pairs(survivors, text_col, key,
-                                threshold=threshold,
-                                max_bucket_size=max_bucket_size)
-    drop = pairs.select(F.col("b").alias(key)).distinct()
-    out = survivors.join(drop, key, "left_anti").localCheckpoint()
-    pairs.unpersist()
-    release_checkpoint(survivors)  # out is materialized from both
-    return out
+    both = reps.select(key, text_col).unionByName(history.select(key, text_col))
+    return (ngram_jaccard_verify(both, cand, text_col, key, threshold=threshold)
+            .select(F.col("a").alias(key)).distinct())
+
+
+def near_dedup_against(df: DataFrame, history: DataFrame | None,
+                       text_col: str = "text", key: str = "doc_id",
+                       threshold: float = 0.8,
+                       max_bucket_size: int | None = None,
+                       history_sigs: DataFrame | None = None) -> DataFrame:
+    """Incremental NEAR-dedup of a new batch against an existing corpus
+    (`history`; None for the batch alone): the kept rows of
+    near_dedup_pipeline, a local checkpoint to free with
+    release_checkpoint once consumed. Only that checkpoint remains."""
+    kept, sigs = near_dedup_pipeline(df, history, text_col, key, threshold,
+                                     max_bucket_size, history_sigs)
+    release_checkpoint(sigs)
+    return kept
+
+
+def near_dedup(df: DataFrame, text_col: str = "text", key: str = "doc_id",
+               threshold: float = 0.8,
+               max_bucket_size: int | None = 1000) -> DataFrame:
+    """Scale-safe end-to-end near-dedup of one corpus: near_dedup_against
+    with no history, the bucket cap on by default. Returns the KEPT
+    corpus rows as a local checkpoint; free it with release_checkpoint
+    after writing it out."""
+    return near_dedup_against(df, None, text_col, key, threshold,
+                              max_bucket_size)
 
 
 # -- duplicate-cluster connected components -----------------------------------

@@ -229,7 +229,8 @@ def wet_export(df: DataFrame, docs_per_shard: int = 1000,
         .alias("_recs"))
 
     def _shard(s, recs):
-        triples = [(r["_u"], r["_t"], str(r["_x"]).encode("utf-8"))
+        # a NULL text is an empty conversion body
+        triples = [(r["_u"], r["_t"], (r["_x"] or "").encode("utf-8"))
                    for r in recs]
         yield f"{prefix}-{s:05d}.warc.wet.gz", bytearray(build_wet(triples))
 

@@ -79,7 +79,6 @@ def start_dedup_ingest(spark: SparkSession, input_path: str,
                        output_path: str, checkpoint_path: str,
                        key: str = "doc_id", text_col: str = "text",
                        near: bool = False, threshold: float = 0.8,
-                       bloom: bool = False,
                        signatures_path: str | None = None,
                        available_now: bool = True) -> StreamingQuery:
     """Steady-state web ingestion: every micro-batch exact-dedups
@@ -96,72 +95,56 @@ def start_dedup_ingest(spark: SparkSession, input_path: str,
     Only md5 hashes of the history move (see dedup_against); at scale
     the history read is a column-pruned scan of one 32-char column.
 
-    With `near=True` the batch additionally minhash-probes the
-    committed corpus and drops near-duplicate recrawls at >= threshold
-    (near_dedup_against). A replay of a batch whose output was already
-    appended drops every row in the exact stage (each hash-matches its
-    committed copy), so nothing is appended twice.
+    With `near=True` the batch runs operators/dedup.py's
+    near_dedup_pipeline against the committed corpus, which also drops
+    near-duplicate recrawls at >= threshold. A replay of a batch whose
+    output was already appended drops every row in the exact stage
+    (each hash-matches its committed copy), so nothing is appended
+    twice.
 
     `signatures_path` (near mode) is the steady-state scale switch: a
     parquet (key, sig) table of the committed corpus's minhash
     signatures, maintained INCREMENTALLY here — each trigger appends
-    the surviving batch rows' signatures, so the next trigger probes
-    stored signatures instead of re-running the minhash stage over the
-    full history text (an O(history) Python GEMM per trigger at a
-    10^12-doc corpus without it). Output is row-identical with or
-    without the store (near_dedup_against pins this). Write order is
-    signatures BEFORE output. After a crash between the two writes the
-    store holds the batch's signatures but the output does not hold
-    its rows. The replay ignores store rows keyed by the batch itself
-    (near_dedup_against), so it commits exactly the rows the first
-    attempt would have, and re-appends the same signature rows
-    (duplicate (key, sig) rows are benign — the LSH probe collapses
-    them with its distinct). The reverse order would leave committed
-    documents invisible to the signature probe — silent false keeps.
-
-    With `bloom=True` the exact stage runs through bloom_dedup_against:
-    the micro-batch's hash Bloom filter prunes the committed-history
-    scan executor-locally instead of distinct-ing the full history
-    hash column every trigger — the right mode once the output passes
-    ~10^9 documents (output-invariant; see operators/dedup.py).
+    the kept rows' signatures, the ones the pipeline computed when it
+    signed the batch, so no row is signed twice and the next trigger
+    probes stored signatures instead of re-running the minhash stage
+    over the full history text (an O(history) Python stage per trigger
+    at a 10^12-doc corpus without it). Output is row-identical with or
+    without the store. Write order is signatures BEFORE output. After a
+    crash between the two writes the store holds the batch's signatures
+    but the output does not hold its rows. The replay ignores store
+    rows keyed by the batch itself (near_dedup_pipeline), so it commits
+    exactly the rows the first attempt would have, and re-appends the
+    same signature rows (duplicate (key, sig) rows are benign — the LSH
+    probe collapses them with its distinct). The reverse order would
+    leave committed documents invisible to the signature probe — silent
+    false keeps.
     """
     from ..operators.dedup import (
-        bloom_dedup_against, dedup_against, minhash_signatures,
-        near_dedup_against, release_checkpoint)
+        dedup_against, near_dedup_pipeline, release_checkpoint)
 
     def _apply(batch_df: DataFrame, _batch_id: int) -> None:
         sess = batch_df.sparkSession
-        cols = [key, text_col] if near else [text_col]
         history = read_committed(sess, output_path)
-        history = (batch_df.limit(0) if history is None  # first batch
-                   else history).select(*cols)
-        if near:
-            hist_sigs = None
-            if signatures_path:
-                hist_sigs = read_committed(sess, signatures_path)
-                if hist_sigs is None:  # first batch: no store yet
-                    hist_sigs = minhash_signatures(
-                        batch_df.limit(0), text_col, key)
-            kept = near_dedup_against(batch_df, history,
-                                      text_col=text_col, key=key,
-                                      threshold=threshold,
-                                      history_sigs=hist_sigs)
-            if signatures_path:
-                # maintain the store: survivors' signatures land BEFORE
-                # the output append (see docstring for the crash-order
-                # argument); kept is a local checkpoint, so the dedup
-                # pipeline runs once across the two writes
-                minhash_signatures(kept, text_col, key) \
-                    .write.mode("append").parquet(signatures_path)
-        elif bloom:
-            kept = bloom_dedup_against(batch_df, history,
-                                       text_col=text_col, key=key)
-        else:
-            kept = dedup_against(batch_df, history, text_col=text_col,
-                                 key=key)
+        if not near:
+            kept = dedup_against(
+                batch_df, batch_df.limit(0) if history is None  # first batch
+                else history, text_col=text_col, key=key)
+            kept.write.mode("append").parquet(output_path)
+            return
+        hist_sigs = (read_committed(sess, signatures_path)
+                     if signatures_path else None)
+        kept, sigs = near_dedup_pipeline(
+            batch_df, history, text_col=text_col, key=key,
+            threshold=threshold, history_sigs=hist_sigs)
+        if signatures_path:
+            # survivors' signatures land BEFORE the output append (see
+            # docstring for the crash-order argument)
+            sigs.join(kept.select(key), key, "left_semi") \
+                .write.mode("append").parquet(signatures_path)
         kept.write.mode("append").parquet(output_path)
-        if near:
-            release_checkpoint(kept)
+        release_checkpoint(kept)
+        release_checkpoint(sigs)
 
     writer = (
         stream_pages(spark, input_path)

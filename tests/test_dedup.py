@@ -1,3 +1,18 @@
+import pytest
+
+
+@pytest.fixture(autouse=True)
+def _release_leftovers(spark):
+    """Free the local checkpoints a test leaves behind (the operators
+    here return them, and only release_checkpoint reaches them), so a
+    later module starts from no persistent RDDs."""
+    spark.catalog.clearCache()
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    yield
+    spark.catalog.clearCache()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    for rdd_id in set(rdds.keySet()) - before:
+        rdds.get(rdd_id).unpersist(False)
 
 
 def test_dup_components_chain_and_clique(spark):
@@ -40,75 +55,6 @@ def test_dedup_against_history(spark):
         ["doc_id", "text"])
     kept = sorted(r.doc_id for r in dedup_against(batch, history).collect())
     assert kept == [2, 4]
-
-
-def test_bloom_dedup_against_matches_exact(spark):
-    """The Bloom prefilter must be output-invariant: row-identical to
-    dedup_against even under an adversarially tiny filter (every
-    history row a false positive) and a huge one (no candidates except
-    true hits). No-false-negatives is the load-bearing property."""
-    import random
-
-    from docling_eval_spark.operators.dedup import (
-        bloom_dedup_against, dedup_against)
-
-    rng = random.Random(5)
-    texts = [f"doc body {i} " + " ".join(
-        rng.choices("abcdefgh", k=6)) for i in range(60)]
-    history = spark.createDataFrame(
-        [(1000 + i, texts[i]) for i in range(0, 40)], ["doc_id", "text"])
-    batch = spark.createDataFrame(
-        [(i, texts[rng.randrange(60)]) for i in range(25)]
-        + [(90, texts[3]), (91, texts[3])],   # within-batch family
-        ["doc_id", "text"])
-
-    want = sorted(tuple(r) for r in dedup_against(batch, history).collect())
-    for n_bits in (64, None, 1 << 20):        # tiny -> default -> huge
-        got = sorted(tuple(r) for r in bloom_dedup_against(
-            batch, history, n_bits=n_bits).collect())
-        assert got == want, n_bits
-
-
-def test_bloom_build_probe_properties():
-    import numpy as np
-
-    from docling_eval_spark.operators.dedup import _bloom_build, _bloom_probe
-
-    rng = np.random.RandomState(2)
-    inserted = rng.randint(-2**63, 2**63 - 1, 5000, dtype=np.int64)
-    others = rng.randint(-2**63, 2**63 - 1, 5000, dtype=np.int64)
-    others = np.setdiff1d(others, inserted)
-    n_bits = 1 << 16  # ~13 bits/key
-    bits = _bloom_build(inserted, n_bits, k=4)
-    # NO false negatives — the correctness-bearing property
-    assert _bloom_probe(bits, inserted, n_bits, 4).all()
-    # false positives bounded (expected ~0.3% at 13 bits/key, k=4)
-    fp = _bloom_probe(bits, others, n_bits, 4).mean()
-    assert fp < 0.02, fp
-
-
-def test_bloom_distributed_build_equals_local(spark):
-    """The executor-side sparse-partial build must produce a bitset
-    IDENTICAL to the single-pass local build, at any partitioning
-    (1 partition, many partitions, partitions that share words)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from docling_eval_spark.operators.dedup import (
-        _bloom_build, _bloom_build_distributed)
-
-    rng = np.random.RandomState(11)
-    hashes = rng.randint(-2**63, 2**63 - 1, 3000, dtype=np.int64)
-    for n_bits in (1 << 10, 1 << 16):
-        want = _bloom_build(hashes, n_bits, k=4)
-        for parts in (1, 7, 32):
-            df = spark.createDataFrame(
-                [(int(h),) for h in hashes], "_xh long").repartition(parts)
-            got = _bloom_build_distributed(df, n_bits, k=4)
-            assert np.array_equal(got, want), (n_bits, parts)
-    # empty input: all-zero bitset, no crash
-    empty = spark.createDataFrame([], "_xh long")
-    assert _bloom_build_distributed(empty, 1 << 10, 4).sum() == 0
 
 
 def test_near_dedup_against_history(spark):
@@ -242,7 +188,10 @@ def test_dup_components_keeps_only_the_returned_checkpoint(spark):
 
 
 def test_near_dedup_against_keeps_only_the_returned_checkpoint(spark):
-    from docling_eval_spark.operators.dedup import near_dedup_against
+    """Both entry points leave only their returned checkpoint, and
+    release_checkpoint frees it."""
+    from docling_eval_spark.operators.dedup import (
+        near_dedup, near_dedup_against, release_checkpoint)
 
     text = "the quick brown fox jumps over the lazy dog end"
     history = spark.createDataFrame([(100, text)], ["doc_id", "text"])
@@ -252,6 +201,12 @@ def test_near_dedup_against_keeps_only_the_returned_checkpoint(spark):
     kept = near_dedup_against(batch, history)
     assert [r.doc_id for r in kept.collect()] == [2]
     assert len(_persistent_ids(spark) - before) <= 1
+    release_checkpoint(kept)
+    kept = near_dedup(batch)
+    assert sorted(r.doc_id for r in kept.collect()) == [1, 2]
+    assert len(_persistent_ids(spark) - before) <= 1
+    release_checkpoint(kept)
+    assert not _persistent_ids(spark) - before
 
 
 def test_near_dedup_against_leaves_no_cached_plan(spark):
@@ -273,3 +228,138 @@ def test_near_dedup_against_leaves_no_cached_plan(spark):
     assert cache.isEmpty()
     after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     assert len(after - before) <= 1
+
+
+def _ids(df) -> list:
+    return sorted(r.doc_id for r in df.select("doc_id").collect())
+
+
+def _near_dup_corpus(spark, sf_dir):
+    """with_near_dups over the documents, spread over 4 partitions."""
+    from pyspark.sql import functions as F
+
+    from docling_eval_spark.operators.dedup import with_near_dups
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text")
+    return with_near_dups(docs).repartition(
+        4, F.xxhash64("doc_id", F.lit(0x5EED)))
+
+
+def test_null_text_passes_through_every_stage(spark):
+    """A NULL text is nobody's duplicate: every dedup stage keeps its
+    rows as they are, and the minhash stage never signs them."""
+    from docling_eval_spark.operators.dedup import (
+        dedup_against, exact_dedup, exact_dedup_summary, minhash_signatures,
+        near_dedup, near_dedup_against)
+
+    df = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"), (2, None),
+         (3, None), (4, "completely different words here about other topics")],
+        "doc_id long, text string")
+    history = spark.createDataFrame(
+        [(9, None), (8, "a committed page with words of its own")],
+        "doc_id long, text string")
+    assert _ids(exact_dedup(df)) == [1, 2, 3, 4]
+    assert tuple(exact_dedup_summary(df).first()) == (4, 4, 0)
+    assert _ids(dedup_against(df, history)) == [1, 2, 3, 4]
+    assert _ids(near_dedup(df)) == [1, 2, 3, 4]
+    assert _ids(near_dedup_against(df, history)) == [1, 2, 3, 4]
+    assert _ids(minhash_signatures(df)) == [1, 4]
+
+
+def test_string_keys_keep_the_same_rows(spark, sf_dir):
+    """Hex string ids, the shape of the WARC path's md5-hex ids
+    (zero-padded, so they sort like the integers), keep the same rows as
+    the integer ids, with and without a history and a signature store."""
+    from pyspark.sql import functions as F
+
+    from docling_eval_spark.operators.dedup import (
+        minhash_signatures, near_dedup, near_dedup_against)
+
+    def as_str(df):
+        return df.withColumn(
+            "doc_id", F.lpad(F.hex("doc_id"), 12, "0"))
+
+    def ints(df):
+        return sorted(int(str(r.doc_id), 16) if isinstance(r.doc_id, str)
+                      else r.doc_id for r in df.select("doc_id").collect())
+
+    corpus = _near_dup_corpus(spark, sf_dir)
+    assert ints(near_dedup(as_str(corpus))) == ints(near_dedup(corpus))
+    hist = corpus.where(F.col("doc_id") % 2 == 0)
+    batch = corpus.where(F.col("doc_id") % 2 == 1)
+    want = ints(near_dedup_against(batch, hist))
+    assert ints(near_dedup_against(as_str(batch), as_str(hist))) == want
+    store = minhash_signatures(as_str(hist))
+    assert ints(near_dedup_against(as_str(batch), as_str(hist),
+                                   history_sigs=store)) == want
+
+
+def test_each_batch_row_is_signed_once(spark):
+    """The minhash stage emits one row per batch row the exact stage
+    keeps: the history probe, the within-batch pass and the caller's
+    signature store all read those signatures."""
+    from status_store import next_execution, stage_rows
+
+    from docling_eval_spark.operators.dedup import (
+        dedup_against, exact_dedup, minhash_signatures, near_dedup,
+        near_dedup_against)
+
+    t_hist = "the quick brown fox jumps over the lazy dog end"
+    t_new = "completely different words here about other topics now"
+    history = spark.createDataFrame([(100, t_hist)], ["doc_id", "text"])
+    batch = spark.createDataFrame(
+        [(1, t_hist), (2, t_hist + " xdup"), (3, t_new), (4, t_new),
+         (5, t_new + " tail"), (6, "unrelated short")],
+        ["doc_id", "text"])
+    store = minhash_signatures(history).localCheckpoint()
+    n_exact = dedup_against(batch, history).count()
+    since = next_execution(spark)
+    assert _ids(near_dedup_against(batch, history, history_sigs=store)) \
+        == [3, 6]
+    assert stage_rows(spark, since, "_minhash") == n_exact == 4
+    n_exact = exact_dedup(batch).count()
+    since = next_execution(spark)
+    assert _ids(near_dedup(batch)) == [1, 3, 6]
+    assert stage_rows(spark, since, "_minhash") == n_exact == 5
+
+
+def test_near_dedup_is_near_dedup_against_no_history(spark, sf_dir):
+    from docling_eval_spark.operators.dedup import (
+        near_dedup, near_dedup_against)
+
+    corpus = _near_dup_corpus(spark, sf_dir)
+    kept = _ids(near_dedup(corpus))
+    assert kept == _ids(near_dedup_against(corpus, corpus.limit(0)))
+    assert 0 < len(kept) < corpus.count()
+
+
+def test_near_dedup_job_counts(spark, sf_dir):
+    """Spark jobs per call (the status tracker's count for a job group),
+    pinned at or below what the two separate pipelines ran."""
+    from pyspark.sql import functions as F
+
+    from docling_eval_spark.operators.dedup import (
+        near_dedup, near_dedup_against, release_checkpoint)
+
+    sc = spark.sparkContext
+    corpus = _near_dup_corpus(spark, sf_dir).persist()
+    corpus.count()
+    hist = corpus.where(F.col("doc_id") % 2 == 0)
+    batch = corpus.where(F.col("doc_id") % 2 == 1)
+    counts = {}
+    for name, run in (("near_dedup", lambda: near_dedup(corpus)),
+                      ("near_dedup_against",
+                       lambda: near_dedup_against(batch, hist))):
+        sc.setJobGroup(f"dedup-jobs-{name}", name)
+        try:
+            kept = run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        counts[name] = len(sc.statusTracker().getJobIdsForGroup(
+            f"dedup-jobs-{name}"))
+        release_checkpoint(kept)
+    corpus.unpersist()
+    assert counts["near_dedup"] <= 27, counts
+    assert counts["near_dedup_against"] <= 49, counts

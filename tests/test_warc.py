@@ -241,6 +241,26 @@ class TestWetExport:
         # responses_only (the default) must skip conversion records
         assert warc_records(shards).count() == 0
 
+    def test_wet_null_text_is_an_empty_body(self, spark):
+        """A row without text becomes a conversion record with an empty
+        block, not the word None."""
+        from docling_eval_spark.sources.warc import wet_export
+
+        df = spark.createDataFrame(
+            [(1, "https://a.example/1", _dt(0), "kept words"),
+             (2, "https://a.example/2", _dt(0), None)],
+            "doc_id long, url string, warc_ts timestamp, text string")
+        (content,) = [bytes(r["content"]) for r in wet_export(df).collect()]
+        records = gzip.decompress(content).split(b"WARC/1.0\r\n")[1:]
+        bodies = {}
+        for rec in records:
+            head, body = rec.split(b"\r\n\r\n", 1)
+            url = head.split(b"WARC-Target-URI: ")[1].split(b"\r\n")[0]
+            length = int(head.split(b"Content-Length: ")[1].split(b"\r\n")[0])
+            bodies[url.decode()] = (length, body[:length])
+        assert bodies == {"https://a.example/1": (10, b"kept words"),
+                          "https://a.example/2": (0, b"")}
+
     def test_wet_shards_index_through_cdx(self, spark):
         """WET shards keep the record-per-gzip-member framing, so the
         cdx indexer range-indexes them with rec_types=('conversion',)

@@ -40,18 +40,20 @@ HEADLINE = [
 
 
 def _lazy_special(spark, sf_dir):
-    """Eagerly-materializing operators (they persist + count internally)
-    would show InMemoryTableScan under plain explain; compose their LAZY
-    plan trees from the public steps (exact_dedup -> minhash_signatures
-    -> minhash_lsh_candidates -> ngram_jaccard_verify -> left-anti) so
-    PLANS.md evidences the real operator trees (scans, pushdown, joins,
-    partial aggregates). Corpus mAP finishes on the driver; its
-    distributed part is the bins aggregate. near_dedup's `reps` are
-    explained apart from its pairs + left-anti step, or their subtree is
-    inlined at each consumer."""
+    """Eagerly-materializing operators (they checkpoint or persist
+    internally) would show their stored leaves under plain explain;
+    compose their LAZY plan trees from the pieces the near-dedup pipeline
+    runs (exact stage -> minhash_signatures -> history probe -> pair step
+    -> left-anti) so PLANS.md evidences the real operator trees (scans,
+    pushdown, joins, partial aggregates). Each frame the pipeline stores
+    (a checkpoint or a cache) is an empty RDD leaf here, so its subtree
+    is explained once. Corpus mAP finishes on the driver;
+    its distributed part is the bins aggregate."""
     from pyspark.sql import functions as F
 
     from docling_eval_spark.operators.dedup import (
+        _history_matches,
+        dedup_against,
         exact_dedup,
         minhash_lsh_candidates,
         minhash_signatures,
@@ -66,20 +68,29 @@ def _lazy_special(spark, sf_dir):
     docs = read_documents(spark, sf_dir, ["doc_id", "text"])
     corpus = salted_repartition(with_near_dups(docs), 8, key="doc_id")
 
-    def pairs(df, max_bucket_size):
-        cands = minhash_lsh_candidates(minhash_signatures(df),
-                                       max_bucket_size=max_bucket_size)
-        return ngram_jaccard_verify(df, cands, threshold=0.8)
+    def leaf(df):  # an RDD leaf, so the optimizer cannot fold it away
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), df.schema)
 
     reps = exact_dedup(corpus)
-    # an RDD leaf, so the optimizer cannot fold it away as empty
-    leaf = spark.createDataFrame(spark.sparkContext.emptyRDD(), reps.schema)
-    drop = pairs(leaf, 1000).select(F.col("b").alias("doc_id")).distinct()
+    reps_leaf = leaf(reps)
+    sigs = minhash_signatures(reps_leaf)
+    cands = minhash_lsh_candidates(leaf(sigs), max_bucket_size=1000)
+    pairs = ngram_jaccard_verify(reps_leaf, leaf(cands), threshold=0.8)
+    drop = pairs.select(F.col("b").alias("doc_id")).distinct()
+    hist = docs.where(F.col("doc_id") % 2 == 0)
+    batch = docs.where(F.col("doc_id") % 2 == 1)
     return {
-        "minhash_near_dup(lazy)": pairs(corpus, None),
-        "near_dedup_kept(lazy): reps = exact_dedup": reps,
-        "near_dedup_kept(lazy): pairs + left-anti over reps (a leaf)":
-            leaf.join(drop, on="doc_id", how="left_anti").select("doc_id"),
+        "minhash_near_dup(lazy)": ngram_jaccard_verify(
+            corpus, minhash_lsh_candidates(minhash_signatures(corpus)),
+            threshold=0.8),
+        "near_dedup_kept(lazy): exact stage": reps,
+        "near_dedup_kept(lazy): signing (reps a leaf)": sigs,
+        "near_dedup_kept(lazy): candidates (sigs a leaf)": cands,
+        "near_dedup_kept(lazy): verify + left-anti (reps, cands leaves)":
+            reps_leaf.join(drop, on="doc_id", how="left_anti").select("doc_id"),
+        "near_dedup_against(lazy): history probe (reps, sigs leaves)":
+            _history_matches(leaf(dedup_against(batch, hist)), leaf(sigs),
+                             hist, None, "text", "doc_id", 0.8, None),
         "layout_corpus_map(partial aggregate)": binned_pr_counts(
             layout_partials(spark, sf_dir)),
     }
