@@ -1406,23 +1406,6 @@ def _q_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("url"))
 
 
-def _q_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stupid Backoff bigram scoring (Brants 2007) with a REAL
-    train/score split — the model trains on doc_id < 300 and scores
-    300-399, so unseen bigrams genuinely take the backoff branch and
-    OOV tokens the half-count floor. The DuckDB oracle recomputes the
-    full model (bigram + unigram counts + N) and every per-position
-    score; the bigram/backoff branch choice, both denominators, the
-    0.4 factor and the OOV floor all flip the hash."""
-    from docling_eval_spark.operators.webtext import stupid_backoff_logprob
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
-        .select("doc_id", "text")
-    train = docs.where(F.col("doc_id") < 300)
-    score = docs.where((F.col("doc_id") >= 300) & (F.col("doc_id") < 400))
-    return stupid_backoff_logprob(score, train_df=train).orderBy("doc_id")
-
-
 def _q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup keep/drop flags over embeddings + exact-duplicate
     directions (x2.0-scaled copies at vec_id + 10^9 share their
@@ -1666,39 +1649,6 @@ def _q_perplexity_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (perplexity_buckets_by_lang(scored)
             .select("doc_id", "lang", "unigram_nll", "ppl_rank",
                     "ppl_bucket")
-            .orderBy("doc_id"))
-
-
-def _q_assign_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/val/test assignment rollup per lang: the
-    oracle replays the md5 cumulative-fraction ladder."""
-    from docling_eval_spark.operators.webtext import assign_split
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "lang")
-    split = assign_split(docs, fracs=[("train", 0.8), ("val", 0.1),
-                                      ("test", 0.1)])
-    return (split.groupBy("lang", "split")
-            .agg(F.count("*").alias("n_docs"),
-                 F.min("doc_id").alias("first_doc"))
-            .orderBy("lang", "split"))
-
-
-def _q_classifier_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashed-feature quality classifier + GPT-3 appendix-A Pareto
-    importance sampling, fully closed-form: weights w[b] =
-    ((b*37)%64 - 32)/64 over md5-32 feature buckets, so the oracle
-    inlines the weight formula; the Pareto draw re-derives from
-    md5(doc_id:'') and both engines compare ROUND-6 margins."""
-    from docling_eval_spark.operators.webtext import (
-        classifier_score, pareto_importance_sample)
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text")
-    weights = [((i * 37) % 64 - 32) / 64.0 for i in range(64)]
-    scored = classifier_score(docs, weights)
-    return (pareto_importance_sample(scored)
-            .select("doc_id", "clf_score", "pareto_keep")
             .orderBy("doc_id"))
 
 
@@ -2187,21 +2137,6 @@ def _q_embedding_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("vec_id"))
 
 
-def _q_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Budgeted curation at 10k tokens over a tie-heavy synthetic score
-    (doc_id%13): the bucketed prefix-sum selection must match the
-    oracle's global score-desc window, including the boundary doc and
-    the key tie-breaks."""
-    from docling_eval_spark.operators.webtext import select_token_budget
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text")
-    scored = docs.withColumn(
-        "score", (F.col("doc_id") % 13).cast("double"))
-    kept = select_token_budget(scored, budget=10_000, score_col="score")
-    return kept.select("doc_id", "n_tokens", "tok_before").orderBy("doc_id")
-
-
 def _q_gopher_line_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher A1.1 line rules over 4-word pseudo-lines with
     deterministic decoration: line i of doc d gets a '- ' bullet when
@@ -2227,16 +2162,6 @@ def _q_gopher_line_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_lines", "bullet_line_frac", "ellipsis_line_frac",
         "flag_bullet", "flag_ellipsis", "gopher_line_pass"
     ).orderBy("doc_id")
-
-
-def _q_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-epoch deterministic document shuffle at seed 7: the
-    distributed hash-bucket rank must equal the oracle's single global
-    row_number window byte-for-byte."""
-    from docling_eval_spark.operators.webtext import epoch_shuffle
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    return epoch_shuffle(docs, seed=7).orderBy("doc_id")
 
 
 def _q_normalize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2315,49 +2240,6 @@ def _q_url_filter_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = url_filter(pages, blocked_domains=blocked, threshold=1.0)
     return out.select("doc_id", "domain", "blocked_domain",
                       "url_score", "url_keep").orderBy("doc_id")
-
-
-def _q_pack_sequences_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GPT-style context-window packing at ctx=128 over the corpus
-    token stream in doc_id order; the distributed-prefix-sum plan must
-    reproduce the oracle's single global window byte-for-byte."""
-    from docling_eval_spark.operators.webtext import pack_sequences
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text")
-    return pack_sequences(docs, ctx_len=128).orderBy("doc_id")
-
-
-def _q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte-level BPE token counts (from-scratch GPT-2 algorithm,
-    functions/bpe.py) under the closed-form merges table
-    [('a','b'), ('ab','c')]: merges never cross pre-token boundaries
-    (adjacent letters always share a letter run), rule 1 fires once per
-    literal 'ab' and rule 2 once per literal 'abc', so the exact count
-    is bytes(text) - occ('ab') - occ('abc') — ANSI-SQL-computable, and
-    it exercises the iterative merge order (rule 2 consumes rule 1's
-    output symbol)."""
-    from docling_eval_spark.operators.webtext import with_bpe_token_counts
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text")
-    return (with_bpe_token_counts(docs, [("a", "b"), ("ab", "c")])
-            .select("doc_id", "n_bpe_tokens").orderBy("doc_id"))
-
-
-def _q_pack_bpe_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Context-window packing on BPE token counts (token_col mode):
-    the packer must consume the precomputed counts verbatim, so the
-    oracle is the single global window over the closed-form BPE count
-    expression."""
-    from docling_eval_spark.operators.webtext import (
-        pack_sequences, with_bpe_token_counts)
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text")
-    counted = with_bpe_token_counts(docs, [("a", "b"), ("ab", "c")])
-    return pack_sequences(counted, ctx_len=256,
-                          token_col="n_bpe_tokens").orderBy("doc_id")
 
 
 def _q_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2448,15 +2330,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     entries with no gate row ever; (3) entries whose last gate row is
     the OLDEST; (4) the rest, least-recently-verified first.
 
-    Current order: the four entries whose code changed lead (near_dedup
-    and near_dedup_against are now one pipeline that signs each row
-    once, dedup_against is the history anti-join followed by
-    exact_dedup's collapse, and minhash_dedup_pairs signs into a
-    checkpoint before the shared pair step), then textract_spans (the
-    shared cloud-items projection), then the round-5 order unchanged.
+    Current order: the five entries whose code changed lead
+    (perplexity_buckets and perplexity_by_lang rank with
+    slicing.score_rank in place of the retired token-budget walk,
+    temperature_mix_sample and stratified_sample_langs keep NULL as a
+    stratum and join their rate table null-safe, and range_slice runs
+    on the narrowed row-count prefix sum), then the four near-dedup
+    entries and textract_spans of the previous change, then the
+    round-5 order unchanged.
     """
     return {
         # --- implementation changed since their last gate row ---
+        "perplexity_buckets": _q_perplexity_buckets,
+        "perplexity_by_lang": _q_perplexity_by_lang,
+        "temperature_mix_sample": _q_temperature_mix,
+        "stratified_sample_langs": _q_stratified_sample_langs,
+        "range_slice": _q_range_slice,
+        # --- changed in the previous change ---
         "near_dedup_kept": _q_near_dedup_kept,
         "near_dedup_against_history": _q_near_dedup_against,
         "dedup_against_history": _q_dedup_against_history,
@@ -2467,22 +2357,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_near_dup": _q_embedding_near_dup,
         "embedding_dup_components": _q_embedding_dup_components,
         "gopher_repetition_full": _q_gopher_repetition_full,
-        "pack_sequences_docs": _q_pack_sequences_docs,
-        "pack_bpe_sequences": _q_pack_bpe_sequences,
-        "token_budget_select": _q_token_budget,
         "webtext_line_dedup": _q_webtext_line_dedup,
-        "range_slice": _q_range_slice,
         "webtext_unigram_nll": _q_webtext_unigram_nll,
-        "perplexity_buckets": _q_perplexity_buckets,
         # --- round-5 additions, never driver-verified ---
         "lang_id_classifier": _q_lang_id_classifier,
-        "perplexity_by_lang": _q_perplexity_by_lang,
         "robots_txt_verdicts": _q_robots_txt_verdicts,
         "cdx_fetch_manifest": _q_cdx_fetch_manifest,
         "cdx_ranged_fetch": _q_cdx_ranged_fetch,
-        "temperature_mix_sample": _q_temperature_mix,
         "wet_roundtrip": _q_wet_roundtrip,
-        "stupid_backoff_nll": _q_stupid_backoff,
         "semdedup_keep": _q_semdedup,
         "c4_badwords_filter": _q_c4_badwords,
         # --- last driver row is CORRECTNESS_r02.json (oldest) ---
@@ -2493,7 +2375,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "consolidation_pivot": _q_consolidation_pivot,
         "kv_graph_labels": _q_kv_graph_labels,
         # --- r3 driver rows predating their round-4 code changes ---
-        "epoch_shuffle_pos": _q_epoch_shuffle,
         "gopher_quality": _q_gopher_quality,
         "webtext_latest_snapshot": _q_webtext_latest_snapshot,
         "c4_line_filter": _q_c4_line_filter,
@@ -2519,18 +2400,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "webtext_repetition": _q_webtext_repetition,
         "pii_redaction": _q_pii_redaction,
         "webtext_domain_rollup": _q_webtext_domain_rollup,
-        "stratified_sample_langs": _q_stratified_sample_langs,
         "normalize_text": _q_normalize_text,
         "url_filter_pages": _q_url_filter_pages,
         "pdf_extract_text_md5": _q_pdf_extract_text_md5,
         "teds_tables_identity": _q_teds_tables_identity,
         # --- r4-verified, unchanged since ---
-        "bpe_token_counts": _q_bpe_token_counts,
         "payload_mime_counts": _q_payload_mime_counts,
         "warc_roundtrip": _q_warc_roundtrip,
         "url_dedup_canonical": _q_url_dedup,
-        "classifier_quality_sample": _q_classifier_sample,
-        "train_split_assign": _q_assign_split,
         "table_delta_histogram": _q_table_delta_histogram,
         "ocr_page_cer": _q_ocr_page_cer,
         "layout_image_metrics": _q_layout_image_metrics,
@@ -3061,19 +2938,6 @@ def oracle_sql() -> dict[str, str]:
             "FROM corpus c LEFT JOIN mc ON c.vec_id = mc.node "
             "ORDER BY c.vec_id"
         ),
-        "token_budget_select": (
-            "WITH t AS (SELECT doc_id, "
-            "cast(doc_id % 13 AS double) AS score, "
-            "cast(len(string_split_regex(trim(text), '\\s+')) AS bigint) "
-            "AS n_tokens FROM documents), "
-            "c AS (SELECT doc_id, n_tokens, "
-            "cast(sum(n_tokens) OVER (ORDER BY score DESC, doc_id "
-            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS bigint) "
-            "AS cum FROM t) "
-            "SELECT doc_id, n_tokens, "
-            "cast(cum - n_tokens AS bigint) AS tok_before "
-            "FROM c WHERE cum - n_tokens < 10000 ORDER BY doc_id"
-        ),
         "gopher_line_flags": (
             "WITH w AS (SELECT doc_id, "
             "string_split_regex(trim(text), '\\s+') AS ws FROM documents), "
@@ -3097,11 +2961,6 @@ def oracle_sql() -> dict[str, str]:
             "ellipsis_line_frac <= 0.3 AS flag_ellipsis, "
             "bullet_line_frac <= 0.9 AND ellipsis_line_frac <= 0.3 "
             "AS gopher_line_pass FROM a ORDER BY doc_id"
-        ),
-        "epoch_shuffle_pos": (
-            "SELECT doc_id, cast(row_number() OVER "
-            "(ORDER BY md5(doc_id || ':7'), doc_id) - 1 AS bigint) "
-            "AS shuffle_pos FROM documents ORDER BY doc_id"
         ),
         "normalize_text": (
             "WITH noisy AS (SELECT doc_id, text, "
@@ -3202,49 +3061,6 @@ def oracle_sql() -> dict[str, str]:
             "(CASE WHEN url LIKE '%lottery%' THEN 0.5 ELSE 0 END) + "
             "(CASE WHEN url LIKE '%betting%' THEN 0.5 ELSE 0 END) < 1.0 "
             "AS url_keep FROM p ORDER BY doc_id"
-        ),
-        "bpe_token_counts": (
-            "SELECT doc_id, cast(strlen(text) "
-            "- (strlen(text) - strlen(replace(text, 'ab', ''))) // 2 "
-            "- (strlen(text) - strlen(replace(text, 'abc', ''))) // 3 "
-            "AS bigint) AS n_bpe_tokens FROM documents ORDER BY doc_id"
-        ),
-        "pack_bpe_sequences": (
-            "WITH t AS (SELECT doc_id, cast(strlen(text) "
-            "- (strlen(text) - strlen(replace(text, 'ab', ''))) // 2 "
-            "- (strlen(text) - strlen(replace(text, 'abc', ''))) // 3 "
-            "AS bigint) AS n_tokens FROM documents), "
-            "c AS (SELECT doc_id, n_tokens, "
-            "cast(sum(n_tokens) OVER (ORDER BY doc_id "
-            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS bigint) "
-            "AS cum FROM t) "
-            "SELECT doc_id, n_tokens, "
-            "cast(cum - n_tokens AS bigint) AS tok_start, "
-            "cast(floor((cum - n_tokens) / 256.0) AS bigint) AS seq_first, "
-            "cast(CASE WHEN n_tokens > 0 THEN floor((cum - 1) / 256.0) "
-            "ELSE floor((cum - n_tokens) / 256.0) END AS bigint) AS seq_last, "
-            "cast(CASE WHEN n_tokens > 0 THEN "
-            "floor((cum - 1) / 256.0) - floor((cum - n_tokens) / 256.0) + 1 "
-            "ELSE 0 END AS bigint) AS n_seqs "
-            "FROM c ORDER BY doc_id"
-        ),
-        "pack_sequences_docs": (
-            "WITH t AS (SELECT doc_id, "
-            "cast(len(string_split_regex(trim(text), '\\s+')) AS bigint) "
-            "AS n_tokens FROM documents), "
-            "c AS (SELECT doc_id, n_tokens, "
-            "cast(sum(n_tokens) OVER (ORDER BY doc_id "
-            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS bigint) "
-            "AS cum FROM t) "
-            "SELECT doc_id, n_tokens, "
-            "cast(cum - n_tokens AS bigint) AS tok_start, "
-            "cast(floor((cum - n_tokens) / 128.0) AS bigint) AS seq_first, "
-            "cast(CASE WHEN n_tokens > 0 THEN floor((cum - 1) / 128.0) "
-            "ELSE floor((cum - n_tokens) / 128.0) END AS bigint) AS seq_last, "
-            "cast(CASE WHEN n_tokens > 0 THEN "
-            "floor((cum - 1) / 128.0) - floor((cum - n_tokens) / 128.0) + 1 "
-            "ELSE 0 END AS bigint) AS n_seqs "
-            "FROM c ORDER BY doc_id"
         ),
         "c4_line_filter": (
             "WITH w AS (SELECT doc_id, "
@@ -3415,7 +3231,8 @@ def oracle_sql() -> dict[str, str]:
             "r AS (SELECT lang, "
             "floor(sqrt(cast(n_min AS double) / n) * 4294967296) AS thr "
             "FROM c, m) "
-            "SELECT d.doc_id, d.lang FROM documents d JOIN r USING (lang) "
+            "SELECT d.doc_id, d.lang FROM documents d "
+            "JOIN r ON d.lang IS NOT DISTINCT FROM r.lang "
             "WHERE ('0x' || substr(md5(cast(d.doc_id AS varchar) "
             "|| ':mix'), 1, 8))::BIGINT < r.thr "
             "ORDER BY d.doc_id"
@@ -3427,37 +3244,6 @@ def oracle_sql() -> dict[str, str]:
             "'.example/p' AS url, 'conversion' AS rec_type, "
             "'text/plain' AS mime, md5(text) AS text_md5 "
             "FROM documents WHERE doc_id < 400 ORDER BY url"
-        ),
-        # Stupid Backoff: full model recompute. Bigrams via 1-indexed
-        # list_transform over range(1, len) = positions 1..len-1.
-        "stupid_backoff_nll": (
-            "WITH tr AS (SELECT string_split_regex(trim(text), '\\s+') "
-            "AS ws FROM documents WHERE doc_id < 300), "
-            "tt AS (SELECT unnest(ws) AS t FROM tr WHERE len(ws) >= 1), "
-            "uni AS (SELECT t, count(*) AS cu FROM tt GROUP BY t), "
-            "n AS (SELECT cast(count(*) AS double) AS nt FROM tt), "
-            "trp AS (SELECT unnest(list_transform(range(1, len(ws)), "
-            "i -> {'p': ws[i], 'c': ws[i+1]})) AS pr FROM tr "
-            "WHERE len(ws) >= 2), "
-            "big AS (SELECT pr.p AS p, pr.c AS c, count(*) AS cb "
-            "FROM trp GROUP BY pr.p, pr.c), "
-            "sc AS (SELECT doc_id, string_split_regex(trim(text), "
-            "'\\s+') AS ws FROM documents "
-            "WHERE doc_id >= 300 AND doc_id < 400), "
-            "scp AS (SELECT doc_id, "
-            "unnest(list_transform(range(1, len(ws)), "
-            "i -> {'p': ws[i], 'c': ws[i+1]})) AS pr FROM sc "
-            "WHERE len(ws) >= 2), "
-            "flat AS (SELECT doc_id, pr.p AS p, pr.c AS c FROM scp), "
-            "j AS (SELECT f.doc_id, CASE WHEN b.cb IS NOT NULL "
-            "THEN -ln(cast(b.cb AS double) / up.cu) "
-            "ELSE -ln(0.4 * coalesce(uc.cu, 0.5) / n.nt) END AS s "
-            "FROM flat f LEFT JOIN big b ON b.p = f.p AND b.c = f.c "
-            "LEFT JOIN uni up ON up.t = f.p "
-            "LEFT JOIN uni uc ON uc.t = f.c CROSS JOIN n) "
-            "SELECT doc_id, cast(count(*) AS bigint) AS n_pairs, "
-            "round(avg(s), 6) AS sb_nll "
-            "FROM j GROUP BY doc_id ORDER BY doc_id"
         ),
         # SemDeDup: within-precomputed-cluster keep-min at the shared
         # 4-decimal cosine convention; scaled copies always drop.
@@ -3785,32 +3571,6 @@ def oracle_sql() -> dict[str, str]:
             "['head', 'middle', 'tail']"
             "[cast(least(rk * 3 // n, 2) AS int) + 1] AS ppl_bucket "
             "FROM r ORDER BY doc_id"
-        ),
-        "train_split_assign": (
-            "WITH s AS (SELECT doc_id, lang, CASE WHEN u < 0.8 THEN "
-            "'train' WHEN u < 0.9 THEN 'val' ELSE 'test' END AS split "
-            "FROM (SELECT doc_id, lang, "
-            "('0x' || substr(md5(doc_id || ':'), 1, 8))::BIGINT "
-            "/ 4294967296.0 AS u FROM documents)) "
-            "SELECT lang, split, count(*) AS n_docs, "
-            "min(doc_id) AS first_doc FROM s "
-            "GROUP BY lang, split ORDER BY lang, split"
-        ),
-        "classifier_quality_sample": (
-            "WITH w AS (SELECT doc_id, "
-            "string_split_regex(trim(text), '\\s+') AS ws FROM documents), "
-            "z AS (SELECT doc_id, "
-            "list_sum(list_transform(ws, t -> "
-            "(((('0x' || substr(md5(t), 1, 8))::BIGINT % 64) * 37 % 64) "
-            "- 32) / 64.0)) / len(ws) AS zv FROM w), "
-            "s AS (SELECT doc_id, "
-            "round(1.0 / (1.0 + exp(-zv)), 6) AS clf_score FROM z), "
-            "p AS (SELECT doc_id, clf_score, "
-            "((('0x' || substr(md5(doc_id || ':'), 1, 8))::BIGINT + 1.0) "
-            "/ 4294967296.0) AS u FROM s) "
-            "SELECT doc_id, clf_score, "
-            "round(pow(u, -1.0/9.0) - 1.0 - (1.0 - clf_score), 6) > 0 "
-            "AS pareto_keep FROM p ORDER BY doc_id"
         ),
         "url_dedup_canonical": (
             "WITH p AS (SELECT doc_id, doc_id // 4 AS g, doc_id % 4 AS m "

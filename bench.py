@@ -49,21 +49,20 @@ GROUPS: dict[str, list[str]] = {
         "webtext_line_dedup", "gopher_quality", "webtext_repetition",
         "webtext_unigram_nll",
     ],
-    # round-3 training-batch tier; own fresh JVM so the webtext group's
+    # round-3 corpus tier; own fresh JVM so the webtext group's
     # cross-round numbers stay comparable (BENCH.md: excluded from
     # common-subtotal comparisons)
     "corpus": [
-        "duplicate_spans", "dedup_components", "pack_sequences_docs",
+        "duplicate_spans", "dedup_components",
     ],
     # round-4 ingestion/curation additions; own fresh JVM so older
     # groups' cross-round numbers stay comparable (BENCH.md: excluded
     # from common-subtotal comparisons)
     "ingest": [
-        "warc_roundtrip", "url_dedup_canonical", "bpe_token_counts",
-        "classifier_quality_sample", "train_split_assign",
+        "warc_roundtrip", "url_dedup_canonical",
         "gopher_repetition_full",
-        # round-5 index-first / LM-scoring tier
-        "cdx_ranged_fetch", "stupid_backoff_nll",
+        # round-5 index-first tier
+        "cdx_ranged_fetch",
     ],
 }
 

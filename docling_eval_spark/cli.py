@@ -202,61 +202,6 @@ def cmd_consolidate(args) -> None:
     print(f"consolidate: {len(rows)} rows -> {args.output}")
 
 
-def cmd_pack(args) -> None:
-    """Training-batch manifest: shuffle the curated corpus for one
-    epoch (deterministic hash ranks, `--seed` selects the epoch), then
-    concatenation-pack the token stream into `--ctx`-token context
-    windows IN SHUFFLED ORDER. Writes a per-document manifest
-    (doc_id, shuffle_pos, n_tokens, tok_start, seq_first, seq_last)
-    a data loader can range-scan per sequence id, plus a JSON summary.
-    Both stages are the distributed prefix-sum plans — no global sort
-    anywhere (operators/slicing.py bucketed_running_total)."""
-    from pyspark.sql import functions as F
-
-    from .operators.webtext import epoch_shuffle, pack_sequences
-
-    spark = _spark(args.cpus)
-    docs = spark.read.parquet(args.input)
-    shuffled = epoch_shuffle(docs, key=args.key, seed=args.seed)
-    token_col = None
-    pack_input = shuffled.select(F.col("shuffle_pos"), F.col(args.text_col))
-    if args.bpe_merges:
-        from .functions.bpe import load_merges
-        from .operators.webtext import with_bpe_token_counts
-
-        with open(args.bpe_merges) as f:
-            merges = load_merges(f)
-        pack_input = with_bpe_token_counts(
-            pack_input, merges, text_col=args.text_col)
-        token_col = "n_bpe_tokens"
-    packed = pack_sequences(
-        pack_input, ctx_len=args.ctx, key="shuffle_pos",
-        text_col=args.text_col, token_col=token_col)
-    manifest = (
-        shuffled.select(args.key, "shuffle_pos")
-        .join(packed, "shuffle_pos")
-        .select(args.key, "shuffle_pos", "n_tokens", "tok_start",
-                "seq_first", "seq_last"))
-    manifest.write.mode("overwrite").parquet(args.output)
-
-    written = spark.read.parquet(args.output)
-    stats = written.agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").alias("n_tokens"),
-        F.max("seq_last").alias("last_seq")).collect()[0]
-    summary = {
-        "n_docs": int(stats["n_docs"]),
-        "n_tokens": int(stats["n_tokens"] or 0),
-        "n_sequences": int(stats["last_seq"] or -1) + 1,
-        "ctx": args.ctx,
-        "seed": args.seed,
-    }
-    if args.summary:
-        with open(args.summary, "w") as f:
-            json.dump(summary, f, indent=1)
-    print(f"pack: {json.dumps(summary)}")
-
-
 def cmd_curate(args) -> None:
     """Web-corpus curation pass over an extracted table:
     [hash-sample] -> [normalize] -> Gopher quality gate -> C4
@@ -513,19 +458,6 @@ def main(argv: list[str] | None = None) -> None:
     cu.add_argument("--decontam-text-col", default="text")
     cu.add_argument("--summary", default=None)
     cu.set_defaults(fn=cmd_curate)
-
-    pk = sub.add_parser("pack")
-    pk.add_argument("--input", required=True)
-    pk.add_argument("--output", required=True)
-    pk.add_argument("--key", default="doc_id")
-    pk.add_argument("--text-col", default="text")
-    pk.add_argument("--ctx", type=int, default=2048)
-    pk.add_argument("--seed", type=int, default=0)
-    pk.add_argument("--summary", default=None)
-    pk.add_argument("--bpe-merges", default=None,
-                    help="merges.txt: pack on byte-level-BPE token "
-                         "counts instead of whitespace words")
-    pk.set_defaults(fn=cmd_pack)
 
     c = sub.add_parser("consolidate")
     c.add_argument("--from-documents", default=None)

@@ -1,9 +1,9 @@
-"""Web-corpus curation operators for Common-Crawl-style training data.
+"""Web-corpus curation operators for Common-Crawl-style corpora.
 
 The north-rule input is an Iceberg table of web pages
 (url, warc_ts, html, text, lang); after the extraction tier produces
-clean text, a real training-data pipeline runs exactly these passes
-over it (CCNet, Gopher/MassiveText, C4, RefinedWeb — all published):
+clean text, the published curation pipelines (CCNet, Gopher/MassiveText,
+C4, RefinedWeb, mT5) run exactly these passes over it:
 
 - corpus-level duplicate-line removal (CCNet section 3.1: hash every
   paragraph/line over the WHOLE corpus, keep first occurrence),
@@ -20,7 +20,8 @@ over it (CCNet, Gopher/MassiveText, C4, RefinedWeb — all published):
   pages),
 - unigram log-prob scoring (stand-in for CCNet's KenLM perplexity
   bucket stage: same two-phase shape — corpus LM stats, broadcast
-  back, per-doc score),
+  back, per-doc score) and CCNet's head/middle/tail perplexity thirds
+  (the rank is slicing.score_rank — no global sort),
 - latest-snapshot-per-url collapse across recrawls (max_by on
   warc_ts — partial-aggregable, unlike a window row_number which
   sorts every group),
@@ -29,19 +30,15 @@ over it (CCNet, Gopher/MassiveText, C4, RefinedWeb — all published):
 - benchmark n-gram decontamination (GPT-3 appendix C: broadcast the
   eval-set gram table, stream-probe the corpus),
 - URL blocklist + banned-word scoring (RefinedWeb section 3.1),
-- context-window sequence packing via the distributed prefix sum
-  (slicing.bucketed_running_total — no global sort),
 - exact duplicate-span measurement (Lee et al. 2022 suffix-array
   dedup re-expressed as an n-gram index + interval merge),
 - pre-hash NFC/whitespace canonicalization (one Arrow stage),
-- per-stratum mixing-weight sampling and per-epoch hash-rank
-  shuffling (both scan-speed, no global sort),
-- Gopher A1.1 line rules (bullet / ellipsis fractions),
-- token-budget selection (keep best-scored docs until a corpus
-  token budget is exhausted — prefix sum over score buckets).
+- per-stratum temperature mixing (mT5 section 3.1; scan-speed, no
+  global sort),
+- Gopher A1.1 line rules (bullet / ellipsis fractions).
 
-Everything is built from JVM-side pyspark.sql.functions (no Python in
-the hot path anywhere in this module); the corpus-wide passes are
+Everything is built from JVM-side pyspark.sql.functions (the one Python
+stage is normalize_text's NFC step); the corpus-wide passes are
 shaped so the shuffles are keyed and partial-aggregated the way a
 100 TB run needs (see each docstring).
 """
@@ -57,7 +54,7 @@ from pyspark.sql import types as T
 
 from docling_eval_spark.operators.caching import track_caches
 from docling_eval_spark.operators.slicing import (
-    bucketed_running_total, key_range_bucket, require_integral_key)
+    require_integral_key, score_rank)
 from docling_eval_spark.operators.text_analysis import STOPWORDS
 from docling_eval_spark.session import literal_frame
 
@@ -363,34 +360,6 @@ def repetition_stats(df: DataFrame, key: str = "doc_id",
         )
     )
     return line_stats.join(top_frac, key)
-
-
-def assign_split(df: DataFrame, key: str = "doc_id",
-                 fracs: "list[tuple[str, float]] | None" = None,
-                 salt: str = "", out_col: str = "split") -> DataFrame:
-    """Deterministic train/val/test assignment: u = md5_32(key:salt) /
-    2^32 walks the cumulative fraction ladder, so membership is a pure
-    function of the key — stable across engines, partitionings,
-    reruns, and corpus growth (a document never migrates between
-    splits when other documents arrive; the property random splits
-    lose). Fractions are ordered (name, frac) pairs summing to <= 1;
-    any remainder falls into the LAST split. Scan-speed native
-    expressions; nested subsetting composes with hash_sample because
-    both draw from the same md5 uniform only when salts differ — use
-    distinct salts for independent draws."""
-    fracs = fracs or [("train", 0.98), ("val", 0.01), ("test", 0.01)]
-    u = (F.conv(F.substring(_salted_md5(key, salt), 1, 8), 16, 10)
-         .cast("double")) / F.lit(2.0 ** 32)
-    expr = None
-    acc = 0.0
-    for name, frac in fracs[:-1]:
-        acc += frac
-        cond = u < F.lit(acc)
-        expr = F.when(cond, F.lit(name)) if expr is None \
-            else expr.when(cond, F.lit(name))
-    last = F.lit(fracs[-1][0])
-    expr = last if expr is None else expr.otherwise(last)
-    return df.withColumn(out_col, expr)
 
 
 GOPHER_REPETITION_THRESHOLDS = {
@@ -772,24 +741,28 @@ def stratified_hash_sample(df: DataFrame, rates: dict[str, float],
     reproducible everywhere.
 
     `rates` maps stratum value -> keep rate in [0, 1]. Strata absent
-    from the map are DROPPED (mixing weights are explicit). The rate
-    table ships as a broadcast literal frame and the comparison is a
-    single string predicate — no shuffle, evaluates at the scan."""
+    from the map are DROPPED (mixing weights are explicit). NULL is a
+    stratum like any other: the key None sets its rate. The rate
+    table ships as a broadcast literal frame joined null-safe, and the
+    comparison is a single string predicate — no shuffle, evaluates at
+    the scan."""
     spark = df.sparkSession
     rows = []
-    for stratum, rate in sorted(rates.items()):
+    for stratum, rate in sorted(rates.items(),
+                                key=lambda kv: (kv[0] is None, str(kv[0]))):
         rate = min(max(float(rate), 0.0), 1.0)
         # rate 1.0 would format to 9 hex chars and string-compare wrong;
         # 'g' sorts above every hex digest, keeping everything.
         thr_hex = "g" if rate >= 1.0 else format(int(rate * 16 ** 8), "08x")
         rows.append((stratum, thr_hex))
     thr = literal_frame(spark, rows, T.StructType(
-        [df.schema[strata_col], T.StructField("_thr", T.StringType())]))
+        [T.StructField("_s", df.schema[strata_col].dataType),
+         T.StructField("_thr", T.StringType())]))
     h = F.substring(_salted_md5(key, salt), 1, 8)
     return (
-        df.join(F.broadcast(thr), strata_col)
+        df.join(F.broadcast(thr), df[strata_col].eqNullSafe(thr["_s"]))
         .where(h < F.col("_thr"))
-        .drop("_thr")
+        .drop("_s", "_thr")
     )
 
 
@@ -1032,279 +1005,6 @@ def url_filter(df: DataFrame, url_col: str = "url",
         ~F.col("blocked_domain") & (F.col("url_score") < F.lit(threshold)))
 
 
-def with_bpe_token_counts(df: DataFrame,
-                          merges: list[tuple[str, str]],
-                          text_col: str = "text",
-                          out_col: str = "n_bpe_tokens") -> DataFrame:
-    """Append the byte-level-BPE token count of `text_col` — the number
-    a context-window packer actually needs (whitespace word counts
-    mis-size real windows by 20-40%).
-
-    The encoder is the from-scratch GPT-2 algorithm in functions/bpe.py
-    with a PLUGGABLE merges table (functions.bpe.load_merges reads the
-    public merges.txt format). One Arrow stage; the merges list ships
-    once per task in the serialized closure (a few MB for a 50k-merge
-    table — closure-broadcast territory), and a per-batch pre-token
-    cache exploits web text's heavy token repetition so the Python
-    kernel runs per DISTINCT pre-token, not per occurrence."""
-    import pandas as pd
-
-    from ..functions.bpe import bpe_token_count
-
-    merges = list(merges)
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, T.LongType())])
-
-    def gen(it):
-        cache: dict = {}
-        for pdf in it:
-            pdf[out_col] = pd.Series(
-                [bpe_token_count(t or "", merges, cache)
-                 for t in pdf[text_col]],
-                dtype="int64", index=pdf.index)
-            yield pdf
-
-    return df.mapInPandas(gen, schema=schema)
-
-
-def pack_sequences(df: DataFrame, ctx_len: int = 2048,
-                   key: str = "doc_id", text_col: str = "text",
-                   n_buckets: int = 256,
-                   token_col: str | None = None) -> DataFrame:
-    """Context-window packing: concatenate the token stream of the
-    corpus in `key` order and chunk it every `ctx_len` tokens — the
-    standard GPT-style pretraining batcher (documents are split at
-    window boundaries, nothing is padded away).
-
-    The global running token total is slicing.bucketed_running_total
-    over `n_buckets` arithmetic key ranges (range_slice's bucketing), so
-    no global sort ever happens. Requires an integral key (web pipelines
-    use the crawl-assigned page id); byte-identical to the global
-    `sum() OVER (ORDER BY key)` window.
-
-    Returns (key, n_tokens, tok_start, seq_first, seq_last, n_seqs)
-    where seq_* are the first/last ctx windows the document lands in.
-
-    Token semantics: whitespace words by default; pass `token_col` to
-    pack on a precomputed per-document token count instead (e.g.
-    with_bpe_token_counts' n_bpe_tokens — real tokenizer tokens).
-    """
-    require_integral_key(df, key, "pack_sequences")
-    if token_col is not None:
-        n_tokens = F.col(token_col).cast("long")
-    else:
-        n_tokens = F.size(_words(F.col(text_col))).cast("long")
-    # Three downstream jobs (range probe, bucket totals, final join)
-    # consume this frame; materialize the cache in its own job first so
-    # the text split runs once, not once per consumer.
-    toks = df.select(key, n_tokens.alias("n_tokens")).persist()
-    toks.count()
-    bucket = key_range_bucket(toks, key, n_buckets)
-    if bucket is None:
-        toks.unpersist()    # empty input: nothing to share
-        return toks.select(
-            key, "n_tokens",
-            *[F.lit(0).cast("long").alias(c)
-              for c in ("tok_start", "seq_first", "seq_last", "n_seqs")])
-    cum = F.col("_cum")
-    out = (
-        bucketed_running_total(toks.withColumn("_b", bucket), [key],
-                               F.col("n_tokens"))
-        .withColumn("tok_start", cum - F.col("n_tokens"))
-        .withColumn("seq_first", F.floor(F.col("tok_start") / ctx_len))
-        .withColumn(
-            "seq_last",
-            F.when(F.col("n_tokens") > 0,
-                   F.floor((cum - 1) / ctx_len))
-            .otherwise(F.floor(F.col("tok_start") / ctx_len)))
-        .withColumn(
-            "n_seqs",
-            F.when(F.col("n_tokens") > 0,
-                   F.col("seq_last") - F.col("seq_first") + 1)
-            .otherwise(F.lit(0)))
-    )
-    return track_caches(
-        out.select(key, "n_tokens", "tok_start",
-                   "seq_first", "seq_last", "n_seqs"),
-        toks)
-
-
-def select_token_budget(df: DataFrame, budget: int,
-                        score_col: str, key: str = "doc_id",
-                        text_col: str = "text",
-                        n_buckets: int = 256,
-                        max_partition_rows: int | None = 4_000_000) -> DataFrame:
-    """Budgeted curation: walk the corpus in descending `score_col`
-    order and keep documents until the cumulative token count exceeds
-    `budget` — how a pipeline cuts a 100 TB crawl down to a fixed
-    pretraining token budget while keeping the highest-quality pages
-    (SlimPajama / quality-bucketed CCNet both end with this step).
-
-    A document is kept iff the running total BEFORE it is under the
-    budget (so the boundary document that crosses the line is kept and
-    the budget is met, never undershot). Ties on the score break by
-    ascending key, so the order is total and oracle-reproducible. The
-    running total is slicing.bucketed_running_total over `n_buckets`
-    arithmetic ranges of the score domain (min/max probe, no
-    sampling); buckets that start past the budget drop before the
-    window sorts.
-
-    Skew guard: quality scores CLUSTER (integer rule counts, capped
-    fractions), so a plain score-range bucket can swallow most of the
-    corpus and its window degenerates into a near-global single-task
-    sort. Any bucket whose row count exceeds `max_partition_rows` is
-    refined into finer partitions that are still INTERVALS of the
-    global order. The partition key is the struct (score bucket, s, k)
-    whose ascending order is (score desc, key asc):
-
-      * few distinct scores (tie mode): s = -score and k = the
-        arithmetic KEY range — within equal scores the order is by key;
-      * many distinct scores (fine mode): s = the index on a finer
-        score grid (width / n_buckets), k = 0;
-      * cold buckets: s = 0, k = 0 (one partition per bucket).
-
-    The result is byte-identical to the single-window plan for ANY
-    cap. One refinement level bounds a tie-heavy partition by
-    ~corpus/n_buckets^2 rows and a pure tie group by ~ties/n_buckets.
-
-    Returns the kept rows plus (n_tokens, tok_before) where
-    tok_before is the running total of all higher-scored documents."""
-    toks = df.withColumn(
-        "n_tokens", F.size(_words(F.col(text_col))).cast("long")).persist()
-    toks.count()
-    lo, hi, klo, khi = toks.agg(
-        F.min(score_col), F.max(score_col), F.min(key), F.max(key)).first()
-    if lo is None:
-        toks.unpersist()    # empty input: nothing to share
-        return toks.withColumn("tok_before", F.lit(0).cast("long"))
-    span = float(hi) - float(lo)
-    width = span / n_buckets if span > 0 else 1.0
-
-    def grid(cell: float, n_cells: int) -> Column:
-        # cell 0 = best scores; monotone DESCENDING in the score
-        return F.least(
-            F.floor((F.lit(float(hi)) - F.col(score_col)) / F.lit(cell)),
-            F.lit(n_cells - 1))
-
-    toks_b = toks.withColumn("_b", grid(width, n_buckets).cast("int"))
-    per_bucket = toks_b.groupBy("_b").agg(
-        F.count_if(F.lit(True)).alias("n"),
-        F.sum("n_tokens").alias("t"),
-        F.approx_count_distinct(score_col).alias("ds")).collect()
-    hot = [] if max_partition_rows is None else [
-        r for r in per_bucket if r["n"] > max_partition_rows]
-    # no hot bucket: the probe's token sums are the offsets' totals
-    totals = None if hot else [(r["_b"], r["t"]) for r in per_bucket]
-    if hot:
-        require_integral_key(
-            df, key, "select_token_budget tie-group refinement")
-        tie = F.col("_b").isin([r["_b"] for r in hot if r["ds"] <= n_buckets])
-        fine = F.col("_b").isin([r["_b"] for r in hot if r["ds"] > n_buckets])
-        kb = key_range_bucket(toks, key, n_buckets, bounds=(klo, khi))
-        toks_b = toks_b.withColumn("_b", F.struct(
-            F.col("_b"),
-            F.when(tie, -F.col(score_col).cast("double"))
-            .when(fine, grid(width / n_buckets, n_buckets * n_buckets)
-                  .cast("double"))
-            .otherwise(F.lit(0.0)).alias("s"),
-            F.when(tie, kb).otherwise(F.lit(0).cast("long")).alias("k")))
-    cum = bucketed_running_total(
-        toks_b, [F.col(score_col).desc(), F.col(key).asc()],
-        F.col("n_tokens"), keep=lambda before, after: before < budget,
-        totals=totals)
-    return track_caches(
-        cum.withColumn("tok_before", F.col("_cum") - F.col("n_tokens"))
-        .where(F.col("tok_before") < F.lit(int(budget)))
-        .drop("_cum"),
-        toks)
-
-
-def epoch_shuffle(df: DataFrame, key: str = "doc_id", seed: int = 0,
-                  prefix_len: int = 4) -> DataFrame:
-    """Deterministic global training order: every row gets a dense
-    0-based `shuffle_pos` equal to its rank under md5(key:seed) — the
-    per-epoch document shuffle of a pretraining run, reproducible
-    across engines, partitionings, and restarts (change `seed` per
-    epoch).
-
-    The rank is slicing.bucketed_running_total on the HASH domain: the
-    first `prefix_len` hex chars of the digest give 16^prefix_len
-    buckets that are monotone in the full hash string. Ties on the
-    digest (2^-128) break by key, so the order is total and
-    byte-identical to the oracle's single global window at ANY prefix
-    length (the choice changes only the partition boundaries, never
-    the order).
-
-    Each bucket is one window partition, so prefix_len sets the scale
-    ceiling: the default 4 (65,536 buckets) keeps per-task input ~15M
-    rows at 10^12 docs; 5 hex chars (1M buckets) covers anything
-    beyond. Only non-empty buckets reach the driver."""
-    h = _salted_md5(key, seed)
-    keyed = df.withColumn("_h", h).withColumn(
-        "_b", F.conv(F.substring("_h", 1, prefix_len), 16, 10).cast("long"))
-    return (
-        bucketed_running_total(keyed, ["_h", key])
-        .withColumn("shuffle_pos", F.col("_cum") - 1)
-        .drop("_h", "_cum")
-    )
-
-
-def classifier_score(df: DataFrame, weights: list[float],
-                     bias: float = 0.0, text_col: str = "text",
-                     out_col: str = "clf_score") -> DataFrame:
-    """Hashed-feature linear quality classifier — the GPT-3 appendix-A
-    shape (a logistic-regression quality score over hashed bag-of-words
-    features, trained offline; the trained weights plug in here).
-
-    score = sigmoid(bias + mean over tokens of W[md5_32(token) % D])
-
-    Feature hashing uses the first 8 hex chars of md5 (engine-portable:
-    DuckDB parses the same bucket with ('0x'||substr(md5,1,8))::BIGINT),
-    mod D = len(weights). The weight vector ships as ONE array literal
-    and the lookup runs inside higher-order functions — scan speed, no
-    explode, no join, no shuffle; at 10^12 docs this is a free column.
-    For D beyond a few thousand switch to a broadcast map join; the
-    array-literal plan grows with D."""
-    d = len(weights)
-    w_arr = F.array(*[F.lit(float(w)) for w in weights])
-    toks = _words(F.col(text_col))
-    total = F.aggregate(
-        F.transform(
-            toks,
-            lambda t: F.element_at(
-                w_arr,
-                (F.conv(F.substring(F.md5(t), 1, 8), 16, 10)
-                 .cast("long") % d + 1).cast("int"))),
-        F.lit(0.0), lambda acc, x: acc + x)
-    z = F.lit(float(bias)) + total / F.size(toks)
-    return df.withColumn(
-        out_col, F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6))
-
-
-def pareto_importance_sample(df: DataFrame, score_col: str = "clf_score",
-                             key: str = "doc_id", alpha: float = 9.0,
-                             salt: str = "", out_col: str = "pareto_keep"
-                             ) -> DataFrame:
-    """GPT-3 appendix-A importance sampling, made deterministic: the
-    published rule keeps a document when
-        (1 - score) < numpy.random.pareto(alpha)
-    so high-score docs are almost always kept and low-score docs
-    survive with a heavy-tailed probability (the corpus keeps SOME
-    low-quality mass — cutting it entirely skews the distribution).
-    The Pareto draw is re-derived from the document key via inverse-
-    transform sampling, u^(-1/alpha) - 1 with u = md5_32(key:salt)/2^32
-    — reproducible across engines, partitionings, and restarts, and
-    re-drawable per epoch via `salt`.
-
-    The keep decision compares ROUND-6 margins so the oracle's libm and
-    the JVM's Math.pow can never disagree at the boundary."""
-    u = (F.conv(F.substring(_salted_md5(key, salt), 1, 8), 16, 10)
-         .cast("double") + F.lit(1.0)) / F.lit(2.0 ** 32)
-    pareto = F.pow(u, F.lit(-1.0 / alpha)) - F.lit(1.0)
-    margin = F.round(pareto - (F.lit(1.0) - F.col(score_col)), 6)
-    return df.withColumn(out_col, margin > 0)
-
-
 TRACKING_PARAMS_RE = "^(utm_[^=]*|gclid|fbclid|msclkid|ref|mc_[^=]*)(=|$)"
 
 
@@ -1512,88 +1212,6 @@ def unigram_logprob(df: DataFrame, key: str = "doc_id",
     return scored
 
 
-def stupid_backoff_logprob(df: DataFrame, key: str = "doc_id",
-                           text_col: str = "text",
-                           backoff: float = 0.4,
-                           broadcast_max_pairs: int | None = None,
-                           train_df: DataFrame | None = None
-                           ) -> DataFrame:
-    """Per-document mean bigram negative log-likelihood under Stupid
-    Backoff (Brants et al. 2007 "Large Language Models in Machine
-    Translation") — the smoothing Google designed FOR distributed
-    web-scale training: no discounting, no normalization pass, just
-
-        S(w_i | w_{i-1}) = c(w_{i-1} w_i) / c(w_{i-1})   if seen
-                         = backoff * c(w_i) / N           otherwise
-
-    which makes every model statistic a plain count — one corpus-level
-    groupBy each for bigrams and unigrams, both with map-side combine.
-    This is the CCNet LM-scoring shape one order up from
-    unigram_logprob, sharing its engineering rules: token TEXT never
-    crosses an exchange (all keys are xxhash64(token); a bigram key is
-    the (prev, cur) hash pair), the model side pre-joins the
-    denominator so scoring is one left join, and the model broadcasts
-    by default with a shuffled-hash-join fallback when the distinct
-    bigram count exceeds `broadcast_max_pairs` (both paths
-    row-identical — same counts, same arithmetic).
-
-    Score = mean over the document's n-1 bigram positions of
-    -ln(S(w_i | w_{i-1})), rounded to 6 decimals (summation-order
-    stability). Documents with fewer than 2 tokens have no bigram
-    positions and are dropped — score them with unigram_logprob.
-    `train_df` separates the model corpus from the scored one (CCNet
-    trains on Wikipedia, scores the crawl); scoring the training
-    corpus against itself never backs off by construction. A scored
-    token absent from the training vocabulary takes a half-count OOV
-    floor (S = backoff * 0.5 / N) so no position scores -ln(0).
-
-    Returns (key, n_pairs, sb_nll)."""
-
-    def _split(frame: DataFrame, k: str):
-        # unigrams (and N) count every token of every non-empty document,
-        # as in Brants; only bigram extraction needs two tokens
-        hs = frame.select(k, F.transform(
-            _words(F.col(text_col)), lambda w: F.xxhash64(w)).alias("_hs")) \
-            .where(F.size("_hs") >= 1)
-        prs = hs.where(F.size("_hs") >= 2).select(
-            k,
-            F.explode(F.arrays_zip(
-                F.slice("_hs", 1, F.size("_hs") - 1).alias("ph"),
-                F.slice("_hs", 2, F.size("_hs") - 1).alias("ch"),
-            )).alias("_p")).select(k, "_p.ph", "_p.ch")
-        return prs, hs.select(k, F.explode("_hs").alias("_th"))
-
-    train = train_df if train_df is not None else df
-    tpairs, ttoks = _split(train, key)
-    big = tpairs.groupBy("ph", "ch").agg(
-        F.count_if(F.lit(True)).alias("cb"))
-    uni = ttoks.groupBy("_th").agg(F.count_if(F.lit(True)).alias("cu"))
-    n_total = ttoks.count()
-    # pre-join the bigram denominator: Brants' S divides the bigram
-    # count by the PREVIOUS token's unigram count
-    model = big.join(uni.select(F.col("_th").alias("ph"),
-                                F.col("cu").alias("cprev")), "ph")
-    use_broadcast = True
-    if broadcast_max_pairs is not None:
-        use_broadcast = big.count() <= broadcast_max_pairs
-    cur = uni.select(F.col("_th").alias("ch"), F.col("cu").alias("ccur"))
-    if use_broadcast:
-        model, cur = F.broadcast(model), F.broadcast(cur)
-    pairs, _ = _split(df, key)
-    ccur_eff = F.coalesce(F.col("ccur").cast("double"), F.lit(0.5))
-    score = F.when(
-        F.col("cb").isNotNull(),
-        -F.log(F.col("cb") / F.col("cprev"))
-    ).otherwise(
-        -F.log(F.lit(backoff) * ccur_eff / F.lit(float(n_total))))
-    return (pairs
-            .join(model, ["ph", "ch"], "left")
-            .join(cur, "ch", "left")
-            .groupBy(key)
-            .agg(F.count_if(F.lit(True)).alias("n_pairs"),
-                 F.round(F.avg(score), 6).alias("sb_nll")))
-
-
 def perplexity_buckets(df: DataFrame, score_col: str = "unigram_nll",
                        key: str = "doc_id",
                        labels: tuple[str, ...] = ("head", "middle", "tail"),
@@ -1604,35 +1222,26 @@ def perplexity_buckets(df: DataFrame, score_col: str = "unigram_nll",
     perplexity, Wikipedia-like), middle, tail. CCNet keeps the buckets
     as separate corpora so downstream training can weight them.
 
-    The corpus-wide rank is the pack_sequences scale problem: a global
-    `row_number() OVER (ORDER BY score)` is a single-reducer sort.
-    Rank here = select_token_budget's de-skewed distributed prefix sum
-    with a UNIT token per row (tok_before == the number of rows
-    strictly before this one under (score asc, key asc)) — inheriting
-    the tie-group/key-range refinement, so heavily tied scores never
-    collapse into one window partition. bucket = floor(rank * k / n),
+    A global `row_number() OVER (ORDER BY score)` is a single-reducer
+    sort. The rank here is slicing.score_rank, the distributed prefix
+    sum over score buckets (ppl_rank == the number of rows strictly
+    before this one under (score asc, key asc)), whose tie-group and
+    fine-grid refinement keeps heavily tied or clustered scores from
+    collapsing into one window partition. bucket = floor(rank * k / n),
     byte-identical to the oracle's single global window.
 
     Returns the input plus (ppl_rank, ppl_bucket)."""
     k = len(labels)
-    # select_token_budget walks DESCENDING scores; negate so the walk
-    # is ascending-perplexity (head first); ties break by key in both
-    ranked0 = select_token_budget(
-        df.withColumn("_unit", F.lit("x"))
-        .withColumn("_neg", -F.col(score_col)),
-        budget=1 << 62, score_col="_neg", key=key, text_col="_unit",
-        max_partition_rows=max_partition_rows)
-    ranked = ranked0.withColumnRenamed("tok_before", "ppl_rank") \
-        .drop("_unit", "_neg", "n_tokens")
-    n = ranked.count()
+    ranked, n = score_rank(df, score_col, key, max_partition_rows)
     lab_arr = F.array(*[F.lit(x) for x in labels])
     idx = F.least(F.floor(F.col("ppl_rank") * k / F.lit(max(n, 1))),
                   F.lit(k - 1)).cast("int")
-    # re-attach the rank machinery's cache contract (derived frames do
-    # not inherit _cached_deps)
+    # re-attach the rank's cache contract (derived frames do not
+    # inherit _cached_deps)
     return track_caches(
-        ranked.withColumn("ppl_bucket", F.element_at(lab_arr, idx + 1)),
-        *getattr(ranked0, "_cached_deps", ()))
+        ranked.withColumnRenamed("rank", "ppl_rank")
+        .withColumn("ppl_bucket", F.element_at(lab_arr, idx + 1)),
+        *getattr(ranked, "_cached_deps", ()))
 
 
 def perplexity_buckets_by_lang(df: DataFrame, lang_col: str = "lang",

@@ -62,24 +62,18 @@ def test_full_repetition_stats_releases(spark):
     assert _n_persistent(spark) == 0
 
 
-def test_pack_sequences_releases(spark):
-    from docling_eval_spark.operators.webtext import pack_sequences
-
-    out = pack_sequences(_docs(spark), ctx_len=16)
-    assert out.count() == 30
-    release_caches(out)
-    assert _n_persistent(spark) == 0
-
-
-def test_select_token_budget_releases(spark):
-    from docling_eval_spark.operators.webtext import select_token_budget
+def test_perplexity_buckets_releases(spark):
+    from docling_eval_spark.operators.webtext import (
+        perplexity_buckets, perplexity_buckets_by_lang)
 
     scored = _docs(spark).withColumn(
-        "score", (F.col("doc_id") % 5).cast("double"))
-    out = select_token_budget(scored, budget=100, score_col="score")
-    out.collect()
-    release_caches(out)
-    assert _n_persistent(spark) == 0
+        "unigram_nll", (F.col("doc_id") % 5).cast("double")) \
+        .withColumn("lang", F.when(F.col("doc_id") % 2 == 0, "en"))
+    for op in (perplexity_buckets, perplexity_buckets_by_lang):
+        out = op(scored)
+        assert len(out.collect()) == 30
+        release_caches(out)
+        assert _n_persistent(spark) == 0
 
 
 def test_lsh_near_dup_pairs_capped_releases(spark):

@@ -198,43 +198,3 @@ def test_cli_curate_full_chain(spark, tmp_path):
     s0 = json.loads(open(summ0).read())
     assert s0["n_input"] == 0 and s0["n_output"] == 0
     assert s0["sample_rate"] == 0.0
-
-
-def test_cli_pack_manifest(spark, tmp_path):
-    from docling_eval_spark import cli
-
-    rows = [(i, " ".join(["w"] * (5 + i % 4))) for i in range(40)]
-    inp = str(tmp_path / "docs")
-    out = str(tmp_path / "manifest")
-    summ = str(tmp_path / "pack.json")
-    spark.createDataFrame(rows, ["doc_id", "text"]).write.parquet(inp)
-
-    cli.main(["pack", "--input", inp, "--output", out,
-              "--ctx", "16", "--seed", "3", "--summary", summ])
-
-    man = spark.read.parquet(out).collect()
-    total = sum(5 + i % 4 for i in range(40))
-    # shuffle_pos is a dense permutation and the packed stream is
-    # contiguous in shuffled order
-    by_pos = sorted(man, key=lambda r: r.shuffle_pos)
-    assert [r.shuffle_pos for r in by_pos] == list(range(40))
-    cum = 0
-    for r in by_pos:
-        assert r.tok_start == cum
-        assert r.seq_first == cum // 16
-        assert r.seq_last == (cum + r.n_tokens - 1) // 16
-        cum += r.n_tokens
-    assert cum == total
-
-    s = json.loads(open(summ).read())
-    assert s["n_docs"] == 40 and s["n_tokens"] == total
-    assert s["n_sequences"] == (total + 15) // 16 and s["seed"] == 3
-
-    # a different seed permutes documents but not the token budget
-    out2 = str(tmp_path / "manifest2")
-    cli.main(["pack", "--input", inp, "--output", out2,
-              "--ctx", "16", "--seed", "4"])
-    man2 = spark.read.parquet(out2).collect()
-    assert {r.doc_id: r.shuffle_pos for r in man2} != \
-        {r.doc_id: r.shuffle_pos for r in man}
-    assert sum(r.n_tokens for r in man2) == total

@@ -1,10 +1,10 @@
-"""Randomized cross-checks of the training-batch corpus operators
-against pure-Python references (seeded — deterministic in CI).
+"""Randomized cross-checks of the corpus operators against pure-Python
+references (seeded — deterministic in CI).
 
 The oracle queries gate these operators on the driver's synthetic
 corpus; these tests gate them on ADVERSARIAL shapes the corpus does
 not produce: key gaps, singleton buckets, dense duplicate graphs with
-cycles, and token streams that straddle context windows.
+cycles, and heavily tied scores.
 """
 
 from __future__ import annotations
@@ -23,28 +23,6 @@ def _rand_corpus(seed: int, n_docs: int, vocab: int,
                      for _ in range(rng.randrange(1, max_len))))
         for k in keys
     ]
-
-
-@pytest.mark.parametrize("seed,ctx,buckets", [
-    (1, 16, 4), (2, 7, 3), (3, 64, 17), (4, 1, 5)])
-def test_pack_sequences_matches_python_cumsum(spark, seed, ctx, buckets):
-    from docling_eval_spark.operators.webtext import pack_sequences
-
-    rows = _rand_corpus(seed, 80, 50, 30)
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {r.doc_id: r for r in
-           pack_sequences(df, ctx_len=ctx, n_buckets=buckets).collect()}
-    cum = 0
-    for k, text in rows:
-        nt = len(text.split())
-        r = out[k]
-        assert r.n_tokens == nt
-        assert r.tok_start == cum
-        assert r.seq_first == cum // ctx
-        assert r.seq_last == (cum + nt - 1) // ctx
-        assert r.n_seqs == (cum + nt - 1) // ctx - cum // ctx + 1
-        cum += nt
-    assert len(out) == len(rows)
 
 
 def _uf_components(n_ids: list[int],
@@ -141,39 +119,20 @@ def test_ngram_contamination_matches_python(spark, seed):
         assert got[k] == (n_grams, matched, matched >= 1)
 
 
-@pytest.mark.parametrize("seed,budget,buckets", [
-    (41, 50, 4), (42, 200, 16), (43, 1, 3), (44, 10_000, 7)])
-def test_select_token_budget_matches_python(spark, seed, budget, buckets):
-    from docling_eval_spark.operators.webtext import select_token_budget
+@pytest.mark.parametrize("seed,cap", [
+    (41, None), (42, 1), (43, 7), (44, 20)])
+def test_perplexity_rank_matches_python(spark, seed, cap):
+    from docling_eval_spark.operators.caching import release_caches
+    from docling_eval_spark.operators.webtext import perplexity_buckets
 
     rng = random.Random(seed)
-    rows = [(k, float(rng.randrange(5)), t)  # few score levels -> ties
-            for (k, t) in _rand_corpus(seed, 60, 20, 25)]
-    df = spark.createDataFrame(rows, ["doc_id", "score", "text"])
-    got = {r.doc_id: r.tok_before for r in select_token_budget(
-        df, budget=budget, score_col="score",
-        n_buckets=buckets).collect()}
-    cum, want = 0, {}
-    for k, s, t in sorted(rows, key=lambda r: (-r[1], r[0])):
-        if cum < budget:
-            want[k] = cum
-        cum += len(t.split())
-    assert got == want
-
-
-@pytest.mark.parametrize("seed", [51, 52])
-def test_epoch_shuffle_matches_python_md5_rank(spark, seed):
-    import hashlib
-
-    from docling_eval_spark.operators.webtext import epoch_shuffle
-
-    rng = random.Random(seed)
-    ids = rng.sample(range(0, 5000), 200)
-    df = spark.createDataFrame([(i,) for i in ids], ["doc_id"])
-    got = {r.doc_id: r.shuffle_pos
-           for r in epoch_shuffle(df, seed=seed, prefix_len=1).collect()}
-    order = sorted(
-        ids, key=lambda i: (hashlib.md5(f"{i}:{seed}".encode())
-                            .hexdigest(), i))
-    want = {k: pos for pos, k in enumerate(order)}
+    rows = [(k, float(rng.randrange(5)))  # few score levels -> ties
+            for (k, _) in _rand_corpus(seed, 60, 20, 25)]
+    df = spark.createDataFrame(rows, ["doc_id", "unigram_nll"])
+    out = perplexity_buckets(df, max_partition_rows=cap)
+    got = {r.doc_id: (r.ppl_rank, r.ppl_bucket) for r in out.collect()}
+    release_caches(out)
+    order = sorted(rows, key=lambda r: (r[1], r[0]))
+    want = {k: (rank, ("head", "middle", "tail")[rank * 3 // len(rows)])
+            for rank, (k, _) in enumerate(order)}
     assert got == want

@@ -1,6 +1,7 @@
 """The bucketed prefix sum: range_slice is byte-identical to the global
-row_number window, and no operator built on the prefix sum has a
-single-partition exchange in its physical plan."""
+row_number window, and neither operator built on the prefix sum
+(range_slice, the perplexity rank) has a single-partition exchange in
+its physical plan."""
 
 import pytest
 from pyspark.sql import Window
@@ -29,32 +30,24 @@ def test_matches_global_window(spark, start, end):
 
 
 def _prefix_sum_case(spark, name):
-    """(operator output, expected row count) over a 500-row frame."""
+    """(operator output, expected row count)."""
     from docling_eval_spark.operators.slicing import range_slice
-    from docling_eval_spark.operators.webtext import (
-        epoch_shuffle, pack_sequences, select_token_budget)
+    from docling_eval_spark.operators.webtext import perplexity_buckets
 
-    df = spark.range(500).select(F.col("id").alias("doc_id"),
-                                 F.lit("a b c").alias("text"))
-    # even ids tie on three scores, odd ids spread 250 distinct scores
-    # over one narrow band: with a small cap both refinements run
-    scored = df.withColumn("score", F.when(
-        F.col("doc_id") % 2 == 0, (F.col("doc_id") % 3).cast("double"))
-        .otherwise(10 + F.col("doc_id") / 1000))
+    df = spark.range(1000).select(F.col("id").alias("doc_id"))
     if name == "range_slice":
         return range_slice(df, 100, 120, n_buckets=16), 20
-    if name == "pack_sequences":
-        return pack_sequences(df, ctx_len=8, n_buckets=16), 500
-    if name == "epoch_shuffle":
-        return epoch_shuffle(df, prefix_len=1), 500
-    cap = 20 if name == "select_token_budget_hot" else None
-    return select_token_budget(scored, budget=1 << 40, score_col="score",
-                               n_buckets=4, max_partition_rows=cap), 500
+    # even ids tie on three scores, odd ids spread 500 distinct scores
+    # over one narrow band: with a small cap both refinements run
+    scored = df.withColumn("unigram_nll", F.when(
+        F.col("doc_id") % 2 == 0, (F.col("doc_id") % 3).cast("double"))
+        .otherwise(10 + F.col("doc_id") / 1e6))
+    cap = 20 if name == "perplexity_buckets_hot" else None
+    return perplexity_buckets(scored, max_partition_rows=cap), 1000
 
 
 @pytest.mark.parametrize("name", [
-    "range_slice", "pack_sequences", "epoch_shuffle",
-    "select_token_budget_cold", "select_token_budget_hot"])
+    "range_slice", "perplexity_buckets_cold", "perplexity_buckets_hot"])
 def test_no_single_partition_window(spark, name):
     from docling_eval_spark.operators.caching import release_caches
 
@@ -101,14 +94,13 @@ def test_string_key_rejected(spark):
         range_slice(df, 0, 1)
 
 
-def test_pack_sequences_string_key_rejected(spark):
-    from docling_eval_spark.operators.webtext import pack_sequences
+def test_perplexity_refinement_string_key_rejected(spark):
+    from docling_eval_spark.operators.webtext import perplexity_buckets
 
-    # numeric-looking strings order "1" < "10" < "100" < "11" under
-    # ORDER BY key; a numeric key-range bucketing would pack them in
-    # numeric order instead
+    # the tie refinement buckets the key arithmetically; numeric-looking
+    # strings order "1" < "10" < "100" < "11" under ORDER BY key
     df = spark.createDataFrame(
-        [(k, "w w") for k in ("1", "2", "9", "10", "11", "100")],
-        ["doc_id", "text"])
+        [(k, 1.0) for k in ("1", "2", "9", "10", "11", "100")],
+        ["doc_id", "unigram_nll"])
     with pytest.raises(TypeError, match="integral key"):
-        pack_sequences(df, ctx_len=4)
+        perplexity_buckets(df, max_partition_rows=2)

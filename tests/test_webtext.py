@@ -201,33 +201,6 @@ def test_perplexity_buckets_thirds_and_ties(spark):
         "head": 30, "middle": 30, "tail": 30}
 
 
-def test_assign_split_deterministic_and_stable(spark):
-    import hashlib
-
-    from docling_eval_spark.operators.webtext import assign_split
-
-    df = spark.range(0, 2000).withColumnRenamed("id", "doc_id")
-    fr = [("train", 0.8), ("val", 0.1), ("test", 0.1)]
-    out = {r.doc_id: r.split for r in assign_split(df, fracs=fr).collect()}
-
-    def expect(i):
-        u = int(hashlib.md5(f"{i}:".encode()).hexdigest()[:8], 16) / 2 ** 32
-        return "train" if u < 0.8 else ("val" if u < 0.9 else "test")
-
-    assert out == {i: expect(i) for i in range(2000)}
-    # rough proportions
-    n_train = sum(1 for s in out.values() if s == "train")
-    assert 0.75 < n_train / 2000 < 0.85
-    # growth stability: a smaller corpus assigns the SAME splits
-    sub = {r.doc_id: r.split for r in assign_split(
-        df.where("doc_id < 500"), fracs=fr).collect()}
-    assert all(out[i] == sub[i] for i in sub)
-    # distinct salt = independent draw
-    other = {r.doc_id: r.split for r in assign_split(
-        df, fracs=fr, salt="s2").collect()}
-    assert other != out
-
-
 def _py_full_repetition(text, line_sep="\n", para_sep="\n\n"):
     """Pure-Python reference for the 13 Gopher repetition fractions."""
     from collections import Counter
@@ -323,59 +296,6 @@ def test_full_repetition_pass_thresholds(spark):
     assert out[1].gopher_repetition_pass
     assert not out[2].gopher_repetition_pass
     assert out[2].dup_para_frac == 1.0
-
-
-def test_classifier_score_hand_computed(spark):
-    import hashlib
-    import math
-
-    from docling_eval_spark.operators.webtext import classifier_score
-
-    weights = [((i * 37) % 64 - 32) / 64.0 for i in range(64)]
-
-    def bucket(tok):
-        return int(hashlib.md5(tok.encode()).hexdigest()[:8], 16) % 64
-
-    rows = [(1, "alpha beta"), (2, "alpha"), (3, "x y z")]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {r.doc_id: r.clf_score for r in
-           classifier_score(df, weights).collect()}
-    for doc_id, text in rows:
-        toks = text.split()
-        z = sum(weights[bucket(t)] for t in toks) / len(toks)
-        want = round(1.0 / (1.0 + math.exp(-z)), 6)
-        assert out[doc_id] == pytest.approx(want, abs=1e-6), (text, z)
-
-
-def test_pareto_importance_sample_published_rule(spark):
-    import hashlib
-
-    from docling_eval_spark.operators.webtext import (
-        pareto_importance_sample)
-
-    rows = [(i, 0.02 * (i % 50)) for i in range(200)]
-    df = spark.createDataFrame(rows, ["doc_id", "clf_score"])
-    out = {r.doc_id: r.pareto_keep for r in
-           pareto_importance_sample(df).collect()}
-
-    def expect(doc_id, score):
-        u = (int(hashlib.md5(f"{doc_id}:".encode()).hexdigest()[:8], 16)
-             + 1.0) / 2.0 ** 32
-        return round(u ** (-1 / 9.0) - 1 - (1 - score), 6) > 0
-
-    assert out == {i: expect(i, s) for i, s in rows}
-    kept = sum(out.values())
-    assert 0 < kept < len(rows)   # heavy tail: some low scores survive
-    # high scores are kept near-always, low scores rarely
-    # alpha=9: P(keep | score s) = (2 - s)^-9 — ~0.65 at s=0.95,
-    # ~0.003 at s=0.05; the sampler preserves a heavy-tailed remnant
-    hi = [out[i] for i, s in rows if s > 0.9]
-    lo = [out[i] for i, s in rows if s < 0.1]
-    assert sum(hi) / len(hi) > 0.5 and sum(lo) / len(lo) < 0.1
-    # per-epoch redraw via salt changes the decision set
-    other = {r.doc_id: r.pareto_keep for r in
-             pareto_importance_sample(df, salt="epoch2").collect()}
-    assert other != out
 
 
 def test_with_robots_flags(spark):
@@ -646,40 +566,6 @@ def test_url_filter_dataframe_blocklist(spark):
     assert out[2].blocked_domain and not out[2].url_keep
 
 
-def test_pack_sequences_hand_computed(spark):
-    from docling_eval_spark.operators.webtext import pack_sequences
-
-    df = spark.createDataFrame(
-        [(1, "w w w w w"), (2, "w w w"), (3, "w w w w")],
-        ["doc_id", "text"])
-    out = {r.doc_id: r for r in pack_sequences(df, ctx_len=4).collect()}
-    assert (out[1].tok_start, out[1].seq_first, out[1].seq_last,
-            out[1].n_seqs) == (0, 0, 1, 2)
-    assert (out[2].tok_start, out[2].seq_first, out[2].seq_last,
-            out[2].n_seqs) == (5, 1, 1, 1)
-    assert (out[3].tok_start, out[3].seq_first, out[3].seq_last,
-            out[3].n_seqs) == (8, 2, 2, 1)
-
-
-def test_pack_sequences_bucketing_matches_global_cumsum(spark):
-    from docling_eval_spark.operators.webtext import pack_sequences
-
-    # irregular keys with gaps; few buckets force multi-doc buckets
-    rows = [(k, "t " * ((k * 7) % 11 + 1)) for k in
-            [3, 8, 21, 22, 40, 41, 55, 90, 91, 97]]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {r.doc_id: r for r in
-           pack_sequences(df, ctx_len=8, n_buckets=3).collect()}
-    cum = 0
-    for k, text in rows:
-        nt = len(text.split())
-        assert out[k].n_tokens == nt
-        assert out[k].tok_start == cum
-        assert out[k].seq_first == cum // 8
-        assert out[k].seq_last == (cum + nt - 1) // 8
-        cum += nt
-
-
 def test_stratified_hash_sample_matches_global_per_stratum(spark):
     from docling_eval_spark.operators.webtext import stratified_hash_sample
 
@@ -700,6 +586,35 @@ def test_stratified_hash_sample_matches_global_per_stratum(spark):
     global_kept = {r.doc_id
                    for r in hash_sample(df, rate=0.25, salt="s").collect()}
     assert de_kept == {k for k in global_kept if k % 3 == 1}
+
+def _en_and_null_langs(spark):
+    rows = [(i, "en") for i in range(100)] + \
+        [(100 + i, None) for i in range(5)]
+    return spark.createDataFrame(rows, "doc_id long, lang string")
+
+
+def test_temperature_mix_null_stratum_is_rarest(spark):
+    """NULL lang is a stratum: with 5 NULL rows against 100 en rows it
+    is the rarest and takes rate 1.0, so every NULL row survives."""
+    from docling_eval_spark.operators.webtext import temperature_mix
+
+    rows = temperature_mix(_en_and_null_langs(spark), salt="s").collect()
+    assert sorted(r.doc_id for r in rows if r.lang is None) == \
+        list(range(100, 105))
+    assert 0 < sum(r.lang == "en" for r in rows) < 100
+
+
+@pytest.mark.parametrize("rates,want", [
+    ({None: 1.0, "en": 0.0}, range(100, 105)),
+    ({None: 0.0, "en": 1.0}, range(100)),
+    ({None: 1.0}, range(100, 105)),
+    ({"en": 1.0}, range(100)),      # a stratum absent from the map drops
+])
+def test_stratified_hash_sample_null_stratum(spark, rates, want):
+    from docling_eval_spark.operators.webtext import stratified_hash_sample
+
+    out = stratified_hash_sample(_en_and_null_langs(spark), rates)
+    assert sorted(r.doc_id for r in out.collect()) == list(want)
 
 
 def test_duplicate_span_stats_hand_computed(spark):
@@ -753,52 +668,6 @@ def test_normalize_text_keep_newlines(spark):
     assert out.text_norm_changed
 
 
-def test_epoch_shuffle_is_permutation_and_seed_dependent(spark):
-    from docling_eval_spark.operators.webtext import epoch_shuffle
-
-    df = spark.range(0, 500).withColumnRenamed("id", "doc_id")
-    out = {r.doc_id: r.shuffle_pos
-           for r in epoch_shuffle(df, seed=1).collect()}
-    # dense 0-based permutation
-    assert sorted(out.values()) == list(range(500))
-    # deterministic across calls
-    again = {r.doc_id: r.shuffle_pos
-             for r in epoch_shuffle(df, seed=1).collect()}
-    assert again == out
-    # a different epoch seed produces a different order
-    other = {r.doc_id: r.shuffle_pos
-             for r in epoch_shuffle(df, seed=2).collect()}
-    assert other != out
-    # coarser bucketing must not change the order
-    coarse = {r.doc_id: r.shuffle_pos
-              for r in epoch_shuffle(df, seed=1, prefix_len=1).collect()}
-    assert coarse == out
-
-
-def test_epoch_shuffle_prefix_length_equivalence(spark):
-    """The hex-prefix length sets only the PARTITION boundaries of the
-    distributed rank, never the total order: every prefix_len must
-    produce the identical permutation, and a longer prefix must shrink
-    the largest window partition (the per-task sort input)."""
-    from docling_eval_spark.operators.webtext import epoch_shuffle
-
-    df = spark.range(0, 4000).withColumnRenamed("id", "doc_id")
-    by_len = {}
-    for plen in (1, 2, 3, 4):
-        by_len[plen] = {r.doc_id: r.shuffle_pos for r in
-                        epoch_shuffle(df, seed=3, prefix_len=plen).collect()}
-    assert by_len[1] == by_len[2] == by_len[3] == by_len[4]
-    assert sorted(by_len[4].values()) == list(range(4000))
-
-    # bucket-population evidence: max bucket shrinks as the domain widens
-    def max_bucket(plen):
-        h = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":3")))
-        return (df.select(F.substring(h, 1, plen).alias("p"))
-                .groupBy("p").count().agg(F.max("count")).first()[0])
-
-    assert max_bucket(1) > max_bucket(2) > max_bucket(3)
-
-
 def test_gopher_line_flags_hand_computed(spark):
     from docling_eval_spark.operators.webtext import gopher_line_flags
 
@@ -820,106 +689,120 @@ def test_gopher_line_flags_hand_computed(spark):
     assert not {r.doc_id: r for r in strict}[1].flag_bullet
 
 
-def test_select_token_budget_hand_computed(spark):
-    from docling_eval_spark.operators.webtext import select_token_budget
-
-    # scores: doc 3 best, then 1, then tie (2, 4) broken by key
-    rows = [(1, 5.0, "w w w w"),     # 4 tokens, cum 7
-            (2, 1.0, "w w w"),       # 3 tokens, cum 10 (tie, key 2 first)
-            (3, 9.0, "w w w"),       # 3 tokens, cum 3
-            (4, 1.0, "w w")]         # 2 tokens, cum 12
-    df = spark.createDataFrame(rows, ["doc_id", "score", "text"])
-    out = {r.doc_id: r for r in
-           select_token_budget(df, budget=8, score_col="score").collect()}
-    # budget 8: doc 3 (before 0), doc 1 (before 3), doc 2 (before 7 <
-    # 8 -> boundary doc kept), doc 4 (before 10 -> dropped)
-    assert set(out) == {1, 2, 3}
-    assert out[3].tok_before == 0
-    assert out[1].tok_before == 3
-    assert out[2].tok_before == 7
-    # tight budget keeps only the best doc
-    top = select_token_budget(df, budget=1, score_col="score").collect()
-    assert [r.doc_id for r in top] == [3]
+def _rank_reference(rows):
+    """Pure-Python rank and thirds: (score asc, key asc) sort."""
+    order = sorted(rows, key=lambda r: (r[1], r[0]))
+    return {key: (rank, ("head", "middle", "tail")[min(rank * 3 // len(rows),
+                                                       2)])
+            for rank, (key, _) in enumerate(order)}
 
 
-def _token_budget_reference(rows, budget):
-    """Pure-Python single-pass reference: (score desc, key asc) walk."""
-    out = {}
-    before = 0
-    for key, score, text in sorted(rows, key=lambda r: (-r[1], r[0])):
-        n = len(text.split())
-        if before < budget:
-            out[key] = (n, before)
-        before += n
-    return out
+def _ranks(spark, rows, cap):
+    from docling_eval_spark.operators.caching import release_caches
+    from docling_eval_spark.operators.webtext import perplexity_buckets
 
-
-def test_select_token_budget_all_tied_scores_bounded(spark):
-    """Gopher-style quality scores tie heavily; with every score
-    IDENTICAL the old single-level score bucketing collapsed the whole
-    corpus into one window partition (a near-global single-task sort).
-    The tie refinement must (a) keep the result byte-identical to the
-    global order and (b) bound every window partition by the key-range
-    cell size."""
-    from docling_eval_spark.operators.webtext import select_token_budget
-
-    n, nb = 20_000, 16
-    rows = [(i, 3.0, "w " * (1 + i % 5)) for i in range(n)]
-    df = spark.createDataFrame(rows, ["doc_id", "score", "text"]) \
+    df = spark.createDataFrame(rows, ["doc_id", "unigram_nll"]) \
         .repartition(8)
-    budget = 30_000
-    got = {r.doc_id: (r.n_tokens, r.tok_before) for r in
-           select_token_budget(df, budget=budget, score_col="score",
-                               n_buckets=nb,
-                               max_partition_rows=1000).collect()}
-    assert got == _token_budget_reference(
-        [(i, s, t.strip()) for i, s, t in rows], budget)
-    # partition bound: with all scores tied the refinement splits by
-    # arithmetic key range — every cell holds ceil(n / nb)-ish rows,
-    # never the whole corpus
-    kwidth = (n - 1) // nb + 1
-    assert kwidth < n / 4  # the cell bound is a real bound
+    out = perplexity_buckets(df, max_partition_rows=cap)
+    got = {r.doc_id: (r.ppl_rank, r.ppl_bucket) for r in out.collect()}
+    release_caches(out)
+    return got
 
 
-def test_select_token_budget_clustered_scores_fine_grid(spark):
+def test_perplexity_rank_all_tied_scores(spark):
+    """LM scores can tie wholesale; with every score IDENTICAL a plain
+    score bucketing would put the whole corpus in one window
+    partition. The tie refinement splits the one hot bucket by
+    arithmetic key range and must keep the global (score, key) rank."""
+    rows = [(i, 3.0) for i in range(20_000)]
+    assert _ranks(spark, rows, 1000) == _rank_reference(rows)
+
+
+def test_perplexity_rank_clustered_scores_fine_grid(spark):
     """Continuous-but-clustered scores (many distinct values in a
-    narrow band) take the fine-grid refinement; the result must still
-    match the global (score desc, key asc) order."""
-    from docling_eval_spark.operators.webtext import select_token_budget
-
+    narrow band) take the fine-grid refinement; the rank must still
+    match the global (score asc, key asc) order."""
     # 5000 distinct scores packed into [0.50, 0.55); plus outliers that
     # spread the global range so the cluster lands in ONE coarse bucket
-    rows = [(i, 0.50 + (i % 5000) * 1e-5, "w " * (1 + i % 3))
-            for i in range(5000)]
-    rows += [(9001, 100.0, "w w"), (9002, -100.0, "w")]
-    df = spark.createDataFrame(rows, ["doc_id", "score", "text"])
-    budget = 4000
-    got = {r.doc_id: (r.n_tokens, r.tok_before) for r in
-           select_token_budget(df, budget=budget, score_col="score",
-                               n_buckets=8,
-                               max_partition_rows=500).collect()}
-    assert got == _token_budget_reference(
-        [(i, s, t.strip()) for i, s, t in rows], budget)
+    rows = [(i, 0.50 + (i % 5000) * 1e-5) for i in range(5000)]
+    rows += [(9001, 100.0), (9002, -100.0)]
+    assert _ranks(spark, rows, 500) == _rank_reference(rows)
 
 
-def test_select_token_budget_mixed_hot_and_cold(spark):
+def test_perplexity_rank_mixed_hot_and_cold(spark):
     """Hot tie buckets, a hot clustered bucket, and cold buckets in the
     same corpus: the driver-side global partition ordering must stitch
     their offsets into one exact prefix sum."""
-    from docling_eval_spark.operators.webtext import select_token_budget
+    rows = [(i, 5.0) for i in range(300)]                       # tie block
+    rows += [(1000 + i, 2.0 + i * 1e-6) for i in range(300)]    # cluster
+    rows += [(2000 + i, float(-i)) for i in range(20)]          # cold tail
+    assert _ranks(spark, rows, 50) == _rank_reference(rows)
 
-    rows = [(i, 5.0, "w w") for i in range(300)]              # tie block
-    rows += [(1000 + i, 2.0 + i * 1e-6, "w w w")
-             for i in range(300)]                             # cluster
-    rows += [(2000 + i, float(-i), "w") for i in range(20)]   # cold tail
-    df = spark.createDataFrame(rows, ["doc_id", "score", "text"])
-    budget = 1000
-    got = {r.doc_id: (r.n_tokens, r.tok_before) for r in
-           select_token_budget(df, budget=budget, score_col="score",
-                               n_buckets=4,
-                               max_partition_rows=50).collect()}
-    assert got == _token_budget_reference(
-        [(i, s, t.strip()) for i, s, t in rows], budget)
+
+@pytest.mark.parametrize("op", ["perplexity_buckets",
+                                "perplexity_buckets_by_lang"])
+def test_perplexity_buckets_empty_input(spark, op):
+    from docling_eval_spark.operators import webtext
+
+    df = spark.createDataFrame([], "doc_id long, lang string, "
+                                   "unigram_nll double")
+    out = getattr(webtext, op)(df)
+    assert out.collect() == []
+    assert out.columns[-2:] == ["ppl_rank", "ppl_bucket"]
+
+
+def test_perplexity_buckets_by_lang_null_lang_is_a_language(spark):
+    """NULL-lang rows rank among themselves, like any other language."""
+    from docling_eval_spark.operators.webtext import (
+        perplexity_buckets_by_lang)
+
+    rows = [(i, "en" if i % 3 else None, float(i % 7)) for i in range(30)]
+    df = spark.createDataFrame(rows, "doc_id long, lang string, "
+                                     "unigram_nll double")
+    got = {r.doc_id: (r.ppl_rank, r.ppl_bucket)
+           for r in perplexity_buckets_by_lang(df).collect()}
+    want = {}
+    for lang in ("en", None):
+        want.update(_rank_reference(
+            [(i, s) for i, g, s in rows if g == lang]))
+    assert got == want
+
+
+def test_perplexity_buckets_quartile_labels(spark):
+    from docling_eval_spark.operators.webtext import perplexity_buckets
+
+    rows = [(i, float((i * 7) % 10)) for i in range(40)]
+    df = spark.createDataFrame(rows, ["doc_id", "unigram_nll"])
+    labels = ("q1", "q2", "q3", "q4")
+    got = {r.doc_id: (r.ppl_rank, r.ppl_bucket) for r in
+           perplexity_buckets(df, labels=labels).collect()}
+    order = sorted(rows, key=lambda r: (r[1], r[0]))
+    assert got == {k: (rank, labels[rank * 4 // 40])
+                   for rank, (k, _) in enumerate(order)}
+
+
+@pytest.mark.parametrize("cap", [None, 2])
+def test_perplexity_rank_null_scores_last(spark, cap):
+    """A NULL score ranks after every score, in the cold plan and when
+    the bucket holding it is refined."""
+    rows = [(i, None if i % 4 == 0 else float(i % 3)) for i in range(12)]
+    order = sorted(rows, key=lambda r: (r[1] is None, r[1] or 0.0, r[0]))
+    want = {k: (rank, ("head", "middle", "tail")[rank * 3 // len(rows)])
+            for rank, (k, _) in enumerate(order)}
+    assert _ranks(spark, rows, cap) == want
+
+
+def test_perplexity_rank_string_key_without_refinement(spark):
+    """Without a hot bucket no key arithmetic runs, so a string key
+    breaks score ties in ORDER BY key order: "1" < "10" < "100" < "2"."""
+    from docling_eval_spark.operators.webtext import perplexity_buckets
+
+    keys = ("1", "2", "9", "10", "11", "100")
+    df = spark.createDataFrame([(k, 1.0) for k in keys],
+                               ["doc_id", "unigram_nll"])
+    got = {r.doc_id: r.ppl_rank for r in
+           perplexity_buckets(df, max_partition_rows=None).collect()}
+    assert got == {k: rank for rank, k in enumerate(sorted(keys))}
 
 
 def test_duplicate_span_stats_hot_gram_cap(spark):
@@ -986,63 +869,24 @@ def test_temperature_mix_deterministic_and_flattening(spark):
     assert 200 < by["en"] < 400
 
 
-def test_stupid_backoff_published_formula(spark):
-    """Brants 2007: S = c(prev,cur)/c(prev) when seen, else
-    0.4 * c(cur)/N; OOV cur takes the half-count floor. Both join
-    paths (broadcast / shuffled-hash fallback) are row-identical."""
-    import math
+def test_temperature_mix_budget(spark):
+    """An explicit document budget scales every stratum's rate so the
+    expected output is the budget, each rate capped at 1."""
+    from docling_eval_spark.operators.webtext import (
+        hash_sample, temperature_mix, temperature_mix_rates)
 
-    from docling_eval_spark.operators.webtext import stupid_backoff_logprob
-
-    train = spark.createDataFrame(
-        [(1, "a b a b c"), (2, "a b c")], ["doc_id", "text"])
-    score = spark.createDataFrame(
-        [(10, "a b c"), (11, "c a"), (12, "x a"), (13, "solo")],
-        ["doc_id", "text"])
-    out = {r["doc_id"]: (r["n_pairs"], r["sb_nll"]) for r in
-           stupid_backoff_logprob(score, train_df=train).collect()}
-    # train: unigrams a:3 b:3 c:2 (N=8); bigrams (a,b):3 (b,a):1 (b,c):2
-    assert out[10] == (2, round((-math.log(3 / 3) - math.log(2 / 3)) / 2, 6))
-    assert out[11] == (1, round(-math.log(0.4 * 3 / 8), 6))  # backoff
-    assert out[12] == (1, round(-math.log(0.4 * 3 / 8), 6))  # OOV prev
-    assert 13 not in out                                     # <2 tokens
-    # OOV cur: half-count floor, never -ln(0)
-    oov = {r["doc_id"]: r["sb_nll"] for r in stupid_backoff_logprob(
-        spark.createDataFrame([(20, "a zzz")], ["doc_id", "text"]),
-        train_df=train).collect()}
-    assert oov[20] == round(-math.log(0.4 * 0.5 / 8), 6)
-    # self-scoring never backs off (every bigram is in its own model)
-    self_nll = {r["doc_id"]: r["sb_nll"] for r in
-                stupid_backoff_logprob(train).collect()}
-    assert self_nll[2] == round((-math.log(3 / 3) - math.log(2 / 3)) / 2, 6)
-    # shuffled-hash fallback path row-identical
-    nb = {r["doc_id"]: (r["n_pairs"], r["sb_nll"]) for r in
-          stupid_backoff_logprob(score, train_df=train,
-                                 broadcast_max_pairs=1).collect()}
-    assert nb == out
-
-
-def test_stupid_backoff_counts_one_token_documents(spark):
-    """Unigram counts and N come from every training token, including
-    a 1-token document's (Brants; the stupid_backoff_nll oracle); only
-    bigram extraction needs two tokens."""
-    import math
-
-    from docling_eval_spark.operators.webtext import stupid_backoff_logprob
-
-    train = spark.createDataFrame(
-        [(1, "a b a b c"), (2, "a b c"), (3, "c")], ["doc_id", "text"])
-    score = spark.createDataFrame(
-        [(10, "a b c"), (11, "a c"), (12, "c zzz")], ["doc_id", "text"])
-    out = {r["doc_id"]: (r["n_pairs"], r["sb_nll"]) for r in
-           stupid_backoff_logprob(score, train_df=train).collect()}
-    # unigrams a:3 b:3 c:3 (N=9); bigrams (a,b):3 (b,a):1 (b,c):2
-    assert out[10] == (2, round((-math.log(3 / 3) - math.log(2 / 3)) / 2, 6))
-    assert out[11] == (1, round(-math.log(0.4 * 3 / 9), 6))  # backoff, c(c)=3
-    assert out[12] == (1, round(-math.log(0.4 * 0.5 / 9), 6))  # OOV floor / N
-    # the 1-token document scores nothing, but its token still counts
-    self_nll = {r["doc_id"] for r in stupid_backoff_logprob(train).collect()}
-    assert self_nll == {1, 2}
+    rows = [(i, "en" if i % 10 else "fr") for i in range(1000)]
+    df = spark.createDataFrame(rows, ["doc_id", "lang"])
+    rates = temperature_mix_rates({"en": 900, "fr": 100}, budget=300)
+    kept = {(r.doc_id, r.lang) for r in
+            temperature_mix(df, salt="s", budget=300).collect()}
+    # each stratum keeps exactly hash_sample's rows at its own rate
+    for lang, rate in rates.items():
+        part = df.where(F.col("lang") == lang)
+        assert {d for d, g in kept if g == lang} == {
+            r.doc_id for r in hash_sample(part, rate=rate,
+                                          salt="s").collect()}
+    assert 250 < len(kept) < 350
 
 
 def test_c4_badwords_page_gate(spark):

@@ -1,4 +1,4 @@
-"""Two-level scaling evidence for the training-batch corpus tier.
+"""Two-level scaling evidence for the corpus tier.
 
 Same methodology as tools/bench_webtext_scaling.py (fresh CPU-pinned
 JVM per level, warmup, best-of-runs, deterministically amplified

@@ -1,4 +1,4 @@
-"""sf0.1 -> sf1.0 scaling-exponent sweep of the training-batch tier.
+"""sf0.1 -> sf1.0 scaling-exponent sweep of the corpus tier.
 
 The sf0.01 oracle proves correctness; this sweep catches CONSTANT-FACTOR
 and super-linear surprises the small scales can't see: each corpus-tier
@@ -32,12 +32,10 @@ QUERIES = [
     "webtext_line_dedup", "gopher_quality", "webtext_repetition",
     "c4_line_filter", "pii_redaction", "webtext_domain_rollup",
     "webtext_unigram_nll", "webtext_latest_snapshot", "normalize_text",
-    # training-batch tier
+    # sampling, decontamination and dedup tier
     "hash_sample_docs", "stratified_sample_langs", "ngram_decontaminate",
-    "url_filter_pages", "pack_sequences_docs", "token_budget_select",
-    "epoch_shuffle_pos", "duplicate_spans", "dedup_components",
+    "url_filter_pages", "duplicate_spans", "dedup_components",
     "dedup_against_history",
-    "bpe_token_counts", "pack_bpe_sequences",
 ]
 
 SRC = "/root/testdata/sf0.1"

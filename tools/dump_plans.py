@@ -18,12 +18,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 HEADLINE = [
     "doc_stats", "extract_identity_rate", "ocr_page_cer", "gt_builder_spans",
     "multi_prov_guard", "doclaynet_v2_kv",
-    "duplicate_spans", "ngram_decontaminate", "pack_sequences_docs",
-    "stratified_sample_langs", "url_filter_pages", "epoch_shuffle_pos",
+    "duplicate_spans", "ngram_decontaminate",
+    "stratified_sample_langs", "url_filter_pages",
     "dedup_against_history",
     # round 4
-    "bpe_token_counts", "url_dedup_canonical", "classifier_quality_sample",
-    "train_split_assign", "gopher_repetition_full", "warc_roundtrip",
+    "url_dedup_canonical", "gopher_repetition_full", "warc_roundtrip",
     "perplexity_buckets",
     # round 5: the de-globalized P1 slice (NO unpartitioned window / no
     # SinglePartition exchange must appear) and the classifier stage
@@ -32,10 +31,9 @@ HEADLINE = [
     # parse + partial-aggregable collapses (no window), and the robots
     # verdict a broadcast join with zero Python stages
     "cdx_fetch_manifest", "robots_txt_verdicts",
-    # LM scoring (counts-only model, hash-only exchanges), mixing
-    # (scan-speed threshold predicate), semantic dedup (cluster-scoped
-    # pair join)
-    "stupid_backoff_nll", "temperature_mix_sample", "semdedup_keep",
+    # mixing (scan-speed threshold predicate), semantic dedup
+    # (cluster-scoped pair join)
+    "temperature_mix_sample", "semdedup_keep",
 ]
 
 
@@ -99,8 +97,8 @@ CHECKS = {
     "doc_stats": ["ReadSchema: struct<n_chars:bigint>", "partial_"],
     "gt_builder_spans": ["PushedFilters: [IsNotNull(doc_id), "
                          "LessThan(doc_id,200)]", "BroadcastHashJoin"],
-    "stratified_sample_langs": ["PushedFilters: [IsNotNull(lang)]",
-                                "BroadcastHashJoin", "partial_"],
+    # NULL lang is a stratum, so the scan pushes no IsNotNull(lang)
+    "stratified_sample_langs": ["BroadcastHashJoin", "partial_"],
     "layout_corpus_map(partial aggregate)": ["partial_"],
 }
 
