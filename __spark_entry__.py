@@ -1564,7 +1564,7 @@ def _gopher_repetition_oracle() -> str:
         sel.append(f"tf{n}.top{n}gram_char_frac")
     for n in (5, 6, 7, 8, 9, 10):
         joins.append(f"LEFT JOIN cf{n} ON cf{n}.doc_id = w.doc_id")
-        sel.append(f"round(coalesce(cf{n}.cov, 0) / wc.word_chars, 6) "
+        sel.append(f"{_rep_sql_ref(f'dup{n}gram_char_frac')} "
                    f"AS dup{n}gram_char_frac")
     fails = " OR ".join(
         f"coalesce({_rep_sql_ref(col)}, 0) > {thr}"
@@ -1585,7 +1585,7 @@ def _rep_sql_ref(col: str) -> str:
         n = col[3]
         return f"tf{n}.{col}"
     n = col[3:col.index("gram")]
-    return f"round(coalesce(cf{n}.cov, 0) / wc.word_chars, 6)"
+    return f"round(coalesce(cf{n}.cov, 0) / nullif(wc.word_chars, 0), 6)"
 
 
 def _q_robots_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1929,23 +1929,6 @@ def _q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "symbol_ratio", "flag_word_count", "flag_word_len", "flag_symbol",
         "flag_alpha", "flag_stop", "gopher_pass",
     ).orderBy("doc_id")
-
-
-def _q_webtext_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher repetition rules: within-document duplicate-line fractions
-    (2-word pseudo-lines -> real intra-document collisions) plus the
-    top word-2-gram character fraction."""
-    from docling_eval_spark.operators.webtext import (
-        repetition_stats, with_word_lines)
-
-    # repartition the light rows first: the source parquet is 1-3 splits
-    # and the per-row gram expressions are the heavy stage here
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    ).repartition(16, F.xxhash64("doc_id", F.lit(0xEB)))
-    lined = with_word_lines(docs, words_per_line=2)
-    return repetition_stats(
-        lined, key="doc_id", text_col="text_lines").orderBy("doc_id")
 
 
 def _q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2330,23 +2313,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     entries with no gate row ever; (3) entries whose last gate row is
     the OLDEST; (4) the rest, least-recently-verified first.
 
-    Current order: the five entries whose code changed lead
+    Current order: the six entries whose code changed lead
     (perplexity_buckets and perplexity_by_lang rank with
-    slicing.score_rank in place of the retired token-budget walk,
-    temperature_mix_sample and stratified_sample_langs keep NULL as a
-    stratum and join their rate table null-safe, and range_slice runs
-    on the narrowed row-count prefix sum), then the four near-dedup
-    entries and textract_spans of the previous change, then the
-    round-5 order unchanged.
+    slicing.score_rank, which now orders NaN after every number and
+    before NULL; gopher_repetition_full's operator gives a text with no
+    word characters the NULL-text row; temperature_mix_sample and
+    stratified_sample_langs keep NULL as a stratum and join their rate
+    table null-safe, and range_slice runs on the narrowed row-count
+    prefix sum), then the four near-dedup entries and textract_spans
+    of an earlier change, then the round-5 order unchanged.
     """
     return {
         # --- implementation changed since their last gate row ---
         "perplexity_buckets": _q_perplexity_buckets,
         "perplexity_by_lang": _q_perplexity_by_lang,
+        "gopher_repetition_full": _q_gopher_repetition_full,
         "temperature_mix_sample": _q_temperature_mix,
         "stratified_sample_langs": _q_stratified_sample_langs,
         "range_slice": _q_range_slice,
-        # --- changed in the previous change ---
+        # --- changed in an earlier change ---
         "near_dedup_kept": _q_near_dedup_kept,
         "near_dedup_against_history": _q_near_dedup_against,
         "dedup_against_history": _q_dedup_against_history,
@@ -2356,7 +2341,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "robots_meta_flags": _q_robots_flags,
         "embedding_near_dup": _q_embedding_near_dup,
         "embedding_dup_components": _q_embedding_dup_components,
-        "gopher_repetition_full": _q_gopher_repetition_full,
         "webtext_line_dedup": _q_webtext_line_dedup,
         "webtext_unigram_nll": _q_webtext_unigram_nll,
         # --- round-5 additions, never driver-verified ---
@@ -2397,7 +2381,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- past the window: r3-verified, unchanged since ---
         "png_decode_features": _q_png_decode_features,
         "otsl_table_grid": _q_otsl_table_grid,
-        "webtext_repetition": _q_webtext_repetition,
         "pii_redaction": _q_pii_redaction,
         "webtext_domain_rollup": _q_webtext_domain_rollup,
         "normalize_text": _q_normalize_text,
@@ -2767,41 +2750,6 @@ def oracle_sql() -> dict[str, str]:
             "symbol_ratio <= 0.1 AND alpha_word_frac >= 0.8 AND "
             "n_stop >= 2 AS gopher_pass "
             "FROM f ORDER BY doc_id"
-        ),
-        "webtext_repetition": (
-            "WITH w AS (SELECT doc_id, "
-            "string_split_regex(trim(text), '\\s+') AS ws FROM documents), "
-            "l AS (SELECT doc_id, "
-            "array_to_string(ws[cast(i*2+1 AS int):cast(i*2+2 AS int)], ' ')"
-            " AS line FROM (SELECT doc_id, ws, "
-            "cast(ceil(len(ws) / 2.0) AS int) AS nc FROM w), "
-            "unnest(range(0, nc)) AS u(i)), "
-            "lc AS (SELECT doc_id, line, count(*) AS cnt FROM l "
-            "WHERE strlen(line) > 0 GROUP BY doc_id, line), "
-            "ls AS (SELECT doc_id, "
-            "round(cast(sum(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) "
-            "AS double) / sum(cnt), 6) AS dup_line_frac, "
-            "round(cast(sum(CASE WHEN cnt > 1 THEN cnt * strlen(line) "
-            "ELSE 0 END) AS double) / sum(cnt * strlen(line)), 6) "
-            "AS dup_line_char_frac FROM lc GROUP BY doc_id), "
-            "g AS (SELECT doc_id, ws[cast(i+1 AS int)] || ' ' || "
-            "ws[cast(i+2 AS int)] AS gram FROM w, "
-            "unnest(range(0, len(ws) - 1)) AS u(i)), "
-            "gc AS (SELECT doc_id, gram, count(*) AS cnt FROM g "
-            "GROUP BY doc_id, gram), "
-            "top AS (SELECT doc_id, gram AS top_gram, cnt AS top_cnt FROM "
-            "(SELECT doc_id, gram, cnt, row_number() OVER "
-            "(PARTITION BY doc_id ORDER BY cnt DESC, gram ASC) AS rn "
-            "FROM gc) WHERE rn = 1), "
-            "wc AS (SELECT doc_id, "
-            "list_sum(list_transform(ws, x -> strlen(x))) AS word_chars "
-            "FROM w) "
-            "SELECT ls.doc_id, ls.dup_line_frac, ls.dup_line_char_frac, "
-            "top.top_gram, cast(top.top_cnt AS bigint) AS top_cnt, "
-            "round(top.top_cnt * strlen(replace(top.top_gram, ' ', '')) "
-            "/ cast(wc.word_chars AS double), 6) AS top2gram_char_frac "
-            "FROM ls JOIN top ON top.doc_id = ls.doc_id "
-            "JOIN wc ON wc.doc_id = ls.doc_id ORDER BY ls.doc_id"
         ),
         "pii_redaction": (
             "WITH t AS (SELECT doc_id, text || ' contact user' || doc_id "

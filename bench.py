@@ -46,8 +46,7 @@ GROUPS: dict[str, list[str]] = {
         "range_slice", "embedding_topk",
     ],
     "webtext": [
-        "webtext_line_dedup", "gopher_quality", "webtext_repetition",
-        "webtext_unigram_nll",
+        "webtext_line_dedup", "gopher_quality", "webtext_unigram_nll",
     ],
     # round-3 corpus tier; own fresh JVM so the webtext group's
     # cross-round numbers stay comparable (BENCH.md: excluded from

@@ -204,24 +204,21 @@ def cmd_consolidate(args) -> None:
 
 def cmd_curate(args) -> None:
     """Web-corpus curation pass over an extracted table:
-    [hash-sample] -> [normalize] -> Gopher quality gate -> C4
-    line/page filters -> PII redaction -> corpus-level line dedup ->
-    [benchmark decontamination], writing the curated table plus a
-    JSON drop-accounting summary. Cheapest-first ordering: the
-    deterministic sample evaluates at the scan (everything downstream
-    scales with the rate), the per-row quality gates shrink the corpus
-    BEFORE the shuffle-bearing passes, and the decontamination probe
-    runs last over survivors only — at 100 TB each stage pays only for
-    what the previous stages kept."""
+    [hash-sample] -> [url dedup] -> [robots] -> [normalize] -> [lang-id]
+    -> webtext.quality_chain (Gopher -> C4 -> PII, the chain the
+    streaming curation ingest runs too) -> corpus-level line dedup ->
+    [benchmark decontamination], writing the curated table plus a JSON
+    drop-accounting summary. Cheapest-first: the sample evaluates at the
+    scan, the per-row gates shrink the corpus BEFORE the shuffle-bearing
+    passes, and the decontamination probe runs last over survivors
+    only — each stage pays only for what the previous stages kept."""
     from pyspark.sql import functions as F
 
     from .operators.webtext import (
-        c4_page_filter,
         corpus_line_dedup,
         hash_sample,
         normalize_text,
-        redact_pii,
-        with_gopher_quality,
+        quality_chain,
     )
 
     spark = _spark(args.cpus)
@@ -281,30 +278,15 @@ def cmd_curate(args) -> None:
             before = kept.count()
             kept = kept.where(F.col("langid_lang").isin(wanted))
             n_lang_dropped = before - kept.count()
-    if not args.skip_gopher:
-        flagged = with_gopher_quality(kept, text_col=text,
-                                      min_words=args.min_words)
-        kept = flagged.where("gopher_pass").drop(
-            "n_words", "mean_word_len", "alpha_word_frac", "n_stop",
-            "symbol_ratio", "flag_word_count", "flag_word_len",
-            "flag_symbol", "flag_alpha", "flag_stop", "gopher_pass")
-    if not args.skip_c4:
-        badwords = None
-        if args.badwords_file:
-            with open(args.badwords_file) as fh:
-                badwords = [w.strip() for w in fh if w.strip()]
-        c4 = c4_page_filter(kept, text_col=text,
-                            min_words_per_line=args.min_words_per_line,
-                            min_kept_lines=args.min_kept_lines,
-                            sep=args.sep, badwords=badwords)
-        # adopt text_clean: lines failing the C4 line rules (no terminal
-        # punctuation, short, 'javascript') must not survive into the
-        # curated output — the stage is the line filter, not a page gate
-        kept = (c4.where("keep")
-                .drop(text, "keep", "n_lines", "n_kept_lines")
-                .withColumnRenamed("text_clean", text))
-    red = redact_pii(kept, text_col=text, out_col=text) \
-        .persist()
+    badwords = None
+    if args.badwords_file:
+        with open(args.badwords_file) as fh:
+            badwords = [w.strip() for w in fh if w.strip()]
+    red = quality_chain(kept, text_col=text, min_words=args.min_words,
+                        min_words_per_line=args.min_words_per_line,
+                        min_kept_lines=args.min_kept_lines, sep=args.sep,
+                        badwords=badwords, gopher=not args.skip_gopher,
+                        c4=not args.skip_c4).persist()
     n_after_filters = red.count()  # materialize before the dedup fan-out
 
     deduped = corpus_line_dedup(red, key=key, text_col=text, sep=args.sep)

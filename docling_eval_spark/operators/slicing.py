@@ -120,11 +120,12 @@ def range_slice(df: DataFrame, start: int, end: int,
 def score_rank(df: DataFrame, score_col: str, key: str,
                max_partition_rows: int | None) -> tuple[DataFrame, int]:
     """`df` plus `rank`, the number of rows strictly before each row
-    under (`score_col` asc, `key` asc), and the row count n. A NULL
-    score ranks after every score (NULLS LAST, as the DuckDB oracle
-    orders).
+    under (`score_col` asc, `key` asc), and the row count n. A NaN
+    score ranks after every number and a NULL after NaN (Spark's
+    `ORDER BY s ASC NULLS LAST`, as the DuckDB oracle orders).
 
-    One min/max probe, one per-bucket count over 256 arithmetic ranges
+    One min/max probe (over the numbers: NaN and NULL share the last
+    score cell), one per-bucket count over 256 arithmetic ranges
     of the score domain (no sampling), then `bucketed_running_total`
     with the probe's counts as its totals; n is their sum.
 
@@ -133,13 +134,15 @@ def score_rank(df: DataFrame, score_col: str, key: str,
     into a near-global single-task sort. Any bucket whose row count
     exceeds `max_partition_rows` is refined into finer partitions that
     are still INTERVALS of the global order. The partition key is the
-    struct (score bucket, s, k):
+    struct (score bucket, c, s, k):
 
-      * few distinct scores (tie mode): s = the score and k = the
+      * few distinct scores (tie mode): c = 0 for a number, 1 for NaN,
+        2 for NULL (the driver sorts the keys as Python tuples, where
+        NaN and None do not order), s = the number or 0, and k = the
         arithmetic KEY range — within equal scores the order is by key;
-      * many distinct scores (fine mode): s = the index on a finer
-        score grid (width / 256), k = 0;
-      * cold buckets: s = 0, k = 0 (one partition per bucket).
+      * many distinct scores (fine mode): c = 0, s = the index on a
+        finer score grid (width / 256), k = 0;
+      * cold buckets: c = 0, s = 0, k = 0 (one partition per bucket).
 
     The result is byte-identical to the single-window plan for ANY
     cap. One refinement level bounds a tie-heavy partition by
@@ -148,20 +151,25 @@ def score_rank(df: DataFrame, score_col: str, key: str,
     `df` is persisted for the probes and the rank; the returned frame
     tracks it (release with caching.release_caches)."""
     nb = 256    # score buckets, and the refinement factor of a hot one
+    score = F.col(score_col)
+    num = F.nanvl(score.cast("double"), F.lit(None).cast("double"))
     src = df.persist()
-    lo, hi, klo, khi = src.agg(
-        F.min(score_col), F.max(score_col), F.min(key), F.max(key)).first()
-    if lo is None:
+    lo, hi, klo, khi, n_rows = src.agg(
+        F.min(num), F.max(num), F.min(key), F.max(key),
+        F.count_if(F.lit(True))).first()
+    if not n_rows:
         src.unpersist()     # empty input: nothing to share
         return df.withColumn("rank", F.lit(0).cast("long")), 0
+    if lo is None:          # only NaN and NULL scores
+        lo = hi = 0.0
     span = float(hi) - float(lo)
     width = span / nb if span > 0 else 1.0
 
     def grid(cell: float, n_cells: int) -> Column:
         # cell 0 = lowest scores; monotone ascending in the score. A
-        # NULL score lands in the last cell: least() skips NULL.
+        # NaN or NULL score lands in the last cell: least() skips NULL.
         return F.least(
-            F.floor((F.col(score_col) - F.lit(float(lo))) / F.lit(cell)),
+            F.floor((num - F.lit(float(lo))) / F.lit(cell)),
             F.lit(n_cells - 1))
 
     src_b = src.withColumn("_b", grid(width, nb).cast("int"))
@@ -174,14 +182,20 @@ def score_rank(df: DataFrame, score_col: str, key: str,
     # no hot bucket: the probe's counts are the offsets' totals
     totals = None if hot else [(r["_b"], r["n"]) for r in per_bucket]
     if hot:
-        require_integral_key(df, key, "score_rank tie-group refinement")
+        try:
+            require_integral_key(df, key, "score_rank tie-group refinement")
+        except TypeError:
+            src.unpersist()
+            raise
         tie = F.col("_b").isin([r["_b"] for r in hot if r["ds"] <= nb])
         fine = F.col("_b").isin([r["_b"] for r in hot if r["ds"] > nb])
         kb = key_range_bucket(src, key, nb, bounds=(klo, khi))
         src_b = src_b.withColumn("_b", F.struct(
             F.col("_b"),
-            F.when(tie, F.coalesce(F.col(score_col).cast("double"),
-                                   F.lit(float("inf"))))
+            F.when(tie & score.isNull(), F.lit(2))
+            .when(tie & num.isNull(), F.lit(1))
+            .otherwise(F.lit(0)).alias("c"),
+            F.when(tie, F.coalesce(num, F.lit(0.0)))
             .when(fine, grid(width / nb, nb * nb).cast("double"))
             .otherwise(F.lit(0.0)).alias("s"),
             F.when(tie, kb).otherwise(F.lit(0).cast("long")).alias("k")))

@@ -10,9 +10,8 @@ C4, RefinedWeb, mT5) run exactly these passes over it:
 - Gopher quality rules (Rae et al. 2021, appendix A1.1): word-count
   bounds, mean-word-length bounds, symbol-to-word ratio, fraction of
   words with an alphabetic character, stop-word floor,
-- Gopher repetition rules (A1.1): duplicate-line fraction,
-  duplicate-line character fraction, top word-2-gram character
-  fraction,
+- Gopher repetition rules (A1.1), all 13 thresholds
+  (full_repetition_stats),
 - PII redaction (emails / IPv4 / phone numbers -> typed placeholder
   tokens; C4 and RefinedWeb both ship such regex passes),
 - per-domain rollups with optional salting (host-level skew is THE
@@ -35,7 +34,9 @@ C4, RefinedWeb, mT5) run exactly these passes over it:
 - pre-hash NFC/whitespace canonicalization (one Arrow stage),
 - per-stratum temperature mixing (mT5 section 3.1; scan-speed, no
   global sort),
-- Gopher A1.1 line rules (bullet / ellipsis fractions).
+- Gopher A1.1 line rules (bullet / ellipsis fractions),
+- the Gopher -> C4 -> PII gate chain (quality_chain) that the batch
+  curate command and the streaming curation ingest both run.
 
 Everything is built from JVM-side pyspark.sql.functions (the one Python
 stage is normalize_text's NFC step); the corpus-wide passes are
@@ -296,72 +297,6 @@ def gopher_line_flags(df: DataFrame, text_col: str = "text",
     )
 
 
-def repetition_stats(df: DataFrame, key: str = "doc_id",
-                     text_col: str = "text", sep: str = "\n") -> DataFrame:
-    """Gopher repetition rules (A1.1): within-document duplication.
-
-    Per document: fraction of lines that are duplicates of another line
-    in the same document (dup_line_frac), fraction of characters inside
-    such duplicated lines (dup_line_char_frac), and the fraction of
-    characters covered by the most frequent word 2-gram
-    (top2gram_char_frac = count * gram-characters / word-characters).
-
-    Both passes are keyed by (document, unit) then document — the
-    shuffle is the natural per-document partitioning, no corpus-wide
-    key, so the operator scales linearly with documents. Tie-break for
-    the top 2-gram: highest count, then lexicographically smallest
-    gram (deterministic and oracle-reproducible).
-    """
-    lines_df = (
-        df.select(key, F.explode(F.split(F.col(text_col), sep)).alias("line"))
-        .where(F.length("line") > 0)
-    )
-    line_counts = lines_df.groupBy(key, "line").agg(
-        F.count_if(F.lit(True)).alias("cnt"))
-    line_stats = line_counts.groupBy(key).agg(
-        F.round(
-            F.sum(F.when(F.col("cnt") > 1, F.col("cnt")).otherwise(0))
-            / F.sum("cnt").cast("double"), 6).alias("dup_line_frac"),
-        F.round(
-            F.sum(F.when(F.col("cnt") > 1,
-                         F.col("cnt") * F.length("line")).otherwise(0))
-            / F.sum(F.col("cnt") * F.length("line")).cast("double"), 6
-        ).alias("dup_line_char_frac"),
-    )
-
-    split = df.select(key, _words(F.col(text_col)).alias("_ww"))
-    words = F.col("_ww")
-    grams = F.transform(
-        F.slice(words, 1, F.greatest(F.size(words) - 1, F.lit(0))),
-        lambda w, i: F.concat_ws(" ", w, F.element_at(words, i + 2)),
-    )
-    gram_counts = (
-        split.select(key, F.explode(grams).alias("gram"))
-        .groupBy(key, "gram").agg(F.count_if(F.lit(True)).alias("cnt"))
-    )
-    top = gram_counts.groupBy(key).agg(
-        F.max("cnt").alias("top_cnt"),
-        F.min_by(F.col("gram"), F.struct(
-            (-F.col("cnt")).alias("neg"), F.col("gram"))).alias("top_gram"),
-    )
-    word_chars = split.select(
-        key,
-        F.aggregate(F.transform(words, F.length), F.lit(0),
-                    lambda acc, x: acc + x).alias("word_chars"))
-    top_frac = (
-        top.join(word_chars, key)
-        .select(
-            key, "top_gram", "top_cnt",
-            F.round(
-                F.col("top_cnt")
-                * F.length(F.regexp_replace("top_gram", " ", ""))
-                / F.col("word_chars").cast("double"), 6
-            ).alias("top2gram_char_frac"),
-        )
-    )
-    return line_stats.join(top_frac, key)
-
-
 GOPHER_REPETITION_THRESHOLDS = {
     "dup_line_frac": 0.30, "dup_para_frac": 0.30,
     "dup_line_char_frac": 0.20, "dup_para_char_frac": 0.20,
@@ -400,6 +335,12 @@ def full_repetition_stats(df: DataFrame, key: str = "doc_id",
         which re-scanned the corpus);
     every shuffle key carries the document id — per-document work
     only, linear in corpus size, no corpus-wide hot key.
+
+    Tie rule: among top n-grams of equal count the earliest first
+    occurrence wins, so only gram hashes cross the exchange. Empty-text
+    rule: a text with no word characters ("", blanks, bare separators)
+    gets a NULL text's row — every fraction NULL, gopher_repetition_pass
+    true — so no document is dropped and nothing divides by zero.
     """
     thresholds = dict(GOPHER_REPETITION_THRESHOLDS, **(thresholds or {}))
     paras_col = F.split(F.col(text_col), para_sep)
@@ -410,10 +351,10 @@ def full_repetition_stats(df: DataFrame, key: str = "doc_id",
     split = split.withColumn(
         "_ll", F.flatten(F.transform(
             F.col("_pp"), lambda p: F.split(p, line_sep))))
-    split = split.withColumn(
-        "word_chars",
+    # NULL, not 0, without word characters: no fraction divides by zero
+    split = split.withColumn("word_chars", F.nullif(
         F.aggregate(F.transform(F.col("_ww"), F.length), F.lit(0),
-                    lambda acc, x: acc + x))
+                    lambda acc, x: acc + x), F.lit(0)))
     split = split.persist()
     _split_cache = split       # the persisted frame: later rebinds derive
     split.count()
@@ -459,12 +400,10 @@ def full_repetition_stats(df: DataFrame, key: str = "doc_id",
     # (acc = xxhash64(acc, next) — overflow-free under ANSI mode, full
     # 64-bit space), never by the joined gram string: only
     # (key, n, i, gh) — four long-width columns — cross the count
-    # exchange, the corpus_line_dedup int-only-shuffle pattern. The
-    # top-gram tie on equal counts breaks by EARLIEST FIRST OCCURRENCE
-    # (distinct grams can't share a position, so the order is total and
-    # oracle-reproducible); the winner's character length is recomputed
-    # from the word-length array at its first occurrence — ≤3 rows per
-    # document ever touch gram text semantics.
+    # exchange, the corpus_line_dedup int-only-shuffle pattern. The tie
+    # rule's order is total (distinct grams can't share a position); the
+    # winner's character length is recomputed from the word-length array
+    # at its first occurrence.
     whs = F.transform(F.col("_ww"), lambda w: F.xxhash64(w))
     split = split.withColumn("_wh", whs).withColumn(
         "_wl", F.transform(F.col("_ww"), F.length))
@@ -540,21 +479,16 @@ def full_repetition_stats(df: DataFrame, key: str = "doc_id",
     out = (base.join(upvt, key, "left")
            .join(tpvt, key, "left")
            .join(cpvt, key, "left"))
-    sel = [
-        F.col(key),
-        F.col("line_frac").alias("dup_line_frac"),
-        F.col("line_char_frac").alias("dup_line_char_frac"),
-        F.col("para_frac").alias("dup_para_frac"),
-        F.col("para_char_frac").alias("dup_para_char_frac"),
-    ]
-    for n in (2, 3, 4):
-        sel.append(F.col(str(n)).alias(f"top{n}gram_char_frac"))
-    for n in (5, 6, 7, 8, 9, 10):
-        sel.append(F.round(
-            F.coalesce(F.col(str(n)), F.lit(0))
-            / F.col("word_chars").cast("double"), 6)
-            .alias(f"dup{n}gram_char_frac"))
-    out = out.select(*sel, "word_chars").drop("word_chars")
+    fracs = [(f"dup_{u}_{f}", F.col(f"{u}_{f}"))
+             for u in ("line", "para") for f in ("frac", "char_frac")]
+    fracs += [(f"top{n}gram_char_frac", F.col(str(n))) for n in (2, 3, 4)]
+    fracs += [(f"dup{n}gram_char_frac", F.round(
+        F.coalesce(F.col(str(n)), F.lit(0))
+        / F.col("word_chars").cast("double"), 6)) for n in range(5, 11)]
+    # the empty-text rule: no word characters (or a NULL text) -> NULL
+    has_words = F.col("word_chars").isNotNull()
+    out = out.select(F.col(key), *[F.when(has_words, c).alias(name)
+                                   for name, c in fracs])
     cond = None
     for col, thr in thresholds.items():
         bad = F.coalesce(F.col(col), F.lit(0.0)) > thr
@@ -644,6 +578,35 @@ def redact_pii(df: DataFrame, text_col: str = "text",
         .withColumn("n_phones", n_phones)
         .withColumn(out_col, red3)
     )
+
+
+def quality_chain(df: DataFrame, text_col: str = "text",
+                  min_words: int = 20, min_words_per_line: int = 5,
+                  min_kept_lines: int = 1, sep: str = "\n",
+                  badwords: list[str] | None = None,
+                  gopher: bool = True, c4: bool = True) -> DataFrame:
+    """The curation gate chain that the `curate` command and the
+    streaming curation ingest both run: the Gopher quality gate, the C4
+    line filter (its text_clean becomes the text, so failing lines go,
+    not only failing pages), then PII redaction into the text column.
+    The parameters are curate's gate options, with its defaults.
+    Returns the survivors with the input's columns in their order, then
+    n_emails, n_ips, n_phones."""
+    cols = df.columns
+    out = df
+    if gopher:
+        out = (with_gopher_quality(out, text_col=text_col,
+                                   min_words=min_words)
+               .where("gopher_pass").select(*cols))
+    if c4:
+        out = (c4_page_filter(out, text_col=text_col, sep=sep,
+                              min_words_per_line=min_words_per_line,
+                              min_kept_lines=min_kept_lines,
+                              badwords=badwords)
+               .where("keep")
+               .select(*[F.col("text_clean").alias(c) if c == text_col
+                         else F.col(c) for c in cols]))
+    return redact_pii(out, text_col=text_col, out_col=text_col)
 
 
 def hash_sample(df: DataFrame, key: str = "doc_id", rate: float = 0.1,

@@ -163,14 +163,13 @@ def start_curation_ingest(spark: SparkSession, input_path: str,
                           min_words: int = 20,
                           min_kept_lines: int = 1,
                           available_now: bool = True) -> StreamingQuery:
-    """Streaming curation: the curate CLI's quality chain runs per
-    micro-batch BEFORE the dedup-against-committed append — Gopher
-    quality gate -> C4 line filter (text_clean adopted, so failing
-    lines are actually dropped) -> PII redaction -> exact dedup
-    against everything already committed. A continuously-arriving
-    crawl lands curated and deduplicated without a separate batch
-    pass; the identical operators run in both deployments (one code
-    path — the module's standing promise).
+    """Streaming curation: the curate CLI's gate chain,
+    webtext.quality_chain (Gopher quality gate -> C4 line filter with
+    text_clean adopted -> PII redaction), runs per micro-batch BEFORE
+    the exact dedup against everything already committed. A
+    continuously-arriving crawl lands curated and deduplicated without
+    a separate batch pass; both deployments call the same chain
+    function (one code path — the module's standing promise).
 
     Idempotency under foreachBatch replay: the gates are deterministic
     per row, so a replayed batch re-derives identical survivors, and
@@ -180,24 +179,15 @@ def start_curation_ingest(spark: SparkSession, input_path: str,
     n_committed); replays skip their already-committed stats row by
     batch_id, keeping the sidecar idempotent too."""
     from ..operators.dedup import dedup_against
-    from ..operators.webtext import (
-        c4_page_filter, redact_pii, with_gopher_quality)
+    from ..operators.webtext import quality_chain
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        cols = batch_df.columns
         n_input = batch_df.count()
-        gated = (with_gopher_quality(batch_df, text_col=text_col,
-                                     min_words=min_words)
-                 .where("gopher_pass").select(*cols))
-        c4 = c4_page_filter(gated, text_col=text_col,
-                            min_kept_lines=min_kept_lines)
-        cleaned = (c4.where("keep")
-                   .drop(text_col, "keep", "n_lines", "n_kept_lines")
-                   .withColumnRenamed("text_clean", text_col)
-                   .select(*cols))
-        redacted = redact_pii(cleaned, text_col=text_col,
-                              out_col=text_col).select(*cols).persist()
+        redacted = quality_chain(
+            batch_df, text_col=text_col, min_words=min_words,
+            min_kept_lines=min_kept_lines
+        ).select(*batch_df.columns).persist()
         n_quality = redacted.count()
         history = read_committed(sess, output_path)
         history = (redacted.limit(0) if history is None  # first batch

@@ -62,6 +62,20 @@ def test_full_repetition_stats_releases(spark):
     assert _n_persistent(spark) == 0
 
 
+def test_score_rank_type_error_releases(spark):
+    """A hot bucket over a string key raises before the rank is built;
+    the persisted input must not outlive the raise."""
+    from docling_eval_spark.operators.slicing import score_rank
+
+    df = spark.createDataFrame(
+        [(k, 1.0) for k in ("1", "2", "9", "10", "11", "100")],
+        ["doc_id", "unigram_nll"])
+    before = _n_persistent(spark)
+    with pytest.raises(TypeError, match="integral key"):
+        score_rank(df, "unigram_nll", "doc_id", max_partition_rows=2)
+    assert _n_persistent(spark) <= before
+
+
 def test_perplexity_buckets_releases(spark):
     from docling_eval_spark.operators.webtext import (
         perplexity_buckets, perplexity_buckets_by_lang)

@@ -44,3 +44,6 @@ def test_named_query_lists_name_registered_queries():
     headline = set(_literal("tools/dump_plans.py", "HEADLINE"))
     assert headline and not headline - queries, \
         "tools/dump_plans.py HEADLINE: stale names"
+    swept = set(_literal("tools/bench_sf_sweep.py", "QUERIES"))
+    assert swept and not swept - queries, \
+        "tools/bench_sf_sweep.py QUERIES: stale names"

@@ -104,3 +104,29 @@ def test_perplexity_refinement_string_key_rejected(spark):
         ["doc_id", "unigram_nll"])
     with pytest.raises(TypeError, match="integral key"):
         perplexity_buckets(df, max_partition_rows=2)
+
+
+@pytest.mark.parametrize("cap", [None, 40])
+def test_score_rank_nan_after_numbers_before_null(spark, cap):
+    """rank == row_number() OVER (ORDER BY s ASC NULLS LAST, k) - 1 with
+    NaN, NULL and ties. With the cap, three buckets are hot: the 0.0 tie
+    block and the top one (100.0, NaN, NULL) take the tie refinement,
+    the 400-score cluster the fine grid."""
+    from docling_eval_spark.operators.caching import release_caches
+    from docling_eval_spark.operators.slicing import score_rank
+
+    nan = float("nan")
+    scores = [0.0] * 200 + [5.0 + i * 1e-6 for i in range(400)]
+    scores += [100.0] * 60 + [nan] * 70 + [None] * 70
+    scores += [i * 4.0 for i in range(20)]
+    # keys shuffled against the score order
+    rows = [((i * 7919) % 10_007, s) for i, s in enumerate(scores)]
+    df = spark.createDataFrame(rows, "k long, s double").repartition(8)
+    ranked, n = score_rank(df, "s", "k", max_partition_rows=cap)
+    got = {r.k: r["rank"] for r in ranked.collect()}
+    release_caches(ranked)
+    w = Window.orderBy(F.col("s").asc_nulls_last(), F.col("k"))
+    want = {r.k: r.rn for r in df.select(
+        "k", (F.row_number().over(w) - 1).alias("rn")).collect()}
+    assert n == len(rows)
+    assert got == want

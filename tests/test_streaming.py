@@ -159,6 +159,38 @@ class TestStreamingCurationIngest:
         first = acc[min(acc)]
         assert (first.n_input, first.n_quality) == (4, 3)
 
+    def test_first_batch_commits_the_quality_chain(self, spark, tmp_path):
+        """With no history, one batch commits exactly what the batch
+        chain keeps: quality_chain, then exact dedup of its survivors."""
+        import datetime
+
+        from docling_eval_spark.operators.dedup import exact_dedup
+        from docling_eval_spark.operators.webtext import quality_chain
+        from docling_eval_spark.streaming.ingest import start_curation_ingest
+
+        landing = str(tmp_path / "landing")
+        out = str(tmp_path / "out")
+        good = ("the quick brown fox jumps over the fence today.\n"
+                "a lazy dog sleeps near the old barn for a while.\n"
+                "it is a warm day for the whole busy town here.")
+        texts = [good, "tiny.", good + "\nclick here now",  # C4 -> doc 1
+                 good.replace("fox", "owl"),
+                 good.replace("fence", "fence so call +1 212 555 0100"),
+                 "lorem ipsum " + good]
+        spark.createDataFrame(
+            [(f"https://x/{i}", datetime.datetime(2026, 1, 1), t.encode(),
+              t, "en", i) for i, t in enumerate(texts, 1)],
+            ["url", "warc_ts", "html", "text", "lang", "doc_id"]
+        ).coalesce(1).write.parquet(landing)
+        q = start_curation_ingest(spark, landing, out,
+                                  str(tmp_path / "ckpt"), min_words=20)
+        q.awaitTermination(120)
+        want = exact_dedup(quality_chain(spark.read.parquet(landing),
+                                         min_words=20))
+        got = spark.read.parquet(out).select("doc_id", "text").collect()
+        assert sorted(r.doc_id for r in got) == [1, 4, 5]
+        assert sorted(got) == sorted(want.select("doc_id", "text").collect())
+
 
 class TestStreamingNearDedupIngest:
     def test_near_recrawls_drop_against_committed(self, spark, tmp_path):

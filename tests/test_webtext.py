@@ -16,7 +16,6 @@ from docling_eval_spark.operators.webtext import (
     hash_sample,
     latest_snapshot,
     redact_pii,
-    repetition_stats,
     unigram_logprob,
     with_domain,
     with_gopher_quality,
@@ -96,27 +95,31 @@ def test_gopher_symbol_counts_unicode_ellipsis(spark):
     assert out[2].symbol_ratio == pytest.approx(1.0, abs=1e-6)
 
 
-def test_repetition_stats_hand_computed(spark):
-    # doc 1: 3 lines, "r r" twice -> dup_line_frac 2/3; chars 3+3+3 ->
-    # dup_line_char_frac 6/9; top 2-gram "r r" count 3 of words
-    # [r,r,x,y,r,r]: grams r r, r x, x y, y r, r r -> wait, lines are
-    # pre-chunked below so the word stream is r r x y r r.
+def test_full_repetition_stats_hand_computed(spark):
+    from docling_eval_spark.operators.webtext import full_repetition_stats
+
+    # 3 lines, "r r" twice -> dup_line_frac 2/3; chars 3+3+3 ->
+    # dup_line_char_frac 6/9
     df = spark.createDataFrame(
         [(1, "r r\nx y\nr r")], ["doc_id", "text"])
-    out = repetition_stats(df).collect()[0]
+    out = full_repetition_stats(df).collect()[0]
     assert out.dup_line_frac == pytest.approx(2 / 3, abs=1e-6)
     assert out.dup_line_char_frac == pytest.approx(6 / 9, abs=1e-6)
-    # word stream r,r,x,y,r,r -> grams: "r r","r x","x y","y r","r r"
-    assert out.top_gram == "r r" and out.top_cnt == 2
-    # chars of "rr" = 2, count 2, word chars = 6
+    # word stream r,r,x,y,r,r -> grams "r r","r x","x y","y r","r r":
+    # "r r" twice, chars of "rr" = 2, word chars = 6
     assert out.top2gram_char_frac == pytest.approx(2 * 2 / 6, abs=1e-6)
 
 
-def test_repetition_tie_breaks_lexicographically(spark):
-    # grams "a b" and "b a" both occur twice -> smallest gram wins
-    df = spark.createDataFrame([(1, "a b a b a")], ["doc_id", "text"])
-    out = repetition_stats(df).collect()[0]
-    assert out.top_gram == "a b" and out.top_cnt == 2
+def test_full_repetition_tie_breaks_by_earliest_occurrence(spark):
+    from docling_eval_spark.operators.webtext import full_repetition_stats
+
+    # "cc d", "d a", "a b" each occur twice; "cc d" occurs first, so it
+    # wins: 2 * 3 chars / 10 word chars (the smallest gram, "a b",
+    # would give 2 * 2 / 10)
+    df = spark.createDataFrame([(1, "cc d a b cc d a b")],
+                               ["doc_id", "text"])
+    out = full_repetition_stats(df).collect()[0]
+    assert out.top2gram_char_frac == pytest.approx(0.6, abs=1e-6)
 
 
 def test_c4_page_filter_rules(spark):
@@ -216,8 +219,13 @@ def _py_full_repetition(text, line_sep="\n", para_sep="\n\n"):
             return None, None
         return round(dup / tot, 6), round(dup_ch / tot_ch, 6)
 
-    words = text.split()
+    from docling_eval_spark.operators.webtext import (
+        GOPHER_REPETITION_THRESHOLDS)
+
+    words = (text or "").split()
     wchars = sum(len(w) for w in words)
+    if wchars == 0:     # no word characters: the NULL-text row
+        return dict.fromkeys(GOPHER_REPETITION_THRESHOLDS)
     out = {}
     out["dup_line_frac"], out["dup_line_char_frac"] = unit_stats(line_sep)
     out["dup_para_frac"], out["dup_para_char_frac"] = unit_stats(para_sep)
@@ -240,10 +248,7 @@ def _py_full_repetition(text, line_sep="\n", para_sep="\n\n"):
         grams = [" ".join(words[i:i + n])
                  for i in range(len(words) - n + 1)]
         key = f"dup{n}gram_char_frac"
-        if not grams:
-            out[key] = None
-            continue
-        c = Counter(grams)
+        c = Counter(grams)      # no n-grams: nothing covered, 0.0
         covered = set()
         for i, g in enumerate(grams):
             if c[g] > 1:
@@ -283,6 +288,29 @@ def test_full_repetition_stats_matches_python_reference(spark):
         fail = any((want[c] or 0.0) > t
                    for c, t in GOPHER_REPETITION_THRESHOLDS.items())
         assert got[doc_id]["gopher_repetition_pass"] == (not fail), doc_id
+
+
+def test_full_repetition_stats_text_without_words(spark):
+    """A text with no word characters gets a NULL text's row: every
+    fraction NULL and the pass flag true. Runs under the session's
+    ANSI mode, where dividing by its zero word characters raises."""
+    from docling_eval_spark.operators.webtext import full_repetition_stats
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    rows = [(1, ""), (2, "   "), (3, "\n\n"), (4, None),
+            (5, "a b c a b c a b c")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {r.doc_id: r.asDict() for r in
+           full_repetition_stats(df).collect()}
+    assert set(got) == {1, 2, 3, 4, 5}
+    for doc_id, text in rows:
+        want = _py_full_repetition(text)
+        for col, val in want.items():
+            g = got[doc_id][col]
+            assert (g is None and val is None) or \
+                g == pytest.approx(val, abs=1e-6), (doc_id, col, g, val)
+        if doc_id != 5:
+            assert got[doc_id]["gopher_repetition_pass"], doc_id
 
 
 def test_full_repetition_pass_thresholds(spark):

@@ -29,7 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 QUERIES = [
     # curation tier
-    "webtext_line_dedup", "gopher_quality", "webtext_repetition",
+    "webtext_line_dedup", "gopher_quality",
     "c4_line_filter", "pii_redaction", "webtext_domain_rollup",
     "webtext_unigram_nll", "webtext_latest_snapshot", "normalize_text",
     # sampling, decontamination and dedup tier
